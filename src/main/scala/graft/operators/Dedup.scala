@@ -263,6 +263,8 @@ object Dedup extends QueryModule {
       .orderBy("da", "db")
   }
 
+  private[graft] val GridQKey = "spark.graft.ppjoin.gridQ"
+
   /** Grid side length for [[gridIntersectCount]]: Q² cells; per-cell
     * supplier memory = 2·|lists bytes|/Q, lists replication = 2Q copies.
     * Derived from the MEASURED id volume of the (already-checkpointed)
@@ -277,9 +279,14 @@ object Dedup extends QueryModule {
     * bytes of Q=16 for identical results). One cheap aggregate over the
     * cached lists measures the exact volume, only ever run past the
     * ≥2 M-pair gate. `spark.graft.ppjoin.gridQ` overrides for cluster
-    * memory profiles. */
+    * memory profiles; the override must be a positive int, and anything
+    * else fails with an error naming the key. */
   private[graft] def gridQFor(s: SparkSession, lists: DataFrame): Int =
-    s.conf.getOption("spark.graft.ppjoin.gridQ").map(_.toInt).getOrElse {
+    s.conf.getOption(GridQKey).map { raw =>
+      val q = raw.trim.toIntOption.filter(_ > 0)
+      require(q.isDefined, s"$GridQKey must be a positive int (got '$raw')")
+      q.get
+    }.getOrElse {
       val row = lists.agg(sum(size(col("ls")))).collect()(0)
       val ids = if (row.isNullAt(0)) 0L else row.getLong(0)
       math.max(16, math.ceil(2.0 * ids * 8L / (256L << 20)).toInt)

@@ -21,11 +21,14 @@ import org.apache.spark.sql.functions._
   *    left-anti join (reachable ∖ parents).
   *
   * Scale posture: frontiers and level sets stay distributed (no driver
-  * collect); lineage is cut with `localCheckpoint` every superstep so deep
-  * graphs don't blow up plan size (the known scale-killer for iterative
-  * DataFrame loops); the per-superstep `count()` is the BSP termination
-  * check, equivalent to Pregel's active-vertex count. On a real cluster,
-  * `localCheckpoint` would become `checkpoint` on reliable storage.
+  * collect); lineage is cut with a local checkpoint every superstep so
+  * deep graphs don't blow up plan size (the known scale-killer for
+  * iterative DataFrame loops). The superstep's checkpoint and its BSP
+  * termination count (Pregel's active-vertex count) are ONE Spark job,
+  * [[checkpointCount]]: the count fills the checkpoint as it runs, so a
+  * superstep pays for one action, not a materialization plus a separate
+  * counting query. On a real cluster, `localCheckpoint` would become
+  * `checkpoint` on reliable storage.
   */
 object GraphOps {
 
@@ -35,6 +38,40 @@ object GraphOps {
   private val traceOn: Boolean = sys.env.get("SPARK_GRAFT_TRACE").contains("1")
   private def trace(msg: => String): Unit =
     if (traceOn) System.err.println(s"[graft-trace] $msg")
+
+  /** Local checkpoint of `df` plus its row count in ONE Spark job — the
+    * superstep barrier of every loop below. The checkpoint is declared
+    * lazy and the count runs on its physical RDD, which fills the
+    * checkpoint blocks while counting: no second SQL execution, no
+    * count-aggregate plan (with its own shuffle) over the fresh frame.
+    * Returns the checkpointed frame — a single `LogicalRDD` leaf over the
+    * filled blocks, so later reads never recompute `df` — and the number
+    * of its rows matching `where` (all of them by default; a narrow
+    * filter over the checkpoint still fills every block in the same job,
+    * which serves the loops that count only the improved rows). */
+  private[graft] def checkpointCount(df: DataFrame,
+      where: Column = lit(true)): (DataFrame, Long) = {
+    val c = df.localCheckpoint(eager = false)
+    (c, c.filter(where).queryExecution.toRdd.count())
+  }
+
+  /** Single-partition local checkpoint for delta-sized cascade frames
+    * (the collapse is measured at [[supportCascade]]), and its
+    * [[checkpointCount]] twin for the frames a loop also counts. */
+  private def ckpt(df: DataFrame): DataFrame = df.repartition(1).localCheckpoint(true)
+  private def ckptCount(df: DataFrame): (DataFrame, Long) =
+    checkpointCount(df.repartition(1))
+
+  /** Both directions of every edge `(a, b)`, as `(src, dst)`: one scan of
+    * `e` and one projection (an inline two-row generator), where a
+    * two-branch union reads its input twice. The multiset is exactly the
+    * union's — duplicates and self-loops pass through; callers that need
+    * a set add `distinct()`. */
+  private[graft] def symmetrize(e: DataFrame, a: String = "src",
+      b: String = "dst"): DataFrame =
+    e.select(inline(array(
+      struct(col(a).as("src"), col(b).as("dst")),
+      struct(col(b).as("src"), col(a).as("dst")))))
 
   /** Rows of accumulated BFS state past which the seen-set anti-join stops
     * being broadcast: ~1M (v: long, level: int) rows ≈ 50 MB of broadcast
@@ -109,16 +146,14 @@ object GraphOps {
     var frontierCount = 1L
     var i = 0
     var done = false
-    // ONE materialization + ONE count per TWO BFS levels (the fused
-    // two-hop superstep of expandTwice — frontier doubling, exactness
-    // argued at [[multiGraphExpandTwice]]). The count() reads the
-    // just-checkpointed frontier (cached RDD, no recompute) — it is the
-    // BSP termination check, the running seen-set size, AND the frontier
-    // size that drive the broadcast→shuffle flips.
+    // ONE checkpoint-and-count job per TWO BFS levels (the fused two-hop
+    // superstep of expandTwice — frontier doubling, exactness argued at
+    // [[multiGraphExpandTwice]]). The count is the BSP termination check,
+    // the running seen-set size, AND the frontier size that drive the
+    // broadcast→shuffle flips.
     while (i < maxIter && !done) {
-      val next = expandTwice(e, frontier, levels, seenCount,
-        broadcastSeenLimit, frontierCount).localCheckpoint(true)
-      val n = next.count()
+      val (next, n) = checkpointCount(expandTwice(e, frontier, levels,
+        seenCount, broadcastSeenLimit, frontierCount))
       if (n == 0) done = true
       else {
         seenCount += n
@@ -177,17 +212,14 @@ object GraphOps {
       val cand = hop1
         .union(hop(hop1, frontierCount * FusedHopFanoutAllowance))
         .groupBy("seed", "v").agg(min("level").as("level"))
-      val pruned =
-        if (seenCount <= broadcastSeenLimit)
-          cand.join(broadcast(seen.select("seed", "v")), Seq("seed", "v"), "left_anti")
-        else cand.join(seen.select("seed", "v").hint("merge"), Seq("seed", "v"), "left_anti")
-      pruned.localCheckpoint(true)
+      if (seenCount <= broadcastSeenLimit)
+        cand.join(broadcast(seen.select("seed", "v")), Seq("seed", "v"), "left_anti")
+      else cand.join(seen.select("seed", "v").hint("merge"), Seq("seed", "v"), "left_anti")
     }
     var i = 0
     var done = false
     while (i < maxIter && !done) {
-      val next = expandTwiceSeeded(frontier, levels)
-      val n = next.count()
+      val (next, n) = checkpointCount(expandTwiceSeeded(frontier, levels))
       if (n == 0) done = true
       else {
         seenCount += n
@@ -266,22 +298,19 @@ object GraphOps {
       maxIter: Int = 50, broadcastSeenLimit: Long = BroadcastSeenLimit): DataFrame = {
     val e = edges.select(col("graph"),
       col("src").cast("long"), col("dst").cast("long")).persist()
-    var levels = e.select("graph").distinct()
-      .select(col("graph"), lit(start).as("v"), lit(0).as("level"))
-      .localCheckpoint(true)
+    var (levels, seenCount) = checkpointCount(e.select("graph").distinct()
+      .select(col("graph"), lit(start).as("v"), lit(0).as("level")))
     var frontier = levels
-    var seenCount = levels.count()
     var frontierCount = seenCount
     var i = 0
     var done = false
-    // ONE materialization + ONE count per TWO BFS levels (the fused
-    // two-hop superstep) — the loop's cost is barrier-bound, so halving
-    // the barrier count is the lever that matters at local[32] and on a
-    // real cluster alike.
+    // ONE checkpoint-and-count job per TWO BFS levels (the fused two-hop
+    // superstep) — the loop's cost is barrier-bound, so halving the
+    // barrier count is the lever that matters at local[32] and on a real
+    // cluster alike.
     while (i < maxIter && !done) {
-      val next = multiGraphExpandTwice(e, frontier, levels, seenCount,
-        broadcastSeenLimit, frontierCount).localCheckpoint(true)
-      val n = next.count()
+      val (next, n) = checkpointCount(multiGraphExpandTwice(e, frontier,
+        levels, seenCount, broadcastSeenLimit, frontierCount))
       if (n == 0) done = true
       else {
         seenCount += n
@@ -475,7 +504,7 @@ object GraphOps {
     var frontier = levels
     var seenCount = seeds.size.toLong
     var frontierCount = seeds.size.toLong
-    def expand(f: DataFrame, seen: DataFrame, level: Int): DataFrame = {
+    def expand(f: DataFrame, seen: DataFrame, level: Int): (DataFrame, Long) = {
       val fj = if (frontierCount <= broadcastSeenLimit) broadcast(f) else f.hint("merge")
       val grown = e.join(fj, f("v") === e("src"))
         .groupBy(col("seed"), e("dst").as("v")).agg(sum(f("sigma")).as("sigma"))
@@ -483,21 +512,18 @@ object GraphOps {
         if (seenCount <= broadcastSeenLimit)
           grown.join(broadcast(seen.select("seed", "v")), Seq("seed", "v"), "left_anti")
         else grown.join(seen.select("seed", "v").hint("merge"), Seq("seed", "v"), "left_anti")
-      pruned.select(col("seed"), col("v"), lit(level).as("level"), col("sigma"))
-        .localCheckpoint(true)
+      checkpointCount(pruned.select(col("seed"), col("v"), lit(level).as("level"), col("sigma")))
     }
     var i = 0
     var done = false
     while (i < maxIter && !done) {
-      val next1 = expand(frontier, levels, i + 1)
-      val n1 = next1.count()
+      val (next1, n1) = expand(frontier, levels, i + 1)
       if (n1 == 0) done = true
       else {
         seenCount += n1
         frontierCount = n1
         val seen1 = levels.union(next1)
-        val next2 = expand(next1, seen1, i + 2)
-        val n2 = next2.count()
+        val (next2, n2) = expand(next1, seen1, i + 2)
         seenCount += n2
         frontierCount = n2
         val u = seen1.union(next2)
@@ -686,12 +712,11 @@ object GraphOps {
       (wave, next)
     }
     val dstDeg = e.groupBy(col("dst").as("v")).agg(count(lit(1)).as("d"))
-    var indeg = e.select(col("src").as("v")).union(e.select(col("dst").as("v")))
-      .distinct()
-      .join(dstDeg, Seq("v"), "left")
-      .select(col("v"), coalesce(col("d"), lit(0L)).as("d"))
-      .localCheckpoint(true)
-    var remaining = indeg.count()
+    var (indeg, remaining) = checkpointCount(
+      e.select(col("src").as("v")).union(e.select(col("dst").as("v")))
+        .distinct()
+        .join(dstDeg, Seq("v"), "left")
+        .select(col("v"), coalesce(col("d"), lit(0L)).as("d")))
     val waves = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     var round = 0
     // ONE peel round per materialization. Two-rounds-per-checkpoint (the
@@ -701,13 +726,13 @@ object GraphOps {
     // persist()ed frame races its own cache population across those jobs,
     // recomputing the round instead of sharing it — the batching saved 9
     // barriers but paid ~18 recomputed joins. The honest shape is one
-    // checkpoint+count per layer; each wave is a free filter over a live
-    // checkpoint, so the final union needs no extra materialization.
+    // checkpoint-and-count job per layer; each wave is a free filter over
+    // a live checkpoint, so the final union needs no extra
+    // materialization.
     while (remaining > 0 && round < maxIter) {
       val (wave, next0) = peel(indeg, remaining, round)
       waves += wave
-      val next = next0.localCheckpoint(true)
-      val nextRemaining = next.count()
+      val (next, nextRemaining) = checkpointCount(next0)
       if (nextRemaining == remaining) {
         // no source peeled: nothing left has in-degree 0
         e.unpersist()
@@ -885,15 +910,16 @@ object GraphOps {
       val cand = cand1
         .union(hop(cand1, frontierCount * FusedHopFanoutAllowance))
         .groupBy("v").agg(min("nd").as("nd"))
-      val merged = dist.as("d").join(cand.as("c"), Seq("v"), "full_outer")
-        .select(col("v"),
-          least(coalesce(col("d.dist"), lit(Long.MaxValue)),
-                coalesce(col("c.nd"), lit(Long.MaxValue))).as("dist"),
-          (coalesce(col("c.nd"), lit(Long.MaxValue)) <
-           coalesce(col("d.dist"), lit(Long.MaxValue))).as("improved"))
-        .localCheckpoint(true)
+      val (merged, improvedCount) = checkpointCount(
+        dist.as("d").join(cand.as("c"), Seq("v"), "full_outer")
+          .select(col("v"),
+            least(coalesce(col("d.dist"), lit(Long.MaxValue)),
+                  coalesce(col("c.nd"), lit(Long.MaxValue))).as("dist"),
+            (coalesce(col("c.nd"), lit(Long.MaxValue)) <
+             coalesce(col("d.dist"), lit(Long.MaxValue))).as("improved")),
+        col("improved"))
       frontier = merged.filter(col("improved")).select("v", "dist")
-      frontierCount = merged.filter(col("improved")).count()
+      frontierCount = improvedCount
       dist = merged.select("v", "dist")
       i += 2
     }
@@ -921,14 +947,14 @@ object GraphOps {
     var frontier = levels
     var seenCount = 1L
     var frontierCount = 1L
-    // Each frontier is eagerly localCheckpoint'ed, exactly like
-    // [[bfsLevels]]. persist() alone is NOT enough here: a cached plan keeps
+    // Each frontier is checkpointed (and counted, in the same job)
+    // exactly like [[bfsLevels]]. persist() alone is NOT enough here: a cached plan keeps
     // its full logical lineage, and because each frontier's anti-join embeds
     // the whole accumulated `levels` union, the un-truncated plan tree grows
     // geometrically with depth until AQE's plan stringification alone OOMs
     // (observed at sf0.1). The checkpoint cuts the plan at every superstep,
     // so `levels` stays a flat union of checkpointed frontiers.
-    def expand(f: DataFrame, seen: DataFrame, level: Int): DataFrame = {
+    def expand(f: DataFrame, seen: DataFrame, level: Int): (DataFrame, Long) = {
       val fj = if (frontierCount <= broadcastSeenLimit) broadcast(f) else f.hint("merge")
       val grown = e.join(fj, f("v") === e("src"))
         .groupBy(e("dst").as("v")).agg(sum(f("sigma")).as("sigma"))
@@ -936,21 +962,18 @@ object GraphOps {
         if (seenCount <= broadcastSeenLimit)
           grown.join(broadcast(seen.select("v")), Seq("v"), "left_anti")
         else grown.join(seen.select("v").hint("merge"), Seq("v"), "left_anti")
-      pruned.select(col("v"), lit(level).as("level"), col("sigma"))
-        .localCheckpoint(true)
+      checkpointCount(pruned.select(col("v"), lit(level).as("level"), col("sigma")))
     }
     var i = 0
     var done = false
     while (i < maxIter && !done) {
-      val next1 = expand(frontier, levels, i + 1)
-      val n1 = next1.count()
+      val (next1, n1) = expand(frontier, levels, i + 1)
       if (n1 == 0) done = true
       else {
         seenCount += n1
         frontierCount = n1
         val seen1 = levels.union(next1)
-        val next2 = expand(next1, seen1, i + 2)
-        val n2 = next2.count()
+        val (next2, n2) = expand(next1, seen1, i + 2)
         seenCount += n2
         frontierCount = n2
         val u = seen1.union(next2)
@@ -1066,12 +1089,11 @@ object GraphOps {
       broadcastSeenLimit: Long = BroadcastSeenLimit): DataFrame = {
     val e0 = edges.select(col("src").cast("long"), col("dst").cast("long"))
       .distinct().localCheckpoint(true)
-    var rem = e0.select(col("src").as("v")).union(e0.select(col("dst").as("v")))
-      .distinct().localCheckpoint(true)
+    var (rem, remCount) = checkpointCount(
+      e0.select(col("src").as("v")).union(e0.select(col("dst").as("v"))).distinct())
     var e = e0
     var out = List.empty[DataFrame]
     var round = 0
-    var remCount = rem.count()
     def gated(f: DataFrame, n: Long): DataFrame =
       if (n <= broadcastSeenLimit) broadcast(f) else f.hint("merge")
     while (remCount > 0 && round < maxRounds) {
@@ -1089,9 +1111,8 @@ object GraphOps {
       while (trimming && remCount > 0 && t < maxIter) {
         val haveOut = e.select(col("src").as("v")).distinct()
         val haveIn = e.select(col("dst").as("v")).distinct()
-        val core = rem.join(haveOut, Seq("v"), "left_semi")
-          .join(haveIn, Seq("v"), "left_semi").localCheckpoint(true)
-        val coreCount = core.count()
+        val (core, coreCount) = checkpointCount(
+          rem.join(haveOut, Seq("v"), "left_semi").join(haveIn, Seq("v"), "left_semi"))
         if (coreCount == remCount) trimming = false
         else {
           val peeled = rem.join(gated(core, coreCount), Seq("v"), "left_anti")
@@ -1124,14 +1145,15 @@ object GraphOps {
       while (fCount > 0 && i < maxIter) {
         val cand = e.join(gated(frontier, fCount), col("v") === col("src"))
           .groupBy(col("dst").as("w")).agg(max("color").as("nc"))
-        val joined = colors.join(cand, col("v") === col("w"), "left")
-          .select(col("v"),
-            greatest(col("color"), coalesce(col("nc"), col("color"))).as("c2"),
-            (coalesce(col("nc"), col("color")) > col("color")).as("improved"))
-          .localCheckpoint(true)
+        val (joined, improvedCount) = checkpointCount(
+          colors.join(cand, col("v") === col("w"), "left")
+            .select(col("v"),
+              greatest(col("color"), coalesce(col("nc"), col("color"))).as("c2"),
+              (coalesce(col("nc"), col("color")) > col("color")).as("improved")),
+          col("improved"))
         frontier = joined.filter(col("improved"))
           .select(col("v"), col("c2").as("color"))
-        fCount = joined.filter(col("improved")).count()
+        fCount = improvedCount
         colors = joined.select(col("v"), col("c2").as("color"))
         i += 1
       }
@@ -1147,9 +1169,8 @@ object GraphOps {
         .filter(col("scol") === col("dcol"))
         .select(col("dst").as("efrom"), col("src").as("eto"), col("scol").as("ecolor"))
         .localCheckpoint(true)
-      var assigned = colors.filter(col("v") === col("color"))
-        .select(col("v"), col("color").as("scc")).localCheckpoint(true)
-      var assignedCount = assigned.count()
+      var (assigned, assignedCount) = checkpointCount(
+        colors.filter(col("v") === col("color")).select(col("v"), col("color").as("scc")))
       var bf = assigned
       var bCount = assignedCount
       i = 0
@@ -1157,10 +1178,9 @@ object GraphOps {
         val grown = er.join(gated(bf, bCount),
             col("v") === col("efrom") && col("scc") === col("ecolor"))
           .select(col("eto").as("v"), col("scc")).distinct()
-        val fresh = grown.join(gated(assigned.select("v"), assignedCount),
-            Seq("v"), "left_anti")
-          .localCheckpoint(true)
-        bCount = fresh.count()
+        val (fresh, freshCount) = checkpointCount(
+          grown.join(gated(assigned.select("v"), assignedCount), Seq("v"), "left_anti"))
+        bCount = freshCount
         if (bCount > 0) {
           assigned = assigned.union(fresh).localCheckpoint(true)
           assignedCount += bCount
@@ -1170,9 +1190,10 @@ object GraphOps {
       }
       out ::= assigned
       // 3. shrink the remaining subgraph
-      rem = rem.join(gated(assigned.select("v"), assignedCount), Seq("v"), "left_anti")
-        .localCheckpoint(true)
-      remCount = rem.count()
+      val (remNext, remNextCount) = checkpointCount(
+        rem.join(gated(assigned.select("v"), assignedCount), Seq("v"), "left_anti"))
+      rem = remNext
+      remCount = remNextCount
       if (remCount > 0) {
         val av = assigned.select(col("v").as("av"))
         e = e.join(gated(av, assignedCount), col("src") === col("av"), "left_anti")
@@ -1250,13 +1271,15 @@ object GraphOps {
       val nbrMin = labels.as("l").join(e.as("e"), col("l.v") === col("e.esrc"))
         .groupBy(col("e.edst").as("nv"))
         .agg(min(col("l.comp")).as("nbr_comp"))
-      // One materialization per superstep: the changed-count and the next
-      // label set are both cheap projections of the checkpointed frame.
-      val updated = labels.join(nbrMin, labels("v") === col("nv"), "left")
-        .select(labels("v"), col("comp"),
-          least(col("comp"), coalesce(col("nbr_comp"), col("comp"))).as("comp2"))
-        .localCheckpoint(true)
-      changed = updated.filter(col("comp2") < col("comp")).count()
+      // One checkpoint-and-count job per superstep: the changed-count
+      // rides the job that fills the checkpoint, and the next label set is
+      // a cheap projection of it.
+      val (updated, changedCount) = checkpointCount(
+        labels.join(nbrMin, labels("v") === col("nv"), "left")
+          .select(labels("v"), col("comp"),
+            least(col("comp"), coalesce(col("nbr_comp"), col("comp"))).as("comp2")),
+        col("comp2") < col("comp"))
+      changed = changedCount
       labels = updated.select(col("v"), col("comp2").as("comp"))
       i += 1
     }
@@ -1279,15 +1302,18 @@ object GraphOps {
     * coloring (a tied pair lands in neither hp direction, both become
     * ready in round 1, both can take the same mex color) and the
     * incremental cone replays' sortBy(pri) order becomes ambiguous.
-    * `und` is the symmetrized edge frame, so `src` covers every vertex;
-    * the one cheap agg rides the persist the caller already paid for. */
-  private def requireLcgPriorityDomain(und: DataFrame, op: String): Unit = {
-    val r = und.agg(min(col("src")).as("lo"), max(col("src")).as("hi")).collect()(0)
-    if (!r.isNullAt(0))
-      require(r.getLong(0) >= 0L && r.getLong(1) < 2147483648L,
-        s"$op: vertex ids span [${r.getLong(0)}, ${r.getLong(1)}], outside " +
+    * `und` is the symmetrized edge frame, so `src` covers every vertex.
+    * The check shares ONE aggregate action with the caller's set-up size
+    * (`size`, the edge count by default) and returns that size. */
+  private def lcgDomainCount(und: DataFrame, op: String,
+      size: Column = count(lit(1))): Long = {
+    val r = und.agg(size, min(col("src")), max(col("src"))).collect()(0)
+    if (!r.isNullAt(1))
+      require(r.getLong(1) >= 0L && r.getLong(2) < 2147483648L,
+        s"$op: vertex ids span [${r.getLong(1)}, ${r.getLong(2)}], outside " +
           "the LCG priority's injective domain [0, 2^31) - adjacent " +
           "priorities could tie and greedy-by-priority order is undefined")
+    r.getLong(0)
   }
 
   /** Deterministic MAXIMAL INDEPENDENT SET — Luby-style min-priority
@@ -1320,10 +1346,9 @@ object GraphOps {
     import spark.implicits._
     val e0 = edges.filter(col("src") =!= col("dst"))
       .select(col("src").cast("long"), col("dst").cast("long"))
-    val und = e0.union(e0.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct().persist()
-    val edgeCount = und.count() // gate + materializes the persist
-    requireLcgPriorityDomain(und, "maximalIndependentSet")
+    val und = symmetrize(e0).distinct().persist()
+    // gate + materializes the persist
+    val edgeCount = lcgDomainCount(und, "maximalIndependentSet")
     def pri(v: Long): Long = (v * 1103515245L + 12345L) % 2147483648L
     if (edgeCount <= driverSolveLimit) {
       val arr = und.rdd.map(r => (r.getLong(0), r.getLong(1))).collect()
@@ -1347,9 +1372,8 @@ object GraphOps {
     }
     val priCol = (c: org.apache.spark.sql.Column) =>
       (c * 1103515245L + 12345L) % 2147483648L
-    var active = und.select(col("src").as("v")).distinct()
-      .withColumn("p", priCol(col("v"))).localCheckpoint(true)
-    var activeCount = active.count()
+    var (active, activeCount) = checkpointCount(und.select(col("src").as("v"))
+      .distinct().withColumn("p", priCol(col("v"))))
     var result = Seq.empty[(Long, Int)].toDF("v", "round")
     var r = 0
     while (activeCount > 0 && r < maxRounds) {
@@ -1359,16 +1383,20 @@ object GraphOps {
         .join(active.select(col("v").as("av")), col("src") === col("av"), "left_semi")
         .join(active.select(col("v").as("dv"), col("p").as("dp")), col("dst") === col("dv"))
         .groupBy(col("src").as("mv")).agg(min("dp").as("minp"))
+      // lazy: the round's one job (the active set's checkpoint-and-count
+      // below) fills it on the way
       val sel = active.join(nbrMin, col("v") === col("mv"), "left")
         .filter(col("p") < coalesce(col("minp"), lit(Long.MaxValue)))
-        .select("v").localCheckpoint(true)
+        .select("v").localCheckpoint(eager = false)
       result = result.union(sel.select(col("v"), lit(r).as("round")))
       val removed = sel
         .union(und.join(sel.select(col("v").as("sv")), col("src") === col("sv"), "left_semi")
           .select(col("dst").as("v")))
         .distinct()
-      active = active.join(removed, Seq("v"), "left_anti").localCheckpoint(true)
-      activeCount = active.count()
+      val (nextActive, nextCount) =
+        checkpointCount(active.join(removed, Seq("v"), "left_anti"))
+      active = nextActive
+      activeCount = nextCount
     }
     und.unpersist()
     require(activeCount == 0, s"MIS did not converge within $maxRounds rounds")
@@ -1448,10 +1476,8 @@ object GraphOps {
       (c * 1103515245L + 12345L) % 2147483648L
     val e0 = newEdges.filter(col("src") =!= col("dst"))
       .select(col("src").cast("long"), col("dst").cast("long"))
-    val und = e0.union(e0.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct().localCheckpoint(true)
-    val totalV = und.select("src").distinct().count()
-    requireLcgPriorityDomain(und, "hpDependencyCone")
+    val und = symmetrize(e0).distinct().localCheckpoint(true)
+    val totalV = lcgDomainCount(und, "hpDependencyCone", countDistinct(col("src")))
     // dependency edges on the NEW graph: src's decision waits on dst
     val hpEdges = und.filter(priCol(col("dst")) < priCol(col("src")))
       .localCheckpoint(true)
@@ -1470,9 +1496,8 @@ object GraphOps {
         .select(col("dst").cast("long").as("v"))).distinct()
     val newVerts = und.select(col("src").as("v")).distinct()
       .join(prevVerts, Seq("v"), "left_anti")
-    var cone = insSeeds.unionByName(newVerts).distinct().localCheckpoint(true)
+    var (cone, coneCount) = checkpointCount(insSeeds.unionByName(newVerts).distinct())
     var frontier = cone
-    var coneCount = cone.count()
     // the limit must bound the SEED set too: a huge delta whose cone
     // never grows past its seeds would otherwise reach the driver gather
     // with no size check at all
@@ -1485,11 +1510,10 @@ object GraphOps {
     var r = 0
     while (grew && r < maxRounds) {
       r += 1
-      val next = hpEdges
+      val (next, n) = checkpointCount(hpEdges
         .join(frontier.select(col("v").as("fv")), col("dst") === col("fv"), "left_semi")
         .select(col("src").as("v")).distinct()
-        .join(cone, Seq("v"), "left_anti").localCheckpoint(true)
-      val n = next.count()
+        .join(cone, Seq("v"), "left_anti"))
       if (n == 0) grew = false
       else {
         cone = cone.union(next).localCheckpoint(true)
@@ -1741,10 +1765,9 @@ object GraphOps {
     import spark.implicits._
     val e0 = edges.filter(col("src") =!= col("dst"))
       .select(col("src").cast("long"), col("dst").cast("long"))
-    val und = e0.union(e0.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct().persist()
-    val edgeCount = und.count() // gate + materializes the persist
-    requireLcgPriorityDomain(und, "jonesPlassmannColoring")
+    val und = symmetrize(e0).distinct().persist()
+    // gate + materializes the persist
+    val edgeCount = lcgDomainCount(und, "jonesPlassmannColoring")
     def pri(v: Long): Long = (v * 1103515245L + 12345L) % 2147483648L
     // The SAME rounds, in memory — the whole-problem gate path AND the
     // tail finish (which seeds `colored` with the boundary colors and
@@ -1787,13 +1810,12 @@ object GraphOps {
     // static: "v waits for dst" edges — priority is arithmetic on the id
     val hpEdges = und.filter(priCol(col("dst")) < priCol(col("src")))
       .localCheckpoint(true)
-    var un = und.select(col("src").as("v")).distinct().localCheckpoint(true)
-    var unCount = un.count()
+    var (un, unCount) = checkpointCount(und.select(col("src").as("v")).distinct())
     // colored state = FLAT UNION of per-round checkpointed `newly` leaves
     // (the multiBrandesDeltas discipline): any consumer re-executes only
     // a union of materialized blocks, never a nested join/agg lineage —
-    // per-round cost is exactly TWO materializations (newly, un) + the
-    // termination count, measured 2.7x faster than checkpointing the
+    // per-round cost is TWO materializations (newly, un; the termination
+    // count rides un's checkpoint job), measured 2.7x faster than checkpointing the
     // accumulated frame (and 2.6x faster than checkpoint cadence, whose
     // nested mex recomputation dominated).
     // frames carry (v, color) ONLY — the round number is attached as a
@@ -1842,11 +1864,14 @@ object GraphOps {
       val newly1 = roundStep(un).localCheckpoint(true)
       newlyFrames ::= (r + 1) -> newly1
       val un1 = un.join(newly1.select("v"), Seq("v"), "left_anti")
-      val newly2 = roundStep(un1).localCheckpoint(true)
+      // lazy: the pair's closing job (un's checkpoint-and-count) fills it
+      val newly2 = roundStep(un1).localCheckpoint(eager = false)
       newlyFrames ::= (r + 2) -> newly2
       r += 2
-      un = un1.join(newly2.select("v"), Seq("v"), "left_anti").localCheckpoint(true)
-      unCount = un.count()
+      val (unNext, unNextCount) =
+        checkpointCount(un1.join(newly2.select("v"), Seq("v"), "left_anti"))
+      un = unNext
+      unCount = unNextCount
     }
     val emptyR = Seq.empty[(Long, Int, Int)].toDF("v", "color", "round")
     var colored = (emptyR :: newlyFrames.map { case (rr, df) =>
@@ -1923,10 +1948,9 @@ object GraphOps {
     import spark.implicits._
     val e0 = edges.filter(col("src") =!= col("dst"))
       .select(col("src").cast("long"), col("dst").cast("long"))
-    val und = e0.union(e0.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct().persist()
-    val edgeCount = und.count() // gate + materializes the persist
-    requireLcgPriorityDomain(und, "speculativeColoring")
+    val und = symmetrize(e0).distinct().persist()
+    // gate + materializes the persist
+    val edgeCount = lcgDomainCount(und, "speculativeColoring")
     def pri(v: Long): Long = (v * 1103515245L + 12345L) % 2147483648L
     if (edgeCount <= driverSolveLimit) {
       val arr = und.rdd.map(r => (r.getLong(0), r.getLong(1))).collect()
@@ -1965,8 +1989,7 @@ object GraphOps {
     val empty = Seq.empty[(Long, Int)].toDF("v", "color")
     var newlyFrames = List.empty[(Int, DataFrame)]
     def committed: DataFrame = (empty :: newlyFrames.map(_._2)).reduce(_ union _)
-    var un = und.select(col("src").as("v")).distinct().localCheckpoint(true)
-    var unCount = un.count()
+    var (un, unCount) = checkpointCount(und.select(col("src").as("v")).distinct())
     var r = 0
     while (unCount > 0 && r < maxRounds) {
       r += 1
@@ -1991,15 +2014,15 @@ object GraphOps {
       // conflicts: adjacent equal TENTATIVE colors; the higher priority
       // endpoint uncolors (und is symmetric, so one directed read
       // per pair suffices: keep the src side when it is the loser)
-      val losers = und
+      val (losers, loserCount) = checkpointCount(und
         .join(tent.select(col("v").as("src"), col("color").as("ca")), Seq("src"))
         .join(tent.select(col("v").as("dst"), col("color").as("cb")), Seq("dst"))
         .filter(col("ca") === col("cb") && priCol(col("src")) > priCol(col("dst")))
-        .select(col("src").as("v")).distinct().localCheckpoint(true)
+        .select(col("src").as("v")).distinct())
       val newly = tent.join(losers, Seq("v"), "left_anti").localCheckpoint(true)
       newlyFrames ::= r -> newly
       un = losers
-      unCount = un.count()
+      unCount = loserCount
     }
     require(unCount == 0,
       s"speculative coloring did not converge within $maxRounds rounds" +
@@ -2092,11 +2115,8 @@ object GraphOps {
       inserted: DataFrame, deleted: DataFrame,
       maxIter: Int = 50,
       driverSolveLimit: Long = DriverSolveEdgeLimit): DataFrame = {
-    def sym(e: DataFrame): DataFrame = {
-      val e0 = e.select(col("src").cast("long").as("src"),
-        col("dst").cast("long").as("dst"))
-      e0.union(e0.select(col("dst").as("src"), col("src").as("dst"))).distinct()
-    }
+    def sym(e: DataFrame): DataFrame = symmetrize(e.select(
+      col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))).distinct()
     val pv = prevState.select(col("v").cast("long").as("v"),
       col("comp").cast("long").as("comp")).localCheckpoint(true)
     val ins = sym(inserted)
@@ -2171,22 +2191,21 @@ object GraphOps {
     // signature for callers' documentation of merge direction; the
     // strictly-better filter makes it the identity here.)
     val base = state0.localCheckpoint(true)
-    var overlay = seed0.localCheckpoint(true)
+    var (overlay, n) = checkpointCount(seed0)
     var frontier = overlay
-    var n = frontier.count()
     var i = 0
     trace(f"$opName relax seed n=$n t=${(System.nanoTime() - t0) / 1e9}%.2fs")
     while (n > 0 && i < maxIter) {
       val h1 = hop(frontier)
-      frontier = h1.union(hop(h1))
+      val (next, nextCount) = checkpointCount(h1.union(hop(h1))
         .groupBy("v").agg(pick(col("label")).as("cand"))
         .join(base.withColumnRenamed("label", "bl"), Seq("v"), "left")
         .join(overlay.withColumnRenamed("label", "ol"), Seq("v"), "left")
         .withColumn("cur", coalesce(col("ol"), col("bl")))
         .filter(col("cur").isNull || better(col("cand"), col("cur")))
-        .select(col("v"), col("cand").as("label"))
-        .localCheckpoint(true)
-      n = frontier.count()
+        .select(col("v"), col("cand").as("label")))
+      frontier = next
+      n = nextCount
       if (n > 0) overlay = overlay
         .join(frontier.select("v"), Seq("v"), "left_anti")
         .unionByName(frontier)
@@ -2292,13 +2311,11 @@ object GraphOps {
     // pass. Past the gate the BSP wave loop below runs over the same
     // materialized tightE — the 100 TB path, benched by the forced-BSP
     // twin q_graph_dag_layers_incremental_del_bsp and spec-pinned equal.
-    val tightE = e
+    val (tightE, tightN) = checkpointCount(e
       .join(pv.select(col("v").as("src"), col("lab").as("pl")), Seq("src"))
       .join(pv.select(col("v").as("dst"), col("lab").as("cl")), Seq("dst"))
       .filter(col("cl") === col("pl") + col("w"))
-      .select(col("src").as("p"), col("dst").as("c")).distinct()
-      .localCheckpoint(true)
-    val tightN = tightE.count()
+      .select(col("src").as("p"), col("dst").as("c")).distinct())
     // Wave-0 candidates: heads of deleted edges that were TIGHT under
     // the old labels (an untight deleted edge never carried the label).
     val cand0v = del
@@ -2354,7 +2371,6 @@ object GraphOps {
     // this + the two-wave fusion + the checkpointed-frame broadcasts
     // below took q_graph_dag_layers_incremental_del 9.62 → 7.59 s,
     // bfs_del 5.53 → 5.12, sssp_del 5.88 → 5.26.
-    def ckpt(df: DataFrame): DataFrame = df.repartition(1).localCheckpoint(true)
     // Count-gated BROADCAST of every frontier/delta-derived join side:
     // checkpointed frontiers have unknown stats, so without the hint
     // every per-wave join SHUFFLED e and pv both ways — the r10 barrier
@@ -2380,8 +2396,8 @@ object GraphOps {
     // finding: the sub-wave fA is NOT bounded by the entering frontier —
     // one deleted support edge upstream of a high-out-degree vertex
     // fans out to ~out-degree unsettled children — so it must be
-    // measured BEFORE any plan wraps it in broadcast(); the count is a
-    // 1-task job on the single-partition checkpoint).
+    // measured BEFORE any plan wraps it in broadcast(); the count rides
+    // the job that fills its single-partition checkpoint).
     var cumGated = 0L
     def small(df: DataFrame): DataFrame =
       if (cumGated <= 200000L) broadcast(df) else df
@@ -2404,8 +2420,7 @@ object GraphOps {
       dropSupported(cand, unsettledAll)
     }
     val t0 = System.nanoTime()
-    var frontier = ckpt(dropSupported(cand0v, emptyU))
-    var n = frontier.count()
+    var (frontier, n) = ckptCount(dropSupported(cand0v, emptyU))
     cumGated += n
     var waves = 0
     trace(f"$opName cascade wave0 n=$n t=${(System.nanoTime() - t0) / 1e9}%.2fs")
@@ -2419,8 +2434,8 @@ object GraphOps {
       // it feeds the next wave's expansion, both its anti-joins, and the
       // result union, and the recorded dagLayers-batching failure mode
       // (3 recomputes of an unmaterialized sub-frame) applies verbatim —
-      // and it IS counted for the broadcast gate (a 1-task job on the
-      // single-partition checkpoint): fan-out means fA is NOT bounded by
+      // and it IS counted for the broadcast gate (in the job that fills
+      // its checkpoint): fan-out means fA is NOT bounded by
       // the entering frontier, and an unmeasured frame must never reach
       // broadcast().
       // (A TRUE two-waves-per-barrier fusion — fA persist()ed inside one
@@ -2436,12 +2451,12 @@ object GraphOps {
       // r13.)
       waves += 2
       uFrames ::= frontier
-      val fA = ckpt(nextWave(frontier))
-      cumGated += fA.count() // gates fB's plan, built next
+      val (fA, fAn) = ckptCount(nextWave(frontier))
+      cumGated += fAn // gates fB's plan, built next
       uFrames ::= fA
-      val fB = ckpt(nextWave(fA))
+      val (fB, fBn) = ckptCount(nextWave(fA))
       frontier = fB
-      n = fB.count()
+      n = fBn
       cumGated += n
       trace(f"$opName cascade waves=$waves n=$n cum=$cumGated " +
         f"t=${(System.nanoTime() - t0) / 1e9}%.2fs")
@@ -2667,13 +2682,11 @@ object GraphOps {
       .select(least(col("src"), col("dst")).cast("long").as("a"),
         greatest(col("src"), col("dst")).cast("long").as("b"))
       .distinct()
-    val sym = und.select(col("a").as("src"), col("b").as("dst"))
-      .union(und.select(col("b").as("src"), col("a").as("dst")))
-      .localCheckpoint(true) // feeds every peel round
+    val sym = symmetrize(und, "a", "b").localCheckpoint(true) // feeds every peel round
     // act appears TWICE per round (src prune + dst prune) — materialize
     // each round's survivor set or the plan doubles per round.
-    var deg = sym.groupBy(col("src").as("v")).agg(count(lit(1)).as("deg"))
-      .filter(col("deg") >= k).localCheckpoint(true)
+    var (deg, n) = checkpointCount(sym.groupBy(col("src").as("v"))
+      .agg(count(lit(1)).as("deg")).filter(col("deg") >= k))
     // Peel to a DETECTED fixpoint, `rounds` as a loud cap (r12, caught by
     // the sf1 hash compare): a round's published deg is counted within
     // the PREVIOUS round's survivors, so stopping on the exact round
@@ -2683,21 +2696,20 @@ object GraphOps {
     // equality ⇒ set equality (survivor sets only shrink), and the first
     // no-op round recomputes degrees within the converged set — exact.
     var prevN = -1L
-    var n = deg.count()
     var r = 1
     // `r <= rounds` (not `<`): the iteration that OBSERVES the no-op is
     // the free detection round — the cap bounds shrinking work only.
     while (n != prevN && r <= rounds) {
       r += 1
       val act = deg.select("v")
-      deg = sym
+      val (next, nextN) = checkpointCount(sym
         .join(act.select(col("v").as("sv")), col("src") === col("sv"), "left_semi")
         .join(act.select(col("v").as("dv")), col("dst") === col("dv"), "left_semi")
         .groupBy(col("src").as("v")).agg(count(lit(1)).as("deg"))
-        .filter(col("deg") >= k)
-        .localCheckpoint(true)
+        .filter(col("deg") >= k))
+      deg = next
       prevN = n
-      n = deg.count()
+      n = nextN
     }
     require(n == prevN,
       s"kcorePeel did not converge within $rounds rounds (|core| still $n " +
@@ -2755,14 +2767,12 @@ object GraphOps {
         greatest(col("src"), col("dst")).cast("long").as("b"))
       .distinct()
     val u1 = und(v1Raw).localCheckpoint(true)
-    val u2 = und(v2Raw).localCheckpoint(true)
+    val (u2, u2N) = checkpointCount(und(v2Raw))
     def undMinus(x: DataFrame, y: DataFrame) = x.join(
       y.select(col("a").as("xa"), col("b").as("xb")),
       col("a") === col("xa") && col("b") === col("xb"), "left_anti")
-    val insU = undMinus(u2, u1).localCheckpoint(true)
-    val delU = undMinus(u1, u2).localCheckpoint(true)
-    val insN = insU.count(); val delN = delU.count()
-    val u2N = u2.count()
+    val (insU, insN) = checkpointCount(undMinus(u2, u1))
+    val (delU, delN) = checkpointCount(undMinus(u1, u2))
     if (u2N <= driverSolveLimit) {
       // DRIVER SOLVE under the family's size gate (r11 — the dagdel
       // tight-support-worklist discipline applied to the whole kcore
@@ -2850,13 +2860,10 @@ object GraphOps {
         .map(v => (v, degB(v))).toSeq
       return rows.toDF("v", "deg").repartition(1).localCheckpoint(true)
     }
-    val sym2 = u2.select(col("a").as("src"), col("b").as("dst"))
-      .union(u2.select(col("b").as("src"), col("a").as("dst")))
-      .localCheckpoint(true)
+    val sym2 = symmetrize(u2, "a", "b").localCheckpoint(true)
     val core = prevCore.select(col("v").cast("long").as("v"),
       col("deg").cast("long").as("deg")).localCheckpoint(true)
     val coreIds = core.select("v")
-    def ckpt(df: DataFrame): DataFrame = df.repartition(1).localCheckpoint(true)
     // count-gated broadcast of checkpointed delta-sized frames (the
     // supportCascade discipline: only materialized, already-counted
     // frames ever reach broadcast())
@@ -2872,23 +2879,23 @@ object GraphOps {
     def degFull(w: DataFrame): DataFrame = sym2
       .join(small(w.select(col("v").as("src"))), Seq("src"), "left_semi")
       .groupBy(col("src").as("v")).agg(count(lit(1)).as("d"))
-    val insEnds = ckpt(ends(insU).join(coreIds, Seq("v"), "left_anti"))
-    cumGated += insEnds.count()
-    var frontier = ckpt(degFull(insEnds).filter(col("d") >= k).select("v"))
-    var fn = frontier.count(); cumGated += fn
+    val (insEnds, insEndsN) = ckptCount(ends(insU).join(coreIds, Seq("v"), "left_anti"))
+    cumGated += insEndsN
+    var (frontier, fn) = ckptCount(degFull(insEnds).filter(col("d") >= k).select("v"))
+    cumGated += fn
     var pFrames = List(frontier)
     def pAll: DataFrame = pFrames.reduce(_ union _)
     var waves = 0
     while (fn > 0 && waves < maxWaves) {
       waves += 1
-      val nbrs = ckpt(sym2
+      val (nbrs, nbrsN) = ckptCount(sym2
         .join(small(frontier.select(col("v").as("src"))), Seq("src"), "left_semi")
         .select(col("dst").as("v")).distinct()
         .join(coreIds, Seq("v"), "left_anti")
         .join(small(ckpt(pAll)), Seq("v"), "left_anti"))
-      cumGated += nbrs.count()
-      frontier = ckpt(degFull(nbrs).filter(col("d") >= k).select("v"))
-      fn = frontier.count(); cumGated += fn
+      cumGated += nbrsN
+      val (next, nextN) = ckptCount(degFull(nbrs).filter(col("d") >= k).select("v"))
+      frontier = next; fn = nextN; cumGated += fn
       trace(s"incrementalKCore cand wave=$waves n=$fn cum=$cumGated")
       pFrames ::= frontier
     }
@@ -2896,8 +2903,8 @@ object GraphOps {
       s"incrementalKCore: candidate region still growing after $maxWaves " +
         "waves — the insert cascade exceeds the cap; raise maxWaves or " +
         "recompute from the new snapshot")
-    val cand = ckpt(pAll)
-    val candN = cand.count(); cumGated += candN
+    val (cand, candN) = ckptCount(pAll)
+    cumGated += candN
     require(candN <= math.max(10000L, 20L * insN),
       s"incrementalKCore: candidate region ($candN vertices) degenerated " +
         s"past 20x the inserted-edge delta ($insN) — maintenance would " +
@@ -2917,11 +2924,11 @@ object GraphOps {
         .join(small(surv.select(col("v").as("src"))), Seq("src"), "left_semi")
         .join(small(surv.select(col("v").as("dst"))), Seq("dst"), "left_semi")
         .groupBy(col("src").as("v")).agg(count(lit(1)).as("cdS"))
-      val next = ckpt(surv
+      val (next, nn) = ckptCount(surv
         .join(cntC, Seq("v"), "left").join(cntS, Seq("v"), "left")
         .filter(coalesce(col("cdC"), lit(0L)) + coalesce(col("cdS"), lit(0L)) >= k)
         .select("v"))
-      val nn = next.count(); cumGated += nn
+      cumGated += nn
       stable = nn == sn
       surv = next; sn = nn
       trace(s"incrementalKCore peel round=$peelRounds n=$sn")
@@ -2946,67 +2953,67 @@ object GraphOps {
     // rows via one broadcast probe, membership via one kBase scan against
     // the broadcast neighbor rows — kBase is never shuffled
     def degInCore(w: DataFrame, evicted: DataFrame): DataFrame = {
-      val nb = ckpt(sym2
+      val (nb, nbN) = ckptCount(sym2
         .join(small(w.select(col("v").as("src"))), Seq("src"), "left_semi")
         .select(col("src"), col("dst")))
-      cumGated += nb.count()
+      cumGated += nbN
       kBase.join(small(nb), col("v") === col("dst"))
         .join(small(evicted.select(col("v").as("xd"))),
           col("dst") === col("xd"), "left_anti")
         .groupBy(col("src").as("v")).agg(count(lit(1)).as("dk"))
     }
-    var affected = ckpt(ends(delU)
+    var (affected, an) = ckptCount(ends(delU)
       .join(kBase.select(col("v").as("kv")), col("v") === col("kv"), "left_semi"))
-    var an = affected.count(); cumGated += an
+    cumGated += an
     var evWaves = 0
     while (an > 0 && evWaves < maxWaves) {
       evWaves += 1
-      val ev0 = ckpt(evictedAll)
-      cumGated += ev0.count()
+      val (ev0, ev0N) = ckptCount(evictedAll)
+      cumGated += ev0N
       val dk = degInCore(affected, ev0)
-      val evictNow = ckpt(affected
+      val (evictNow, en) = ckptCount(affected
         .join(dk, Seq("v"), "left")
         .filter(coalesce(col("dk"), lit(0L)) < k)
         .join(small(ev0.select(col("v").as("xe"))),
           col("v") === col("xe"), "left_anti")
         .select("v"))
-      val en = evictNow.count(); cumGated += en
+      cumGated += en
       if (en == 0) { an = 0 }
       else {
         evFrames ::= evictNow
         // next wave: surviving core neighbors of this wave's evictions
-        affected = ckpt(sym2
+        val (next, nextN) = ckptCount(sym2
           .join(small(evictNow.select(col("v").as("src"))), Seq("src"), "left_semi")
           .select(col("dst").as("v")).distinct()
           .join(kBase.select(col("v").as("kv")), col("v") === col("kv"), "left_semi")
           .join(small(ckpt(evictedAll)), Seq("v"), "left_anti"))
-        an = affected.count(); cumGated += an
+        affected = next; an = nextN; cumGated += an
         trace(s"incrementalKCore evict wave=$evWaves affected=$an evicted=$en")
       }
     }
     require(an == 0,
       s"incrementalKCore: eviction cascade still live after $maxWaves " +
         "waves — raise maxWaves or recompute from the new snapshot")
-    val evicted = ckpt(evictedAll)
-    val evN = evicted.count(); cumGated += evN
+    val (evicted, evN) = ckptCount(evictedAll)
+    cumGated += evN
 
     // ---- readout: recompute in-core degree ONLY where membership or
     // incident edges changed; reuse every other stored degree verbatim
     val kFinal = kBase.join(small(evicted), Seq("v"), "left_anti")
       .localCheckpoint(true)
-    val changedNbrSeeds = ckpt(joiners.union(evicted))
-    cumGated += changedNbrSeeds.count()
+    val (changedNbrSeeds, changedN) = ckptCount(joiners.union(evicted))
+    cumGated += changedN
     val changedNbrs = sym2
       .join(small(changedNbrSeeds.select(col("v").as("src"))), Seq("src"), "left_semi")
       .select(col("dst").as("v"))
-    val touched = ckpt(ends(insU).union(ends(delU)).union(changedNbrs)
+    val (touched, touchedN) = ckptCount(ends(insU).union(ends(delU)).union(changedNbrs)
       .union(joiners).distinct()
       .join(kFinal.select(col("v").as("kv")), col("v") === col("kv"), "left_semi"))
-    cumGated += touched.count()
-    val nbT = ckpt(sym2
+    cumGated += touchedN
+    val (nbT, nbTN) = ckptCount(sym2
       .join(small(touched.select(col("v").as("src"))), Seq("src"), "left_semi")
       .select(col("src"), col("dst")))
-    cumGated += nbT.count()
+    cumGated += nbTN
     val degTouched = kFinal.join(small(nbT), col("v") === col("dst"))
       .groupBy(col("src").as("v")).agg(count(lit(1)).as("deg"))
     val untouched = core
@@ -3027,8 +3034,8 @@ object GraphOps {
     * one spelling. */
   def ktrussPeel(spark: SparkSession, und: DataFrame, k: Int,
       rounds: Int): DataFrame = {
-    var cur = und.select(col("a").cast("long").as("a"),
-      col("b").cast("long").as("b")).localCheckpoint(true)
+    var (cur, prevN) = checkpointCount(und.select(col("a").cast("long").as("a"),
+      col("b").cast("long").as("b")))
     var result: DataFrame = cur.withColumn("support", lit(0L))
     // Peel to a DETECTED fixpoint with `rounds` as a loud cap — the
     // kcorePeel discipline (r12): a round's published support is counted
@@ -3036,23 +3043,20 @@ object GraphOps {
     // no-op slack publishes stale supports for edges adjacent to
     // last-round removals. Count equality ⇒ set equality (survivor sets
     // only shrink); the first no-op round's supports are exact.
-    var prevN = cur.count()
     var converged = false
     var r = 0
     while (!converged && r < rounds) {
       r += 1
       val sym = cur.select(col("a").as("v"), col("b").as("w"))
         .union(cur.select(col("b").as("v"), col("a").as("w")))
-      val sup = cur.as("u")
+      val (sup, n) = checkpointCount(cur.as("u")
         .join(sym.as("x"), col("x.v") === col("u.a"))
         .join(sym.as("y"), col("y.v") === col("u.b") && col("y.w") === col("x.w"))
         .groupBy(col("u.a").as("a"), col("u.b").as("b"))
         .agg(count(lit(1)).as("support"))
-        .filter(col("support") >= k - 2)
-        .localCheckpoint(true)
+        .filter(col("support") >= k - 2))
       result = sup
       cur = sup.select("a", "b")
-      val n = sup.count()
       if (n == prevN) converged = true else prevN = n
     }
     require(converged,
@@ -3104,14 +3108,12 @@ object GraphOps {
         greatest(col("a"), col("b")).cast("long").as("b"))
       .distinct()
     val u1 = norm(v1Und).localCheckpoint(true)
-    val u2 = norm(v2Und).localCheckpoint(true)
+    val (u2, u2N) = checkpointCount(norm(v2Und))
     def minus(x: DataFrame, y: DataFrame) = x.join(
       y.select(col("a").as("xa"), col("b").as("xb")),
       col("a") === col("xa") && col("b") === col("xb"), "left_anti")
-    val insE = minus(u2, u1).localCheckpoint(true)
+    val (insE, insN) = checkpointCount(minus(u2, u1))
     val delE = minus(u1, u2).localCheckpoint(true)
-    val insN = insE.count(); delE.count()
-    val u2N = u2.count()
     if (u2N <= driverSolveLimit) {
       // DRIVER SOLVE under the family's size gate — the kcore worklist
       // at TRIANGLE granularity: collect the v2 edge set, run the
@@ -3277,7 +3279,6 @@ object GraphOps {
       .filter(col("sup") >= k - 2).select("a", "b")
       .localCheckpoint(true)
     val sym2 = symOf(p1).localCheckpoint(true) // candidate-universe wedges
-    def ckpt(df: DataFrame): DataFrame = df.repartition(1).localCheckpoint(true)
     var cumGated = 0L
     def small(df: DataFrame): DataFrame =
       if (cumGated <= 200000L) broadcast(df) else df
@@ -3309,35 +3310,35 @@ object GraphOps {
 
     // ---- insert side: triangle-adjacency candidate waves, then a
     // frozen-core peel against truss ∪ survivors
-    val seed0 = ckpt(insE.join(p1.select(col("a").as("xa"), col("b").as("xb")),
+    val (seed0, seed0N) = ckptCount(insE.join(p1.select(col("a").as("xa"), col("b").as("xb")),
       col("a") === col("xa") && col("b") === col("xb"), "left_semi"))
-    cumGated += seed0.count()
+    cumGated += seed0N
     def fullOk(w: DataFrame): DataFrame = {
       val s = supIn(w, sym2).filter(col("sup") >= k - 2).select("a", "b")
       w.join(s.select(col("a").as("xa"), col("b").as("xb")),
         col("a") === col("xa") && col("b") === col("xb"), "left_semi")
     }
-    var frontier = ckpt(fullOk(seed0))
-    var fn = frontier.count(); cumGated += fn
+    var (frontier, fn) = ckptCount(fullOk(seed0))
+    cumGated += fn
     var pFrames = List(frontier)
     def pAll: DataFrame = pFrames.reduce(_ union _)
     var waves = 0
     while (fn > 0 && waves < maxWaves) {
       waves += 1
-      val nbrs = ckpt(exceptE(exceptE(
+      val (nbrs, nbrsN) = ckptCount(exceptE(exceptE(
         triNbr(frontier).join(p1.select(col("a").as("xa"), col("b").as("xb")),
           col("a") === col("xa") && col("b") === col("xb"), "left_semi"),
         coreE), ckpt(pAll)))
-      cumGated += nbrs.count()
-      frontier = ckpt(fullOk(nbrs))
-      fn = frontier.count(); cumGated += fn
+      cumGated += nbrsN
+      val (next, nextN) = ckptCount(fullOk(nbrs))
+      frontier = next; fn = nextN; cumGated += fn
       pFrames ::= frontier
     }
     require(fn == 0,
       s"incrementalKTruss: candidate region still growing after $maxWaves " +
         "waves — raise maxWaves or recompute from the new snapshot")
-    val cand = ckpt(pAll)
-    val candN = cand.count(); cumGated += candN
+    val (cand, candN) = ckptCount(pAll)
+    cumGated += candN
     require(candN <= math.max(10000L, 20L * insN),
       s"incrementalKTruss: candidate region ($candN edges) degenerated " +
         s"past 20x the inserted-edge delta ($insN) — maintenance would " +
@@ -3350,10 +3351,10 @@ object GraphOps {
       peelRounds += 1
       val liveSym = symOf(coreE).union(symOf(surv))
       val keep = supIn(surv, liveSym).filter(col("sup") >= k - 2)
-      val next = ckpt(surv.join(
+      val (next, nn) = ckptCount(surv.join(
         keep.select(col("a").as("xa"), col("b").as("xb")),
         col("a") === col("xa") && col("b") === col("xb"), "left_semi"))
-      val nn = next.count(); cumGated += nn
+      cumGated += nn
       stable = nn == sn
       surv = next; sn = nn
     }
@@ -3363,8 +3364,8 @@ object GraphOps {
     val joiners = surv // checkpointed, counted (sn)
 
     // ---- delete side: eviction cascade over (truss ∖ deleted) ∪ joiners
-    val kBase = ckpt(exceptE(coreE, delE).unionByName(joiners))
-    cumGated += kBase.count()
+    val (kBase, kBaseN) = ckptCount(exceptE(coreE, delE).unionByName(joiners))
+    cumGated += kBaseN
     val kBaseSym = symOf(kBase).localCheckpoint(true)
     var evFrames = List.empty[DataFrame]
     val emptyE = spark.createDataFrame(
@@ -3385,10 +3386,10 @@ object GraphOps {
     }
     // wave 0: surviving co-triangle edges (in the OLD truss) of deleted
     // truss edges — the triangles the deletion destroyed
-    val delCore = ckpt(delE.join(
+    val (delCore, delCoreN) = ckptCount(delE.join(
       coreE.select(col("a").as("xa"), col("b").as("xb")),
       col("a") === col("xa") && col("b") === col("xb"), "left_semi"))
-    cumGated += delCore.count()
+    cumGated += delCoreN
     // co-triangle edges within the OLD truss (prev snapshot's wedges —
     // the triangles whose loss the stored supports have not seen)
     val coreSym = symOf(coreE).localCheckpoint(true)
@@ -3408,55 +3409,55 @@ object GraphOps {
     // leaned on a triangle through a soon-deleted core edge must be
     // re-checked too, and its wedge legs are not in coreSym
     val preSym = coreSym.union(symOf(joiners)).localCheckpoint(true)
-    var affected = ckpt(triNbrIn(delCore, preSym)
+    var (affected, an) = ckptCount(triNbrIn(delCore, preSym)
       .join(kBase.select(col("a").as("xa"), col("b").as("xb")),
         col("a") === col("xa") && col("b") === col("xb"), "left_semi"))
-    var an = affected.count(); cumGated += an
+    cumGated += an
     var evWaves = 0
     while (an > 0 && evWaves < maxWaves) {
       evWaves += 1
-      val ev0 = ckpt(evictedAll)
-      cumGated += ev0.count()
+      val (ev0, ev0N) = ckptCount(evictedAll)
+      cumGated += ev0N
       val sup = supLive(affected, ev0)
-      val evictNow = ckpt(exceptE(affected
+      val (evictNow, en) = ckptCount(exceptE(affected
         .join(sup.select(col("a").as("xa"), col("b").as("xb"),
           col("sup")), col("a") === col("xa") && col("b") === col("xb"), "left")
         .filter(coalesce(col("sup"), lit(0L)) < k - 2)
         .select("a", "b"), ev0))
-      val en = evictNow.count(); cumGated += en
+      cumGated += en
       if (en == 0) { an = 0 }
       else {
         evFrames ::= evictNow
-        val ev1 = ckpt(evictedAll)
-        cumGated += ev1.count()
-        affected = ckpt(exceptE(triNbrIn(evictNow, kBaseSym)
+        val (ev1, ev1N) = ckptCount(evictedAll)
+        cumGated += ev1N
+        val (next, nextN) = ckptCount(exceptE(triNbrIn(evictNow, kBaseSym)
           .join(kBase.select(col("a").as("xa"), col("b").as("xb")),
             col("a") === col("xa") && col("b") === col("xb"), "left_semi"),
           ev1))
-        an = affected.count(); cumGated += an
+        affected = next; an = nextN; cumGated += an
       }
     }
     require(an == 0,
       s"incrementalKTruss: eviction cascade still live after $maxWaves " +
         "waves — raise maxWaves or recompute from the new snapshot")
-    val evicted = ckpt(evictedAll)
-    cumGated += evicted.count()
+    val (evicted, evictedN) = ckptCount(evictedAll)
+    cumGated += evictedN
 
     // ---- readout: recompute support ONLY where the triangle set
     // changed; reuse every other stored support verbatim
-    val kFinal = ckpt(exceptE(kBase, evicted))
-    cumGated += kFinal.count()
-    val removed = ckpt(delCore.unionByName(evicted))
-    cumGated += removed.count()
+    val (kFinal, kFinalN) = ckptCount(exceptE(kBase, evicted))
+    cumGated += kFinalN
+    val (removed, removedN) = ckptCount(delCore.unionByName(evicted))
+    cumGated += removedN
     val kFinalSym = symOf(kFinal).localCheckpoint(true)
-    val touched = ckpt(
+    val (touched, touchedN) = ckptCount(
       triNbrIn(removed, coreSym) // triangles LOST lived in the old truss
         .unionByName(triNbrIn(joiners, kFinalSym)) // triangles GAINED
         .unionByName(joiners)
         .distinct()
         .join(kFinal.select(col("a").as("xa"), col("b").as("xb")),
           col("a") === col("xa") && col("b") === col("xb"), "left_semi"))
-    cumGated += touched.count()
+    cumGated += touchedN
     val supTouched = supIn(touched, kFinalSym)
       .select(col("a"), col("b"), col("sup").as("support"))
     val untouched = core
@@ -3530,9 +3531,8 @@ object GraphOps {
     def minus(x: DataFrame, y: DataFrame) = x.join(
       y.select(col("a").as("xa"), col("b").as("xb")),
       col("a") === col("xa") && col("b") === col("xb"), "left_anti")
-    val insU = minus(u2, u1).repartition(1).localCheckpoint(true)
-    val delU = minus(u1, u2).repartition(1).localCheckpoint(true)
-    val insN = insU.count(); val delN = delU.count()
+    val (insU, insN) = ckptCount(minus(u2, u1))
+    val (delU, delN) = ckptCount(minus(u1, u2))
     def gated(df: DataFrame): DataFrame =
       if (insN + delN <= 200000L) broadcast(df) else df
     def symOf(e: DataFrame) = e.select(col("a").as("v"), col("b").as("w"))
@@ -3643,7 +3643,7 @@ object GraphOps {
     // zero-weight cycle lets two equal-dist vertices mutually "support"
     // each other, so the wave cascade would never unsettle them and the
     // result silently keeps stale distances. Gate loudly (the
-    // requireLcgPriorityDomain discipline); the one agg rides the
+    // lcgDomainCount discipline); the one agg rides the
     // checkpoint just materialized.
     val minW = e.agg(min("w")).collect()(0)
     require(minW.isNullAt(0) || minW.getLong(0) > 0L,
@@ -3720,20 +3720,19 @@ object GraphOps {
       // every edge is incident to BOTH endpoint components; min of the
       // (w, a, b, ...) struct is the deterministic per-component choice
       val pick = struct(col("w"), col("a"), col("b"), col("ca"), col("cb"))
-      val chosen = outgoing
+      val (chosen, chosenN) = checkpointCount(outgoing
         .select(col("ca").as("comp"), pick.as("e"))
         .union(outgoing.select(col("cb").as("comp"), pick.as("e")))
         .groupBy("comp").agg(min("e").as("e"))
         .select(col("e.a").as("a"), col("e.b").as("b"), col("e.w").as("w"),
           col("e.ca").as("ca"), col("e.cb").as("cb"))
-        .distinct().localCheckpoint(true)
-      if (chosen.isEmpty) done = true
+        .distinct())
+      if (chosenN == 0) done = true
       else {
         chosenRounds += chosen.select(lit(r).as("round"), col("a"), col("b"), col("w"))
         // contract on the COMPONENT graph: |edges| = |chosen| ≤ live comps
         val ce = chosen.select(col("ca").as("src"), col("cb").as("dst"))
-        val remap = connectedComponents(spark,
-            ce.union(ce.select(col("dst").as("src"), col("src").as("dst"))))
+        val remap = connectedComponents(spark, symmetrize(ce))
           .select(col("v").as("comp"), col("comp").as("nc"))
         labels = labels.join(remap, Seq("comp"), "left")
           .select(col("v"), coalesce(col("nc"), col("comp")).as("comp"))
@@ -3774,8 +3773,7 @@ object GraphOps {
     import spark.implicits._
     def c(e: DataFrame) = e.select(col("a").cast("long").as("a"),
       col("b").cast("long").as("b"), col("w").cast("long").as("w"))
-    val u2 = c(v2Und).localCheckpoint(true)
-    val u2N = u2.count()
+    val (u2, u2N) = checkpointCount(c(v2Und))
     if (u2N <= driverSolveLimit) {
       // DRIVER SOLVE under the family's size gate (the kcore/ktruss/dag
       // precedent, r11 VERDICT #3): the candidate algebra is identical —
@@ -3835,9 +3833,8 @@ object GraphOps {
     val fPrime = keyAnti(c(prevForest), delUnd).localCheckpoint(true)
     // fragment labels over the forest remnant (V-scale, size-gated CC);
     // vertices outside F∖D self-label — each is its own fragment
-    val fSym = fPrime.select(col("a").as("src"), col("b").as("dst"))
-      .union(fPrime.select(col("b").as("src"), col("a").as("dst")))
-    val frag = connectedComponents(spark, fSym).localCheckpoint(true)
+    val frag = connectedComponents(spark, symmetrize(fPrime, "a", "b"))
+      .localCheckpoint(true)
     val x = u2
       .join(frag.select(col("v").as("a"), col("comp").as("ca")), Seq("a"), "left")
       .join(frag.select(col("v").as("b"), col("comp").as("cb")), Seq("b"), "left")

@@ -5,13 +5,14 @@ import graft.plans.GraphOps
 import graft.sources.{AdjacencyCodec, GraphStore}
 import scala.collection.mutable
 
-/** Golden graph tests over the reference fixtures — ports
-  * `Assignment2/utils/bfs_checker.py` (level-SET equality from start 17 on
-  * G6, `bfs_checker.py:72-76`) and adds an independent in-memory BFS oracle
-  * for every fixture.
+/** Golden graph tests over the G0–G12 adjacency-matrix fixtures
+  * (`src/test/resources/graphs/`, authored to the shapes listed in
+  * FIXTURES.md §1): BFS level-SET equality from start 17 on G6 (the
+  * criterion of the reference's BFS checker) plus an independent
+  * in-memory BFS oracle for every fixture.
   */
 class GraphSpec extends SparkSpec {
-  private val fixtures = "/root/reference/Assignment2"
+  private val fixtures = new java.io.File(getClass.getResource("/graphs").toURI).getPath
 
   /** Independent oracle: plain sequential BFS over an adjacency map. */
   private def refBfs(edges: Seq[(Long, Long)], start: Long): Map[Long, Int] = {
@@ -33,7 +34,7 @@ class GraphSpec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
   }
 
-  test("G6 golden BFS from vertex 17 (bfs_checker.py parity: level sets)") {
+  test("G6 BFS from vertex 17: level sets equal the in-memory oracle") {
     val path = s"$fixtures/G6.txt"
     val expected = refBfs(AdjacencyCodec.read(spark, path)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq, 17L)
@@ -61,6 +62,46 @@ class GraphSpec extends SparkSpec {
         .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
       assert(pregel == loop, s"fixture $g")
     }
+  }
+
+  test("checkpointCount: exact count, one LogicalRDD leaf, exactly one Spark job") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.LogicalRDD
+    val sc = spark.sparkContext
+    val group = s"graft-checkpoint-count-${System.nanoTime()}"
+    val fence = s"$group-fence"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    @volatile var fenceSeen = false
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        Option(j.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => jobs.incrementAndGet()
+          case Some(`fence`) => fenceSeen = true
+          case _ =>
+        }
+    }
+    val df = spark.range(0L, 1000L, 1L, 4).toDF().filter(col("id") % 3 === 0)
+    sc.addSparkListener(listener)
+    val (cp, n) = try {
+      sc.setJobGroup(group, "checkpointCount probe")
+      try GraphOps.checkpointCount(df) finally sc.clearJobGroup()
+    } finally {
+      // the listener bus delivers in order: once the fence job's start
+      // arrives, every event of the probe group has arrived too
+      sc.setJobGroup(fence, "listener fence")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!fenceSeen && System.nanoTime() < deadline) Thread.sleep(5)
+      sc.removeSparkListener(listener)
+    }
+    assert(fenceSeen, "listener fence never arrived")
+    assert(n == 334L)
+    assert(cp.queryExecution.logical.isInstanceOf[LogicalRDD],
+      s"not a single LogicalRDD leaf:\n${cp.queryExecution.logical}")
+    assert(jobs.get == 1, s"${jobs.get} Spark jobs for one checkpoint-and-count")
+    // the filled checkpoint serves later reads, and a predicate counts a subset
+    assert(cp.collect().map(_.getLong(0)).sorted.toSeq == (0L until 1000L by 3L))
+    assert(GraphOps.checkpointCount(df, col("id") < 30)._2 == 10L)
   }
 
   test("G12 empty graph: BFS returns just the start vertex") {
@@ -723,8 +764,8 @@ class GraphSpec extends SparkSpec {
   }
 
   test("AdjacencyV2 source == driver-side codec on every reference fixture; pruning pushed") {
-    // copy the G*.txt fixtures into a clean dir (the reference dir also
-    // holds .c sources the graph reader must not be pointed at)
+    // copy the G*.txt fixtures into a clean dir (the reader must only
+    // ever see graph files)
     val tmp = java.nio.file.Files.createTempDirectory("graft-adjv2")
     val gs = new java.io.File(fixtures).listFiles()
       .filter(f => f.getName.matches("G\\d+\\.txt")).sortBy(_.getName)
@@ -1511,10 +1552,16 @@ class GraphSpec extends SparkSpec {
     def keyed(df: org.apache.spark.sql.DataFrame): Map[String, Seq[Double]] = {
       val fields = df.schema.fields.zipWithIndex
       val (ds, ks) = fields.partition(_._1.dataType == DoubleType)
-      df.collect().map { r =>
+      val rows = df.collect()
+      val byKey = rows.map { r =>
         (ks.map { case (_, i) => r.get(i) }.mkString("|"),
          ds.map { case (_, i) => r.getDouble(i) }.toSeq)
       }.toMap
+      // keys must be unique, or the map would silently fold duplicate
+      // rows and the comparison would lose multiplicity
+      assert(byKey.size == rows.length,
+        s"${rows.length} rows but ${byKey.size} distinct keys")
+      byKey
     }
     for ((a, b) <- GraphQueries.pairedIncTagPairs; tag <- Seq(a, b)) {
       val paired = GraphQueries.pairedIncState(spark, sfDir, tag)

@@ -272,6 +272,22 @@ class PipelineSpec extends SparkSpec {
     assert(viaJoin.nonEmpty, "fixture produced no pairs - test is vacuous")
   }
 
+  test("gridQ override: a positive int is honored, a malformed value names the key") {
+    import spark.implicits._
+    val lists = Seq((1L, Seq(1L, 2L))).toDF("doc_id", "ls")
+    try {
+      spark.conf.set(Dedup.GridQKey, "24")
+      assert(Dedup.gridQFor(spark, lists) == 24)
+      for (bad <- Seq("sixteen", "0", "-3", "2.5", "")) {
+        spark.conf.set(Dedup.GridQKey, bad)
+        val e = intercept[IllegalArgumentException](Dedup.gridQFor(spark, lists))
+        assert(e.getMessage.contains(Dedup.GridQKey), s"'$bad': ${e.getMessage}")
+      }
+    } finally spark.conf.unset(Dedup.GridQKey)
+    // no override: derived from the measured list bytes (floor 16)
+    assert(Dedup.gridQFor(spark, lists) == 16)
+  }
+
   test("custom generator UDTF: == HOF trigrams, and SQL/LATERAL VIEW callable") {
     import graft.functions.NGramsGen
     val docs = Tables(spark, sfDir, "documents").filter(col("doc_id") < 50)
