@@ -16,7 +16,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * OpenHashSet over one side and materializes the INTERSECTION ARRAY per
   * row, when the verify only ever reads its length — at sf0.1 that was
   * ~3.2 s of q_dedup_ppjoin's wall time over ~600k candidate pairs
-  * (StageProbe attribution). The merge count does one linear pass, zero
+  * (OPTIMIZATION_r14.md §5). The merge count does one linear pass, zero
   * allocation, inside whole-stage codegen.
   *
   * Caller contract (enforced by construction in [[graft.operators.Dedup]],

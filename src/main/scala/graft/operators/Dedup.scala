@@ -117,7 +117,7 @@ object Dedup extends QueryModule {
       // the full INDEX prefix (α ≥ ⌈t·nb⌉ exactly when the pair passes
       // the length filter t·nb ≤ na). The collision join shrinks from
       // Σ_s i_s² to Σ_s p_s·i_s over prefix-bucket sizes — the stage that
-      // grew 26×/decade at sf10 (r14 StageProbe). The positional filter
+      // grew 26×/decade at sf10 (OPTIMIZATION_r15.md §1). The positional filter
       // tightens to the same α: the sum bound t/(1+t)(na+nb) dominates
       // the old ⌈t·max(na,nb)⌉ (equal only at nb = t·na), so it keeps
       // every qualifying pair and strictly fewer false candidates.
@@ -183,7 +183,7 @@ object Dedup extends QueryModule {
       // two-pointer merge ([[graft.functions.SortedIntersectCount]]) —
       // size(array_intersect(...)) built a hash set AND materialized the
       // intersection array per candidate pair when only its length is
-      // read (~3.2 s of q_dedup_ppjoin at sf0.1, StageProbe attribution)
+      // read (~3.2 s of q_dedup_ppjoin at sf0.1, OPTIMIZATION_r14.md §5)
       val lists = sh.join(sid, Seq("s"))
         .groupBy("doc_id").agg(sort_array(collect_list(col("sid"))).as("ls"))
         .localCheckpoint(true)
@@ -194,7 +194,7 @@ object Dedup extends QueryModule {
       // BOTH full id arrays per candidate pair through the db-keyed
       // exchange — fine at bench scale (≤2 GB of array bytes) but the
       // dominant cost once candidates reach the tens of millions
-      // (StageProbe at sf10: ~1.6 KB × 72 M pairs). Past the gate the
+      // (sf10: ~1.6 KB × 72 M pairs, OPTIMIZATION_r14.md). Past the gate the
       // GRID cogroup attaches lists per (da-bucket, db-bucket) CELL
       // instead of per pair: shuffle bytes = pairs × 32 B + lists × 2Q,
       // not pairs × arrays. Both spellings produce the identical

@@ -418,10 +418,8 @@ object GraphQueries extends QueryModule {
     * ring edges whose endpoints BOTH sit in the top priority-value decile
     * — a low-priority-band delta whose dependency cone is shallow. */
   private def lowBandHeldEdge: org.apache.spark.sql.Column = {
-    def pri(c: org.apache.spark.sql.Column) =
-      (c * 1103515245L + 12345L) % 2147483648L
     val highP = lit(2147483648L / 10L * 9L)
-    pri(col("src")) > highP && pri(col("dst")) > highP
+    GraphOps.lcgPriCol(col("src")) > highP && GraphOps.lcgPriCol(col("dst")) > highP
   }
 
   /** Process-level parquet cache of each incremental-maintenance query's
@@ -431,74 +429,30 @@ object GraphQueries extends QueryModule {
     * lazily on first read otherwise, so Verify needs no prewarm), which
     * makes the published per-query time the MAINTENANCE STEP itself
     * instead of being dominated by constructing state the pipeline
-    * already has (the r8 bench note disclaimed exactly this). Builders
-    * are single-sourced with the query fixtures — and a drifted state
-    * would fail the oracle compare loudly anyway, because every
-    * maintenance result must equal the full recompute of the NEW
-    * snapshot. */
+    * already has (the r8 bench note disclaimed exactly this). Every tag
+    * has exactly one builder ([[incStateBuilders]]) and pays for its own
+    * build on its own `incstate_<tag>` cache_build line; no tag's build
+    * writes another tag's state. Builders are single-sourced with the
+    * query fixtures — and a drifted state would fail the oracle compare
+    * loudly anyway, because every maintenance result must equal the full
+    * recompute of the NEW snapshot. */
   private val incStateCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
   /** Builder dependencies, resolved BEFORE entering the map computation —
     * a builder that re-entered computeIfAbsent on the same map would be
-    * the recursive update the ConcurrentHashMap contract forbids. The
-    * del-sweep builders list BOTH sig states since r15: their PAIRED
-    * build (one backward sweep over the offset union) reads both. */
+    * the recursive update the ConcurrentHashMap contract forbids. The only
+    * edges are the two σ → δ ones: each Brandes-delta state reads its own
+    * fixture's stored σ state. */
   private val incStateDeps = Map(
-    "centinc_del" -> Seq("centinc_sig", "centdel_sig"),
-    "centdel_del" -> Seq("centinc_sig", "centdel_sig"))
-
-  /** Vertex-id offset that makes two builder graphs disjoint in one id
-    * space (fixture ids are customer keys < 2^31; 2^40 clears any scale
-    * this repo benches). */
-  private val pairOff = 1L << 40
-  /** r15: inc/del STATE-BUILDER PAIRS fused into one loop each (guide
-    * §1.2 "the distributed algorithm"): each twin pair runs the SAME
-    * fixed-iteration or detected-fixpoint loop on two disjoint graphs,
-    * and at bench scale the loop's cost is its per-superstep barrier
-    * floor — so the pair runs ONCE over the union with the second
-    * graph's vertex ids offset by [[pairOff]]. Disjoint id spaces mean
-    * no contribution, frontier, component, or triangle ever crosses
-    * graphs, so splitting by the offset recovers each solo result:
-    * integer families (BFS levels, SSSP dists, k-core degrees, k-truss
-    * supports, MSF edges, σ counts) bit-identically; float families
-    * (PageRank, HITS, Brandes δ) as the same per-vertex contribution
-    * multisets whose partial-sum order varies within the same envelope
-    * as any AQE re-run (outputs are consumed through rounded compares).
-    * GraphSpec pins paired == solo per family. Billing: the FIRST tag of
-    * a pair pays the union pass on its own cache_build line; its twin
-    * reads back — same visibility discipline as sigma_bfs/brandes_deltas.
-    * Driver-gated algorithms (cc/dag solve locally under 1M edges — no
-    * barrier floor to halve) and priority-keyed ones (MIS/coloring
-    * priorities hash the vertex id, so offset ids would CHANGE the
-    * stored symmetry-breaking state) deliberately stay solo. */
-  private val pairedTags: Map[String, String] = Map(
-    "bfsinc" -> "bfsdel", "hitsinc" -> "hitsdel", "princ" -> "prdel",
-    "ssspinc" -> "ssspdel", "msfinc" -> "msfdel", "kcoreinc" -> "kcoredel",
-    "ktrussinc" -> "ktrussdel", "centinc_sig" -> "centdel_sig",
-    "centinc_del" -> "centdel_del")
-  private def pairOf(tag: String): Option[(String, String)] =
-    pairedTags.get(tag).map(tag -> _)
-      .orElse(pairedTags.find(_._2 == tag))
+    "centinc_del" -> "centinc_sig",
+    "centdel_del" -> "centdel_sig")
 
   private def incStatePath(dir: String, tag: String): String =
     s"${sys.props("java.io.tmpdir")}/graft_incstate_" +
       java.lang.ProcessHandle.current().pid() + "_" + tag + "_" +
       dir.replaceAll("[^A-Za-z0-9]", "_")
 
-  private def cachedIncState(s: SparkSession, dir: String, tag: String): DataFrame = {
-    incStateDeps.getOrElse(tag, Nil).foreach(cachedIncState(s, dir, _))
-    // paired build resolved BEFORE the map computation (the incStateDeps
-    // discipline): if neither side exists, run the union pass and publish
-    // both paths — computeIfAbsent below then finds them.
-    pairOf(tag).foreach { case (a, b) =>
-      if (!incStateCache.containsKey(s"$dir:$a") &&
-          !incStateCache.containsKey(s"$dir:$b")) {
-        val (da, db) = pairedIncBuilders(s, dir)(a -> b)()
-        da.write.mode("overwrite").parquet(incStatePath(dir, a))
-        db.write.mode("overwrite").parquet(incStatePath(dir, b))
-        incStateCache.putIfAbsent(s"$dir:$a", incStatePath(dir, a))
-        incStateCache.putIfAbsent(s"$dir:$b", incStatePath(dir, b))
-      }
-    }
+  private[graft] def cachedIncState(s: SparkSession, dir: String, tag: String): DataFrame = {
+    incStateDeps.get(tag).foreach(cachedIncState(s, dir, _))
     val path = incStateCache.computeIfAbsent(s"$dir:$tag", _ => {
       val p = incStatePath(dir, tag)
       incStateBuilders(s, dir)(tag)().write.mode("overwrite").parquet(p)
@@ -507,140 +461,6 @@ object GraphQueries extends QueryModule {
     s.read.parquet(path)
   }
 
-  /** Solo (unpaired) build of one incremental state — the r14 spelling,
-    * kept as the equality reference for GraphSpec's paired == solo pin. */
-  private[graft] def soloIncState(s: SparkSession, dir: String, tag: String): DataFrame =
-    incStateBuilders(s, dir)(tag)()
-  /** Production read path, exposed for the same GraphSpec pin. */
-  private[graft] def pairedIncState(s: SparkSession, dir: String, tag: String): DataFrame =
-    cachedIncState(s, dir, tag)
-  private[graft] def pairedIncTagPairs: Seq[(String, String)] =
-    pairedTags.toSeq.sortBy(_._1)
-
-  /** The paired builders themselves — each returns (result for tagA,
-    * result for tagB) from ONE loop over the offset union. Graph
-    * derivations mirror [[incStateBuilders]] verbatim (same snapshot
-    * stores, same predicates); weights/canonical forms are computed
-    * BEFORE the offset so fixture arithmetic sees original ids. */
-  private def pairedIncBuilders(s: SparkSession, dir: String)
-      : Map[(String, String), () => (DataFrame, DataFrame)] = {
-    import s.implicits._
-    def weighted(e: DataFrame) = e.select(col("src"), col("dst"),
-      (lit(1) + (col("src") + col("dst")) % 5).as("w"))
-    def offSD(e: DataFrame) = e.select((col("src") + pairOff).as("src"),
-      (col("dst") + pairOff).as("dst"))
-    def offSDW(e: DataFrame) = e.select((col("src") + pairOff).as("src"),
-      (col("dst") + pairOff).as("dst"), col("w"))
-    def offAB(e: DataFrame) = e.select((col("a") + pairOff).as("a"),
-      (col("b") + pairOff).as("b"))
-    // one materialized union result serves both splits (the loop must
-    // run once, not once per side)
-    def sides(df: DataFrame, idCols: Seq[String]): (DataFrame, DataFrame) = {
-      val d = df.localCheckpoint(true)
-      val a = d.filter(idCols.map(c => col(c) < pairOff).reduce(_ && _))
-      val b = idCols.foldLeft(
-        d.filter(idCols.map(c => col(c) >= pairOff).reduce(_ && _)))(
-        (acc, c) => acc.withColumn(c, col(c) - pairOff))
-      (a, b)
-    }
-    def insPrev = snapshotInsertDiff(s, dir, "bfsinc", ringEdges(s, dir),
-      col("src") % 97 =!= 1)._1
-    def fullRing = snapshotDeleteDiff(s, dir, "bfsdel", ringEdges(s, dir),
-      bfsDelV2(s, dir))._1
-    // the centrality fixtures' v1 graphs — same derivations as the solo
-    // builders' local scopedPrev/scopedDelPrev
-    def centIncPrev = snapshotInsertDiff(s, dir, "centinc", hierEdges(s, dir),
-      !scopedHeldEdge(s, dir))._1
-      .select(col("src").cast("long"), col("dst").cast("long")).distinct()
-    Map(
-      ("bfsinc" -> "bfsdel") -> (() => {
-        val lv = GraphOps.multiSourceBfs(s,
-          insPrev.unionByName(offSD(fullRing)), Seq(0L, pairOff))
-          .localCheckpoint(true)
-        (lv.filter(col("seed") === 0L).select("v", "level"),
-         lv.filter(col("seed") === pairOff)
-           .select((col("v") - pairOff).as("v"), col("level")))
-      }),
-      ("hitsinc" -> "hitsdel") -> (() => {
-        val g1 = ringEdges(s, dir).filter(col("src") % 97 =!= 1)
-        sides(GraphOps.hits(s, g1.unionByName(offSD(fullRing)), 5,
-          normBy = Some(col("v") >= pairOff)), Seq("v"))
-      }),
-      ("princ" -> "prdel") -> (() => {
-        val g1 = ringEdges(s, dir).filter(col("src") % 97 =!= 1)
-        sides(GraphOps.pageRank(s, g1.unionByName(offSD(fullRing)), 10), Seq("v"))
-      }),
-      ("ssspinc" -> "ssspdel") -> (() => {
-        // super-source −1 reaches both start vertices over w=0 edges:
-        // dist(v) = 0 + dist_from_own_start(v), exactly the solo result
-        // (min-fixpoint over positive-weight paths; the graphs stay
-        // disjoint, the super source is filtered from both outputs)
-        val ss = Seq((-1L, 0L, 0L), (-1L, pairOff, 0L)).toDF("src", "dst", "w")
-        val g1 = weighted(snapshotInsertDiff(s, dir, "ssspinc",
-          ringEdges(s, dir), col("src") % 97 =!= 1)._1)
-        val g2 = weighted(snapshotDeleteDiff(s, dir, "bfsdel",
-          ringEdges(s, dir), bfsDelV2(s, dir))._1)
-        val d = GraphOps.sssp(s,
-          g1.unionByName(offSDW(g2)).unionByName(ss), -1L).localCheckpoint(true)
-        (d.filter(col("v") >= 0 && col("v") < pairOff),
-         d.filter(col("v") >= pairOff)
-           .select((col("v") - pairOff).as("v"), col("dist")))
-      }),
-      ("msfinc" -> "msfdel") -> (() => {
-        val g1 = msfUnd(insPrev)
-        val g2 = msfUnd(snapshotDeleteDiff(s, dir, "kcoredel",
-          ringEdges(s, dir), ringEdges(s, dir).filter(kcoreDelKeep))._1)
-        sides(GraphOps.boruvka(s, g1.unionByName(
-            g2.select((col("a") + pairOff).as("a"), (col("b") + pairOff).as("b"),
-              col("w"))), 8)._2
-          .select("a", "b", "w"), Seq("a", "b"))
-      }),
-      ("kcoreinc" -> "kcoredel") -> (() => {
-        val g2 = snapshotDeleteDiff(s, dir, "kcoredel", ringEdges(s, dir),
-          ringEdges(s, dir).filter(kcoreDelKeep))._1
-        sides(GraphOps.kcorePeel(s, insPrev.unionByName(offSD(g2)),
-          kcoreK, kcoreRounds), Seq("v"))
-      }),
-      ("ktrussinc" -> "ktrussdel") -> (() => {
-        val g1 = snapshotInsertDiff(s, dir, "ktrussinc",
-          trussEdges(s, dir).select(col("a").as("src"), col("b").as("dst")),
-          !trussInsHeld)._1
-          .select(col("src").as("a"), col("dst").as("b"))
-        val all = trussEdges(s, dir)
-          .select(col("a").as("src"), col("b").as("dst"))
-        val g2 = snapshotDeleteDiff(s, dir, "ktrussdel", all,
-          all.filter(trussDelKeep))._1
-          .select(col("src").as("a"), col("dst").as("b"))
-        sides(GraphOps.ktrussPeel(s, g1.unionByName(offAB(g2)),
-          trussK, trussRounds + 4), Seq("a", "b"))
-      }),
-      ("centinc_sig" -> "centdel_sig") -> (() => {
-        val u = centIncPrev
-          .unionByName(offSD(scopedDelPrev(s, dir))).localCheckpoint(true)
-        val sig = GraphOps.multiSourceBfsSigma(s, u,
-          closenessSeeds ++ closenessSeeds.map(_ + pairOff)).localCheckpoint(true)
-        (sig.filter(col("seed") < pairOff),
-         sig.filter(col("seed") >= pairOff)
-           .select((col("seed") - pairOff).as("seed"),
-             (col("v") - pairOff).as("v"), col("level"), col("sigma")))
-      }),
-      ("centinc_del" -> "centdel_del") -> (() => {
-        def sig(tag: String) = s.read.parquet(
-          Option(incStateCache.get(s"$dir:$tag")).getOrElse(throw
-            new IllegalStateException(s"$tag not built - register in incStateDeps")))
-        val u = centIncPrev
-          .unionByName(offSD(scopedDelPrev(s, dir))).localCheckpoint(true)
-        val sigU = sig("centinc_sig").unionByName(
-          sig("centdel_sig").select((col("seed") + pairOff).as("seed"),
-            (col("v") + pairOff).as("v"), col("level"), col("sigma")))
-          .localCheckpoint(true)
-        val del = GraphOps.multiBrandesDeltas(s, u, sigU).localCheckpoint(true)
-        (del.filter(col("dseed") < pairOff),
-         del.filter(col("dseed") >= pairOff)
-           .select((col("dseed") - pairOff).as("dseed"),
-             (col("dv") - pairOff).as("dv"), col("delta")))
-      }))
-  }
   private def incStateBuilders(s: SparkSession, dir: String): Map[String, () => DataFrame] = {
     def weighted(e: DataFrame) = e.select(col("src"), col("dst"),
       (lit(1) + (col("src") + col("dst")) % 5).as("w"))

@@ -770,8 +770,7 @@ object GraphOps {
     * one edge (max of an empty score set is undefined).
     */
   def hits(spark: SparkSession, edges: DataFrame, iterations: Int = 5,
-      warmFrom: Option[DataFrame] = None,
-      normBy: Option[Column] = None): DataFrame = {
+      warmFrom: Option[DataFrame] = None): DataFrame = {
     val e = edges.select(col("src").cast("long").as("esrc"),
       col("dst").cast("long").as("edst")).persist()
     val verts = e.select(col("esrc").as("v")).union(e.select(col("edst").as("v")))
@@ -814,23 +813,11 @@ object GraphOps {
     }
     e.unpersist()
     // ONE final max-normalization per score family (commutes with the
-    // linear half-steps — see scaladoc). With `normBy` (r15, the paired
-    // state builders' disjoint-union runs) the max is taken PER GROUP of
-    // the given vertex expression — the same single divide per value as
-    // the global path, so each group's scores equal a solo run's exactly.
-    normBy match {
-      case None =>
-        scores.crossJoin(broadcast(
-            scores.agg(max("auth").as("ma"), max("hub").as("mh"))))
-          .select(col("v"), (col("auth") / col("ma")).as("auth"),
-            (col("hub") / col("mh")).as("hub"))
-      case Some(g) =>
-        val sc = scores.withColumn("ng", g)
-        sc.join(broadcast(sc.groupBy("ng")
-            .agg(max("auth").as("ma"), max("hub").as("mh"))), "ng")
-          .select(col("v"), (col("auth") / col("ma")).as("auth"),
-            (col("hub") / col("mh")).as("hub"))
-    }
+    // linear half-steps — see scaladoc)
+    scores.crossJoin(broadcast(
+        scores.agg(max("auth").as("ma"), max("hub").as("mh"))))
+      .select(col("v"), (col("auth") / col("ma")).as("auth"),
+        (col("hub") / col("mh")).as("hub"))
   }
 
   /** Per-edge Jaccard vertex similarity |N(a)∩N(b)| / |N(a)∪N(b)| over the
@@ -1293,6 +1280,13 @@ object GraphOps {
     * failure, never a truncated result). */
   private[graft] val MisRoundCap = 32
 
+  /** The LCG vertex priority p(v) = (v·1103515245 + 12345) mod 2³¹ that
+    * every symmetry-breaking operator (MIS, Jones-Plassmann and
+    * speculative coloring, their incremental cone replays) orders by. */
+  private[graft] def lcgPri(v: Long): Long = (v * 1103515245L + 12345L) % 2147483648L
+  /** Column form of [[lcgPri]]: the same arithmetic, evaluated in the plan. */
+  private[graft] def lcgPriCol(c: Column): Column = (c * 1103515245L + 12345L) % 2147483648L
+
   /** Loud domain gate for every LCG-priority consumer: p(v) =
     * (v·1103515245 + 12345) mod 2³¹ is injective ONLY on 0 ≤ v < 2³¹
     * (its full period). Outside that domain two ADJACENT vertices can
@@ -1301,7 +1295,7 @@ object GraphOps {
     * require, but [[jonesPlassmannColoring]] would emit an improper
     * coloring (a tied pair lands in neither hp direction, both become
     * ready in round 1, both can take the same mex color) and the
-    * incremental cone replays' sortBy(pri) order becomes ambiguous.
+    * incremental cone replays' sortBy(lcgPri) order becomes ambiguous.
     * `und` is the symmetrized edge frame, so `src` covers every vertex.
     * The check shares ONE aggregate action with the caller's set-up size
     * (`size`, the edge count by default) and returns that size. */
@@ -1349,7 +1343,6 @@ object GraphOps {
     val und = symmetrize(e0).distinct().persist()
     // gate + materializes the persist
     val edgeCount = lcgDomainCount(und, "maximalIndependentSet")
-    def pri(v: Long): Long = (v * 1103515245L + 12345L) % 2147483648L
     if (edgeCount <= driverSolveLimit) {
       val arr = und.rdd.map(r => (r.getLong(0), r.getLong(1))).collect()
       und.unpersist()
@@ -1361,8 +1354,8 @@ object GraphOps {
       while (active.nonEmpty && r < maxRounds) {
         r += 1
         val sel = active.iterator.filter { v =>
-          val pv = pri(v)
-          adj(v).forall(u => !active.contains(u) || pri(u) > pv)
+          val pv = lcgPri(v)
+          adj(v).forall(u => !active.contains(u) || lcgPri(u) > pv)
         }.toArray
         out ++= sel.map(v => (v, r))
         sel.foreach { v => active -= v; adj(v).foreach(active -= _) }
@@ -1370,10 +1363,8 @@ object GraphOps {
       require(active.isEmpty, s"MIS did not converge within $maxRounds rounds")
       return out.result().toDF("v", "round")
     }
-    val priCol = (c: org.apache.spark.sql.Column) =>
-      (c * 1103515245L + 12345L) % 2147483648L
     var (active, activeCount) = checkpointCount(und.select(col("src").as("v"))
-      .distinct().withColumn("p", priCol(col("v"))))
+      .distinct().withColumn("p", lcgPriCol(col("v"))))
     var result = Seq.empty[(Long, Int)].toDF("v", "round")
     var r = 0
     while (activeCount > 0 && r < maxRounds) {
@@ -1472,20 +1463,18 @@ object GraphOps {
       coneGatherLimit: Long, coneGatherPairLimit: Long,
       maxConeFraction: Double): Option[HpCone] = {
     import spark.implicits._
-    val priCol = (c: org.apache.spark.sql.Column) =>
-      (c * 1103515245L + 12345L) % 2147483648L
     val e0 = newEdges.filter(col("src") =!= col("dst"))
       .select(col("src").cast("long"), col("dst").cast("long"))
     val und = symmetrize(e0).distinct().localCheckpoint(true)
     val totalV = lcgDomainCount(und, "hpDependencyCone", countDistinct(col("src")))
     // dependency edges on the NEW graph: src's decision waits on dst
-    val hpEdges = und.filter(priCol(col("dst")) < priCol(col("src")))
+    val hpEdges = und.filter(lcgPriCol(col("dst")) < lcgPriCol(col("src")))
       .localCheckpoint(true)
     // seeds: the higher-priority-VALUE (= later-deciding) endpoint of
     // each inserted edge — the only endpoint whose input set changed —
     // plus any vertex absent from the previous snapshot
     val insSeeds = inserted.filter(col("src") =!= col("dst"))
-      .select(when(priCol(col("src")) > priCol(col("dst")), col("src"))
+      .select(when(lcgPriCol(col("src")) > lcgPriCol(col("dst")), col("src"))
         .otherwise(col("dst")).cast("long").as("v"))
     // SAME normalization as the full operators (self-loops dropped): a
     // vertex that existed only via a self-loop was OUTSIDE the previous
@@ -1577,7 +1566,6 @@ object GraphOps {
       coneGatherPairLimit: Long = ConeGatherPairLimit,
       maxConeFraction: Double = 1.0): DataFrame = {
     import spark.implicits._
-    def pri(v: Long): Long = (v * 1103515245L + 12345L) % 2147483648L
     val c = hpDependencyCone(spark, newEdges, prevEdges, inserted,
       maxRounds, coneGatherLimit, coneGatherPairLimit, maxConeFraction) match {
       // past a gather gate the maintainer is TOTAL, not require-failing:
@@ -1592,7 +1580,7 @@ object GraphOps {
     val member = scala.collection.mutable.HashSet.empty[Long]
     c.boundaryDf.join(prevMis.select(col("v")), Seq("v"), "left_semi")
       .rdd.map(_.getLong(0)).collect().foreach(member += _)
-    c.coneVerts.sortBy(pri).foreach { v =>
+    c.coneVerts.sortBy(lcgPri).foreach { v =>
       // in-cone hp-neighbors are already decided (processed in priority
       // order); boundary hp-neighbors carry their old membership
       if (!c.hpAdj.getOrElse(v, Array.empty[Long]).exists(member)) member += v
@@ -1616,7 +1604,6 @@ object GraphOps {
       coneGatherPairLimit: Long = ConeGatherPairLimit,
       maxConeFraction: Double = 1.0): DataFrame = {
     import spark.implicits._
-    def pri(v: Long): Long = (v * 1103515245L + 12345L) % 2147483648L
     val prevVC = prevColors.select(col("v").cast("long"), col("color").cast("int"))
     val c = hpDependencyCone(spark, newEdges, prevEdges, inserted,
       maxRounds, coneGatherLimit, coneGatherPairLimit, maxConeFraction) match {
@@ -1630,7 +1617,7 @@ object GraphOps {
     c.boundaryDf.join(prevVC, Seq("v"))
       .rdd.map(x => (x.getLong(0), x.getInt(1))).collect()
       .foreach { case (v, col) => colorOf(v) = col }
-    c.coneVerts.sortBy(pri).foreach { v =>
+    c.coneVerts.sortBy(lcgPri).foreach { v =>
       val used = c.hpAdj.getOrElse(v, Array.empty[Long]).iterator.flatMap { u =>
         // every hp-neighbor is decided: in-cone ones earlier in this
         // loop, boundary ones by their old color — a miss is a bug
@@ -1768,7 +1755,6 @@ object GraphOps {
     val und = symmetrize(e0).distinct().persist()
     // gate + materializes the persist
     val edgeCount = lcgDomainCount(und, "jonesPlassmannColoring")
-    def pri(v: Long): Long = (v * 1103515245L + 12345L) % 2147483648L
     // The SAME rounds, in memory — the whole-problem gate path AND the
     // tail finish (which seeds `colored` with the boundary colors and
     // continues the round numbering).
@@ -1799,16 +1785,14 @@ object GraphOps {
       val arr = und.rdd.map(r => (r.getLong(0), r.getLong(1))).collect()
       und.unpersist()
       val hpAdj = arr.groupBy(_._1).map { case (v, es) =>
-        v -> es.map(_._2).filter(u => pri(u) < pri(v))
+        v -> es.map(_._2).filter(u => lcgPri(u) < lcgPri(v))
       }
       return simulateRounds(hpAdj.keys.toArray, hpAdj(_),
         scala.collection.mutable.LongMap.empty[Int], 1)
         .toDF("v", "color", "round")
     }
-    val priCol = (c: org.apache.spark.sql.Column) =>
-      (c * 1103515245L + 12345L) % 2147483648L
     // static: "v waits for dst" edges — priority is arithmetic on the id
-    val hpEdges = und.filter(priCol(col("dst")) < priCol(col("src")))
+    val hpEdges = und.filter(lcgPriCol(col("dst")) < lcgPriCol(col("src")))
       .localCheckpoint(true)
     var (un, unCount) = checkpointCount(und.select(col("src").as("v")).distinct())
     // colored state = FLAT UNION of per-round checkpointed `newly` leaves
@@ -1919,7 +1903,7 @@ object GraphOps {
     * level (depth 23 on the sf0.1 ring fixture), while speculation lets
     * every uncolored vertex pick a color each round and uncolors only the
     * loser of each tentative conflict. Round 1 is a HASHED GUESS
-    * (pri % 8): a mex start has no committed colors, so every vertex
+    * (lcgPri % 8): a mex start has no committed colors, so every vertex
     * picks 0 and EVERY edge conflicts — the tuning ledger's numbers at
     * sf0.1, each measured: mex start = 7 rounds but round-2 uncolored
     * 12379/15000 and 9.1 s (REJECTED); hashed start = 5 rounds, round-2
@@ -1951,7 +1935,6 @@ object GraphOps {
     val und = symmetrize(e0).distinct().persist()
     // gate + materializes the persist
     val edgeCount = lcgDomainCount(und, "speculativeColoring")
-    def pri(v: Long): Long = (v * 1103515245L + 12345L) % 2147483648L
     if (edgeCount <= driverSolveLimit) {
       val arr = und.rdd.map(r => (r.getLong(0), r.getLong(1))).collect()
       und.unpersist()
@@ -1963,14 +1946,14 @@ object GraphOps {
       while (un.nonEmpty && r < maxRounds) {
         r += 1
         val tent = un.iterator.map { v =>
-          if (r == 1) v -> (pri(v) % 8).toInt
+          if (r == 1) v -> (lcgPri(v) % 8).toInt
           else {
             val used = adj(v).iterator.flatMap(color.get).toSet
             v -> Iterator.from(0).find(c => !used(c)).get
           }
         }.toMap
         val losers = tent.keysIterator.filter { v =>
-          adj(v).exists(u => tent.get(u).contains(tent(v)) && pri(v) > pri(u))
+          adj(v).exists(u => tent.get(u).contains(tent(v)) && lcgPri(v) > lcgPri(u))
         }.toSet
         (tent.keySet -- losers).foreach { v =>
           color(v) = tent(v); out += ((v, tent(v), r))
@@ -1981,8 +1964,6 @@ object GraphOps {
         s"speculative coloring did not converge within $maxRounds rounds")
       return out.result().toDF("v", "color", "round")
     }
-    val priCol = (c: org.apache.spark.sql.Column) =>
-      (c * 1103515245L + 12345L) % 2147483648L
     // committed state = flat union of per-round checkpointed leaves (the
     // jonesPlassmannColoring discipline — consumers re-execute a union of
     // materialized blocks, never a nested lineage)
@@ -1993,14 +1974,14 @@ object GraphOps {
     var r = 0
     while (unCount > 0 && r < maxRounds) {
       r += 1
-      // Round 1: a hashed GUESS (pri % 8) instead of the mex — with no
+      // Round 1: a hashed GUESS (lcgPri % 8) instead of the mex — with no
       // committed colors every mex is 0 and EVERY edge conflicts, which
       // measured as the variant's dominant cost (round-2 uncolored
       // 12379 → 2628 of 15000 at sf0.1 under the guess). Rounds ≥ 2:
       // mex over COMMITTED neighbor colors (no colored neighbor → mask
       // 0 → mex 0).
       val tent = (if (r == 1)
-        un.select(col("v"), (priCol(col("v")) % 8).cast("int").as("color"))
+        un.select(col("v"), (lcgPriCol(col("v")) % 8).cast("int").as("color"))
       else {
         val masks = und
           .join(un.select(col("v").as("uv")), col("src") === col("uv"), "left_semi")
@@ -2017,7 +1998,7 @@ object GraphOps {
       val (losers, loserCount) = checkpointCount(und
         .join(tent.select(col("v").as("src"), col("color").as("ca")), Seq("src"))
         .join(tent.select(col("v").as("dst"), col("color").as("cb")), Seq("dst"))
-        .filter(col("ca") === col("cb") && priCol(col("src")) > priCol(col("dst")))
+        .filter(col("ca") === col("cb") && lcgPriCol(col("src")) > lcgPriCol(col("dst")))
         .select(col("src").as("v")).distinct())
       val newly = tent.join(losers, Seq("v"), "left_anti").localCheckpoint(true)
       newlyFrames ::= r -> newly

@@ -1540,15 +1540,15 @@ class GraphSpec extends SparkSpec {
     assert(inc.values.exists(_ > 0))
   }
 
-  test("paired incremental-state builders equal the solo builders") {
-    // r15: the inc/del twins of the barrier-floor-bound state builders
-    // run as ONE loop over an offset-union graph (GraphQueries.pairedTags)
-    // and split by the id offset. This pin: for every paired tag, the
-    // production (paired) state equals the r14 solo builder's output —
-    // integer families exactly, float families to 1e-9 relative (the
-    // partial-sum-order envelope rounded compares already tolerate).
+  test("each incremental state builds alone") {
+    // Every incremental state has exactly one builder: reading a tag
+    // writes that tag's stored state (plus its σ dependency, for the two
+    // Brandes-delta states) and never its inc/del twin's. Each read goes
+    // through its own alias of sfDir, so the tmpdir listing below sees
+    // only the builds this read caused.
     import graft.operators.GraphQueries
     import org.apache.spark.sql.types.DoubleType
+    import java.nio.file.{Files, Paths}
     def keyed(df: org.apache.spark.sql.DataFrame): Map[String, Seq[Double]] = {
       val fields = df.schema.fields.zipWithIndex
       val (ds, ks) = fields.partition(_._1.dataType == DoubleType)
@@ -1563,22 +1563,53 @@ class GraphSpec extends SparkSpec {
         s"${rows.length} rows but ${byKey.size} distinct keys")
       byKey
     }
-    for ((a, b) <- GraphQueries.pairedIncTagPairs; tag <- Seq(a, b)) {
-      val paired = GraphQueries.pairedIncState(spark, sfDir, tag)
-      val solo = GraphQueries.soloIncState(spark, sfDir, tag)
-      assert(paired.columns.toSeq == solo.columns.toSeq, s"$tag: schema drift")
-      val (p, q) = (keyed(paired), keyed(solo))
-      assert(p.keySet == q.keySet,
-        s"$tag: key sets differ (paired-only: ${(p.keySet -- q.keySet).take(3)}, " +
-          s"solo-only: ${(q.keySet -- p.keySet).take(3)})")
-      p.foreach { case (k, pv) =>
-        val qv = q(k)
-        pv.zip(qv).foreach { case (x, y) =>
-          assert(math.abs(x - y) <= 1e-9 * math.max(1.0, math.max(math.abs(x), math.abs(y))),
-            s"$tag row $k: paired $x vs solo $y")
+    val twins = Seq("bfsinc" -> "bfsdel", "hitsinc" -> "hitsdel",
+      "princ" -> "prdel", "ssspinc" -> "ssspdel", "msfinc" -> "msfdel",
+      "kcoreinc" -> "kcoredel", "ktrussinc" -> "ktrussdel",
+      "centinc_sig" -> "centdel_sig", "centinc_del" -> "centdel_del")
+    val twinOf = (twins ++ twins.map(_.swap)).toMap
+    val deps = Map("centinc_del" -> "centinc_sig", "centdel_del" -> "centdel_sig")
+    val aliasRoot = Files.createTempDirectory("graft-incstate-alias")
+    def alias(name: String): String =
+      Files.createSymbolicLink(aliasRoot.resolve(name), Paths.get(sfDir)).toString
+    // tags whose graft_incstate_<pid>_<tag>_<dir> path exists in tmpdir
+    def built(dir: String): Set[String] = {
+      val prefix = s"graft_incstate_${ProcessHandle.current().pid()}_"
+      val suffix = "_" + dir.replaceAll("[^A-Za-z0-9]", "_")
+      Option(new java.io.File(sys.props("java.io.tmpdir")).list()).toSeq.flatten
+        .filter(n => n.startsWith(prefix) && n.endsWith(suffix))
+        .map(_.stripPrefix(prefix).stripSuffix(suffix)).toSet
+    }
+    try {
+      for (tag <- twinOf.keys.toSeq.sorted) {
+        val dir = alias(s"sf_$tag")
+        val state = keyed(GraphQueries.cachedIncState(spark, dir, tag))
+        val wrote = built(dir)
+        assert(wrote == Set(tag) ++ deps.get(tag),
+          s"$tag: reading it built $wrote (twin ${twinOf(tag)} must stay unbuilt)")
+        assert(state.nonEmpty, s"$tag: empty state")
+      }
+      // the σ dependency resolves whichever of the pair is read first
+      val byOrder = Seq(Seq("centinc_del", "centinc_sig"),
+          Seq("centinc_sig", "centinc_del")).map { order =>
+        val dir = alias(order.mkString("sf_", "_", ""))
+        val got = order.map(t => t -> keyed(GraphQueries.cachedIncState(spark, dir, t))).toMap
+        assert(built(dir) == order.toSet, s"$order built ${built(dir)}")
+        got
+      }
+      for (t <- Seq("centinc_sig", "centinc_del")) {
+        val (p, q) = (byOrder(0)(t), byOrder(1)(t))
+        assert(p.nonEmpty && p.keySet == q.keySet, s"$t: key sets differ by read order")
+        p.foreach { case (k, pv) =>
+          pv.zip(q(k)).foreach { case (x, y) =>
+            assert(math.abs(x - y) <= 1e-9 * math.max(1.0, math.max(math.abs(x), math.abs(y))),
+              s"$t row $k: $x vs $y by read order")
+          }
         }
       }
-      assert(p.nonEmpty, s"$tag: empty state - vacuous compare")
+    } finally {
+      Files.list(aliasRoot).forEach(p => Files.delete(p))
+      Files.delete(aliasRoot)
     }
   }
 }
