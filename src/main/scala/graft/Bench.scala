@@ -26,7 +26,7 @@ object Bench {
 
   /** Which queries read each prewarmed cache — DATA, consumed twice:
     * the subset-aware prewarm filter and the cache_consumers JSON. */
-  private val cacheConsumerSeq: Seq[(String, Seq[String])] = Seq(
+  private[graft] val cacheConsumerSeq: Seq[(String, Seq[String])] = Seq(
       "sigma_bfs" -> Seq("q_graph_bfs", "q_graph_dfs_leaves", "q_graph_khop",
 
         "q_graph_betweenness", "q_graph_betweenness_multi", "q_graph_closeness",

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.{QueryModule, Tables}
+import graft.{ProcessCache, QueryModule, Tables}
 import graft.sources.VersionedGraphStore
 
 /** Event-log analytics over `events` — the session/funnel/time-series
@@ -411,9 +411,7 @@ object EventAnalytics extends QueryModule {
     "q_cdc_vacuum" -> ((s, dir) => {
       val n = t(s, dir, "nation")
         .select(col("n_nationkey").cast("long").as("k"))
-      val base = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        s"graft_cdcvac_${java.lang.ProcessHandle.current().pid()}_" +
-          dir.replaceAll("[^A-Za-z0-9]", "_")).toString
+      val base = ProcessCache.path("cdcvac", dir)
       // table state is RUN state: rebuilt each invocation so ids are
       // deterministic (1, 2, 3)
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
@@ -443,9 +441,7 @@ object EventAnalytics extends QueryModule {
     "q_cdc_schema_evolution" -> ((s, dir) => {
       import s.implicits._
       val n = t(s, dir, "nation")
-      val base = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        s"graft_cdcschema_${java.lang.ProcessHandle.current().pid()}_" +
-          dir.replaceAll("[^A-Za-z0-9]", "_")).toString
+      val base = ProcessCache.path("cdcschema", dir)
       // table state is RUN state: rebuilt each invocation so snapshot ids
       // are deterministic (1 then 2)
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
@@ -489,9 +485,7 @@ object EventAnalytics extends QueryModule {
     "q_cdc_schema_migration" -> ((s, dir) => {
       import s.implicits._
       val n = t(s, dir, "nation")
-      val base = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        s"graft_cdcmig_${java.lang.ProcessHandle.current().pid()}_" +
-          dir.replaceAll("[^A-Za-z0-9]", "_")).toString
+      val base = ProcessCache.path("cdcmig", dir)
       // table state is RUN state: rebuilt each invocation so snapshot ids
       // are deterministic (1 then 2)
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
@@ -547,9 +541,7 @@ object EventAnalytics extends QueryModule {
     // oracled, driver-checked row every round.
     "q_cdc_concurrent" -> ((s, dir) => {
       val n = t(s, dir, "nation")
-      val base = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        s"graft_cdcconc_${java.lang.ProcessHandle.current().pid()}_" +
-          dir.replaceAll("[^A-Za-z0-9]", "_")).toString
+      val base = ProcessCache.path("cdcconc", dir)
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
       val v0 = VersionedGraphStore.commit(
         n.select(col("n_nationkey").cast("long").as("k"), lit("base").as("tag")),
@@ -628,9 +620,7 @@ object EventAnalytics extends QueryModule {
     // orphaned pre-compaction dir while keeping both live versions. */
     "q_cdc_compaction" -> ((s, dir) => {
       val n = t(s, dir, "nation")
-      val base = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        s"graft_cdccomp_${java.lang.ProcessHandle.current().pid()}_" +
-          dir.replaceAll("[^A-Za-z0-9]", "_")).toString
+      val base = ProcessCache.path("cdccomp", dir)
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
       val v1 = VersionedGraphStore.commit(
         n.filter(col("n_nationkey") < 10)

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.{QueryModule, Tables}
+import graft.{ProcessCache, QueryModule, Tables}
 import graft.plans.GraphOps
 import graft.sources.{AdjacencyCodec, GraphStore, VersionedGraphStore}
 
@@ -270,9 +270,7 @@ object GraphQueries extends QueryModule {
     * of a per-query copy so a future change to the diff key cannot drift
     * between family members.
     */
-  private val stageNonce: String =
-    java.lang.ProcessHandle.current().pid() + "_" +
-      java.lang.Long.toHexString(System.nanoTime())
+  private val stageNonce: String = java.lang.Long.toHexString(System.nanoTime())
   // per-base locks: racing first-callers of the SAME tag must serialize,
   // but unrelated tags touch disjoint nonce-tagged directories and must
   // not block each other across two full parquet-write jobs
@@ -288,9 +286,7 @@ object GraphQueries extends QueryModule {
     // nonce, not bare pid: a recycled pid with a persistent tmpdir (or a
     // regenerated corpus at the same path) must never satisfy the reuse
     // check with a STALE store from another JVM
-    val base = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-      s"graft_${tag}_${stageNonce}_" +
-        dir.replaceAll("[^A-Za-z0-9]", "_")).toString
+    val base = ProcessCache.path(tag, s"${stageNonce}_$dir")
     // IDEMPOTENT per process: the nonce-tagged path is fresh per JVM and
     // the fixture content per (dir, tag) is deterministic, so an
     // already-staged two-version store is REUSED — a delete+restage here
@@ -431,35 +427,15 @@ object GraphQueries extends QueryModule {
     * instead of being dominated by constructing state the pipeline
     * already has (the r8 bench note disclaimed exactly this). Every tag
     * has exactly one builder ([[incStateBuilders]]) and pays for its own
-    * build on its own `incstate_<tag>` cache_build line; no tag's build
-    * writes another tag's state. Builders are single-sourced with the
-    * query fixtures — and a drifted state would fail the oracle compare
-    * loudly anyway, because every maintenance result must equal the full
-    * recompute of the NEW snapshot. */
-  private val incStateCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  /** Builder dependencies, resolved BEFORE entering the map computation —
-    * a builder that re-entered computeIfAbsent on the same map would be
-    * the recursive update the ConcurrentHashMap contract forbids. The only
-    * edges are the two σ → δ ones: each Brandes-delta state reads its own
-    * fixture's stored σ state. */
-  private val incStateDeps = Map(
-    "centinc_del" -> "centinc_sig",
-    "centdel_del" -> "centdel_sig")
-
-  private def incStatePath(dir: String, tag: String): String =
-    s"${sys.props("java.io.tmpdir")}/graft_incstate_" +
-      java.lang.ProcessHandle.current().pid() + "_" + tag + "_" +
-      dir.replaceAll("[^A-Za-z0-9]", "_")
-
-  private[graft] def cachedIncState(s: SparkSession, dir: String, tag: String): DataFrame = {
-    incStateDeps.get(tag).foreach(cachedIncState(s, dir, _))
-    val path = incStateCache.computeIfAbsent(s"$dir:$tag", _ => {
-      val p = incStatePath(dir, tag)
-      incStateBuilders(s, dir)(tag)().write.mode("overwrite").parquet(p)
-      p
-    })
-    s.read.parquet(path)
-  }
+    * build on its own `incstate_<tag>` cache_build line. The only
+    * cross-tag reads are the two Brandes-δ states (`centinc_del`,
+    * `centdel_del`), which read their fixture's σ state through a nested
+    * cachedIncState — built first if it is not yet. Builders are
+    * single-sourced with the query fixtures — and a drifted state would
+    * fail the oracle compare loudly anyway, because every maintenance
+    * result must equal the full recompute of the NEW snapshot. */
+  private[graft] def cachedIncState(s: SparkSession, dir: String, tag: String): DataFrame =
+    ProcessCache.parquet(s, "incstate", s"${tag}_$dir")(incStateBuilders(s, dir)(tag)())
 
   private def incStateBuilders(s: SparkSession, dir: String): Map[String, () => DataFrame] = {
     def weighted(e: DataFrame) = e.select(col("src"), col("dst"),
@@ -546,22 +522,13 @@ object GraphQueries extends QueryModule {
         scopedPrev("centinc").localCheckpoint(true), closenessSeeds)),
       "centinc_del" -> (() => GraphOps.multiBrandesDeltas(s,
         scopedPrev("centinc").localCheckpoint(true),
-        // dependency pre-resolved by incStateDeps: read the entry
-        // directly, failing LOUDLY at construction if the two sources of
-        // truth (this read, the deps map) ever drift
-        s.read.parquet(Option(incStateCache.get(s"$dir:centinc_sig"))
-            .getOrElse(throw new IllegalStateException(
-              "centinc_sig not built - register the dependency in incStateDeps")))
-          .localCheckpoint(true))),
+        cachedIncState(s, dir, "centinc_sig").localCheckpoint(true))),
       // the delete-bearing centrality fixture's states (v1 = FULL hier)
       "centdel_sig" -> (() => GraphOps.multiSourceBfsSigma(s,
         scopedDelPrev(s, dir).localCheckpoint(true), closenessSeeds)),
       "centdel_del" -> (() => GraphOps.multiBrandesDeltas(s,
         scopedDelPrev(s, dir).localCheckpoint(true),
-        s.read.parquet(Option(incStateCache.get(s"$dir:centdel_sig"))
-            .getOrElse(throw new IllegalStateException(
-              "centdel_sig not built - register the dependency in incStateDeps")))
-          .localCheckpoint(true))),
+        cachedIncState(s, dir, "centdel_sig").localCheckpoint(true))),
       "misinc" -> (() => GraphOps.maximalIndependentSet(s,
         snapshotInsertDiff(s, dir, "misinc", ringEdges(s, dir),
           !lowBandHeldEdge)._1)),
@@ -708,31 +675,24 @@ object GraphQueries extends QueryModule {
     * betweenness queries (the single-source σ frame is the seed-0 slice),
     * closeness, and eccentricity (σ-BFS levels ARE multi-source BFS
     * levels; the σ column just rides along) — so whichever runs first
-    * pays the iterative loop and the rest read it back. Stored as tmp parquet, NOT a cached RDD:
-    * the bench unpersists every RDD between queries, which would destroy
-    * a truncated-lineage localCheckpoint. Each materialization also
-    * asserts the DuckDB oracles' 16-level unroll cap (r5 ADVICE): a
-    * regenerated deeper fixture fails loudly here instead of silently
-    * dropping vertices out of the oracle's unrolled sgall/dall chain. */
+    * pays the iterative loop and the rest read it back. Each
+    * materialization also asserts the DuckDB oracles' 16-level unroll cap
+    * (r5 ADVICE): a regenerated deeper fixture fails loudly here instead
+    * of silently dropping vertices out of the oracle's unrolled sgall/dall
+    * chain. */
   private val sigmaUnrollCap = 16
-  private val sigmaCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def ringSigma(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
     val ed = ringEdges(s, dir)
       .select(col("src").cast("long"), col("dst").cast("long"))
       .distinct().localCheckpoint(true)
-    val path = sigmaCache.computeIfAbsent(dir, _ => {
-      val p = s"${sys.props("java.io.tmpdir")}/graft_sigma_" +
-        java.lang.ProcessHandle.current().pid() + "_" +
-        dir.replaceAll("[^A-Za-z0-9]", "_")
+    (ed, ProcessCache.parquet(s, "sigma", dir) {
       val sig = GraphOps.multiSourceBfsSigma(s, ed, closenessSeeds)
       val maxL = sig.agg(max("level")).collect()(0).getInt(0)
       require(maxL <= sigmaUnrollCap,
         s"sigma-BFS depth $maxL exceeds the oracle's $sigmaUnrollCap-level unroll cap" +
           " - regenerate the betweenness oracles with a deeper unroll")
-      sig.write.mode("overwrite").parquet(p)
-      p
+      sig
     })
-    (ed, s.read.parquet(path))
   }
 
   /** lpIters rounds of synchronous label propagation over `edges`
@@ -763,40 +723,19 @@ object GraphQueries extends QueryModule {
     * seed-0 slice and the sampled query aggregates over all seeds: the
     * two betweenness queries now share BOTH sweeps (one forward + one
     * backward pass per process between them). */
-  private val deltaCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def ringDeltas(s: SparkSession, dir: String): DataFrame = {
-    val path = deltaCache.computeIfAbsent(dir, _ => {
-      val p = s"${sys.props("java.io.tmpdir")}/graft_deltas_" +
-        java.lang.ProcessHandle.current().pid() + "_" +
-        dir.replaceAll("[^A-Za-z0-9]", "_")
+  private def ringDeltas(s: SparkSession, dir: String): DataFrame =
+    ProcessCache.parquet(s, "deltas", dir) {
       val (ed, sig) = ringSigma(s, dir)
-      GraphOps.multiBrandesDeltas(s, ed, sig).write.mode("overwrite").parquet(p)
-      p
-    })
-    s.read.parquet(path)
-  }
+      GraphOps.multiBrandesDeltas(s, ed, sig)
+    }
 
   /** Process-level parquet cache of the label-propagation assignment over
-    * the hierarchy edges (σ-cache pattern): q_graph_labelprop and
+    * the hierarchy edges: q_graph_labelprop and
     * q_graph_modularity must score the SAME assignment, so they now also
     * SHARE its computation — whichever runs first pays the 4 supersteps. */
-  private val lpCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def lpLabelsCached(s: SparkSession, dir: String, e: DataFrame): DataFrame = {
-    val path = lpCache.computeIfAbsent(dir, _ => {
-      val p = s"${sys.props("java.io.tmpdir")}/graft_lp_" +
-        java.lang.ProcessHandle.current().pid() + "_" +
-        dir.replaceAll("[^A-Za-z0-9]", "_")
-      lpLabels(e).write.mode("overwrite").parquet(p)
-      p
-    })
-    s.read.parquet(path)
-  }
+  private def lpLabelsCached(s: SparkSession, dir: String, e: DataFrame): DataFrame =
+    ProcessCache.parquet(s, "lp", dir)(lpLabels(e))
 
-  /** The process-level caches this module owns, individually named so
-    * Bench can time EACH build (r7 VERDICT: the single `cache_build_sec`
-    * number hid which sweep regressed). Order matters: `brandes_deltas`
-    * consumes `sigma_bfs`, so listed after it — its timed cost is the
-    * BACKWARD sweep only, not a re-run of the forward one. */
   /** The incremental-state tags, STATIC so the bench can bill each
     * builder to its own named cache_build line (r8 VERDICT #5: one
     * 27.8 s `incremental_states` line hid which of the 10 builders
@@ -810,6 +749,11 @@ object GraphQueries extends QueryModule {
     "colhubinc", "colhubdel", "kcoreinc", "kcoredel", "ktrussinc",
     "ktrussdel", "lccinc", "lccdel", "msfinc", "msfdel")
 
+  /** The process-level caches this module owns, individually named so
+    * Bench can time EACH build (r7 VERDICT: the single `cache_build_sec`
+    * number hid which sweep regressed). Order matters: `brandes_deltas`
+    * consumes `sigma_bfs`, so listed after it — its timed cost is the
+    * BACKWARD sweep only, not a re-run of the forward one. */
   def namedCaches: Seq[(String, (SparkSession, String) => Unit)] = Seq(
     "sigma_bfs" -> ((s: SparkSession, dir: String) => { ringSigma(s, dir); () }),
     "brandes_deltas" -> ((s: SparkSession, dir: String) => { ringDeltas(s, dir); () }),
@@ -817,17 +761,9 @@ object GraphQueries extends QueryModule {
       { lpLabelsCached(s, dir, hierEdges(s, dir).localCheckpoint(true)); () })) ++
     // every incremental-maintenance query's previous-snapshot state —
     // the stored tables a production pipeline reads before applying a
-    // diff — one named line PER state builder; centinc_del's sig
-    // dependency is pre-resolved by incStateDeps regardless of order
+    // diff — one named line PER state builder
     incStateTags.map(tag => s"incstate_$tag" ->
       ((s: SparkSession, dir: String) => { cachedIncState(s, dir, tag); () }))
-
-  /** Build every process-level cache this module owns (σ sweep, backward
-    * deltas, labelprop assignment) — invoked OUTSIDE the per-query timers
-    * so the one-time build is billed to `cache_build`, not to whichever
-    * consumer runs first. */
-  def prewarmCaches(s: SparkSession, dir: String): Unit =
-    namedCaches.foreach(_._2(s, dir))
 
   /** Shared recursive-CTE prelude for the ring graph (DuckDB dialect). */
   private val ringWalkCte =
@@ -2161,11 +2097,9 @@ object GraphQueries extends QueryModule {
         .select((col("n_nationkey") + 5).cast("long").as("src"),
           col("n_regionkey").cast("long").as("dst"))
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
-      // Per-JVM tagged FIXED path (FileFormats.stage pattern): repeated
-      // invocations overwrite instead of leaking a fresh temp dir per run.
-      val base = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        s"graft_store_${java.lang.ProcessHandle.current().pid()}_" +
-          dir.replaceAll("[^A-Za-z0-9]", "_"))
+      // one fixed path per process: repeated invocations overwrite
+      // instead of leaking a fresh temp dir per run
+      val base = java.nio.file.Paths.get(ProcessCache.path("store", dir))
       java.nio.file.Files.createDirectories(base)
       val txt = base.resolve("G30.txt")
       java.nio.file.Files.writeString(txt, AdjacencyCodec.format(edges, 30))
@@ -2194,9 +2128,7 @@ object GraphQueries extends QueryModule {
       val edges = t(s, dir, "nation")
         .select((col("n_nationkey") + 5).cast("long").as("src"),
           col("n_regionkey").cast("long").as("dst"))
-      val base = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        s"graft_vstore_${java.lang.ProcessHandle.current().pid()}_" +
-          dir.replaceAll("[^A-Za-z0-9]", "_")).toString
+      val base = ProcessCache.path("vstore", dir)
       // table state is RUN state: rebuilt from scratch each invocation so
       // the returned snapshot ids are deterministic (1 then 2)
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
@@ -2224,9 +2156,7 @@ object GraphQueries extends QueryModule {
       val edges = t(s, dir, "nation")
         .select((col("n_nationkey") + 5).cast("long").as("src"),
           col("n_regionkey").cast("long").as("dst"))
-      val base = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        s"graft_vstorediff_${java.lang.ProcessHandle.current().pid()}_" +
-          dir.replaceAll("[^A-Za-z0-9]", "_")).toString
+      val base = ProcessCache.path("vstorediff", dir)
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
       val v1 = VersionedGraphStore.commit(
         edges.filter(col("src") <= 15).unionByName(Seq((99L, 99L)).toDF("src", "dst")), base)

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.{QueryModule, Tables}
+import graft.{ProcessCache, QueryModule, Tables}
 
 /** Relational core: scan→filter→project, equi/semi/anti/theta/range/as-of
   * joins, hash aggregation, distinct, rollup/cube/grouping-sets, sorts,
@@ -34,24 +34,17 @@ object Relational extends QueryModule {
   private def tr(s: SparkSession, dir: String, name: String): DataFrame =
     Tables.raw(s, dir, name)
 
-  /** Once-per-process staged partitioned copy of events for q_join_dpp —
-    * the shared [[graft.Staging]] discipline (an unsynchronized
-    * exists-check would double-write under concurrent invocations;
-    * re-writing per call would bill the layout job to the query's
-    * measured time on every run). */
-  private def stageDppTable(s: SparkSession, dir: String): String = {
-    val tag = java.lang.ProcessHandle.current().pid().toString + "_" +
-      dir.replaceAll("[^A-Za-z0-9]", "_")
-    val out = s"${sys.props("java.io.tmpdir")}/graft_dpp_$tag"
-    graft.Staging.ensureStaged(out) {
+  /** Once-per-process staged partitioned copy of events for q_join_dpp
+    * ([[graft.ProcessCache.once]]: re-writing per call would bill the
+    * layout job to the query's measured time on every run). */
+  private def stageDppTable(s: SparkSession, dir: String): String =
+    ProcessCache.once("dpp", dir) { out =>
       Tables.raw(s, dir, "events")
         .select(col("event_id"),
           floor(col("value") * 100).cast("long").as("cents"),
           col("event_type"))
         .write.mode("overwrite").partitionBy("event_type").parquet(out)
     }
-    out
-  }
 
   /** Exact interpolated percentiles per group, replicating Spark's
     * `percentile()` semantics bit-for-bit WITHOUT its
@@ -579,7 +572,7 @@ object Relational extends QueryModule {
       // in one JVM must not collide on catalog names or bucket dirs; the
       // tables and files are dropped as soon as the join is materialized.
       val tag = java.util.UUID.randomUUID().toString.replace("-", "").take(10)
-      val base = s"${sys.props("java.io.tmpdir")}/graft_bucketed_$tag"
+      val base = ProcessCache.path("bucketed", tag)
       val (to, tc) = (s"graft_bo_$tag", s"graft_bc_$tag")
       def writeBucketed(df: DataFrame, tbl: String, key: String): Unit =
         df.write.option("path", s"$base/$tbl")
@@ -686,9 +679,7 @@ object Relational extends QueryModule {
     // ScaleSpec asserts the filter sits in PartitionFilters, not the row
     // scan). The rollup proves the round-trip lost nothing.
     "q_layout_partitioned" -> ((s, dir) => {
-      val tag = java.lang.ProcessHandle.current().pid().toString + "_" +
-        dir.replaceAll("[^A-Za-z0-9]", "_")
-      val out = s"${sys.props("java.io.tmpdir")}/graft_partlayout_$tag"
+      val out = ProcessCache.path("partlayout", dir)
       Tables.raw(s, dir, "events")
         .select(col("event_id"), col("user_id"), col("value"), col("event_type"))
         .write.mode("overwrite").partitionBy("event_type").parquet(out)

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.{QueryModule, Tables}
+import graft.{ProcessCache, QueryModule, Tables}
 
 /** Similarity search over the `embeddings` table (64-dim float vectors).
   *
@@ -118,9 +118,10 @@ object Similarity extends QueryModule {
     e.filter(col("embedding").isNotNull).select(col("vec_id"), qv.as("qv"))
   }
 
-  /** `iters` Lloyd assignment steps (so `iters − 1` centroid updates) of
-    * k-means over the quantized corpus; seeds = vectors 0..k−1. Returns the
-    * FINAL assignment `(vec_id, qv, cid)`.
+  /** `kmeansIters` Lloyd assignment steps (so `kmeansIters − 1` centroid
+    * updates) of k-means with k = `kmeansK` over the quantized corpus;
+    * seeds = vectors 0..k−1. Returns the FINAL assignment
+    * `(vec_id, qv, cid)`.
     *
     * All arithmetic is integer: distances are exact 64-bit Σ(a−b)², and the
     * centroid update is a component-wise FLOOR-DIVISION mean written as
@@ -132,8 +133,8 @@ object Similarity extends QueryModule {
     *
     * Scale shape per iteration: k centroids broadcast against ONE corpus
     * scan; the update shuffles (cid, pos) partial sums — k·64 rows. */
-  private def kmeansAssign(s: SparkSession, dir: String, k: Int, iters: Int): DataFrame =
-    kmeansFinalCached(s, dir, k, iters)._1
+  private def kmeansAssign(s: SparkSession, dir: String): DataFrame =
+    kmeansFinalCached(s, dir)._1
 
   /** [[kmeansAssign]] plus the FINAL centroid table `(cid, cv)` — the one
     * the last assignment step ranked against, which is what IVF probing
@@ -176,32 +177,23 @@ object Similarity extends QueryModule {
     (assigned, cents)
   }
 
-  /** Process-level parquet cache of the final Lloyd state (the σ-cache /
-    * LSH-pair-cache pattern): q_sim_ivf, q_sim_kmeans, and
+  /** Process-level parquet cache of the final Lloyd state (`kmeansK`
+    * centroids, `kmeansIters` steps): q_sim_ivf, q_sim_kmeans, and
     * q_sim_silhouette all consume the SAME k-means materialization —
     * whichever runs first pays the iterative loop, the rest read the
     * (assignment, centroids) parquet pair back. */
-  private val kmeansCache = new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
-  private def kmeansFinalCached(s: SparkSession, dir: String, k: Int,
-      iters: Int): (DataFrame, DataFrame) = {
-    val (pa, pc) = kmeansCache.computeIfAbsent(s"$dir|$k|$iters", _ => {
-      val base = s"${sys.props("java.io.tmpdir")}/graft_kmeans_" +
-        java.lang.ProcessHandle.current().pid() + "_" + k + "_" + iters + "_" +
-        dir.replaceAll("[^A-Za-z0-9]", "_")
-      val (assigned, cents) = kmeansFinal(s, dir, k, iters)
+  private def kmeansFinalCached(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
+    val base = ProcessCache.once("kmeans", dir) { base =>
+      val (assigned, cents) = kmeansFinal(s, dir, kmeansK, kmeansIters)
       assigned.write.mode("overwrite").parquet(base + "_a")
       cents.write.mode("overwrite").parquet(base + "_c")
-      (base + "_a", base + "_c")
-    })
-    (s.read.parquet(pa), s.read.parquet(pc))
+    }
+    (s.read.parquet(base + "_a"), s.read.parquet(base + "_c"))
   }
 
   /** Build the Lloyd-state cache outside the per-query timers (Bench). */
   def namedCaches: Seq[(String, (SparkSession, String) => Unit)] = Seq(
-    "lloyd_kmeans" -> ((s, dir) =>
-      { kmeansFinalCached(s, dir, kmeansK, kmeansIters); () }))
-  def prewarmCaches(s: SparkSession, dir: String): Unit =
-    namedCaches.foreach(_._2(s, dir))
+    "lloyd_kmeans" -> ((s, dir) => { kmeansFinalCached(s, dir); () }))
 
   /** Retirement band of the ANN-index takedown fixture — single-sourced
     * between the batch twin (q_sim_ivf_del), the streaming maintainer's
@@ -220,7 +212,7 @@ object Similarity extends QueryModule {
     * verbatim. Returns postings rows `(vec_id, cid)`. */
   private[graft] def assignFrozen(s: SparkSession, dir: String,
       vecs: DataFrame): DataFrame = {
-    val cents = kmeansFinalCached(s, dir, kmeansK, kmeansIters)._2
+    val cents = kmeansFinalCached(s, dir)._2
     val dist = aggregate(
       zip_with(col("qv"), col("cv"), (a, b) => (a - b) * (a - b)),
       lit(0L), (acc, v) => acc + v)
@@ -241,7 +233,7 @@ object Similarity extends QueryModule {
     * candidate shuffle). */
   private[graft] def ivfReadout(s: SparkSession, dir: String,
       postings: DataFrame): DataFrame = {
-    val cents = kmeansFinalCached(s, dir, kmeansK, kmeansIters)._2
+    val cents = kmeansFinalCached(s, dir)._2
     val e = t(s, dir, "embeddings")
     val cdist = aggregate(
       zip_with(col("qv"), col("cv"), (a, b) => (a - b) * (a - b)),
@@ -313,7 +305,7 @@ object Similarity extends QueryModule {
       // ONE materialization of the final Lloyd assignment serves both the
       // corpus cell map and the probe side (an unshared lineage here ran
       // the whole k-means loop twice — the r6 q_sim_ivf regression).
-      val (assigned, cents0) = kmeansFinalCached(s, dir, kmeansK, kmeansIters)
+      val (assigned, cents0) = kmeansFinalCached(s, dir)
       val cents = cents0
       val cells = assigned.select("vec_id", "cid")
       val cdist = aggregate(
@@ -354,7 +346,7 @@ object Similarity extends QueryModule {
     // postings, and queries among survivors — a leaked posting (a
     // deleted vector surfacing as someone's neighbor) flips the hash.
     "q_sim_ivf_del" -> ((s, dir) => {
-      val assigned = kmeansFinalCached(s, dir, kmeansK, kmeansIters)._1
+      val assigned = kmeansFinalCached(s, dir)._1
       val delIds = t(s, dir, "embeddings")
         .filter(ivfRetired(col("vec_id"))).select("vec_id")
         .localCheckpoint(true) // the takedown batch, delta-sized
@@ -470,7 +462,7 @@ object Similarity extends QueryModule {
     // (Σ, Σ²: what a further Lloyd step would consume) are bit-replicable
     // by the DuckDB oracle, which unrolls the identical recurrence.
     "q_sim_kmeans" -> ((s, dir) => {
-      kmeansAssign(s, dir, kmeansK, kmeansIters).groupBy("cid")
+      kmeansAssign(s, dir).groupBy("cid")
         .agg(count(lit(1)).as("n_members"),
           sum(aggregate(col("qv"), lit(0L), (acc, x) => acc + x)).as("sum_q"),
           sum(aggregate(col("qv"), lit(0L), (acc, x) => acc + x * x)).as("sum_sq"))
@@ -486,7 +478,7 @@ object Similarity extends QueryModule {
     // the same portability discipline as q_sim_kmeans — and one broadcast
     // of k centroid vectors against one pass over the corpus.
     "q_sim_silhouette" -> ((s, dir) => {
-      val assigned = kmeansAssign(s, dir, kmeansK, kmeansIters) // parquet-cached
+      val assigned = kmeansAssign(s, dir) // parquet-cached
       val comps = assigned
         .select(col("cid"), posexplode(col("qv")).as(Seq("pos", "val")))
         .groupBy("cid", "pos").agg(sum("val").as("sv"), count(lit(1)).as("n"))
@@ -519,7 +511,7 @@ object Similarity extends QueryModule {
     // cell id is the shuffle key and m bounds every cell's output.
     "q_sample_diverse" -> ((s, dir) => {
       val m = 5
-      kmeansAssign(s, dir, kmeansK, kmeansIters)
+      kmeansAssign(s, dir)
         .select(col("vec_id"), col("cid"),
           graft.functions.PortableHash.hash60(
             concat(lit("div:"), col("vec_id").cast("string"))).as("h"))
@@ -552,7 +544,7 @@ object Similarity extends QueryModule {
       // (vec_id, cid, embedding): feeds BOTH sides of the intra-cell
       // join and the final readout — pin one copy (multi-consumer
       // discipline; 2k rows at bench scale, cells at 100 TB).
-      val cells = kmeansAssign(s, dir, kmeansK, kmeansIters)
+      val cells = kmeansAssign(s, dir)
         .select("vec_id", "cid")
         .join(e.select("vec_id", "embedding"), Seq("vec_id"))
         .localCheckpoint(true)

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.{QueryModule, Tables}
+import graft.{ProcessCache, QueryModule, Tables}
 
 /** Text analysis over `documents` — generalizes the reference's one text
   * operator, word count via `exec wc -w` (`Assignment1/server.c:179-252`),
@@ -84,27 +84,16 @@ object TextOps extends QueryModule {
     grams.select(col("doc_id"), min("h").over(win).as("wh")).distinct()
   }
 
-  /** Process-level parquet cache of the fingerprint frame (the σ-cache
-    * pattern): q_text_winnow, q_text_winnow_pairs, and q_text_decontam
-    * all consume the same corpus signature — whichever runs first pays
-    * the gram hashing + window min, the rest read it back. */
-  private val winnowCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def winnowFingerprintsCached(s: SparkSession, dir: String): DataFrame = {
-    val path = winnowCache.computeIfAbsent(dir, _ => {
-      val p = s"${sys.props("java.io.tmpdir")}/graft_winnow_" +
-        java.lang.ProcessHandle.current().pid() + "_" +
-        dir.replaceAll("[^A-Za-z0-9]", "_")
-      winnowFingerprints(s, dir).write.mode("overwrite").parquet(p)
-      p
-    })
-    s.read.parquet(path)
-  }
+  /** Process-level parquet cache of the fingerprint frame:
+    * q_text_winnow, q_text_winnow_pairs, and q_text_decontam all consume
+    * the same corpus signature — whichever runs first pays the gram
+    * hashing + window min, the rest read it back. */
+  private def winnowFingerprintsCached(s: SparkSession, dir: String): DataFrame =
+    ProcessCache.parquet(s, "winnow", dir)(winnowFingerprints(s, dir))
 
   /** Build the fingerprint cache outside the per-query timers (Bench). */
   def namedCaches: Seq[(String, (SparkSession, String) => Unit)] = Seq(
     "winnow_fingerprints" -> ((s, dir) => { winnowFingerprintsCached(s, dir); () }))
-  def prewarmCaches(s: SparkSession, dir: String): Unit =
-    namedCaches.foreach(_._2(s, dir))
 
   // Shared with TrainingPipeline: the pipeline's lang/quality stages must
   // score with the IDENTICAL stopword set or the funnel and the standalone

@@ -3,7 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.{QueryModule, Tables}
+import graft.{ProcessCache, QueryModule, Tables}
 
 /** CSV / JSON source+sink surface (B1/B2 beyond parquet), exercised as
   * oracled queries: project a table, write it through the text format,
@@ -20,20 +20,16 @@ import graft.{QueryModule, Tables}
   */
 object FileFormats extends QueryModule {
 
-  // Per-JVM unique staging root: two concurrent JVMs on the same fixture
-  // dir (sbt test while Verify runs) must not overwrite / partially read
-  // each other's staging writes.
-  private val jvmTag: String =
-    java.lang.ProcessHandle.current().pid().toString
-
+  // Per-JVM staging path ([[graft.ProcessCache]]): two concurrent JVMs on
+  // the same fixture dir (sbt test while Verify runs) must not overwrite /
+  // partially read each other's staging writes.
   private def stage(dir: String, tag: String): String =
-    s"${sys.props("java.io.tmpdir")}/graft_stage_${jvmTag}_${tag}_${dir.replaceAll("[^A-Za-z0-9]", "_")}"
+    ProcessCache.path("stage", s"${tag}_$dir")
 
   /** Once-per-process binary payload staging for q_src_binary: 20 files
-    * whose bytes are the documents' ASCII text ([[graft.Staging]]). */
-  private def stageBinaryFiles(s: SparkSession, dir: String): String = {
-    val out = stage(dir, "bin")
-    graft.Staging.ensureStaged(out) {
+    * whose bytes are the documents' ASCII text ([[graft.ProcessCache.once]]). */
+  private def stageBinaryFiles(s: SparkSession, dir: String): String =
+    ProcessCache.once("stage", s"bin_$dir") { out =>
       val p = java.nio.file.Paths.get(out)
       java.nio.file.Files.createDirectories(p)
       Tables.raw(s, dir, "documents").filter(col("doc_id") < 20)
@@ -43,8 +39,6 @@ object FileFormats extends QueryModule {
             r.getString(1).getBytes("UTF-8"))
         }
     }
-    out
-  }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // parquet → CSV (header) → explicit-schema read-back → aggregate.

@@ -549,7 +549,8 @@ class EventQualitySpec extends SparkSpec {
 
   test("cdc schema evolution: loadAt serves each version's own schema, merged read zero-fills") {
     import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory("graft_schemaevo_spec").toString
+    val base = ProcessCache.path("spec", "schemaevo")
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
     val v1 = graft.sources.VersionedGraphStore.commit(
       Seq((1L, "a")).toDF("k", "name"), base)
     val v2 = graft.sources.VersionedGraphStore.commit(

@@ -234,8 +234,7 @@ class GraphSpec extends SparkSpec {
   test("VersionedGraphStore: concurrent writers claim distinct monotonic ids; time travel stable") {
     import spark.implicits._
     import graft.sources.VersionedGraphStore
-    val base = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-      s"graft_vstore_spec_${java.lang.ProcessHandle.current().pid()}").toString
+    val base = ProcessCache.path("spec", "vstore")
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
     // 4 writers race: every commit must win a DISTINCT id (the losing
     // createLink retries with the next id), ids are 1..4, and each

@@ -214,8 +214,7 @@ class StreamingSpec extends SparkSpec {
     import spark.implicits._
     // foreachBatch can re-deliver a microbatch after a failure under the
     // SAME batchId; the additive moment fold must apply it exactly once.
-    val state = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-      s"graft_idem_spec_${java.lang.ProcessHandle.current().pid()}").toString
+    val state = ProcessCache.path("spec", "idem")
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(state))
     import graft.sources.VersionedGraphStore
     def fold(batchId: Long, rows: Seq[(String, Long)]): Unit =
