@@ -1233,13 +1233,15 @@ object GraphQueries extends QueryModule {
 
     // Single-source Brandes dependency from vertex 0 — the per-source
     // slice of betweenness centrality (full betweenness = this pass summed
-    // over sources, one independent pass each at scale). Forward σ sweep +
-    // backward δ sweep down/up the BFS DAG ([[GraphOps.brandesDependency]]);
-    // the oracle unrolls both sweeps over a fixed 16-level cap (diameter
-    // is 8–12 here; empty levels are no-ops on both sides).
-    // The σ frame comes from the shared 5-seed cache ([[ringSigma]]) —
-    // seed 0's slice IS the single-source σ-BFS — so the two betweenness
-    // queries pay the iterative forward loop once between them.
+    // over sources, one independent pass each at scale): forward σ sweep +
+    // backward δ sweep down/up the BFS DAG, the computation
+    // [[GraphOps.brandesDependency]] runs for one source. Here both come
+    // from the shared 5-seed caches as their seed-0 slices — the σ frame
+    // from [[ringSigma]] (seed 0's slice IS the single-source σ-BFS) and
+    // the deltas from [[ringDeltas]] — so the two betweenness queries pay
+    // one forward and one backward loop between them. The oracle unrolls
+    // both sweeps over a fixed 16-level cap (diameter is 8–12 here; empty
+    // levels are no-ops on both sides).
     "q_graph_betweenness" -> ((s, dir) => {
       // seed-0 slice of the SHARED backward sweep ([[ringDeltas]]): the
       // per-seed delta recursion is independent, so the slice is exactly
@@ -1264,16 +1266,17 @@ object GraphQueries extends QueryModule {
         .orderBy("v")),
 
     // Closeness centrality for a 5-seed sample via ONE multi-source BFS
-    // loop ([[GraphOps.multiSourceBfs]]): all seeds' frontiers advance in
-    // the same superstep, keyed (seed, v) — the batching that makes
-    // per-source centrality scale (s sources = one loop, not s loops; at
-    // 100 TB the seed sample rides a single traversal's shuffles).
-    // closeness = (reached − 1) / Σ dist, in exact e6 fixed point (integer
-    // division is engine-portable where ROUND(double) is not).
-    // Levels come from the shared 5-seed σ-BFS cache ([[ringSigma]]):
-    // σ-BFS levels ARE multi-source BFS levels (the σ column just rides
-    // along), so closeness, eccentricity, and both betweenness queries
-    // pay ONE forward traversal per process between the four of them.
+    // loop: all seeds' frontiers advance in the same superstep, keyed
+    // (seed, v) — the batching that makes per-source centrality scale
+    // (s sources = one loop, not s loops; at 100 TB the seed sample rides
+    // a single traversal's shuffles). closeness = (reached − 1) / Σ dist,
+    // in exact e6 fixed point (integer division is engine-portable where
+    // ROUND(double) is not). Levels come from the shared 5-seed σ-BFS
+    // cache ([[ringSigma]], [[GraphOps.multiSourceBfsSigma]]): σ-BFS
+    // levels ARE multi-source BFS levels (the σ column just rides along;
+    // GraphSpec pins them to per-seed bfsLevels), so closeness,
+    // eccentricity, and both betweenness queries pay ONE forward
+    // traversal per process between the four of them.
     "q_graph_closeness" -> ((s, dir) =>
       ringSigma(s, dir)._2
         .groupBy("seed")

@@ -91,190 +91,109 @@ object GraphOps {
     * inside the gate's intent — and merge-joins otherwise. */
   val FusedHopFanoutAllowance: Long = 8L
 
-  /** One FUSED two-level BFS superstep, exposed for plan-shape tests:
-    * grow the frontier TWO hops along `e` (frontier doubling — hop-2 is
-    * the hop-1 plan re-joined inside the same job, exactness argued at
-    * [[multiGraphExpandTwice]]), then prune already-seen vertices. BOTH
-    * joins are size-gated on the row counts the loop already tracks:
-    *  - the frontier join broadcasts only while `frontierCount` is under
-    *    the gate — on a low-diameter scale-free graph the middle BFS level
-    *    is O(|V|), which at billions of vertices would be a multi-GB
-    *    forced broadcast; past the gate it flips to a sort-merge join on
-    *    src, the formulation that spills instead of flooding every
-    *    executor.
-    *  - the seen-set anti-join is broadcast only while `seenCount` is under
-    *    `broadcastSeenLimit` — past it, seen grows to O(|V|) and the plan
-    *    flips to a sort-merge anti-join (shuffle on v). */
+  /** The physical join of every BSP superstep below, chosen in one place
+    * from a row count the loop already holds (Pregelix's per-superstep
+    * join choice): broadcast `f` while `n` is under [[BroadcastSeenLimit]];
+    * past it, a sort-merge join — on a low-diameter scale-free graph a
+    * middle BFS level or the seen set is O(|V|), which at billions of
+    * vertices would be a multi-GB forced broadcast, while the merge join
+    * spills instead of flooding every executor. */
+  private[graft] def gated(f: DataFrame, n: Long): DataFrame =
+    if (n <= BroadcastSeenLimit) broadcast(f) else f.hint("merge")
+
+  /** One FUSED two-level BFS superstep, exposed for plan-shape tests: grow
+    * the frontier `f` TWO hops along `e`, then prune already-seen
+    * vertices. The state `(keys…, v, level)` is keyed by `keys` — `Seq()`
+    * for one BFS, `Seq("seed")` for a multi-source BFS, `Seq("graph")`
+    * for per-graph BFS — and the keys ride the frontier. A key that is
+    * also an edge column (`graph`) joins the edges too, so the frontier
+    * join keys on (graph, src): a graph-only key would funnel each whole
+    * graph through one task.
+    *
+    * The fusion is classic frontier doubling: hop-1 candidates (frontier
+    * level + 1) and hop-2 candidates (level + 2, the hop-1 plan re-joined
+    * against the edges INSIDE the same job) union into one min-level
+    * group-by and ONE seen anti-join, so each barrier advances TWO BFS
+    * levels — exact, because a vertex at true distance d is unreachable
+    * by any walk shorter than d (labels never undershoot) and its
+    * shortest-path predecessor chain puts a label-exact parent in the
+    * frontier of round ⌈d/2⌉ (the exact label is always among the
+    * candidates the min picks from). Hop-2 re-expands the DEDUPLICATED
+    * hop-1 candidate set (min level per vertex — loses nothing, the final
+    * group-by takes the min anyway). Every join is [[gated]]: the
+    * frontier joins on `frontierCount` (hop-2 under the
+    * [[FusedHopFanoutAllowance]], since its probe size is one round
+    * stale), the seen-set anti-join on `seenCount`. */
   private[graft] def expandTwice(e: DataFrame, f: DataFrame, seen: DataFrame,
-      seenCount: Long, broadcastSeenLimit: Long,
-      frontierCount: Long = 0L): DataFrame = {
+      keys: Seq[String], seenCount: Long, frontierCount: Long): DataFrame = {
+    // frontier-side key aliases: fg for graph, fs for seed
+    def fk(k: String): String = "f" + k.take(1)
+    val edgeKeys = keys.filter(e.columns.contains)
+    val state = keys :+ "v"
     def hop(fr0: DataFrame, gateCount: Long): DataFrame = {
-      val fr = fr0.select(col("v").as("fv"), col("level").as("fl"))
-      val fj = if (gateCount <= broadcastSeenLimit) broadcast(fr)
-               else fr.hint("merge")
-      e.join(fj, e("src") === col("fv"))
-        .select(e("dst").as("v"), (col("fl") + 1).cast("int").as("level"))
+      val fr = fr0.select(keys.map(k => col(k).as(fk(k))) ++
+        Seq(col("v").as("fv"), col("level").as("fl")): _*)
+      e.join(gated(fr, gateCount),
+          (edgeKeys.map(k => e(k) === col(fk(k))) :+ (e("src") === col("fv")))
+            .reduce(_ && _))
+        .select(keys.map(k => if (edgeKeys.contains(k)) e(k) else col(fk(k)).as(k)) ++
+          Seq(e("dst").as("v"), (col("fl") + 1).cast("int").as("level")): _*)
     }
-    // frontier doubling (see [[multiGraphExpandTwice]] for the exactness
-    // argument): hop-1 and hop-2 candidates union into one min-level
-    // group-by and ONE seen anti-join, so each barrier advances two
-    // levels. Hop-2's probe is hop-1 DEDUPLICATED (min-level per vertex —
-    // loses nothing, the final group-by takes the min anyway) and its
-    // broadcast gate carries the [[FusedHopFanoutAllowance]] because
-    // frontierCount is one round stale for it.
     val hop1 = hop(f, frontierCount)
-      .groupBy("v").agg(min("level").as("level"))
+      .groupBy(state.map(col): _*).agg(min("level").as("level"))
     val cand = hop1
       .union(hop(hop1, frontierCount * FusedHopFanoutAllowance))
-      .groupBy("v").agg(min("level").as("level"))
-    if (seenCount <= broadcastSeenLimit)
-      cand.join(broadcast(seen.select("v")), Seq("v"), "left_anti")
-    else cand.join(seen.select("v").hint("merge"), Seq("v"), "left_anti")
+      .groupBy(state.map(col): _*).agg(min("level").as("level"))
+    cand.join(gated(seen.select(state.map(col): _*), seenCount), state, "left_anti")
+  }
+
+  /** The one level-BFS loop: [[expandTwice]] supersteps from the state
+    * `init` (`initCount` rows, keyed by `keys`) until a superstep grows
+    * nothing or `maxIter` levels are done. ONE [[checkpointCount]] job per
+    * TWO BFS levels — the count is the BSP termination check, the running
+    * seen-set size AND the frontier size that drive the [[gated]] joins.
+    * The accumulated level set is checkpointed only every other barrier:
+    * an eager checkpoint per superstep re-materializes all levels each
+    * time (quadratic in depth), and the frontier checkpoints already bound
+    * lineage growth to a few unions. Unpersists `e` when done. */
+  private def levelBfs(opName: String, e: DataFrame, init: DataFrame,
+      initCount: Long, keys: Seq[String], maxIter: Int): DataFrame = {
+    val t0 = System.nanoTime()
+    var levels = init
+    var frontier = init
+    var seenCount = initCount
+    var frontierCount = initCount
+    var i = 0
+    var done = false
+    while (i < maxIter && !done) {
+      val (next, n) = checkpointCount(expandTwice(e, frontier, levels, keys,
+        seenCount, frontierCount))
+      if (n == 0) done = true
+      else {
+        seenCount += n
+        frontierCount = n
+        val u = levels.union(next)
+        levels = if (i % 4 >= 2) u.localCheckpoint(true) else u
+        frontier = next
+      }
+      i += 2
+      trace(f"$opName levels=$i new=$n seen=$seenCount " +
+        f"t=${(System.nanoTime() - t0) / 1e9}%.2fs")
+    }
+    e.unpersist()
+    levels
   }
 
   /** BFS levels from `start` over `edges(src: long, dst: long)`.
     * Returns `(v: long, level: int)` for every reachable vertex.
     */
-  def bfsLevels(spark: SparkSession, edges: DataFrame, start: Long, maxIter: Int = 50,
-      broadcastSeenLimit: Long = BroadcastSeenLimit): DataFrame = {
+  def bfsLevels(spark: SparkSession, edges: DataFrame, start: Long,
+      maxIter: Int = 50): DataFrame = {
     import spark.implicits._
     val e = edges.select(col("src").cast("long"), col("dst").cast("long"))
       .persist()
-    var levels = Seq((start, 0)).toDF("v", "level")
-    var frontier = levels
-    var seenCount = 1L
-    var frontierCount = 1L
-    var i = 0
-    var done = false
-    // ONE checkpoint-and-count job per TWO BFS levels (the fused two-hop
-    // superstep of expandTwice — frontier doubling, exactness argued at
-    // [[multiGraphExpandTwice]]). The count is the BSP termination check,
-    // the running seen-set size, AND the frontier size that drive the
-    // broadcast→shuffle flips.
-    while (i < maxIter && !done) {
-      val (next, n) = checkpointCount(expandTwice(e, frontier, levels,
-        seenCount, broadcastSeenLimit, frontierCount))
-      if (n == 0) done = true
-      else {
-        seenCount += n
-        frontierCount = n
-        // Checkpoint the accumulated level set only every few iterations —
-        // an eager checkpoint per superstep re-materializes all levels each
-        // time (quadratic in depth); the frontier checkpoints above already
-        // bound lineage growth to a few unions.
-        val u = levels.union(next)
-        levels = if (i % 4 >= 2) u.localCheckpoint(true) else u
-        frontier = next
-      }
-      i += 2
-    }
-    e.unpersist()
-    levels
-  }
-
-  /** Multi-source BFS: levels from EVERY seed in one iterative loop, state
-    * keyed `(seed, v)`. This is the batching that makes per-source graph
-    * analytics (closeness/betweenness centrality over a seed sample) scale:
-    * one superstep advances ALL sources' frontiers with a single
-    * frontier⋈edges join — s sources cost one loop of depth max-diameter,
-    * not s sequential loops — and the (seed, v) key spreads the shuffle
-    * across sources so no single-source hotspot forms. Same fused
-    * two-levels-per-barrier superstep and broadcast→shuffle seen-set gate
-    * as [[bfsLevels]].
-    * Returns `(seed, v, level)` for every vertex reachable from each seed.
-    */
-  def multiSourceBfs(spark: SparkSession, edges: DataFrame, seeds: Seq[Long],
-      maxIter: Int = 50, broadcastSeenLimit: Long = BroadcastSeenLimit): DataFrame = {
-    import spark.implicits._
-    val e = edges.select(col("src").cast("long"), col("dst").cast("long"))
-      .persist()
-    var levels = seeds.map(s => (s, s, 0)).toDF("seed", "v", "level")
-    var frontier = levels
-    var seenCount = seeds.size.toLong
-    var frontierCount = seeds.size.toLong
-    // the same fused two-level superstep as [[expandTwice]], with the
-    // seed riding the state key (one min-level group-by + one seen
-    // anti-join per TWO levels)
-    def expandTwiceSeeded(f: DataFrame, seen: DataFrame): DataFrame = {
-      def hop(fr0: DataFrame, gateCount: Long): DataFrame = {
-        val fr = fr0.select(col("seed").as("fs"), col("v").as("fv"),
-          col("level").as("fl"))
-        val fj = if (gateCount <= broadcastSeenLimit) broadcast(fr)
-                 else fr.hint("merge")
-        e.join(fj, e("src") === col("fv"))
-          .select(col("fs").as("seed"), e("dst").as("v"),
-            (col("fl") + 1).cast("int").as("level"))
-      }
-      // hop-2 probes the DEDUPED hop-1 candidates under the stale-count
-      // fan-out allowance (see [[FusedHopFanoutAllowance]])
-      val hop1 = hop(f, frontierCount)
-        .groupBy("seed", "v").agg(min("level").as("level"))
-      val cand = hop1
-        .union(hop(hop1, frontierCount * FusedHopFanoutAllowance))
-        .groupBy("seed", "v").agg(min("level").as("level"))
-      if (seenCount <= broadcastSeenLimit)
-        cand.join(broadcast(seen.select("seed", "v")), Seq("seed", "v"), "left_anti")
-      else cand.join(seen.select("seed", "v").hint("merge"), Seq("seed", "v"), "left_anti")
-    }
-    var i = 0
-    var done = false
-    while (i < maxIter && !done) {
-      val (next, n) = checkpointCount(expandTwiceSeeded(frontier, levels))
-      if (n == 0) done = true
-      else {
-        seenCount += n
-        frontierCount = n
-        val u = levels.union(next)
-        levels = if (i % 4 >= 2) u.localCheckpoint(true) else u
-        frontier = next
-      }
-      i += 2
-    }
-    e.unpersist()
-    levels
-  }
-
-  /** One FUSED two-level [[multiGraphBfs]] superstep, exposed (like
-    * [[expandTwice]]) so ScaleSpec can assert the scale invariants
-    * directly: the frontier join keys on BOTH (graph, src) — a graph-only
-    * key would funnel each whole graph through one task — and both the
-    * frontier and seen-set joins flip broadcast → shuffle past the size
-    * gate. The fusion is classic frontier doubling: hop-1 candidates
-    * (frontier level + 1) and hop-2 candidates (level + 2, the hop-1
-    * plan re-joined against the edges INSIDE the same job) union into one
-    * min-level group-by and ONE seen anti-join, so each barrier advances
-    * TWO BFS levels — exact, because a vertex at true distance d is
-    * unreachable by any walk shorter than d (labels never undershoot) and
-    * its shortest-path predecessor chain puts a label-exact parent in the
-    * frontier of round ⌈d/2⌉ (the exact label is always among the
-    * candidates the min picks from). Hop-2 re-expands the DEDUPLICATED
-    * not-yet-pruned hop-1 candidate set under the
-    * [[FusedHopFanoutAllowance]] broadcast gate — the price of halving
-    * the barrier count, cheap next to a materialization at every
-    * level. */
-  private[graft] def multiGraphExpandTwice(e: DataFrame, f: DataFrame,
-      seen: DataFrame, seenCount: Long, broadcastSeenLimit: Long,
-      frontierCount: Long): DataFrame = {
-    def hop(fr0: DataFrame, gateCount: Long): DataFrame = {
-      val fr = fr0.select(col("graph").as("fg"), col("v").as("fv"),
-        col("level").as("fl"))
-      val fj = if (gateCount <= broadcastSeenLimit) broadcast(fr)
-               else fr.hint("merge")
-      e.join(fj, e("graph") === col("fg") && e("src") === col("fv"))
-        .select(e("graph"), e("dst").as("v"),
-          (col("fl") + 1).cast("int").as("level"))
-    }
-    // hop-2 probes the DEDUPED hop-1 candidates under the stale-count
-    // fan-out allowance (see [[FusedHopFanoutAllowance]])
-    val hop1 = hop(f, frontierCount)
-      .groupBy("graph", "v").agg(min("level").as("level"))
-    val cand = hop1
-      .union(hop(hop1, frontierCount * FusedHopFanoutAllowance))
-      .groupBy("graph", "v").agg(min("level").as("level"))
-    if (seenCount <= broadcastSeenLimit)
-      cand.join(broadcast(seen.select("graph", "v")), Seq("graph", "v"), "left_anti")
-    else
-      cand.join(seen.select("graph", "v").hint("merge"), Seq("graph", "v"), "left_anti")
+    levelBfs("bfsLevels", e, Seq((start, 0)).toDF("v", "level"), 1L, Seq(),
+      maxIter)
   }
 
   /** Per-graph BFS levels for EVERY graph in ONE BSP job — the scale
@@ -283,11 +202,12 @@ object GraphOps {
     * per graph (per-graph scheduling overhead, idle executors while a
     * small graph drains), the state is keyed `(graph, v)` and a single
     * superstep advances ALL graphs' frontiers with one frontier⋈edges
-    * join — the [[multiSourceBfs]] discipline with the graph id as the
-    * batching key, so the shuffle spreads across graphs and no per-graph
-    * hotspot forms. Graphs finish at different depths naturally: a
-    * drained graph simply stops contributing frontier rows while deeper
-    * ones keep iterating, and the loop ends when every graph is done.
+    * join — the [[multiSourceBfsSigma]] discipline with the graph id as
+    * the batching key, so the shuffle spreads across graphs and no
+    * per-graph hotspot forms. Graphs finish at different depths
+    * naturally: a drained graph simply stops contributing frontier rows
+    * while deeper ones keep iterating, and the loop ends when every graph
+    * is done.
     *
     * `edges` is `(graph, src, dst)` (graph id of any orderable type);
     * `start` must be a vertex of every graph (it seeds each one).
@@ -295,34 +215,12 @@ object GraphOps {
     * within its graph.
     */
   def multiGraphBfs(spark: SparkSession, edges: DataFrame, start: Long,
-      maxIter: Int = 50, broadcastSeenLimit: Long = BroadcastSeenLimit): DataFrame = {
+      maxIter: Int = 50): DataFrame = {
     val e = edges.select(col("graph"),
       col("src").cast("long"), col("dst").cast("long")).persist()
-    var (levels, seenCount) = checkpointCount(e.select("graph").distinct()
+    val (init, n) = checkpointCount(e.select("graph").distinct()
       .select(col("graph"), lit(start).as("v"), lit(0).as("level")))
-    var frontier = levels
-    var frontierCount = seenCount
-    var i = 0
-    var done = false
-    // ONE checkpoint-and-count job per TWO BFS levels (the fused two-hop
-    // superstep) — the loop's cost is barrier-bound, so halving the
-    // barrier count is the lever that matters at local[32] and on a real
-    // cluster alike.
-    while (i < maxIter && !done) {
-      val (next, n) = checkpointCount(multiGraphExpandTwice(e, frontier,
-        levels, seenCount, broadcastSeenLimit, frontierCount))
-      if (n == 0) done = true
-      else {
-        seenCount += n
-        frontierCount = n
-        val u = levels.union(next)
-        levels = if (i % 4 >= 2) u.localCheckpoint(true) else u
-        frontier = next
-      }
-      i += 2
-    }
-    e.unpersist()
-    levels
+    levelBfs("multiGraphBfs", e, init, n, Seq("graph"), maxIter)
   }
 
   /** BFS levels via GraphX Pregel — the alternate formulation of
@@ -489,59 +387,28 @@ object GraphOps {
   }
 
   /** [[bfsSigma]] with every seed advancing in the same superstep, state
-    * keyed `(seed, v)` — the same batching as [[multiSourceBfs]], carrying
-    * shortest-path counts: `(seed, v, level, sigma)`. s seeds cost ONE
-    * loop's worth of supersteps, not s loops — the precondition for
-    * sampled (multi-source) betweenness at scale.
+    * keyed `(seed, v)`, carrying shortest-path counts:
+    * `(seed, v, level, sigma)`. s seeds cost ONE loop's worth of
+    * supersteps, not s loops — the batching that makes per-source graph
+    * analytics (closeness, eccentricity, sampled betweenness over a seed
+    * sample) scale, and the (seed, v) key spreads the shuffle across
+    * sources so no single-source hotspot forms. Its `(seed, v, level)`
+    * columns are exactly the multi-source BFS levels (GraphSpec pins them
+    * to per-seed [[bfsLevels]]).
     */
   private[graft] def multiSourceBfsSigma(spark: SparkSession, edges: DataFrame,
-      seeds: Seq[Long], maxIter: Int = 50,
-      broadcastSeenLimit: Long = BroadcastSeenLimit): DataFrame = {
+      seeds: Seq[Long], maxIter: Int = 50): DataFrame = {
     import spark.implicits._
-    val e = edges.select(col("src").cast("long"), col("dst").cast("long"))
-      .persist()
-    var levels = seeds.map(s => (s, s, 0, 1L)).toDF("seed", "v", "level", "sigma")
-    var frontier = levels
-    var seenCount = seeds.size.toLong
-    var frontierCount = seeds.size.toLong
-    def expand(f: DataFrame, seen: DataFrame, level: Int): (DataFrame, Long) = {
-      val fj = if (frontierCount <= broadcastSeenLimit) broadcast(f) else f.hint("merge")
-      val grown = e.join(fj, f("v") === e("src"))
-        .groupBy(col("seed"), e("dst").as("v")).agg(sum(f("sigma")).as("sigma"))
-      val pruned =
-        if (seenCount <= broadcastSeenLimit)
-          grown.join(broadcast(seen.select("seed", "v")), Seq("seed", "v"), "left_anti")
-        else grown.join(seen.select("seed", "v").hint("merge"), Seq("seed", "v"), "left_anti")
-      checkpointCount(pruned.select(col("seed"), col("v"), lit(level).as("level"), col("sigma")))
-    }
-    var i = 0
-    var done = false
-    while (i < maxIter && !done) {
-      val (next1, n1) = expand(frontier, levels, i + 1)
-      if (n1 == 0) done = true
-      else {
-        seenCount += n1
-        frontierCount = n1
-        val seen1 = levels.union(next1)
-        val (next2, n2) = expand(next1, seen1, i + 2)
-        seenCount += n2
-        frontierCount = n2
-        val u = seen1.union(next2)
-        levels = if (i % 4 >= 2) u.localCheckpoint(true) else u
-        if (n2 == 0) done = true else frontier = next2
-      }
-      i += 2
-    }
-    e.unpersist()
-    levels
+    sigmaBfs(edges, seeds.map(s => (s, s, 0, 1L)).toDF("seed", "v", "level", "sigma"),
+      seeds.size.toLong, Seq("seed"), maxIter)
   }
 
   /** Sampled betweenness centrality: Brandes' dependency accumulation run
     * for a SAMPLE of sources in one batched computation — the standard
     * estimator (Brandes–Pich) whose per-vertex score is the sum of
-    * per-source dependencies δ_s(v), s ≠ v. Both sweeps are batched the
-    * way [[multiSourceBfs]] batches closeness: σ BFS advances all seeds
-    * per superstep keyed (seed, v), and the backward sweep processes level
+    * per-source dependencies δ_s(v), s ≠ v. Both sweeps are batched: the
+    * σ BFS ([[multiSourceBfsSigma]]) advances all seeds per superstep
+    * keyed (seed, v), and the backward sweep processes level
     * l of EVERY seed's DAG in the same per-level join (seeds at different
     * depths simply contribute no rows at levels they don't have). s seeds
     * therefore cost one forward + one backward loop — not s independent
@@ -636,7 +503,6 @@ object GraphOps {
     * the work below that size. Returns `(v, layer)` for every vertex.
     */
   def dagLayers(spark: SparkSession, edges: DataFrame, maxIter: Int = 100,
-      broadcastSeenLimit: Long = BroadcastSeenLimit,
       driverSolveLimit: Long = DriverSolveEdgeLimit): DataFrame = {
     val e = edges.select(col("src").cast("long"), col("dst").cast("long"))
       .persist()
@@ -694,8 +560,6 @@ object GraphOps {
     // source waves over the live checkpoints. Cycle detection is exact:
     // if no vertex peeled this round (remaining unchanged), every
     // remaining vertex lies on or behind a cycle — throw, never truncate.
-    def gated(f: DataFrame, n: Long): DataFrame =
-      if (n <= broadcastSeenLimit) broadcast(f) else f.hint("merge")
     // One peel round: wave = in-degree-0 rows of `cur`; returns the
     // updated in-degree table with the wave removed and its out-edge
     // counts subtracted. `remaining` upper-bounds |wave| for the
@@ -849,6 +713,20 @@ object GraphOps {
         expr("inter * 1000000 div (da + db - inter)").as("jaccard_e6"))
   }
 
+  /** One relaxation hop of the label-correcting loops ([[sssp]] and
+    * [[labelCorrectLoop]]): each frontier vertex `(v, label)` proposes
+    * `label + step` along its out-edges in `e` (`step` is `lit(1)` for BFS
+    * levels and DAG layers, the edge weight `col("w")` for SSSP) and
+    * `pick` keeps one proposal per vertex, in the frontier label's type
+    * (BFS levels stay int). `wrap` is applied to the frontier side of the
+    * join — [[sssp]] passes its [[gated]] choice. */
+  private def relaxHop(e: DataFrame, step: Column, pick: Column => Column,
+      fr: DataFrame, wrap: DataFrame => DataFrame = identity): DataFrame =
+    e.join(wrap(fr.select(col("v").as("hv"), col("label").as("hl"))),
+        e("src") === col("hv"))
+      .groupBy(e("dst").as("v"))
+      .agg(pick(col("hl") + step).cast(fr.schema("label").dataType).as("label"))
+
   /** Single-source shortest paths over weighted edges
     * `(src: long, dst: long, w: long)`, positive weights — delta-stepping-
     * style Bellman-Ford: only vertices whose distance improved last round
@@ -856,8 +734,8 @@ object GraphOps {
     * one frontier⋈edges join + a min-merge, not a full |V| relaxation.
     * Returns `(v, dist)` for every vertex reachable from `start`.
     */
-  def sssp(spark: SparkSession, edges: DataFrame, start: Long, maxIter: Int = 100,
-      broadcastSeenLimit: Long = BroadcastSeenLimit): DataFrame = {
+  def sssp(spark: SparkSession, edges: DataFrame, start: Long,
+      maxIter: Int = 100): DataFrame = {
     import spark.implicits._
     val e = edges.select(col("src").cast("long"), col("dst").cast("long"),
       col("w").cast("long")).persist()
@@ -881,22 +759,15 @@ object GraphOps {
       // already paid when its vertex last improved — so the fixpoint is
       // unchanged and the round count halves (Bellman-Ford rounds = max
       // hop count of shortest paths, the loop's entire cost at local[32]).
-      def hop(fr: DataFrame, gateCount: Long): DataFrame = {
-        val f2 = fr.select(col("v").as("hv"), col("nd").as("hd"))
-        val fj = if (gateCount <= broadcastSeenLimit) broadcast(f2)
-                 else f2.hint("merge")
-        e.select(col("src").as("hsrc"), col("dst").as("hdst"), col("w").as("hw"))
-          .join(fj, col("hv") === col("hsrc"))
-          .select(col("hdst").as("v"), (col("hd") + col("hw")).as("nd"))
-          .groupBy("v").agg(min("nd").as("nd"))
-      }
       // hop-2's probe size is only known a round later — gate its
       // broadcast under the [[FusedHopFanoutAllowance]]
-      val cand1 = hop(frontier.select(col("v"), col("dist").as("nd")),
-        frontierCount)
+      val cand1 = relaxHop(e, col("w"), min,
+        frontier.select(col("v"), col("dist").as("label")),
+        gated(_, frontierCount))
       val cand = cand1
-        .union(hop(cand1, frontierCount * FusedHopFanoutAllowance))
-        .groupBy("v").agg(min("nd").as("nd"))
+        .union(relaxHop(e, col("w"), min, cand1,
+          gated(_, frontierCount * FusedHopFanoutAllowance)))
+        .groupBy("v").agg(min("label").as("nd"))
       val (merged, improvedCount) = checkpointCount(
         dist.as("d").join(cand.as("c"), Seq("v"), "full_outer")
           .select(col("v"),
@@ -920,36 +791,47 @@ object GraphOps {
     * vertex — i.e. the whole frontier. So the frontier⋈edges join that BFS
     * already pays yields σ for free as `sum(predecessor σ)` grouped by
     * destination, and the separate forward sweep Brandes would otherwise
-    * run (maxL more per-level joins + barriers) disappears. Same two-hop
-    * batching and broadcast→shuffle seen-set gate as [[bfsLevels]].
+    * run (maxL more per-level joins + barriers) disappears.
     * Requires DISTINCT edges (parallel edges would double-count paths).
     * Returns `(v, level, sigma)` for every reachable vertex.
     */
   private[graft] def bfsSigma(spark: SparkSession, edges: DataFrame, start: Long,
-      maxIter: Int = 50, broadcastSeenLimit: Long = BroadcastSeenLimit): DataFrame = {
+      maxIter: Int = 50): DataFrame = {
     import spark.implicits._
+    sigmaBfs(edges, Seq((start, 0, 1L)).toDF("v", "level", "sigma"), 1L, Seq(),
+      maxIter)
+  }
+
+  /** The one σ-BFS loop behind [[bfsSigma]] and [[multiSourceBfsSigma]]:
+    * state `(keys…, v, level, sigma)` from `init` (`initCount` rows). ONE
+    * level per barrier — σ sums do not fuse across two hops the way
+    * [[expandTwice]]'s min-levels do — with both joins [[gated]] on the
+    * counts the loop holds and the accumulated set checkpointed every
+    * other pair of levels, as in [[levelBfs]]. Each frontier is
+    * checkpointed (and counted, in the same job): persist() alone is NOT
+    * enough here — a cached plan keeps its full logical lineage, and
+    * because each frontier's anti-join embeds the whole accumulated
+    * `levels` union, the un-truncated plan tree grows geometrically with
+    * depth until AQE's plan stringification alone OOMs (observed at
+    * sf0.1). The checkpoint cuts the plan at every superstep, so `levels`
+    * stays a flat union of checkpointed frontiers. */
+  private def sigmaBfs(edges: DataFrame, init: DataFrame, initCount: Long,
+      keys: Seq[String], maxIter: Int): DataFrame = {
     val e = edges.select(col("src").cast("long"), col("dst").cast("long"))
       .persist()
-    var levels = Seq((start, 0, 1L)).toDF("v", "level", "sigma")
-    var frontier = levels
-    var seenCount = 1L
-    var frontierCount = 1L
-    // Each frontier is checkpointed (and counted, in the same job)
-    // exactly like [[bfsLevels]]. persist() alone is NOT enough here: a cached plan keeps
-    // its full logical lineage, and because each frontier's anti-join embeds
-    // the whole accumulated `levels` union, the un-truncated plan tree grows
-    // geometrically with depth until AQE's plan stringification alone OOMs
-    // (observed at sf0.1). The checkpoint cuts the plan at every superstep,
-    // so `levels` stays a flat union of checkpointed frontiers.
+    val state = keys :+ "v"
+    var levels = init
+    var frontier = init
+    var seenCount = initCount
+    var frontierCount = initCount
     def expand(f: DataFrame, seen: DataFrame, level: Int): (DataFrame, Long) = {
-      val fj = if (frontierCount <= broadcastSeenLimit) broadcast(f) else f.hint("merge")
-      val grown = e.join(fj, f("v") === e("src"))
-        .groupBy(e("dst").as("v")).agg(sum(f("sigma")).as("sigma"))
-      val pruned =
-        if (seenCount <= broadcastSeenLimit)
-          grown.join(broadcast(seen.select("v")), Seq("v"), "left_anti")
-        else grown.join(seen.select("v").hint("merge"), Seq("v"), "left_anti")
-      checkpointCount(pruned.select(col("v"), lit(level).as("level"), col("sigma")))
+      val grown = e.join(gated(f, frontierCount), f("v") === e("src"))
+        .groupBy(keys.map(col) :+ e("dst").as("v"): _*)
+        .agg(sum(f("sigma")).as("sigma"))
+      val pruned = grown.join(gated(seen.select(state.map(col): _*), seenCount),
+        state, "left_anti")
+      checkpointCount(pruned.select(keys.map(col) ++
+        Seq(col("v"), lit(level).as("level"), col("sigma")): _*))
     }
     var i = 0
     var done = false
@@ -1060,7 +942,7 @@ object GraphOps {
     *  2. roots = vertices whose color is themselves; every root's SCC is
     *     exactly the set it can reach BACKWARD through vertices of its own
     *     color (multi-source backward BFS batched over ALL roots at once,
-    *     riding one loop the way [[multiSourceBfs]] batches seeds);
+    *     riding one loop the way [[multiSourceBfsSigma]] batches seeds);
     *  3. assigned vertices leave the graph; unresolved ones (forward-only
     *     vertices colored by a larger non-mutual ancestor) go to the next
     *     round.
@@ -1068,12 +950,11 @@ object GraphOps {
     * Adversarial chains need O(chain depth) rounds, so the round cap
     * throws rather than returning a partial decomposition (same loud-fail
     * discipline as [[dagLayers]]); GraphSpec exercises a 2-round graph.
-    * All joins obey the frontier/seen-set broadcast gates of the BFS
-    * family. Returns `(v, scc)` with scc = MAX vertex id of the component.
+    * All joins obey the frontier/seen-set broadcast gate of the BFS
+    * family, [[gated]]. Returns `(v, scc)` with scc = MAX vertex id of the component.
     */
   def stronglyConnectedComponents(spark: SparkSession, edges: DataFrame,
-      maxRounds: Int = 5, maxIter: Int = 100,
-      broadcastSeenLimit: Long = BroadcastSeenLimit): DataFrame = {
+      maxRounds: Int = 5, maxIter: Int = 100): DataFrame = {
     val e0 = edges.select(col("src").cast("long"), col("dst").cast("long"))
       .distinct().localCheckpoint(true)
     var (rem, remCount) = checkpointCount(
@@ -1081,8 +962,6 @@ object GraphOps {
     var e = e0
     var out = List.empty[DataFrame]
     var round = 0
-    def gated(f: DataFrame, n: Long): DataFrame =
-      if (n <= broadcastSeenLimit) broadcast(f) else f.hint("merge")
     while (remCount > 0 && round < maxRounds) {
       // 0. trim pre-pass (the "Trim" of FW-BW-Trim): a vertex with no
       // in-edge or no out-edge in the remaining subgraph cannot lie on a
@@ -2139,12 +2018,11 @@ object GraphOps {
     * and min-cost are the same loop with the ordering flipped and the
     * proposal expression swapped, so sharing it makes the loud
     * non-convergence contract uniform BY CONSTRUCTION instead of by
-    * per-copy discipline). Round shape: merge the improvements into the
-    * state (full-outer `mergeBoth` on the vertex key — the state, the
-    * only full-graph-sized frame, is touched once per round by a
-    * key-local join), then relax TWO cascade hops inside one job (the
-    * expandTwice frontier-doubling discipline applied to label
-    * correction: proposals are genuine walk values so they never land on
+    * per-copy discipline). Each hop is the family's one [[relaxHop]] over
+    * `e` with the per-edge `step` (`lit(1)` for BFS levels and DAG layers,
+    * `col("w")` for SSSP). Round shape: relax TWO cascade hops inside one
+    * job (the [[expandTwice]] frontier-doubling discipline applied to
+    * label correction: proposals are genuine walk values so they never land on
     * the wrong side of the true label, non-improving candidates are
     * filtered against the merged state, and any relaxation a discarded
     * candidate would have seeded is re-proposed by a later frontier — the
@@ -2152,12 +2030,11 @@ object GraphOps {
     * still live at `maxIter` THROWS — silently returning the truncated
     * state would violate the family's exactness contract (and for DAG
     * layering a live cascade can also mean the delta introduced a cycle).
-    * Frames are `(v, label)`; `hop` maps a frontier to its proposals.
+    * Frames are `(v, label)`.
     */
-  private def labelCorrectLoop(opName: String, state0: DataFrame,
-      seed0: DataFrame, hop: DataFrame => DataFrame,
-      pick: Column => Column, better: (Column, Column) => Column,
-      mergeBoth: (Column, Column) => Column, maxIter: Int): DataFrame = {
+  private def labelCorrectLoop(opName: String, e: DataFrame, step: Column,
+      state0: DataFrame, seed0: DataFrame, pick: Column => Column,
+      better: (Column, Column) => Column, maxIter: Int): DataFrame = {
     val t0 = System.nanoTime()
     // STATE + OVERLAY, not a re-merged label table (r11): the stored
     // state is touched ONCE (checkpointed here, scanned per round); all
@@ -2168,17 +2045,15 @@ object GraphOps {
     // merge needs no value arithmetic at all: a frontier row was
     // filtered strictly-better against the CURRENT view (state ⊕
     // overlay), so on conflict the frontier value simply wins —
-    // anti-join ∪ union, overlay-sized. (`mergeBoth` is retained in the
-    // signature for callers' documentation of merge direction; the
-    // strictly-better filter makes it the identity here.)
+    // anti-join ∪ union, overlay-sized.
     val base = state0.localCheckpoint(true)
     var (overlay, n) = checkpointCount(seed0)
     var frontier = overlay
     var i = 0
     trace(f"$opName relax seed n=$n t=${(System.nanoTime() - t0) / 1e9}%.2fs")
     while (n > 0 && i < maxIter) {
-      val h1 = hop(frontier)
-      val (next, nextCount) = checkpointCount(h1.union(hop(h1))
+      val h1 = relaxHop(e, step, pick, frontier)
+      val (next, nextCount) = checkpointCount(h1.union(relaxHop(e, step, pick, h1))
         .groupBy("v").agg(pick(col("label")).as("cand"))
         .join(base.withColumnRenamed("label", "bl"), Seq("v"), "left")
         .join(overlay.withColumnRenamed("label", "ol"), Seq("v"), "left")
@@ -2245,14 +2120,8 @@ object GraphOps {
       .join(state0, Seq("v"), "left")
       .filter(col("label").isNull || col("cand") < col("label"))
       .select(col("v"), col("cand").as("label"))
-    def hop(fr: DataFrame): DataFrame = fr
-      .select(col("v").as("hv"), col("label").as("hl"))
-      .join(e.select(col("src").as("hsrc"), col("dst").as("hdst")),
-        col("hv") === col("hsrc"))
-      .groupBy(col("hdst").as("v"))
-      .agg((min("hl") + 1).cast("int").as("label"))
-    val out = labelCorrectLoop("incrementalBfsLevels", state0, seed0, hop,
-      min, _ < _, least(_, _), maxIter)
+    val out = labelCorrectLoop("incrementalBfsLevels", e, lit(1), state0,
+      seed0, min, _ < _, maxIter)
     e.unpersist()
     out.select(col("v"), col("label").cast("int").as("level"))
   }
@@ -2507,14 +2376,8 @@ object GraphOps {
       .join(state0.select(col("v"), col("label").as("cur")), Seq("v"), "left")
       .filter(col("cur").isNull || col("label") < col("cur"))
       .select("v", "label")
-    def hop(fr: DataFrame): DataFrame = fr
-      .select(col("v").as("hv"), col("label").as("hl"))
-      .join(e.select(col("src").as("hsrc"), col("dst").as("hdst")),
-        col("hv") === col("hsrc"))
-      .groupBy(col("hdst").as("v"))
-      .agg((min("hl") + 1).cast("int").as("label"))
-    labelCorrectLoop("incrementalBfsLevelsDelete", state0, seed0, hop,
-      min, _ < _, least(_, _), maxIter)
+    labelCorrectLoop("incrementalBfsLevelsDelete", e, lit(1), state0, seed0,
+      min, _ < _, maxIter)
       .select(col("v"), col("label").cast("int").as("level"))
   }
 
@@ -2562,14 +2425,8 @@ object GraphOps {
       .join(state0, Seq("v"), "left")
       .filter(col("label").isNull || col("cand") > col("label"))
       .select(col("v"), col("cand").as("label"))
-    def hop(fr: DataFrame): DataFrame = fr
-      .select(col("v").as("hv"), col("label").as("hl"))
-      .join(e.select(col("src").as("hsrc"), col("dst").as("hdst")),
-        col("hv") === col("hsrc"))
-      .groupBy(col("hdst").as("v"))
-      .agg((max("hl") + 1).as("label"))
-    val out = labelCorrectLoop("incrementalDagLayers", state0, seed0, hop,
-      max, _ > _, greatest(_, _), maxIter)
+    val out = labelCorrectLoop("incrementalDagLayers", e, lit(1), state0,
+      seed0, max, _ > _, maxIter)
     e.unpersist()
     out.withColumnRenamed("label", "layer")
   }
@@ -2625,14 +2482,8 @@ object GraphOps {
       .join(state0.select(col("v"), col("label").as("cur")), Seq("v"), "left")
       .filter(col("cur").isNull || col("label") > col("cur"))
       .select("v", "label")
-    def hop(fr: DataFrame): DataFrame = fr
-      .select(col("v").as("hv"), col("label").as("hl"))
-      .join(e.select(col("src").as("hsrc"), col("dst").as("hdst")),
-        col("hv") === col("hsrc"))
-      .groupBy(col("hdst").as("v"))
-      .agg((max("hl") + 1).as("label"))
-    labelCorrectLoop("incrementalDagLayersDelete", state0, seed0, hop,
-      max, _ > _, greatest(_, _), maxIter)
+    labelCorrectLoop("incrementalDagLayersDelete", e, lit(1), state0, seed0,
+      max, _ > _, maxIter)
       .withColumnRenamed("label", "layer")
       .join(edgeUniverse(newEdges), Seq("v"), "left_semi")
   }
@@ -3514,14 +3365,14 @@ object GraphOps {
       col("a") === col("xa") && col("b") === col("xb"), "left_anti")
     val (insU, insN) = ckptCount(minus(u2, u1))
     val (delU, delN) = ckptCount(minus(u1, u2))
-    def gated(df: DataFrame): DataFrame =
+    def small(df: DataFrame): DataFrame =
       if (insN + delN <= 200000L) broadcast(df) else df
     def symOf(e: DataFrame) = e.select(col("a").as("v"), col("b").as("w"))
       .union(e.select(col("b").as("v"), col("a").as("w")))
     // distinct canonical triangles of `undAll` containing a delta edge
     def touchedTris(delta: DataFrame, undAll: DataFrame): DataFrame = {
       val sym = symOf(undAll)
-      gated(delta).as("d")
+      small(delta).as("d")
         .join(sym.as("x"), col("x.v") === col("d.a"))
         .join(sym.as("y"), col("y.v") === col("d.b") && col("y.w") === col("x.w"))
         .select(array_sort(array(col("d.a"), col("d.b"), col("x.w"))).as("t"))
@@ -3544,8 +3395,8 @@ object GraphOps {
       .repartition(1).localCheckpoint(true)
     val st = prevState.select(col("v").cast("long").as("v"),
       col("deg").cast("long").as("deg"), col("tri").cast("long").as("tri"))
-    st.join(gated(dDeg), Seq("v"), "full")
-      .join(gated(dTri), Seq("v"), "left")
+    st.join(small(dDeg), Seq("v"), "full")
+      .join(small(dTri), Seq("v"), "left")
       .select(col("v"),
         (coalesce(col("deg"), lit(0L)) + coalesce(col("ddeg"), lit(0L))).as("deg"),
         (coalesce(col("tri"), lit(0L)) + coalesce(col("dtri"), lit(0L))).as("tri"))
@@ -3588,14 +3439,8 @@ object GraphOps {
       .join(state0, Seq("v"), "left")
       .filter(col("label").isNull || col("cand") < col("label"))
       .select(col("v"), col("cand").as("label"))
-    def hop(fr: DataFrame): DataFrame = fr
-      .select(col("v").as("hv"), col("label").as("hd"))
-      .join(e.select(col("src").as("hsrc"), col("dst").as("hdst"),
-        col("w").as("hw")), col("hv") === col("hsrc"))
-      .groupBy(col("hdst").as("v"))
-      .agg(min(col("hd") + col("hw")).as("label"))
-    val out = labelCorrectLoop("incrementalSssp", state0, seed0, hop,
-      min, _ < _, least(_, _), maxIter)
+    val out = labelCorrectLoop("incrementalSssp", e, col("w"), state0, seed0,
+      min, _ < _, maxIter)
     e.unpersist()
     out.withColumnRenamed("label", "dist")
   }
@@ -3654,14 +3499,8 @@ object GraphOps {
       .join(state0.select(col("v"), col("label").as("cur")), Seq("v"), "left")
       .filter(col("cur").isNull || col("label") < col("cur"))
       .select("v", "label")
-    def hop(fr: DataFrame): DataFrame = fr
-      .select(col("v").as("hv"), col("label").as("hd"))
-      .join(e.select(col("src").as("hsrc"), col("dst").as("hdst"),
-        col("w").as("hw")), col("hv") === col("hsrc"))
-      .groupBy(col("hdst").as("v"))
-      .agg(min(col("hd") + col("hw")).as("label"))
-    labelCorrectLoop("incrementalSsspDelete", state0, seed0, hop,
-      min, _ < _, least(_, _), maxIter)
+    labelCorrectLoop("incrementalSsspDelete", e, col("w"), state0, seed0,
+      min, _ < _, maxIter)
       .withColumnRenamed("label", "dist")
   }
 

@@ -64,11 +64,15 @@ class GraphSpec extends SparkSpec {
     }
   }
 
-  test("checkpointCount: exact count, one LogicalRDD leaf, exactly one Spark job") {
+  /** Runs `body` and counts the Spark jobs it starts: a listener counts
+    * the job starts of a job group of the probe's own, then a fence job in
+    * a second group flushes the listener bus — events arrive in order, so
+    * once the fence's start is seen every job of the probe has been
+    * counted. Broadcast jobs inherit the group and count too. */
+  private def sparkJobs[T](body: => T): (T, Int) = {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    import org.apache.spark.sql.execution.LogicalRDD
     val sc = spark.sparkContext
-    val group = s"graft-checkpoint-count-${System.nanoTime()}"
+    val group = s"graft-job-count-${System.nanoTime()}"
     val fence = s"$group-fence"
     val jobs = new java.util.concurrent.atomic.AtomicInteger()
     @volatile var fenceSeen = false
@@ -80,14 +84,11 @@ class GraphSpec extends SparkSpec {
           case _ =>
         }
     }
-    val df = spark.range(0L, 1000L, 1L, 4).toDF().filter(col("id") % 3 === 0)
     sc.addSparkListener(listener)
-    val (cp, n) = try {
-      sc.setJobGroup(group, "checkpointCount probe")
-      try GraphOps.checkpointCount(df) finally sc.clearJobGroup()
+    val out = try {
+      sc.setJobGroup(group, "job-count probe")
+      try body finally sc.clearJobGroup()
     } finally {
-      // the listener bus delivers in order: once the fence job's start
-      // arrives, every event of the probe group has arrived too
       sc.setJobGroup(fence, "listener fence")
       try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
       val deadline = System.nanoTime() + 30L * 1000000000L
@@ -95,13 +96,36 @@ class GraphSpec extends SparkSpec {
       sc.removeSparkListener(listener)
     }
     assert(fenceSeen, "listener fence never arrived")
+    (out, jobs.get)
+  }
+
+  test("checkpointCount: exact count, one LogicalRDD leaf, exactly one Spark job") {
+    import org.apache.spark.sql.execution.LogicalRDD
+    val df = spark.range(0L, 1000L, 1L, 4).toDF().filter(col("id") % 3 === 0)
+    val ((cp, n), jobs) = sparkJobs(GraphOps.checkpointCount(df))
     assert(n == 334L)
     assert(cp.queryExecution.logical.isInstanceOf[LogicalRDD],
       s"not a single LogicalRDD leaf:\n${cp.queryExecution.logical}")
-    assert(jobs.get == 1, s"${jobs.get} Spark jobs for one checkpoint-and-count")
+    assert(jobs == 1, s"$jobs Spark jobs for one checkpoint-and-count")
     // the filled checkpoint serves later reads, and a predicate counts a subset
     assert(cp.collect().map(_.getLong(0)).sorted.toSeq == (0L until 1000L by 3L))
     assert(GraphOps.checkpointCount(df, col("id") < 30)._2 == 10L)
+  }
+
+  test("BFS loops run a pinned number of Spark jobs per call") {
+    // The barrier count of the level-BFS and σ-BFS loops, pinned: a change
+    // to how a superstep is built must not add a barrier (or a broadcast
+    // or shuffle job) per level.
+    val g6 = AdjacencyCodec.read(spark, s"$fixtures/G6.txt")
+    val multi = Seq("G1.txt", "G3.txt", "G6.txt").map { f =>
+      AdjacencyCodec.read(spark, s"$fixtures/$f").withColumn("graph", lit(f))
+    }.reduce(_.unionByName(_))
+    val bfs = sparkJobs(GraphOps.bfsLevels(spark, g6, 17L))._2
+    val graphs = sparkJobs(GraphOps.multiGraphBfs(spark, multi, 0L))._2
+    val sigma = sparkJobs(GraphOps.multiSourceBfsSigma(spark, g6,
+      Seq(0L, 17L, 29L)))._2
+    assert((bfs, graphs, sigma) == ((32, 32, 30)),
+      s"Spark jobs (bfsLevels, multiGraphBfs, multiSourceBfsSigma)")
   }
 
   test("G12 empty graph: BFS returns just the start vertex") {
@@ -1260,13 +1284,17 @@ class GraphSpec extends SparkSpec {
   }
 
   test("multi-source BFS equals per-seed single-source BFS") {
+    // The multi-source BFS is the (seed, v, level) projection of the σ-BFS:
+    // the premise of every query that reads levels from the shared σ cache
+    // (q_graph_closeness, q_graph_diameter's sweep) or from cached
+    // single-source levels (q_graph_bfs, q_graph_dfs_leaves, q_graph_khop).
     import graft.plans.GraphOps
     val edges = Tables(spark, sfDir, "customer").select(col("c_custkey"))
       .limit(200)
       .select(col("c_custkey").as("src"), ((col("c_custkey") * 3 + 1) % 200).as("dst"))
     val e = edges.localCheckpoint(true)
     val seeds = Seq(0L, 7L, 13L)
-    val multi = GraphOps.multiSourceBfs(spark, e, seeds).collect()
+    val multi = GraphOps.multiSourceBfsSigma(spark, e, seeds).collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getInt(2)).toMap
     seeds.foreach { s =>
       val single = GraphOps.bfsLevels(spark, e, s).collect()

@@ -158,12 +158,12 @@ class ScaleSpec extends SparkSpec {
     val f = Seq((0L, 0)).toDF("v", "level")
     val seen = Seq((0L, 0)).toDF("v", "level")
     def planOf(seenCount: Long): String =
-      graft.plans.GraphOps.expandTwice(e, f, seen, seenCount, 1000L)
+      graft.plans.GraphOps.expandTwice(e, f, seen, Seq(), seenCount, 0L)
         .queryExecution.executedPlan.toString
     val small = planOf(10L)
     assert(small.matches("(?s).*BroadcastHashJoin.*LeftAnti.*"),
       s"below the gate the seen prune should broadcast:\n${small.take(600)}")
-    val big = planOf(10000L)
+    val big = planOf(graft.plans.GraphOps.BroadcastSeenLimit + 1)
     val antiLine = big.linesIterator.find(_.contains("LeftAnti")).getOrElse("")
     assert(antiLine.nonEmpty && !antiLine.contains("Broadcast"),
       s"past the gate the seen prune must not broadcast:\n${big.take(600)}")
@@ -174,7 +174,7 @@ class ScaleSpec extends SparkSpec {
     val e = Seq(("a", 0L, 1L), ("b", 0L, 2L)).toDF("graph", "src", "dst")
     val f = Seq(("a", 0L, 0), ("b", 0L, 0)).toDF("graph", "v", "level")
     def planOf(seenCount: Long, frontierCount: Long): String =
-      graft.plans.GraphOps.multiGraphExpandTwice(e, f, f, seenCount, 1000L,
+      graft.plans.GraphOps.expandTwice(e, f, f, Seq("graph"), seenCount,
         frontierCount).queryExecution.executedPlan.toString
     // the frontier join must key on BOTH graph and vertex — a graph-only
     // key funnels each whole graph through one task at 100 TB
@@ -188,7 +188,8 @@ class ScaleSpec extends SparkSpec {
       s"frontier join must key on (graph, vertex):\n${small.take(800)}")
     assert(small.matches("(?s).*BroadcastHashJoin.*LeftAnti.*"),
       s"below the gate the seen prune should broadcast:\n${small.take(600)}")
-    val big = planOf(10000L, 10000L)
+    val past = graft.plans.GraphOps.BroadcastSeenLimit + 1
+    val big = planOf(past, past)
     val antiLine = big.linesIterator.find(_.contains("LeftAnti")).getOrElse("")
     assert(antiLine.nonEmpty && !antiLine.contains("Broadcast"),
       s"past the gate the seen prune must not broadcast:\n${big.take(600)}")
@@ -350,7 +351,7 @@ class ScaleSpec extends SparkSpec {
     val f = Seq((0L, 0)).toDF("v", "level")
     val seen = Seq((0L, 0)).toDF("v", "level")
     def planOf(frontierCount: Long): String =
-      graft.plans.GraphOps.expandTwice(e, f, seen, 10L, 1000L, frontierCount)
+      graft.plans.GraphOps.expandTwice(e, f, seen, Seq(), 10L, frontierCount)
         .queryExecution.executedPlan.toString
     // below the gate: the frontier Inner join broadcasts
     val small = planOf(10L)
@@ -361,7 +362,7 @@ class ScaleSpec extends SparkSpec {
     // past the gate: the frontier join flips to a sort-merge join (seen
     // stays gated separately — seenCount 10 keeps its broadcast, proving
     // the two gates are independent)
-    val big = planOf(10000L)
+    val big = planOf(graft.plans.GraphOps.BroadcastSeenLimit + 1)
     val innerBig = big.linesIterator.find(l =>
       l.contains("Join") && l.contains("Inner")).getOrElse("")
     assert(innerBig.contains("SortMergeJoin"),
