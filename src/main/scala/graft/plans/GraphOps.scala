@@ -1,7 +1,8 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Iterative graph computation on DataFrames.
   *
@@ -24,10 +25,14 @@ import org.apache.spark.sql.functions._
   * collect); lineage is cut with a local checkpoint every superstep so
   * deep graphs don't blow up plan size (the known scale-killer for
   * iterative DataFrame loops). The superstep's checkpoint and its BSP
-  * termination count (Pregel's active-vertex count) are ONE Spark job,
+  * termination count (Pregel's active-vertex count) share ONE action,
   * [[checkpointCount]]: the count fills the checkpoint as it runs, so a
   * superstep pays for one action, not a materialization plus a separate
-  * counting query. On a real cluster, `localCheckpoint` would become
+  * counting query. That action is one job of its own; under AQE each
+  * shuffle map stage and each broadcast of the superstep frame is a
+  * further job, so a barrier costs several jobs (GraphSpec pins
+  * `bfsLevels` on the 30-vertex G6 at 32 jobs for 4 barriers and one
+  * checkpoint). On a real cluster, `localCheckpoint` would become
   * `checkpoint` on reliable storage.
   */
 object GraphOps {
@@ -39,11 +44,16 @@ object GraphOps {
   private def trace(msg: => String): Unit =
     if (traceOn) System.err.println(s"[graft-trace] $msg")
 
-  /** Local checkpoint of `df` plus its row count in ONE Spark job — the
+  /** Local checkpoint of `df` plus its row count in ONE action — the
     * superstep barrier of every loop below. The checkpoint is declared
     * lazy and the count runs on its physical RDD, which fills the
     * checkpoint blocks while counting: no second SQL execution, no
     * count-aggregate plan (with its own shuffle) over the fresh frame.
+    * The action itself is one Spark job; under AQE every shuffle map
+    * stage and every broadcast inside `df` runs as a job before it (the
+    * GraphSpec pin counts 32 jobs for `bfsLevels` on G6 from vertex 17:
+    * four barriers and a `levels` checkpoint, ~6 jobs each), so a
+    * barrier is counted in jobs, not checkpoints.
     * Returns the checkpointed frame — a single `LogicalRDD` leaf over the
     * filled blocks, so later reads never recompute `df` — and the number
     * of its rows matching `where` (all of them by default; a narrow
@@ -100,6 +110,94 @@ object GraphOps {
     * spills instead of flooding every executor. */
   private[graft] def gated(f: DataFrame, n: Long): DataFrame =
     if (n <= BroadcastSeenLimit) broadcast(f) else f.hint("merge")
+
+  /** The join gate of one peel or cascade call: [[gated]] over the
+    * running row count of every frame the call materialized through
+    * [[count]]. Wave frames are delta-sized and checkpointed with unknown
+    * stats, so without a hint each wave would shuffle the big static side
+    * (edges, core ids) both ways; the count rides the job that fills the
+    * frame's single-partition checkpoint, so a frame reaches broadcast()
+    * only after a job has measured it (a wave fanning out past a
+    * high-degree vertex is not bounded by the frontier that entered it). */
+  private final class WaveGate {
+    private var running = 0L
+    def count(df: DataFrame): (DataFrame, Long) = {
+      val (c, n) = ckptCount(df)
+      running += n
+      (c, n)
+    }
+    def gate(df: DataFrame): DataFrame = gated(df, running)
+  }
+
+  /** The union of the wave frames one loop accumulates (candidates,
+    * evictions, the unsettled set), of LONG columns `cols`, with its plan
+    * depth bounded: once it has 12 legs, [[all]] collapses them into one
+    * single-partition checkpoint, so a deep cascade carries O(1) legs
+    * rather than O(waves), at one tiny job per dozen waves. */
+  private final class Waves(spark: SparkSession, cols: String*) {
+    private var legs = List.empty[DataFrame]
+    def add(f: DataFrame): Unit = legs ::= f
+    def all: DataFrame = {
+      if (legs.size >= 12) legs = List(ckpt(legs.reduce(_ union _)))
+      legs.reduceOption(_ union _).getOrElse(spark.createDataFrame(
+        java.util.Collections.emptyList[Row](),
+        StructType(cols.map(StructField(_, LongType)))))
+    }
+  }
+
+  /** Peels `start` (`n0` rows) to a DETECTED fixpoint: `round` maps a
+    * survivor set to the next one and its row count, and the loop stops
+    * after the first round whose count equals its input's. Survivor sets
+    * only shrink, so equal counts are equal sets, and that no-op round
+    * computes every survivor's figure (degree, support) within the
+    * converged set; stopping on the round where membership converges
+    * publishes one-round-STALE figures for survivors next to its removals
+    * (21 wrong k-core degrees at sf1, r12). An empty start is already a
+    * fixpoint. At most `cap` rounds run; a peel still shrinking there
+    * throws `fail(last count)` rather than publish a non-fixpoint. */
+  private def peelToFixpoint(start: DataFrame, n0: Long, cap: Int,
+      fail: Long => String)(round: DataFrame => (DataFrame, Long)): DataFrame = {
+    var (cur, n, prev, r) = (start, n0, if (n0 == 0) 0L else -1L, 0)
+    while (n != prev && r < cap) {
+      r += 1
+      val (next, nn) = round(cur)
+      cur = next; prev = n; n = nn
+    }
+    require(n == prev, fail(n))
+    cur
+  }
+
+  /** Canonical undirected edges of `e`'s `(x, y)` pairs: self-loops
+    * dropped, each edge once as LONGs `(a, b)` with a < b. */
+  private def canonical(e: DataFrame, x: String = "src",
+      y: String = "dst"): DataFrame =
+    e.filter(col(x) =!= col(y))
+      .select(least(col(x), col(y)).cast("long").as("a"),
+        greatest(col(x), col(y)).cast("long").as("b"))
+      .distinct()
+
+  /** Triangle wedges of the edges `(a, b)` of `e` in `sym` (a
+    * [[symmetrize]]d edge set): one row `(a, b, c)` per common neighbour
+    * `c`. `e` is the probe side — a delta or a gated wave frame — so the
+    * work is |e| × degree², never the graph's triangle enumeration. */
+  private def wedges(e: DataFrame, sym: DataFrame): DataFrame =
+    e.as("u").join(sym.as("x"), col("x.src") === col("u.a"))
+      .join(sym.as("y"), col("y.src") === col("u.b") && col("y.dst") === col("x.dst"))
+      .select(col("u.a").as("a"), col("u.b").as("b"), col("x.dst").as("c"))
+
+  /** Triangle count `(a, b, support)` in `sym` of each edge of `e` with one. */
+  private def triSupport(e: DataFrame, sym: DataFrame): DataFrame =
+    wedges(e, sym).groupBy("a", "b").agg(count(lit(1)).as("support"))
+
+  /** Edges sharing a `sym`-triangle with an edge of `e`: the canonical
+    * co-edges `(a, c)` and `(b, c)` of each wedge, distinct. */
+  private def coEdges(e: DataFrame, sym: DataFrame): DataFrame = {
+    val w = wedges(e, sym)
+    w.select(least(col("a"), col("c")).as("a"), greatest(col("a"), col("c")).as("b"))
+      .union(w.select(least(col("b"), col("c")).as("a"),
+        greatest(col("b"), col("c")).as("b")))
+      .distinct()
+  }
 
   /** One FUSED two-level BFS superstep, exposed for plan-shape tests: grow
     * the frontier `f` TWO hops along `e`, then prune already-seen
@@ -692,10 +790,7 @@ object GraphOps {
     * drift between engines. Returns `(a, b, jaccard_e6)` with a < b.
     */
   def jaccardEdges(spark: SparkSession, edges: DataFrame): DataFrame = {
-    val und = edges.filter(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).cast("long").as("a"),
-        greatest(col("src"), col("dst")).cast("long").as("b"))
-      .distinct()
+    val und = canonical(edges)
     // symmetric neighbor list, checkpointed: consumed by the degree agg
     // and both legs of the wedge join
     val nbr = und.select(col("a").as("v"), col("b").as("w"))
@@ -2205,14 +2300,12 @@ object GraphOps {
       }
       trace(f"$opName cascade driver-solved tightN=$tightN " +
         f"unsettled=${unsettled.size} t=${(System.nanoTime() - t0) / 1e9}%.2fs")
-      return unsettled.toSeq.toDF("v").repartition(1).localCheckpoint(true)
+      return ckpt(unsettled.toSeq.toDF("v"))
     }
-    val emptyU = Seq.empty[Long].toDF("v")
-    var uFrames = List.empty[DataFrame]
-    def unsettledAll: DataFrame = (emptyU :: uFrames).reduce(_ union _)
+    val unsettled = new Waves(spark, "v")
     // Frontiers are CASCADE-sized (hundreds of rows at sf0.1, frontier ∝
     // delta never graph) but were checkpointed at cluster parallelism —
-    // making every later wave's unsettledAll union drag 32 near-empty
+    // making every later wave's unsettled union drag 32 near-empty
     // tasks PER ACCUMULATED WAVE through both anti-joins. repartition(1)
     // first: a w-wave cascade's state is then w single-partition leaves
     // (upstream join stages keep their parallelism; only the tiny result
@@ -2221,57 +2314,45 @@ object GraphOps {
     // this + the two-wave fusion + the checkpointed-frame broadcasts
     // below took q_graph_dag_layers_incremental_del 9.62 → 7.59 s,
     // bfs_del 5.53 → 5.12, sssp_del 5.88 → 5.26.
-    // Count-gated BROADCAST of every frontier/delta-derived join side:
-    // checkpointed frontiers have unknown stats, so without the hint
-    // every per-wave join SHUFFLED e and pv both ways — the r10 barrier
-    // instrumentation showed the cascade paying ~25 stages/wave (dagdel
-    // 572 stages vs the insert maintainer's 224) at ~17 ms/stage of pure
-    // scheduling. Cascade frames are delta-sized by construction (work ∝
-    // frontier, the operator's whole contract); the gate flips back to
-    // shuffle joins if the accumulated unsettled set outgrows the
-    // broadcast budget — the seen-set discipline of the BFS family.
+    // Every frontier/delta-derived join side goes through the call's
+    // WaveGate (checkpointed frames only, counted by the job that fills
+    // them): without the hint every per-wave join SHUFFLED e and pv both
+    // ways — the r10 barrier instrumentation showed the cascade paying
+    // ~25 stages/wave (dagdel 572 stages vs the insert maintainer's 224)
+    // at ~17 ms/stage of pure scheduling.
     // (A "fold the distinct()s into the single-partition checkpoint"
     // variant — dedup as a 1-task agg after repartition(1), no per-wave
     // distinct shuffles — was tried and REJECTED: 8.64 → 10.97 s on the
     // same-session three-maintainer bench; serializing the dedup into
     // the collapse task costs more than the small shuffles it removes.)
-    // ONLY already-checkpointed single-partition frames get the hint — a
-    // materialized ≤frontier-sized frame broadcasts for the cost of one
-    // driver hop, while hinting DERIVED plans (candidates, support
-    // in-edges) forces an extra materialize-and-collect per join and
-    // measured SLOWER than the shuffles it replaced (9.8 → 11.8 s on the
-    // same-session three-maintainer bench — rejected; ledger PLANS.md).
-    // The gate counts EVERY frame a subsequent plan may broadcast: the
-    // delete batch and both sub-waves of each fused step (review
-    // finding: the sub-wave fA is NOT bounded by the entering frontier —
-    // one deleted support edge upstream of a high-out-degree vertex
-    // fans out to ~out-degree unsettled children — so it must be
-    // measured BEFORE any plan wraps it in broadcast(); the count rides
-    // the job that fills its single-partition checkpoint).
-    var cumGated = 0L
-    def small(df: DataFrame): DataFrame =
-      if (cumGated <= 200000L) broadcast(df) else df
+    // ONLY already-checkpointed frames get the hint — a materialized
+    // ≤frontier-sized frame broadcasts for the cost of one driver hop,
+    // while hinting DERIVED plans (candidates, support in-edges) forces
+    // an extra materialize-and-collect per join and measured SLOWER than
+    // the shuffles it replaced (9.8 → 11.8 s on the same-session
+    // three-maintainer bench — rejected; ledger PLANS.md).
+    val g = new WaveGate
     // Both wave probes ride the materialized tightE: expansion is one
     // (p → c) probe, the support check one (c → p) probe + anti-join —
     // the per-wave pv joins and tightness filters of the r10 loop are
     // gone (they were recomputing the static tight relation every wave).
-    def dropSupported(cand: DataFrame, unsettled: DataFrame): DataFrame = {
+    def dropSupported(cand: DataFrame, uAll: DataFrame): DataFrame = {
       val supported = cand
         .join(tightE.select(col("p"), col("c").as("v")), Seq("v"))
-        .join(small(unsettled.select(col("v").as("p"))), Seq("p"), "left_anti")
+        .join(g.gate(uAll.select(col("v").as("p"))), Seq("p"), "left_anti")
         .select("v").distinct()
       cand.join(supported, Seq("v"), "left_anti")
     }
     def nextWave(fr: DataFrame): DataFrame = {
+      val uAll = unsettled.all
       val cand = tightE
-        .join(small(fr.select(col("v").as("p"))), Seq("p"))
+        .join(g.gate(fr.select(col("v").as("p"))), Seq("p"))
         .select(col("c").as("v")).distinct()
-        .join(small(unsettledAll.select("v")), Seq("v"), "left_anti")
-      dropSupported(cand, unsettledAll)
+        .join(g.gate(uAll.select("v")), Seq("v"), "left_anti")
+      dropSupported(cand, uAll)
     }
     val t0 = System.nanoTime()
-    var (frontier, n) = ckptCount(dropSupported(cand0v, emptyU))
-    cumGated += n
+    var (frontier, n) = g.count(dropSupported(cand0v, unsettled.all))
     var waves = 0
     trace(f"$opName cascade wave0 n=$n t=${(System.nanoTime() - t0) / 1e9}%.2fs")
     // guard admits the FULL fused step (r10 ADVICE: `waves < maxIter`
@@ -2300,25 +2381,18 @@ object GraphOps {
       // shape IS the safe fixpoint of that constraint; ledger PLANS.md
       // r13.)
       waves += 2
-      uFrames ::= frontier
-      val (fA, fAn) = ckptCount(nextWave(frontier))
-      cumGated += fAn // gates fB's plan, built next
-      uFrames ::= fA
-      val (fB, fBn) = ckptCount(nextWave(fA))
+      unsettled.add(frontier)
+      val (fA, _) = g.count(nextWave(frontier)) // gates fB's plan, built next
+      unsettled.add(fA)
+      val (fB, fBn) = g.count(nextWave(fA))
       frontier = fB
       n = fBn
-      cumGated += n
-      trace(f"$opName cascade waves=$waves n=$n cum=$cumGated " +
+      trace(f"$opName cascade waves=$waves n=$n " +
         f"t=${(System.nanoTime() - t0) / 1e9}%.2fs")
-      // Bound the unsettledAll union depth (r9 VERDICT #9): past ~12
-      // leaves, collapse the accumulated waves into ONE single-partition
-      // leaf — a deep cascade then carries O(1) legs instead of O(waves),
-      // at one extra tiny job per dozen waves.
-      if (uFrames.size >= 12) uFrames = List(ckpt(unsettledAll))
     }
     require(n == 0,
       s"$opName: unsettled cascade still live after $maxIter waves — raise maxIter")
-    ckpt(unsettledAll.select("v"))
+    ckpt(unsettled.all.select("v"))
   }
 
   /** DELETION-aware incremental BFS-level maintenance — the traversal
@@ -2491,10 +2565,10 @@ object GraphOps {
   /** Synchronous k-core peel over RAW directed edges (self-loops dropped,
     * duplicates collapsed at the undirected level): each round recomputes
     * every surviving vertex's degree among survivors and drops those
-    * below `k`. Fixed `rounds` (not peel-to-convergence) so the DuckDB
-    * oracle can unroll the identical recurrence; rounds after the
-    * fixpoint are no-ops and the fixpoint is asserted at test scale in
-    * GraphSpec. Returns the core's `(v, deg)` with the IN-CORE degree —
+    * below `k`, to a detected fixpoint ([[peelToFixpoint]]) with
+    * `rounds` as a loud cap — the depth the DuckDB oracle unrolls the
+    * identical recurrence to; GraphSpec asserts the fixpoint at test
+    * scale. Returns the core's `(v, deg)` with the IN-CORE degree —
     * extracted from q_graph_kcore so the query, the incremental
     * maintainers' stored-state builders, and the spec share one spelling
     * (reference behavior: the subgraph-mining surface of
@@ -2510,44 +2584,25 @@ object GraphOps {
     // ADVICE: the old `require(rounds >= 2)` + hard cap made those cases
     // always throw).
     require(rounds >= 1, s"kcorePeel rounds must be >= 1 (got $rounds)")
-    val und = rawEdges.filter(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).cast("long").as("a"),
-        greatest(col("src"), col("dst")).cast("long").as("b"))
-      .distinct()
-    val sym = symmetrize(und, "a", "b").localCheckpoint(true) // feeds every peel round
-    // act appears TWICE per round (src prune + dst prune) — materialize
-    // each round's survivor set or the plan doubles per round.
-    var (deg, n) = checkpointCount(sym.groupBy(col("src").as("v"))
+    val sym = symmetrize(canonical(rawEdges), "a", "b")
+      .localCheckpoint(true) // feeds every peel round
+    // the first shrink (full-graph degree ≥ k) runs before the loop, so
+    // `rounds` loop rounds are rounds − 1 shrinks plus the detection round
+    val (deg0, n0) = checkpointCount(sym.groupBy(col("src").as("v"))
       .agg(count(lit(1)).as("deg")).filter(col("deg") >= k))
-    // Peel to a DETECTED fixpoint, `rounds` as a loud cap (r12, caught by
-    // the sf1 hash compare): a round's published deg is counted within
-    // the PREVIOUS round's survivors, so stopping on the exact round
-    // membership converges publishes one-round-STALE degrees — survivors
-    // adjacent to last-round removals read too high (21 vertices at sf1,
-    // where the fixed 8-round unroll had no no-op slack left). Count
-    // equality ⇒ set equality (survivor sets only shrink), and the first
-    // no-op round recomputes degrees within the converged set — exact.
-    var prevN = -1L
-    var r = 1
-    // `r <= rounds` (not `<`): the iteration that OBSERVES the no-op is
-    // the free detection round — the cap bounds shrinking work only.
-    while (n != prevN && r <= rounds) {
-      r += 1
+    peelToFixpoint(deg0, n0, rounds, n =>
+      s"kcorePeel did not converge within $rounds rounds (|core| still $n " +
+        "and changing) - raise the cap; publishing a non-fixpoint peel " +
+        "would carry stale degrees") { deg =>
+      // act appears TWICE per round (src prune + dst prune) — materialize
+      // each round's survivor set or the plan doubles per round.
       val act = deg.select("v")
-      val (next, nextN) = checkpointCount(sym
+      checkpointCount(sym
         .join(act.select(col("v").as("sv")), col("src") === col("sv"), "left_semi")
         .join(act.select(col("v").as("dv")), col("dst") === col("dv"), "left_semi")
         .groupBy(col("src").as("v")).agg(count(lit(1)).as("deg"))
         .filter(col("deg") >= k))
-      deg = next
-      prevN = n
-      n = nextN
     }
-    require(n == prevN,
-      s"kcorePeel did not converge within $rounds rounds (|core| still $n " +
-        "and changing) - raise the cap; publishing a non-fixpoint peel " +
-        "would carry stale degrees")
-    deg
   }
 
   /** INCREMENTAL k-core maintenance over a two-sided edge diff — the
@@ -2594,17 +2649,10 @@ object GraphOps {
       maxWaves: Int = 30,
       driverSolveLimit: Long = DriverSolveEdgeLimit): DataFrame = {
     import spark.implicits._
-    def und(e: DataFrame) = e.filter(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).cast("long").as("a"),
-        greatest(col("src"), col("dst")).cast("long").as("b"))
-      .distinct()
-    val u1 = und(v1Raw).localCheckpoint(true)
-    val (u2, u2N) = checkpointCount(und(v2Raw))
-    def undMinus(x: DataFrame, y: DataFrame) = x.join(
-      y.select(col("a").as("xa"), col("b").as("xb")),
-      col("a") === col("xa") && col("b") === col("xb"), "left_anti")
-    val (insU, insN) = checkpointCount(undMinus(u2, u1))
-    val (delU, delN) = checkpointCount(undMinus(u1, u2))
+    val u1 = canonical(v1Raw).localCheckpoint(true)
+    val (u2, u2N) = checkpointCount(canonical(v2Raw))
+    val (insU, insN) = checkpointCount(u2.join(u1, Seq("a", "b"), "left_anti"))
+    val (delU, delN) = checkpointCount(u1.join(u2, Seq("a", "b"), "left_anti"))
     if (u2N <= driverSolveLimit) {
       // DRIVER SOLVE under the family's size gate (r11 — the dagdel
       // tight-support-worklist discipline applied to the whole kcore
@@ -2690,167 +2738,122 @@ object GraphOps {
         f"t=${(System.nanoTime() - t0) / 1e9}%.2fs")
       val rows = inBase.keysIterator.filterNot(evicted.contains)
         .map(v => (v, degB(v))).toSeq
-      return rows.toDF("v", "deg").repartition(1).localCheckpoint(true)
+      return ckpt(rows.toDF("v", "deg"))
     }
     val sym2 = symmetrize(u2, "a", "b").localCheckpoint(true)
     val core = prevCore.select(col("v").cast("long").as("v"),
       col("deg").cast("long").as("deg")).localCheckpoint(true)
     val coreIds = core.select("v")
-    // count-gated broadcast of checkpointed delta-sized frames (the
-    // supportCascade discipline: only materialized, already-counted
-    // frames ever reach broadcast())
-    var cumGated = 0L
-    def small(df: DataFrame): DataFrame =
-      if (cumGated <= 200000L) broadcast(df) else df
+    // every frontier-derived join side goes through the WaveGate (the
+    // supportCascade discipline: only materialized, counted frames ever
+    // reach broadcast())
+    val g = new WaveGate
     def ends(u: DataFrame): DataFrame =
       u.select(col("a").as("v")).union(u.select(col("b").as("v"))).distinct()
+    // the (src, dst) rows of sym2 leaving a (checkpointed, counted) vertex
+    // set: one sym2 scan against the gated probe, never a sym2 shuffle
+    def out(w: DataFrame): DataFrame =
+      sym2.join(g.gate(w.select(col("v").as("src"))), Seq("src"), "left_semi")
 
     // ---- insert side: candidate region P, then frozen-core peel -> S
-    // full-v2 degree of a (checkpointed, counted) candidate set — one
-    // sym2 scan against the broadcast probe, candidate-sized result
-    def degFull(w: DataFrame): DataFrame = sym2
-      .join(small(w.select(col("v").as("src"))), Seq("src"), "left_semi")
-      .groupBy(col("src").as("v")).agg(count(lit(1)).as("d"))
-    val (insEnds, insEndsN) = ckptCount(ends(insU).join(coreIds, Seq("v"), "left_anti"))
-    cumGated += insEndsN
-    var (frontier, fn) = ckptCount(degFull(insEnds).filter(col("d") >= k).select("v"))
-    cumGated += fn
-    var pFrames = List(frontier)
-    def pAll: DataFrame = pFrames.reduce(_ union _)
+    // full-v2 degree of a candidate set, candidate-sized result
+    def degFull(w: DataFrame): DataFrame =
+      out(w).groupBy(col("src").as("v")).agg(count(lit(1)).as("d"))
+    val (insEnds, _) = g.count(ends(insU).join(coreIds, Seq("v"), "left_anti"))
+    var (frontier, fn) = g.count(degFull(insEnds).filter(col("d") >= k).select("v"))
+    val region = new Waves(spark, "v")
+    region.add(frontier)
     var waves = 0
     while (fn > 0 && waves < maxWaves) {
       waves += 1
-      val (nbrs, nbrsN) = ckptCount(sym2
-        .join(small(frontier.select(col("v").as("src"))), Seq("src"), "left_semi")
+      val (nbrs, _) = g.count(out(frontier)
         .select(col("dst").as("v")).distinct()
         .join(coreIds, Seq("v"), "left_anti")
-        .join(small(ckpt(pAll)), Seq("v"), "left_anti"))
-      cumGated += nbrsN
-      val (next, nextN) = ckptCount(degFull(nbrs).filter(col("d") >= k).select("v"))
-      frontier = next; fn = nextN; cumGated += fn
-      trace(s"incrementalKCore cand wave=$waves n=$fn cum=$cumGated")
-      pFrames ::= frontier
+        .join(g.gate(region.all), Seq("v"), "left_anti"))
+      val (next, nextN) = g.count(degFull(nbrs).filter(col("d") >= k).select("v"))
+      frontier = next; fn = nextN
+      trace(s"incrementalKCore cand wave=$waves n=$fn")
+      region.add(frontier)
     }
     require(fn == 0,
       s"incrementalKCore: candidate region still growing after $maxWaves " +
         "waves — the insert cascade exceeds the cap; raise maxWaves or " +
         "recompute from the new snapshot")
-    val (cand, candN) = ckptCount(pAll)
-    cumGated += candN
+    val (cand, candN) = g.count(region.all)
     require(candN <= math.max(10000L, 20L * insN),
       s"incrementalKCore: candidate region ($candN vertices) degenerated " +
         s"past 20x the inserted-edge delta ($insN) — maintenance would " +
         "not be delta-scoped; recompute from the new snapshot")
     // candidate support from the FROZEN core, counted once
-    val cntC = ckpt(sym2
-      .join(small(cand.select(col("v").as("src"))), Seq("src"), "left_semi")
+    val cntC = ckpt(out(cand)
       .join(coreIds.select(col("v").as("dst")), Seq("dst"), "left_semi")
       .groupBy(col("src").as("v")).agg(count(lit(1)).as("cdC")))
-    var surv = cand
-    var sn = candN
-    var peelRounds = 0
-    var stable = sn == 0L
-    while (!stable && peelRounds < maxWaves) {
-      peelRounds += 1
-      val cntS = sym2
-        .join(small(surv.select(col("v").as("src"))), Seq("src"), "left_semi")
-        .join(small(surv.select(col("v").as("dst"))), Seq("dst"), "left_semi")
+    val joiners = peelToFixpoint(cand, candN, maxWaves, _ =>
+      s"incrementalKCore: candidate peel did not stabilize in $maxWaves " +
+        "rounds — raise maxWaves or recompute from the new snapshot") { surv =>
+      val cntS = out(surv)
+        .join(g.gate(surv.select(col("v").as("dst"))), Seq("dst"), "left_semi")
         .groupBy(col("src").as("v")).agg(count(lit(1)).as("cdS"))
-      val (next, nn) = ckptCount(surv
+      g.count(surv
         .join(cntC, Seq("v"), "left").join(cntS, Seq("v"), "left")
         .filter(coalesce(col("cdC"), lit(0L)) + coalesce(col("cdS"), lit(0L)) >= k)
         .select("v"))
-      cumGated += nn
-      stable = nn == sn
-      surv = next; sn = nn
-      trace(s"incrementalKCore peel round=$peelRounds n=$sn")
     }
-    require(stable,
-      s"incrementalKCore: candidate peel did not stabilize in $maxWaves " +
-        "rounds — raise maxWaves or recompute from the new snapshot")
-    val joiners = surv // checkpointed, counted (sn)
 
     // ---- delete side: eviction cascade over core ∪ joiners
     val kBase = coreIds.union(joiners).localCheckpoint(true)
-    var evFrames = List.empty[DataFrame]
-    def evictedAll: DataFrame = evFrames match {
-      case Nil => spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("v",
-            org.apache.spark.sql.types.LongType))))
-      case fs => fs.reduce(_ union _)
+    val evictions = new Waves(spark, "v")
+    // the out-edges of `w` landing in `base`, as (v = dst, src, dst):
+    // neighbor rows via one gated probe, membership via one `base` scan
+    // against the gated neighbor rows — `base` is never shuffled
+    def inBase(base: DataFrame, w: DataFrame): DataFrame = {
+      val (nb, _) = g.count(out(w).select(col("src"), col("dst")))
+      base.join(g.gate(nb), col("v") === col("dst"))
     }
-    // in-core degree of a (checkpointed, counted) affected set: neighbor
-    // rows via one broadcast probe, membership via one kBase scan against
-    // the broadcast neighbor rows — kBase is never shuffled
-    def degInCore(w: DataFrame, evicted: DataFrame): DataFrame = {
-      val (nb, nbN) = ckptCount(sym2
-        .join(small(w.select(col("v").as("src"))), Seq("src"), "left_semi")
-        .select(col("src"), col("dst")))
-      cumGated += nbN
-      kBase.join(small(nb), col("v") === col("dst"))
-        .join(small(evicted.select(col("v").as("xd"))),
-          col("dst") === col("xd"), "left_anti")
-        .groupBy(col("src").as("v")).agg(count(lit(1)).as("dk"))
-    }
-    var (affected, an) = ckptCount(ends(delU)
-      .join(kBase.select(col("v").as("kv")), col("v") === col("kv"), "left_semi"))
-    cumGated += an
+    var (affected, an) = g.count(ends(delU).join(kBase, Seq("v"), "left_semi"))
     var evWaves = 0
     while (an > 0 && evWaves < maxWaves) {
       evWaves += 1
-      val (ev0, ev0N) = ckptCount(evictedAll)
-      cumGated += ev0N
-      val dk = degInCore(affected, ev0)
-      val (evictNow, en) = ckptCount(affected
+      val ev0 = evictions.all
+      // in-core degree of the affected set, evicted neighbors masked out
+      val dk = inBase(kBase, affected).join(g.gate(ev0), Seq("v"), "left_anti")
+        .groupBy(col("src").as("v")).agg(count(lit(1)).as("dk"))
+      val (evictNow, en) = g.count(affected
         .join(dk, Seq("v"), "left")
         .filter(coalesce(col("dk"), lit(0L)) < k)
-        .join(small(ev0.select(col("v").as("xe"))),
-          col("v") === col("xe"), "left_anti")
-        .select("v"))
-      cumGated += en
+        .select("v")
+        .join(g.gate(ev0), Seq("v"), "left_anti"))
       if (en == 0) { an = 0 }
       else {
-        evFrames ::= evictNow
+        evictions.add(evictNow)
         // next wave: surviving core neighbors of this wave's evictions
-        val (next, nextN) = ckptCount(sym2
-          .join(small(evictNow.select(col("v").as("src"))), Seq("src"), "left_semi")
+        val (next, nextN) = g.count(out(evictNow)
           .select(col("dst").as("v")).distinct()
-          .join(kBase.select(col("v").as("kv")), col("v") === col("kv"), "left_semi")
-          .join(small(ckpt(evictedAll)), Seq("v"), "left_anti"))
-        affected = next; an = nextN; cumGated += an
+          .join(kBase, Seq("v"), "left_semi")
+          .join(g.gate(evictions.all), Seq("v"), "left_anti"))
+        affected = next; an = nextN
         trace(s"incrementalKCore evict wave=$evWaves affected=$an evicted=$en")
       }
     }
     require(an == 0,
       s"incrementalKCore: eviction cascade still live after $maxWaves " +
         "waves — raise maxWaves or recompute from the new snapshot")
-    val (evicted, evN) = ckptCount(evictedAll)
-    cumGated += evN
+    val (evicted, _) = g.count(evictions.all)
 
     // ---- readout: recompute in-core degree ONLY where membership or
     // incident edges changed; reuse every other stored degree verbatim
-    val kFinal = kBase.join(small(evicted), Seq("v"), "left_anti")
+    val kFinal = kBase.join(g.gate(evicted), Seq("v"), "left_anti")
       .localCheckpoint(true)
-    val (changedNbrSeeds, changedN) = ckptCount(joiners.union(evicted))
-    cumGated += changedN
-    val changedNbrs = sym2
-      .join(small(changedNbrSeeds.select(col("v").as("src"))), Seq("src"), "left_semi")
-      .select(col("dst").as("v"))
-    val (touched, touchedN) = ckptCount(ends(insU).union(ends(delU)).union(changedNbrs)
+    val (changedNbrSeeds, _) = g.count(joiners.union(evicted))
+    val (touched, _) = g.count(ends(insU).union(ends(delU))
+      .union(out(changedNbrSeeds).select(col("dst").as("v")))
       .union(joiners).distinct()
-      .join(kFinal.select(col("v").as("kv")), col("v") === col("kv"), "left_semi"))
-    cumGated += touchedN
-    val (nbT, nbTN) = ckptCount(sym2
-      .join(small(touched.select(col("v").as("src"))), Seq("src"), "left_semi")
-      .select(col("src"), col("dst")))
-    cumGated += nbTN
-    val degTouched = kFinal.join(small(nbT), col("v") === col("dst"))
+      .join(kFinal, Seq("v"), "left_semi"))
+    val degTouched = inBase(kFinal, touched)
       .groupBy(col("src").as("v")).agg(count(lit(1)).as("deg"))
     val untouched = core
-      .join(small(touched), Seq("v"), "left_anti")
-      .join(small(evicted), Seq("v"), "left_anti")
+      .join(g.gate(touched), Seq("v"), "left_anti")
+      .join(g.gate(evicted), Seq("v"), "left_anti")
       .select(col("v"), col("deg"))
     untouched.unionByName(degTouched.select(col("v"), col("deg")))
   }
@@ -2858,44 +2861,27 @@ object GraphOps {
   /** Synchronous k-truss peel over UNDIRECTED canonical edges (a < b,
     * distinct): each round recomputes every surviving edge's triangle
     * support among survivors (canonical wedge join) and drops those
-    * below k−2. Fixed `rounds` so the DuckDB oracle can unroll the
-    * identical recurrence; GraphSpec asserts the fixpoint is reached and
+    * below k−2, to a detected fixpoint ([[peelToFixpoint]]) with `rounds`
+    * as a loud cap — the depth the DuckDB oracle unrolls the identical
+    * recurrence to; GraphSpec asserts the fixpoint is reached and
     * non-empty at test scale. Returns `(a, b, support)` with the
     * IN-TRUSS support — extracted from q_graph_ktruss so the query, the
     * incremental maintainers' stored-state builders, and the spec share
     * one spelling. */
   def ktrussPeel(spark: SparkSession, und: DataFrame, k: Int,
       rounds: Int): DataFrame = {
-    var (cur, prevN) = checkpointCount(und.select(col("a").cast("long").as("a"),
-      col("b").cast("long").as("b")))
-    var result: DataFrame = cur.withColumn("support", lit(0L))
-    // Peel to a DETECTED fixpoint with `rounds` as a loud cap — the
-    // kcorePeel discipline (r12): a round's published support is counted
-    // among the PREVIOUS round's survivors, so a fixed unroll with no
-    // no-op slack publishes stale supports for edges adjacent to
-    // last-round removals. Count equality ⇒ set equality (survivor sets
-    // only shrink); the first no-op round's supports are exact.
-    var converged = false
-    var r = 0
-    while (!converged && r < rounds) {
-      r += 1
-      val sym = cur.select(col("a").as("v"), col("b").as("w"))
-        .union(cur.select(col("b").as("v"), col("a").as("w")))
-      val (sup, n) = checkpointCount(cur.as("u")
-        .join(sym.as("x"), col("x.v") === col("u.a"))
-        .join(sym.as("y"), col("y.v") === col("u.b") && col("y.w") === col("x.w"))
-        .groupBy(col("u.a").as("a"), col("u.b").as("b"))
-        .agg(count(lit(1)).as("support"))
-        .filter(col("support") >= k - 2))
-      result = sup
-      cur = sup.select("a", "b")
-      if (n == prevN) converged = true else prevN = n
-    }
-    require(converged,
+    // the start carries a zero support so an empty input (already a
+    // fixpoint) returns the peel's schema
+    val (start, n0) = checkpointCount(und.select(col("a").cast("long").as("a"),
+      col("b").cast("long").as("b"), lit(0L).as("support")))
+    peelToFixpoint(start, n0, rounds, n =>
       s"ktrussPeel did not converge within $rounds rounds (|truss| still " +
-        s"$prevN and changing) - raise the cap; a non-fixpoint peel " +
-        "carries stale supports")
-    result
+        s"$n and changing) - raise the cap; a non-fixpoint peel " +
+        "carries stale supports") { cur =>
+      val e = cur.select("a", "b")
+      checkpointCount(triSupport(e, symmetrize(e, "a", "b"))
+        .filter(col("support") >= k - 2))
+    }
   }
 
   /** INCREMENTAL k-truss maintenance over a two-sided undirected edge
@@ -2935,17 +2921,10 @@ object GraphOps {
       maxWaves: Int = 30,
       driverSolveLimit: Long = DriverSolveEdgeLimit): DataFrame = {
     import spark.implicits._
-    def norm(e: DataFrame) = e.filter(col("a") =!= col("b"))
-      .select(least(col("a"), col("b")).cast("long").as("a"),
-        greatest(col("a"), col("b")).cast("long").as("b"))
-      .distinct()
-    val u1 = norm(v1Und).localCheckpoint(true)
-    val (u2, u2N) = checkpointCount(norm(v2Und))
-    def minus(x: DataFrame, y: DataFrame) = x.join(
-      y.select(col("a").as("xa"), col("b").as("xb")),
-      col("a") === col("xa") && col("b") === col("xb"), "left_anti")
-    val (insE, insN) = checkpointCount(minus(u2, u1))
-    val delE = minus(u1, u2).localCheckpoint(true)
+    val u1 = canonical(v1Und, "a", "b").localCheckpoint(true)
+    val (u2, u2N) = checkpointCount(canonical(v2Und, "a", "b"))
+    val (insE, insN) = checkpointCount(u2.join(u1, Seq("a", "b"), "left_anti"))
+    val delE = u1.join(u2, Seq("a", "b"), "left_anti").localCheckpoint(true)
     if (u2N <= driverSolveLimit) {
       // DRIVER SOLVE under the family's size gate — the kcore worklist
       // at TRIANGLE granularity: collect the v2 edge set, run the
@@ -3083,16 +3062,13 @@ object GraphOps {
       trace(f"incrementalKTruss driver-solved u2N=$u2N region=${region.size} " +
         f"joiners=${joiners.size} truss=${rows.size} " +
         f"t=${(System.nanoTime() - t0) / 1e9}%.2fs")
-      return rows.toDF("a", "b", "support").repartition(1).localCheckpoint(true)
+      return ckpt(rows.toDF("a", "b", "support"))
     }
     val core = prevTruss.select(col("a").cast("long").as("a"),
       col("b").cast("long").as("b"),
       col("support").cast("long").as("support")).localCheckpoint(true)
     val coreE = core.select("a", "b")
-    def symOf(e: DataFrame): DataFrame =
-      e.select(col("a").as("v"), col("b").as("w"))
-        .union(e.select(col("b").as("v"), col("a").as("w")))
-    val sym2full = symOf(u2).localCheckpoint(true)
+    val sym2full = symmetrize(u2, "a", "b").localCheckpoint(true)
     // Candidate UNIVERSE = the one-round-peeled v2 (edges whose full-v2
     // support is ≥ k−2), built ONCE with the peel's own unhinted wedge
     // join: "full-v2 support ≥ k−2" alone admits chains of exactly-
@@ -3103,204 +3079,111 @@ object GraphOps {
     // true joiner lies in T2 ⊆ P1 and its supporting triangles lie
     // within T2 ⊆ P1, so drawing candidates, wedges, and support counts
     // from P1 loses nothing.
-    val p1 = u2.as("u")
-      .join(sym2full.as("x"), col("x.v") === col("u.a"))
-      .join(sym2full.as("y"), col("y.v") === col("u.b") && col("y.w") === col("x.w"))
-      .groupBy(col("u.a").as("a"), col("u.b").as("b"))
-      .agg(count(lit(1)).as("sup"))
-      .filter(col("sup") >= k - 2).select("a", "b")
+    val p1 = triSupport(u2, sym2full)
+      .filter(col("support") >= k - 2).select("a", "b")
       .localCheckpoint(true)
-    val sym2 = symOf(p1).localCheckpoint(true) // candidate-universe wedges
-    var cumGated = 0L
-    def small(df: DataFrame): DataFrame =
-      if (cumGated <= 200000L) broadcast(df) else df
-    // triangle support of a (checkpointed, counted) edge set `w` with
-    // wedges drawn from `liveSym` — one scan of liveSym per leg against
-    // the broadcast probe, probe-sized result
-    def supIn(w: DataFrame, liveSym: DataFrame): DataFrame =
-      small(w.select(col("a"), col("b"))).as("u")
-        .join(liveSym.as("x"), col("x.v") === col("u.a"))
-        .join(liveSym.as("y"), col("y.v") === col("u.b") && col("y.w") === col("x.w"))
-        .groupBy(col("u.a").as("a"), col("u.b").as("b"))
-        .agg(count(lit(1)).as("sup"))
-    // edges sharing a v2-triangle with an edge of `f`: for (a,b) ∈ f and
-    // common neighbor c, the co-edges (a,c) and (b,c), canonicalized
-    def triNbr(f: DataFrame): DataFrame = {
-      val wedges = small(f.select(col("a"), col("b"))).as("u")
-        .join(sym2.as("x"), col("x.v") === col("u.a"))
-        .join(sym2.as("y"), col("y.v") === col("u.b") && col("y.w") === col("x.w"))
-        .select(col("u.a").as("a"), col("u.b").as("b"), col("x.w").as("c"))
-      wedges.select(least(col("a"), col("c")).as("a"),
-          greatest(col("a"), col("c")).as("b"))
-        .union(wedges.select(least(col("b"), col("c")).as("a"),
-          greatest(col("b"), col("c")).as("b")))
-        .distinct()
-    }
-    def exceptE(x: DataFrame, y: DataFrame) = x.join(
-      small(y.select(col("a").as("xa"), col("b").as("xb"))),
-      col("a") === col("xa") && col("b") === col("xb"), "left_anti")
+    val sym2 = symmetrize(p1, "a", "b").localCheckpoint(true) // candidate-universe wedges
+    // every frontier-derived join side goes through the WaveGate; wedge
+    // probes are gated edge sets against one wedge frame, probe-sized
+    val g = new WaveGate
 
     // ---- insert side: triangle-adjacency candidate waves, then a
     // frozen-core peel against truss ∪ survivors
-    val (seed0, seed0N) = ckptCount(insE.join(p1.select(col("a").as("xa"), col("b").as("xb")),
-      col("a") === col("xa") && col("b") === col("xb"), "left_semi"))
-    cumGated += seed0N
-    def fullOk(w: DataFrame): DataFrame = {
-      val s = supIn(w, sym2).filter(col("sup") >= k - 2).select("a", "b")
-      w.join(s.select(col("a").as("xa"), col("b").as("xb")),
-        col("a") === col("xa") && col("b") === col("xb"), "left_semi")
-    }
-    var (frontier, fn) = ckptCount(fullOk(seed0))
-    cumGated += fn
-    var pFrames = List(frontier)
-    def pAll: DataFrame = pFrames.reduce(_ union _)
+    val (seed0, _) = g.count(insE.join(p1, Seq("a", "b"), "left_semi"))
+    def fullOk(w: DataFrame): DataFrame = w.join(
+      triSupport(g.gate(w), sym2).filter(col("support") >= k - 2),
+      Seq("a", "b"), "left_semi")
+    var (frontier, fn) = g.count(fullOk(seed0))
+    val region = new Waves(spark, "a", "b")
+    region.add(frontier)
     var waves = 0
     while (fn > 0 && waves < maxWaves) {
       waves += 1
-      val (nbrs, nbrsN) = ckptCount(exceptE(exceptE(
-        triNbr(frontier).join(p1.select(col("a").as("xa"), col("b").as("xb")),
-          col("a") === col("xa") && col("b") === col("xb"), "left_semi"),
-        coreE), ckpt(pAll)))
-      cumGated += nbrsN
-      val (next, nextN) = ckptCount(fullOk(nbrs))
-      frontier = next; fn = nextN; cumGated += fn
-      pFrames ::= frontier
+      val (nbrs, _) = g.count(coEdges(g.gate(frontier), sym2)
+        .join(p1, Seq("a", "b"), "left_semi")
+        .join(g.gate(coreE), Seq("a", "b"), "left_anti")
+        .join(g.gate(region.all), Seq("a", "b"), "left_anti"))
+      val (next, nextN) = g.count(fullOk(nbrs))
+      frontier = next; fn = nextN
+      region.add(frontier)
     }
     require(fn == 0,
       s"incrementalKTruss: candidate region still growing after $maxWaves " +
         "waves — raise maxWaves or recompute from the new snapshot")
-    val (cand, candN) = ckptCount(pAll)
-    cumGated += candN
+    val (cand, candN) = g.count(region.all)
     require(candN <= math.max(10000L, 20L * insN),
       s"incrementalKTruss: candidate region ($candN edges) degenerated " +
         s"past 20x the inserted-edge delta ($insN) — maintenance would " +
         "not be delta-scoped; recompute from the new snapshot")
-    var surv = cand
-    var sn = candN
-    var peelRounds = 0
-    var stable = sn == 0L
-    while (!stable && peelRounds < maxWaves) {
-      peelRounds += 1
-      val liveSym = symOf(coreE).union(symOf(surv))
-      val keep = supIn(surv, liveSym).filter(col("sup") >= k - 2)
-      val (next, nn) = ckptCount(surv.join(
-        keep.select(col("a").as("xa"), col("b").as("xb")),
-        col("a") === col("xa") && col("b") === col("xb"), "left_semi"))
-      cumGated += nn
-      stable = nn == sn
-      surv = next; sn = nn
-    }
-    require(stable,
+    val joiners = peelToFixpoint(cand, candN, maxWaves, _ =>
       s"incrementalKTruss: candidate peel did not stabilize in $maxWaves " +
-        "rounds — raise maxWaves or recompute from the new snapshot")
-    val joiners = surv // checkpointed, counted (sn)
+        "rounds — raise maxWaves or recompute from the new snapshot") { surv =>
+      val keep = triSupport(g.gate(surv), symmetrize(coreE.union(surv), "a", "b"))
+        .filter(col("support") >= k - 2)
+      g.count(surv.join(keep, Seq("a", "b"), "left_semi"))
+    }
 
     // ---- delete side: eviction cascade over (truss ∖ deleted) ∪ joiners
-    val (kBase, kBaseN) = ckptCount(exceptE(coreE, delE).unionByName(joiners))
-    cumGated += kBaseN
-    val kBaseSym = symOf(kBase).localCheckpoint(true)
-    var evFrames = List.empty[DataFrame]
-    val emptyE = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("a",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("b",
-          org.apache.spark.sql.types.LongType))))
-    def evictedAll: DataFrame = (emptyE :: evFrames).reduce(_ union _)
-    // in-truss support with evicted edges masked out of the wedge frame
-    def supLive(w: DataFrame, evicted: DataFrame): DataFrame = {
-      val evSym = symOf(evicted)
-      val liveSym = kBaseSym.join(
-        small(evSym.select(col("v").as("xv"), col("w").as("xw"))),
-        col("v") === col("xv") && col("w") === col("xw"), "left_anti")
-      supIn(w, liveSym)
-    }
+    val (kBase, _) = g.count(coreE.join(g.gate(delE), Seq("a", "b"), "left_anti")
+      .unionByName(joiners))
+    val kBaseSym = symmetrize(kBase, "a", "b").localCheckpoint(true)
+    val evictions = new Waves(spark, "a", "b")
     // wave 0: surviving co-triangle edges (in the OLD truss) of deleted
     // truss edges — the triangles the deletion destroyed
-    val (delCore, delCoreN) = ckptCount(delE.join(
-      coreE.select(col("a").as("xa"), col("b").as("xb")),
-      col("a") === col("xa") && col("b") === col("xb"), "left_semi"))
-    cumGated += delCoreN
+    val (delCore, _) = g.count(delE.join(coreE, Seq("a", "b"), "left_semi"))
     // co-triangle edges within the OLD truss (prev snapshot's wedges —
     // the triangles whose loss the stored supports have not seen)
-    val coreSym = symOf(coreE).localCheckpoint(true)
-    def triNbrIn(f: DataFrame, liveSym: DataFrame): DataFrame = {
-      val wedges = small(f.select(col("a"), col("b"))).as("u")
-        .join(liveSym.as("x"), col("x.v") === col("u.a"))
-        .join(liveSym.as("y"), col("y.v") === col("u.b") && col("y.w") === col("x.w"))
-        .select(col("u.a").as("a"), col("u.b").as("b"), col("x.w").as("c"))
-      wedges.select(least(col("a"), col("c")).as("a"),
-          greatest(col("a"), col("c")).as("b"))
-        .union(wedges.select(least(col("b"), col("c")).as("a"),
-          greatest(col("b"), col("c")).as("b")))
-        .distinct()
-    }
+    val coreSym = symmetrize(coreE, "a", "b").localCheckpoint(true)
     // wedges drawn from truss ∪ joiners — the support-bearing universe at
     // the time the stored/joiner supports were computed: a JOINER that
     // leaned on a triangle through a soon-deleted core edge must be
     // re-checked too, and its wedge legs are not in coreSym
-    val preSym = coreSym.union(symOf(joiners)).localCheckpoint(true)
-    var (affected, an) = ckptCount(triNbrIn(delCore, preSym)
-      .join(kBase.select(col("a").as("xa"), col("b").as("xb")),
-        col("a") === col("xa") && col("b") === col("xb"), "left_semi"))
-    cumGated += an
+    val preSym = coreSym.union(symmetrize(joiners, "a", "b")).localCheckpoint(true)
+    var (affected, an) = g.count(coEdges(g.gate(delCore), preSym)
+      .join(kBase, Seq("a", "b"), "left_semi"))
     var evWaves = 0
     while (an > 0 && evWaves < maxWaves) {
       evWaves += 1
-      val (ev0, ev0N) = ckptCount(evictedAll)
-      cumGated += ev0N
-      val sup = supLive(affected, ev0)
-      val (evictNow, en) = ckptCount(exceptE(affected
-        .join(sup.select(col("a").as("xa"), col("b").as("xb"),
-          col("sup")), col("a") === col("xa") && col("b") === col("xb"), "left")
-        .filter(coalesce(col("sup"), lit(0L)) < k - 2)
-        .select("a", "b"), ev0))
-      cumGated += en
+      val ev0 = evictions.all
+      // in-truss support with evicted edges masked out of the wedge frame
+      val liveSym = kBaseSym.join(g.gate(symmetrize(ev0, "a", "b")),
+        Seq("src", "dst"), "left_anti")
+      val (evictNow, en) = g.count(affected
+        .join(triSupport(g.gate(affected), liveSym), Seq("a", "b"), "left")
+        .filter(coalesce(col("support"), lit(0L)) < k - 2)
+        .select("a", "b")
+        .join(g.gate(ev0), Seq("a", "b"), "left_anti"))
       if (en == 0) { an = 0 }
       else {
-        evFrames ::= evictNow
-        val (ev1, ev1N) = ckptCount(evictedAll)
-        cumGated += ev1N
-        val (next, nextN) = ckptCount(exceptE(triNbrIn(evictNow, kBaseSym)
-          .join(kBase.select(col("a").as("xa"), col("b").as("xb")),
-            col("a") === col("xa") && col("b") === col("xb"), "left_semi"),
-          ev1))
-        affected = next; an = nextN; cumGated += an
+        evictions.add(evictNow)
+        val (next, nextN) = g.count(coEdges(g.gate(evictNow), kBaseSym)
+          .join(kBase, Seq("a", "b"), "left_semi")
+          .join(g.gate(evictions.all), Seq("a", "b"), "left_anti"))
+        affected = next; an = nextN
       }
     }
     require(an == 0,
       s"incrementalKTruss: eviction cascade still live after $maxWaves " +
         "waves — raise maxWaves or recompute from the new snapshot")
-    val (evicted, evictedN) = ckptCount(evictedAll)
-    cumGated += evictedN
+    val (evicted, _) = g.count(evictions.all)
 
     // ---- readout: recompute support ONLY where the triangle set
     // changed; reuse every other stored support verbatim
-    val (kFinal, kFinalN) = ckptCount(exceptE(kBase, evicted))
-    cumGated += kFinalN
-    val (removed, removedN) = ckptCount(delCore.unionByName(evicted))
-    cumGated += removedN
-    val kFinalSym = symOf(kFinal).localCheckpoint(true)
-    val (touched, touchedN) = ckptCount(
-      triNbrIn(removed, coreSym) // triangles LOST lived in the old truss
-        .unionByName(triNbrIn(joiners, kFinalSym)) // triangles GAINED
+    val (kFinal, _) = g.count(kBase.join(g.gate(evicted), Seq("a", "b"), "left_anti"))
+    val (removed, _) = g.count(delCore.unionByName(evicted))
+    val kFinalSym = symmetrize(kFinal, "a", "b").localCheckpoint(true)
+    val (touched, _) = g.count(
+      coEdges(g.gate(removed), coreSym) // triangles LOST lived in the old truss
+        .unionByName(coEdges(g.gate(joiners), kFinalSym)) // triangles GAINED
         .unionByName(joiners)
         .distinct()
-        .join(kFinal.select(col("a").as("xa"), col("b").as("xb")),
-          col("a") === col("xa") && col("b") === col("xb"), "left_semi"))
-    cumGated += touchedN
-    val supTouched = supIn(touched, kFinalSym)
-      .select(col("a"), col("b"), col("sup").as("support"))
+        .join(kFinal, Seq("a", "b"), "left_semi"))
     val untouched = core
-      .join(small(touched.select(col("a").as("xa"), col("b").as("xb"))),
-        col("a") === col("xa") && col("b") === col("xb"), "left_anti")
-      .join(small(evicted.select(col("a").as("xa"), col("b").as("xb"))),
-        col("a") === col("xa") && col("b") === col("xb"), "left_anti")
-      .join(small(delE.select(col("a").as("xa"), col("b").as("xb"))),
-        col("a") === col("xa") && col("b") === col("xb"), "left_anti")
+      .join(g.gate(touched), Seq("a", "b"), "left_anti")
+      .join(g.gate(evicted), Seq("a", "b"), "left_anti")
+      .join(g.gate(delE), Seq("a", "b"), "left_anti")
       .select(col("a"), col("b"), col("support"))
-    untouched.unionByName(supTouched)
+    untouched.unionByName(triSupport(g.gate(touched), kFinalSym))
   }
 
   /** Local clustering coefficient over RAW directed edges (self-loops
@@ -3354,49 +3237,36 @@ object GraphOps {
     * `(v, deg, tri, lcc_e6)` in the q_graph_lcc spelling. */
   def incrementalLcc(spark: SparkSession, v1Raw: DataFrame,
       v2Raw: DataFrame, prevState: DataFrame): DataFrame = {
-    def und(e: DataFrame) = e.filter(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).cast("long").as("a"),
-        greatest(col("src"), col("dst")).cast("long").as("b"))
-      .distinct()
-    val u1 = und(v1Raw).localCheckpoint(true)
-    val u2 = und(v2Raw).localCheckpoint(true)
-    def minus(x: DataFrame, y: DataFrame) = x.join(
-      y.select(col("a").as("xa"), col("b").as("xb")),
-      col("a") === col("xa") && col("b") === col("xb"), "left_anti")
-    val (insU, insN) = ckptCount(minus(u2, u1))
-    val (delU, delN) = ckptCount(minus(u1, u2))
-    def small(df: DataFrame): DataFrame =
-      if (insN + delN <= 200000L) broadcast(df) else df
-    def symOf(e: DataFrame) = e.select(col("a").as("v"), col("b").as("w"))
-      .union(e.select(col("b").as("v"), col("a").as("w")))
+    val u1 = canonical(v1Raw).localCheckpoint(true)
+    val u2 = canonical(v2Raw).localCheckpoint(true)
+    // the delta-derived join sides broadcast under the gate on |ins| + |del|
+    val g = new WaveGate
+    val (insU, _) = g.count(u2.join(u1, Seq("a", "b"), "left_anti"))
+    val (delU, _) = g.count(u1.join(u2, Seq("a", "b"), "left_anti"))
     // distinct canonical triangles of `undAll` containing a delta edge
-    def touchedTris(delta: DataFrame, undAll: DataFrame): DataFrame = {
-      val sym = symOf(undAll)
-      small(delta).as("d")
-        .join(sym.as("x"), col("x.v") === col("d.a"))
-        .join(sym.as("y"), col("y.v") === col("d.b") && col("y.w") === col("x.w"))
-        .select(array_sort(array(col("d.a"), col("d.b"), col("x.w"))).as("t"))
+    def touchedTris(delta: DataFrame, undAll: DataFrame): DataFrame =
+      wedges(g.gate(delta), symmetrize(undAll, "a", "b"))
+        .select(array_sort(array(col("a"), col("b"), col("c"))).as("t"))
         .select(col("t").getItem(0).as("t1"), col("t").getItem(1).as("t2"),
           col("t").getItem(2).as("t3"))
         .distinct()
-    }
     def triDelta(tris: DataFrame, sign: Int): DataFrame = tris
       .select(explode(array(col("t1"), col("t2"), col("t3"))).as("v"))
       .groupBy("v").agg((count(lit(1)) * sign).as("dtri"))
     def degDelta(delta: DataFrame, sign: Int): DataFrame = delta
       .select(col("a").as("v")).union(delta.select(col("b").as("v")))
       .groupBy("v").agg((count(lit(1)) * sign).as("ddeg"))
-    val dTri = triDelta(touchedTris(insU, u2), 1)
+    val dTri = ckpt(triDelta(touchedTris(insU, u2), 1)
       .unionByName(triDelta(touchedTris(delU, u1), -1))
-      .groupBy("v").agg(sum("dtri").as("dtri"))
-      .repartition(1).localCheckpoint(true)
-    val dDeg = degDelta(insU, 1).unionByName(degDelta(delU, -1))
-      .groupBy("v").agg(sum("ddeg").as("ddeg"))
-      .repartition(1).localCheckpoint(true)
+      .groupBy("v").agg(sum("dtri").as("dtri")))
+    val dDeg = ckpt(degDelta(insU, 1).unionByName(degDelta(delU, -1))
+      .groupBy("v").agg(sum("ddeg").as("ddeg")))
     val st = prevState.select(col("v").cast("long").as("v"),
       col("deg").cast("long").as("deg"), col("tri").cast("long").as("tri"))
-    st.join(small(dDeg), Seq("v"), "full")
-      .join(small(dTri), Seq("v"), "left")
+    // no hint on the full outer join: Spark cannot build either side of
+    // one as a broadcast, and drops the hint with a HintErrorLogger warning
+    st.join(dDeg, Seq("v"), "full")
+      .join(g.gate(dTri), Seq("v"), "left")
       .select(col("v"),
         (coalesce(col("deg"), lit(0L)) + coalesce(col("ddeg"), lit(0L))).as("deg"),
         (coalesce(col("tri"), lit(0L)) + coalesce(col("dtri"), lit(0L))).as("tri"))
@@ -3647,10 +3517,8 @@ object GraphOps {
         f"forest=${forest.size} t=${(System.nanoTime() - t0) / 1e9}%.2fs")
       return forest.toDF("a", "b", "w").repartition(1).localCheckpoint(true)
     }
-    def keyAnti(x: DataFrame, y: DataFrame) = x.join(
-      y.select(col("a").as("xa"), col("b").as("xb")),
-      col("a") === col("xa") && col("b") === col("xb"), "left_anti")
-    val fPrime = keyAnti(c(prevForest), delUnd).localCheckpoint(true)
+    val fPrime = c(prevForest).join(delUnd.select("a", "b"), Seq("a", "b"), "left_anti")
+      .localCheckpoint(true)
     // fragment labels over the forest remnant (V-scale, size-gated CC);
     // vertices outside F∖D self-label — each is its own fragment
     val frag = connectedComponents(spark, symmetrize(fPrime, "a", "b"))
@@ -3690,20 +3558,14 @@ object GraphOps {
     * recompute (or apply the symmetric subtract with its own distinct).
     * Returns one row per new triangle, canonical `(a, b, c)` with a<b<c.
     */
-  def triangleDelta(fullUnd: DataFrame, insertedUnd: DataFrame): DataFrame = {
-    val sym = fullUnd.select(col("a").as("v"), col("b").as("w"))
-      .union(fullUnd.select(col("b").as("v"), col("a").as("w")))
+  def triangleDelta(fullUnd: DataFrame, insertedUnd: DataFrame): DataFrame =
     // common neighbors of the inserted edge's endpoints, then canonicalize
-    val tri = insertedUnd.as("d")
-      .join(sym.as("x"), col("x.v") === col("d.a"))
-      .join(sym.as("y"), col("y.v") === col("d.b") && col("y.w") === col("x.w"))
-      .select(col("d.a").as("ea"), col("d.b").as("eb"), col("x.w").as("ew"))
-    tri.select(
-        least(col("ea"), col("eb"), col("ew")).as("a"),
-        expr("ea + eb + ew").minus(
-          least(col("ea"), col("eb"), col("ew")) +
-          greatest(col("ea"), col("eb"), col("ew"))).as("b"),
-        greatest(col("ea"), col("eb"), col("ew")).as("c"))
+    wedges(insertedUnd, symmetrize(fullUnd, "a", "b"))
+      .select(
+        least(col("a"), col("b"), col("c")).as("a"),
+        expr("a + b + c").minus(
+          least(col("a"), col("b"), col("c")) +
+          greatest(col("a"), col("b"), col("c"))).as("b"),
+        greatest(col("a"), col("b"), col("c")).as("c"))
       .distinct()
-  }
 }

@@ -958,8 +958,34 @@ class GraphSpec extends SparkSpec {
     }
   }
 
-  test("incrementalKCore == full peel (insert cascade, delete cascade, save-by-joiner)") {
+  /** The k = 3 raw-edge diff `(v1, v2)` of the incremental k-core tests. */
+  private def kcoreDiff = {
     import spark.implicits._
+    val k4a = Seq((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L), (3L, 4L))
+    val k4b = Seq((5L, 6L), (5L, 7L), (5L, 8L), (6L, 7L), (6L, 8L))
+    val nine = Seq((9L, 1L), (9L, 2L), (9L, 3L))
+    val k4c = Seq((10L, 11L), (10L, 12L), (10L, 13L), (11L, 12L), (11L, 13L), (12L, 13L))
+    ((k4a ++ k4b ++ nine ++ k4c).toDF("src", "dst"),
+      (k4a ++ k4b ++ Seq((7L, 8L), (9L, 7L), (9L, 2L), (9L, 3L)) ++
+        k4c.filterNot(_ == (10L, 11L))).toDF("src", "dst"))
+  }
+
+  /** The k = 4 undirected diff `(v1, v2)` of the incremental k-truss tests. */
+  private def ktrussDiff = {
+    import spark.implicits._
+    def k5(vs: Seq[Long]) = for (a <- vs; b <- vs if a < b) yield (a, b)
+    ((k5(1L to 5L) ++
+      k5(6L to 10L).filterNot(e => e == (6L, 7L) || e == (6L, 8L)) ++
+      k5(11L to 15L) ++
+      k5(16L to 20L).filterNot(e => e == (16L, 17L) || e == (16L, 18L)))
+      .toDF("a", "b"),
+      (k5(1L to 5L) ++ k5(6L to 10L) ++
+        k5(11L to 15L).filterNot(e => e == (11L, 12L) || e == (13L, 15L)) ++
+        k5(16L to 20L).filterNot(_ == (19L, 20L)))
+        .toDF("a", "b"))
+  }
+
+  test("incrementalKCore == full peel (insert cascade, delete cascade, save-by-joiner)") {
     // k=3 fixture with every interaction the maintainer must get right:
     //  K4a {1,2,3,4}   — stable core component
     //  K4b-minus(7,8) {5,6,7,8} — in v1, 7/8 have deg 2 so ALL of 5..8
@@ -971,13 +997,7 @@ class GraphSpec extends SparkSpec {
     //  K4c {10,11,12,13} — v2 deletes (10,11): 10,11 drop to deg 2 and the
     //    cascade then evicts 12,13, neither an endpoint of the deleted
     //    edge (beyond-delta evictions)
-    val k4a = Seq((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L), (3L, 4L))
-    val k4b = Seq((5L, 6L), (5L, 7L), (5L, 8L), (6L, 7L), (6L, 8L))
-    val nine = Seq((9L, 1L), (9L, 2L), (9L, 3L))
-    val k4c = Seq((10L, 11L), (10L, 12L), (10L, 13L), (11L, 12L), (11L, 13L), (12L, 13L))
-    val v1 = (k4a ++ k4b ++ nine ++ k4c).toDF("src", "dst")
-    val v2 = (k4a ++ k4b ++ Seq((7L, 8L), (9L, 7L), (9L, 2L), (9L, 3L)) ++
-      k4c.filterNot(_ == (10L, 11L))).toDF("src", "dst")
+    val (v1, v2) = kcoreDiff
     def toMap(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val prev = GraphOps.kcorePeel(spark, v1, 3, 6)
@@ -992,6 +1012,52 @@ class GraphSpec extends SparkSpec {
     val incBsp = toMap(GraphOps.incrementalKCore(spark, v1, v2, prev, 3,
       driverSolveLimit = 0L))
     assert(incBsp == full, s"BSP kcore path diverges: $incBsp vs $full")
+  }
+
+  test("incrementalKCore forced-BSP: a ring eviction cascade past the wave-union bound") {
+    import spark.implicits._
+    // 50-vertex ring, k = 2: all of it is the 2-core. Deleting one edge
+    // leaves a path, whose 2-core is empty — the eviction cascade walks
+    // in from both ends, about 25 waves, past the 12-leg bound at which
+    // the evicted-set union collapses into one checkpoint.
+    val ring = (0L until 50L).map(i => (i, (i + 1) % 50)).toDF("src", "dst")
+    val v2 = ring.filter(!(col("src") === 0L && col("dst") === 1L))
+    def toMap(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val prev = GraphOps.kcorePeel(spark, ring, 2, 60)
+    assert(prev.count() == 50L, "the ring is its own 2-core")
+    val full = toMap(GraphOps.kcorePeel(spark, v2, 2, 60))
+    assert(full.isEmpty, s"a path has an empty 2-core, got $full")
+    val inc = toMap(GraphOps.incrementalKCore(spark, ring, v2, prev, 2,
+      driverSolveLimit = 0L))
+    assert(inc == full, s"forced-BSP eviction cascade diverges: $inc")
+  }
+
+  test("peel and cascade loops run a pinned number of Spark jobs per call") {
+    // The barrier count of the k-core and k-truss peels and of the
+    // incremental maintainers on both gate paths, pinned on the k-core
+    // (k = 3) and k-truss (k = 4) diff fixtures: each call and the
+    // collect of its result. A change to how a wave or a peel round is
+    // built must not add a barrier (or a broadcast or shuffle job). The
+    // forced-BSP k-truss count varies from run to run (157–163 over
+    // repeated runs, most likely with the order in which concurrent query
+    // stages finish), so it is bounded rather than pinned. Before the shared wave kernel the two BSP
+    // maintainers ran 114 and 167–173 jobs: they re-checkpointed their
+    // accumulated wave unions every wave.
+    val (kv1, kv2) = kcoreDiff
+    val (tv1, tv2) = ktrussDiff
+    val peel = sparkJobs(GraphOps.kcorePeel(spark, kv1, 3, 6).collect())._2
+    val kprev = GraphOps.kcorePeel(spark, kv1, 3, 6)
+    val incDriver = sparkJobs(
+      GraphOps.incrementalKCore(spark, kv1, kv2, kprev, 3).collect())._2
+    val incBsp = sparkJobs(GraphOps.incrementalKCore(spark, kv1, kv2, kprev, 3,
+      driverSolveLimit = 0L).collect())._2
+    val tprev = GraphOps.ktrussPeel(spark, tv1, 4, 6)
+    val trussBsp = sparkJobs(GraphOps.incrementalKTruss(spark, tv1, tv2, tprev, 4,
+      driverSolveLimit = 0L).collect())._2
+    assert((peel, incDriver, incBsp) == ((11, 15, 102)),
+      "Spark jobs (kcorePeel, incrementalKCore driver, incrementalKCore BSP)")
+    assert(trussBsp <= 166, s"incrementalKTruss BSP ran $trussBsp Spark jobs")
   }
 
   test("k-core fixture liveness: cascades propagate PAST the delta (sf0.01)") {
@@ -1103,7 +1169,6 @@ class GraphSpec extends SparkSpec {
   }
 
   test("incrementalKTruss == full peel (insert cascade, delete cascade, save-by-joiner)") {
-    import spark.implicits._
     // k=4 (support ≥ 2) fixture with every interaction at TRIANGLE
     // granularity:
     //  K5a {1..5}            — stable truss component
@@ -1118,16 +1183,7 @@ class GraphSpec extends SparkSpec {
     //    (19,20): edge (17,19) loses the {17,19,20} triangle and
     //    survives only through the {16,17,19} triangle carried by
     //    JOINER (16,19) — the delete side must count joiner support
-    def k5(vs: Seq[Long]) = for (a <- vs; b <- vs if a < b) yield (a, b)
-    val v1 = (k5(1L to 5L) ++
-      k5(6L to 10L).filterNot(e => e == (6L, 7L) || e == (6L, 8L)) ++
-      k5(11L to 15L) ++
-      k5(16L to 20L).filterNot(e => e == (16L, 17L) || e == (16L, 18L)))
-      .toDF("a", "b")
-    val v2 = (k5(1L to 5L) ++ k5(6L to 10L) ++
-      k5(11L to 15L).filterNot(e => e == (11L, 12L) || e == (13L, 15L)) ++
-      k5(16L to 20L).filterNot(_ == (19L, 20L)))
-      .toDF("a", "b")
+    val (v1, v2) = ktrussDiff
     def toMap(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
     val prev = GraphOps.ktrussPeel(spark, v1, 4, 6)
@@ -1415,12 +1471,17 @@ class GraphSpec extends SparkSpec {
     // depth regime r9 VERDICT #9 asked to pin before caps are raised
     val newEdges = edges.filter(col("src") =!= 0L)
     val del = Seq((0L, 1L)).toDF("src", "dst")
-    val out = GraphOps.incrementalBfsLevelsDelete(spark, newEdges, prev,
-      del.limit(0), del, maxIter = 60)
+    def run(limit: Long) = GraphOps.incrementalBfsLevelsDelete(spark, newEdges,
+      prev, del.limit(0), del, maxIter = 60, cascadeDriverLimit = limit)
       .collect().map(r => (r.getLong(0), r.getInt(1))).toMap
+    val out = run(GraphOps.DriverSolveEdgeLimit)
     // the whole chain loses its support: only the seed's settled level
     // survives and no surviving path re-reaches anything
     assert(out == Map(0L -> 0), s"expected only the seed to survive, got $out")
+    // the 49 tight edges sit under the driver gate; forced past it, the
+    // same cascade runs as BSP waves and must give the same map
+    val bsp = run(0L)
+    assert(bsp == out, s"BSP cascade diverges from the driver worklist: $bsp")
   }
 
   test("coloring mex is degree-agnostic: K66 clique crosses the old 63-color ceiling") {
