@@ -810,17 +810,17 @@ object GraphOps {
 
   /** One relaxation hop of the label-correcting loops ([[sssp]] and
     * [[labelCorrectLoop]]): each frontier vertex `(v, label)` proposes
-    * `label + step` along its out-edges in `e` (`step` is `lit(1)` for BFS
-    * levels and DAG layers, the edge weight `col("w")` for SSSP) and
-    * `pick` keeps one proposal per vertex, in the frontier label's type
-    * (BFS levels stay int). `wrap` is applied to the frontier side of the
-    * join — [[sssp]] passes its [[gated]] choice. */
-  private def relaxHop(e: DataFrame, step: Column, pick: Column => Column,
+    * `label + w` along its out-edges `(src, dst, w)` in `e` (`w` is 1 for
+    * BFS levels and DAG layers) and `pick` keeps one proposal per vertex,
+    * in the frontier label's type (BFS levels stay int). `wrap` is
+    * applied to the frontier side of the join — [[sssp]] passes its
+    * [[gated]] choice. */
+  private def relaxHop(e: DataFrame, pick: Column => Column,
       fr: DataFrame, wrap: DataFrame => DataFrame = identity): DataFrame =
     e.join(wrap(fr.select(col("v").as("hv"), col("label").as("hl"))),
         e("src") === col("hv"))
       .groupBy(e("dst").as("v"))
-      .agg(pick(col("hl") + step).cast(fr.schema("label").dataType).as("label"))
+      .agg(pick(col("hl") + col("w")).cast(fr.schema("label").dataType).as("label"))
 
   /** Single-source shortest paths over weighted edges
     * `(src: long, dst: long, w: long)`, positive weights — delta-stepping-
@@ -856,11 +856,11 @@ object GraphOps {
       // hop count of shortest paths, the loop's entire cost at local[32]).
       // hop-2's probe size is only known a round later — gate its
       // broadcast under the [[FusedHopFanoutAllowance]]
-      val cand1 = relaxHop(e, col("w"), min,
+      val cand1 = relaxHop(e, min,
         frontier.select(col("v"), col("dist").as("label")),
         gated(_, frontierCount))
       val cand = cand1
-        .union(relaxHop(e, col("w"), min, cand1,
+        .union(relaxHop(e, min, cand1,
           gated(_, frontierCount * FusedHopFanoutAllowance)))
         .groupBy("v").agg(min("label").as("nd"))
       val (merged, improvedCount) = checkpointCount(
@@ -2107,32 +2107,140 @@ object GraphOps {
       .unionByName(remapped(rLabels.select(col("v"), col("comp").as("lab"))))
   }
 
-  /** Shared delta-seeded label-correcting relaxation loop behind the
-    * whole incremental-maintenance family ([[incrementalBfsLevels]] /
-    * [[incrementalDagLayers]] / [[incrementalSssp]] — min-level, max-layer
-    * and min-cost are the same loop with the ordering flipped and the
-    * proposal expression swapped, so sharing it makes the loud
-    * non-convergence contract uniform BY CONSTRUCTION instead of by
-    * per-copy discipline). Each hop is the family's one [[relaxHop]] over
-    * `e` with the per-edge `step` (`lit(1)` for BFS levels and DAG layers,
-    * `col("w")` for SSSP). Round shape: relax TWO cascade hops inside one
-    * job (the [[expandTwice]] frontier-doubling discipline applied to
-    * label correction: proposals are genuine walk values so they never land on
-    * the wrong side of the true label, non-improving candidates are
-    * filtered against the merged state, and any relaxation a discarded
-    * candidate would have seeded is re-proposed by a later frontier — the
-    * fixpoint is unchanged while the barrier count halves). A cascade
-    * still live at `maxIter` THROWS — silently returning the truncated
-    * state would violate the family's exactness contract (and for DAG
-    * layering a live cascade can also mean the delta introduced a cycle).
-    * Frames are `(v, label)`.
+  /** The algebra of one traversal family under [[maintainLabels]]: the
+    * output column `label` of type `labelType`, the per-edge `step`
+    * (`lit(1L)` for BFS levels and DAG layers, the edge weight for SSSP),
+    * the relaxation `pick` with its strict order `better` (min and `<`
+    * for levels and distances, max and `>` for layers), and whether
+    * every vertex carries a label (`allVertices`, DAG layers) rather than
+    * only those a start vertex reaches. */
+  private final case class Traversal(label: String, labelType: String,
+      step: Column, pick: Column => Column,
+      better: (Column, Column) => Column, allVertices: Boolean)
+  private val Levels = Traversal("level", "int", lit(1L), min, _ < _, allVertices = false)
+  private val Layers = Traversal("layer", "long", lit(1L), max, _ > _, allVertices = true)
+  private val Dists = Traversal("dist", "long", col("w"), min, _ < _, allVertices = false)
+
+  /** The one delta maintainer of the traversal family: BFS levels, DAG
+    * layers and weighted SSSP under a snapshot diff (the reference's
+    * level-synchronized BFS read, `secondary_server.c:588-619`, kept
+    * current instead of re-run). Given the previous snapshot's labels
+    * `prev` (`v`, `t.label`), the new snapshot's `edges`, the `inserted`
+    * edges and, for the delete twins, the `deleted` ones, it returns the
+    * new snapshot's exact labels without re-traversing the old graph.
+    *
+    * INSERTS ARE MONOTONE. An inserted edge can only improve a label in
+    * the family's direction (lower a level or a distance, raise a layer)
+    * or reach a new vertex, so every old label is a bound on the new one
+    * from the safe side, and every proposal `label(u) + step` is the
+    * length of a real path in the new graph. The old state already
+    * satisfies every old edge, so the relaxation needs seeding only at
+    * the inserted edges; [[labelCorrectLoop]] carries each improvement
+    * along the full edge list, frontier by frontier, to the unique
+    * fixpoint. An insert from a vertex that has no label yet fires later,
+    * when the cascade reaches it. Work is sized by the delta's cascade,
+    * never by the base graph.
+    *
+    * DELETES ARE NOT. A stored label stays valid while its support chain
+    * survives: a parent p supports v when a surviving edge (p, v, w) is
+    * TIGHT, label(p) + w = label(v), and p is itself supported (the
+    * Ramalingam–Reps shape; w ≡ 1 for levels and layers; min or max only
+    * matters to the re-relaxation, not to which labels a delete
+    * invalidates). A supported label is still attained by a surviving
+    * path, so it is again a safe-side bound. [[supportCascade]] finds the
+    * vertices that lost their last tight parent, over the frozen old
+    * labels. Their labels are dropped, and the same loop re-solves them,
+    * seeded by the settled parents' proposals into the unsettled region
+    * as well as by the inserted edges: one fixpoint serves both sides of
+    * the diff, and inserts may improve settled labels too. Tightness
+    * needs strictly positive steps (under a zero-weight cycle two equal
+    * labels support each other forever), so a non-positive weight fails
+    * loudly. Unsettled vertices no surviving path reaches drop out.
+    *
+    * SOURCE RULE (`allVertices`). A vertex with no in-edge in the new
+    * graph is a source at 0, and no proposal ever reaches it, so sources
+    * self-seed. Only two kinds of vertex can be a source without a valid
+    * label: an unsettled one, and an inserted endpoint that has no
+    * settled label (a new vertex); every other vertex keeps its label.
+    * UNIVERSE RULE (`allVertices`, delete path). A settled vertex whose
+    * every edge was deleted keeps its old label, so the output is
+    * restricted to the new snapshot's edge-defined vertex set. The
+    * reachability families need neither rule: a label exists exactly
+    * where a path from the start does.
+    *
+    * With no delete side (`deleted = None`) the call runs no cascade and
+    * checkpoints nothing but the loop's own state: the edges are only
+    * cached, so the insert-only maintainers pay nothing for the delete
+    * machinery. */
+  private def maintainLabels(spark: SparkSession, t: Traversal, opName: String,
+      edges: DataFrame, prev: DataFrame, inserted: DataFrame,
+      deleted: Option[DataFrame], maxIter: Int,
+      cascadeDriverLimit: Long = DriverSolveEdgeLimit): DataFrame = {
+    def project(df: DataFrame): DataFrame = df.select(col("src").cast("long").as("src"),
+      col("dst").cast("long").as("dst"), t.step.cast("long").as("w"))
+    val pv = prev.select(col("v").cast("long").as("v"),
+      col(t.label).cast(t.labelType).as("label"))
+    val ins = project(inserted)
+    val (e, state0, unsettled) = deleted match {
+      case None => (project(edges).persist(), pv, None)
+      case Some(del) =>
+        // the non-positive count rides the job that fills the checkpoint
+        val (e, nonPositive) = checkpointCount(project(edges), col("w") <= 0L)
+        require(nonPositive == 0L, s"$opName requires strictly positive " +
+          s"weights ($nonPositive edges have w <= 0) - the tight-parent " +
+          "support cascade is unsound under zero-weight cycles")
+        val old = pv.localCheckpoint(true)
+        val u = supportCascade(spark, e,
+          old.select(col("v"), col("label").cast("long").as("lab")),
+          project(del), maxIter, opName, cascadeDriverLimit)
+        (e, old.join(u, Seq("v"), "left_anti"), Some(u))
+    }
+    val base = state0.localCheckpoint(true)
+    val settled = base.select(col("v").as("src"), col("label").as("sl"))
+    def proposals(es: DataFrame): DataFrame = es.join(settled, Seq("src"))
+      .select(col("dst").as("v"), (col("sl") + col("w")).as("label"))
+    val boundary = unsettled.map(u =>
+      proposals(e.join(u.select(col("v").as("dst")), Seq("dst"), "left_semi")))
+    val sources = if (!t.allVertices) None else Some((unsettled.toSeq ++ Seq(
+        ins.select(col("src").as("v")), ins.select(col("dst").as("v"))))
+      .reduce(_ union _).distinct()
+      .join(base.select("v"), Seq("v"), "left_anti")
+      .join(e.select(col("dst").as("v")).distinct(), Seq("v"), "left_anti")
+      .select(col("v"), lit(0L).as("label")))
+    val seed0 = (Seq(proposals(ins)) ++ boundary ++ sources).reduce(_ unionByName _)
+      .groupBy("v").agg(t.pick(col("label")).cast(t.labelType).as("label"))
+      .join(base.select(col("v"), col("label").as("cur")), Seq("v"), "left")
+      .filter(col("cur").isNull || t.better(col("label"), col("cur")))
+      .select("v", "label")
+    val labels = labelCorrectLoop(opName, t, e, base, seed0, maxIter)
+      .select(col("v"), col("label").as(t.label))
+    e.unpersist()
+    if (t.allVertices && deleted.isDefined)
+      labels.join(edgeUniverse(edges), Seq("v"), "left_semi")
+    else labels
+  }
+
+  /** The label-correcting relaxation loop of [[maintainLabels]]: from the
+    * checkpointed state `base` and the improving `seed0` (both `(v,
+    * label)`), each hop is the family's one [[relaxHop]] over `e` with
+    * step `w` and pick `t.pick`, and a candidate survives only when it is
+    * `t.better` than the current label. Round shape: relax TWO cascade
+    * hops inside one job (the [[expandTwice]] frontier-doubling
+    * discipline applied to label correction: proposals are genuine walk
+    * values so they never land on the wrong side of the true label,
+    * non-improving candidates are filtered against the merged state, and
+    * any relaxation a discarded candidate would have seeded is
+    * re-proposed by a later frontier — the fixpoint is unchanged while
+    * the barrier count halves). A cascade still live at `maxIter` THROWS
+    * — silently returning the truncated state would violate the family's
+    * exactness contract (and for DAG layering a live cascade can also
+    * mean the delta introduced a cycle).
     */
-  private def labelCorrectLoop(opName: String, e: DataFrame, step: Column,
-      state0: DataFrame, seed0: DataFrame, pick: Column => Column,
-      better: (Column, Column) => Column, maxIter: Int): DataFrame = {
+  private def labelCorrectLoop(opName: String, t: Traversal, e: DataFrame,
+      base: DataFrame, seed0: DataFrame, maxIter: Int): DataFrame = {
     val t0 = System.nanoTime()
     // STATE + OVERLAY, not a re-merged label table (r11): the stored
-    // state is touched ONCE (checkpointed here, scanned per round); all
+    // state is touched ONCE (the caller's checkpoint, scanned per round); all
     // improvements accumulate in a cascade-sized overlay. The r10 loop
     // re-materialized the full-graph labels frame through a full-outer
     // merge EVERY round — a graph-sized checkpoint per round paying the
@@ -2141,19 +2249,18 @@ object GraphOps {
     // filtered strictly-better against the CURRENT view (state ⊕
     // overlay), so on conflict the frontier value simply wins —
     // anti-join ∪ union, overlay-sized.
-    val base = state0.localCheckpoint(true)
     var (overlay, n) = checkpointCount(seed0)
     var frontier = overlay
     var i = 0
     trace(f"$opName relax seed n=$n t=${(System.nanoTime() - t0) / 1e9}%.2fs")
     while (n > 0 && i < maxIter) {
-      val h1 = relaxHop(e, step, pick, frontier)
-      val (next, nextCount) = checkpointCount(h1.union(relaxHop(e, step, pick, h1))
-        .groupBy("v").agg(pick(col("label")).as("cand"))
+      val h1 = relaxHop(e, t.pick, frontier)
+      val (next, nextCount) = checkpointCount(h1.union(relaxHop(e, t.pick, h1))
+        .groupBy("v").agg(t.pick(col("label")).as("cand"))
         .join(base.withColumnRenamed("label", "bl"), Seq("v"), "left")
         .join(overlay.withColumnRenamed("label", "ol"), Seq("v"), "left")
         .withColumn("cur", coalesce(col("ol"), col("bl")))
-        .filter(col("cur").isNull || better(col("cand"), col("cur")))
+        .filter(col("cur").isNull || t.better(col("cand"), col("cur")))
         .select(col("v"), col("cand").as("label")))
       frontier = next
       n = nextCount
@@ -2172,62 +2279,10 @@ object GraphOps {
     base.join(overlay.select("v"), Seq("v"), "left_anti")
       .unionByName(overlay)
   }
-
-  /** INCREMENTAL BFS-level maintenance over INSERT-only edge deltas — the
-    * traversal-family consumer of the commit-log store's snapshot diffs
-    * (the [[incrementalConnectedComponents]] pattern applied to A5's BFS,
-    * reference `secondary_server.c:588-619`): given the previous snapshot's
-    * level state `(v, level)` and the edges INSERTED since, returns the new
-    * snapshot's EXACT levels without re-traversing the old graph. Inserting
-    * edges can only lower levels or reach new vertices, so maintenance is a
-    * label-correcting relaxation seeded by the inserted edges alone: each
-    * inserted (u,w) with known level(u) proposes level(u)+1 for w, and
-    * improvements propagate along the full edge list — but every superstep
-    * joins the edge list against ONLY the just-improved vertices, so the
-    * work is sized by the delta's cascade region (at sf0.1 a 1% edge delta
-    * touches 817 of 15 000 vertices, two cascade hops per barrier), never
-    * the base graph.
-    * Convergence to the exact fixpoint is guaranteed: the previous levels
-    * over-estimate the new graph's levels everywhere (edge insertion is
-    * monotone), labels are integers bounded below, and the BFS relaxation
-    * fixpoint is unique — equality with a full re-traversal is pinned in
-    * GraphSpec and oracled end-to-end by q_graph_bfs_incremental.
-    *
-    * DELETIONS are out of scope by design, loudly, for the same reason as
-    * in [[incrementalConnectedComponents]]: removing an edge can RAISE
-    * levels or disconnect vertices, which cannot be decided from
-    * (state, delta) without re-traversing the surviving edges.
-    */
-  def incrementalBfsLevels(spark: SparkSession, fullEdges: DataFrame,
-      prevLevels: DataFrame, inserted: DataFrame, maxIter: Int = 50): DataFrame = {
-    val e = fullEdges.select(col("src").cast("long"), col("dst").cast("long"))
-      .persist()
-    val state0 = prevLevels.select(col("v").cast("long").as("v"),
-      col("level").cast("int").as("label"))
-    // Seed: relax ONLY the inserted edges against the previous state. An
-    // inserted edge whose source is (still) unreachable contributes nothing
-    // yet — if a cascade later reaches it, the full-edge-list relaxation
-    // re-proposes it, so no improvement is lost.
-    val seed0 = inserted
-      .select(col("src").cast("long").as("u"), col("dst").cast("long").as("w"))
-      .join(state0.select(col("v").as("u"), col("label").as("ul")), Seq("u"))
-      .groupBy(col("w").as("v")).agg((min("ul") + 1).cast("int").as("cand"))
-      .join(state0, Seq("v"), "left")
-      .filter(col("label").isNull || col("cand") < col("label"))
-      .select(col("v"), col("cand").as("label"))
-    val out = labelCorrectLoop("incrementalBfsLevels", e, lit(1), state0,
-      seed0, min, _ < _, maxIter)
-    e.unpersist()
-    out.select(col("v"), col("label").cast("int").as("level"))
-  }
-
-  /** Shared delta-scoped SUPPORT CASCADE of the delete-bearing traversal
-    * maintainers (BFS levels / weighted SSSP / DAG layers — one
-    * tightness algebra: a parent p supports child v iff a surviving edge
-    * (p, v, w) satisfies lab(p) + w = lab(v), with w ≡ 1 for the
-    * unweighted/unit-step members; min-vs-max direction only matters to
-    * the RE-relaxation, not to which stored labels the deletes
-    * invalidate). Wave 0 = heads of deleted edges left with no tight
+  /** The delta-scoped SUPPORT CASCADE of [[maintainLabels]]' delete path
+    * (its tightness algebra is documented there: a parent p supports
+    * child v iff a surviving edge (p, v, w) satisfies lab(p) + w =
+    * lab(v)). Wave 0 = heads of deleted edges left with no tight
     * parent outside the unsettled set; wave i+1 = tight children of wave
     * i failing the same check (a child wrongly kept by a not-yet-fallen
     * parent is re-examined the wave that parent falls). Per-wave work is
@@ -2395,172 +2450,58 @@ object GraphOps {
     ckpt(unsettled.all.select("v"))
   }
 
-  /** DELETION-aware incremental BFS-level maintenance — the traversal
-    * member of the delete-bearing family (with
-    * [[incrementalConnectedComponentsDelete]]): deleting an edge can
-    * RAISE levels or disconnect vertices, undecidable from (state, delta)
-    * without knowing whether an alternative parent survives. The scoped
-    * answer (the Ramalingam–Reps shape): a stored level stays VALID iff
-    * the vertex keeps a SUPPORT CHAIN to the seed — a surviving parent at
-    * level−1 that is itself supported. The UNSETTLED set grows by
-    * delta-scoped waves (per-wave work ∝ frontier, never the graph):
-    * wave 0 = heads of deleted edges left with no surviving level−1
-    * parent outside the unsettled set, wave i+1 = support-children of
-    * wave i failing the same check (a child wrongly kept by a
-    * not-yet-unsettled parent is re-examined the wave that parent falls).
-    * Settled levels are valid UPPER BOUNDS on the new graph (their
-    * support chain IS a surviving path of that length); unsettled levels
-    * are discarded and recomputed by the family's shared min-relaxation
-    * ([[labelCorrectLoop]]) seeded with the settled boundary AND the
-    * inserted-edge relaxation — one fixpoint serves both diff sides, and
-    * inserts may lower settled levels too. Unsettled vertices no
-    * surviving path reaches drop out, matching the full recompute's
-    * edge-defined reachable set. */
+  /** BFS levels `(v, level: int)` under INSERTED edges: a min-relaxation
+    * ([[maintainLabels]]); levels only fall. Deletes need the twin below. */
+  def incrementalBfsLevels(spark: SparkSession, fullEdges: DataFrame,
+      prevLevels: DataFrame, inserted: DataFrame, maxIter: Int = 50): DataFrame =
+    maintainLabels(spark, Levels, "incrementalBfsLevels", fullEdges, prevLevels,
+      inserted, None, maxIter)
+
+  /** BFS levels `(v, level: int)` under a TWO-SIDED diff: the support
+    * cascade, then the min-relaxation ([[maintainLabels]]); `newEdges` is
+    * the new snapshot. Levels may rise, fall, or vanish. */
   def incrementalBfsLevelsDelete(spark: SparkSession, newEdges: DataFrame,
       prevLevels: DataFrame, inserted: DataFrame, deleted: DataFrame,
       maxIter: Int = 50,
-      cascadeDriverLimit: Long = DriverSolveEdgeLimit): DataFrame = {
-    val e = newEdges.select(col("src").cast("long").as("src"),
-      col("dst").cast("long").as("dst")).localCheckpoint(true)
-    val pv = prevLevels.select(col("v").cast("long").as("v"),
-      col("level").cast("int").as("level")).localCheckpoint(true)
-    val unsettled = supportCascade(spark,
-      e.withColumn("w", lit(1L)),
-      pv.select(col("v"), col("level").cast("long").as("lab")),
-      deleted.select(col("src").cast("long").as("src"),
-        col("dst").cast("long").as("dst"), lit(1L).as("w")),
-      maxIter, "incrementalBfsLevelsDelete", cascadeDriverLimit)
-    val state0 = pv.join(unsettled, Seq("v"), "left_anti")
-      .select(col("v"), col("level").cast("int").as("label"))
-      .localCheckpoint(true)
-    // seeds: (a) settled boundary proposals into the unsettled region,
-    // (b) the inserted-edge relaxation (the insert-only path's seed) —
-    // an insert from an unsettled/unreached source contributes later via
-    // the full-edge-list propagation, so no improvement is lost
-    val seedBoundary = e
-      .join(state0.select(col("v").as("src"), col("label").as("pl")), Seq("src"))
-      .join(unsettled.select(col("v").as("dst")), Seq("dst"), "left_semi")
-      .groupBy(col("dst").as("v")).agg((min("pl") + 1).cast("int").as("label"))
-    val seedIns = inserted
-      .select(col("src").cast("long").as("u"), col("dst").cast("long").as("w"))
-      .join(state0.select(col("v").as("u"), col("label").as("ul")), Seq("u"))
-      .groupBy(col("w").as("v")).agg((min("ul") + 1).cast("int").as("label"))
-    val seed0 = seedBoundary.unionByName(seedIns)
-      .groupBy("v").agg(min("label").cast("int").as("label"))
-      .join(state0.select(col("v"), col("label").as("cur")), Seq("v"), "left")
-      .filter(col("cur").isNull || col("label") < col("cur"))
-      .select("v", "label")
-    labelCorrectLoop("incrementalBfsLevelsDelete", e, lit(1), state0, seed0,
-      min, _ < _, maxIter)
-      .select(col("v"), col("label").cast("int").as("level"))
-  }
+      cascadeDriverLimit: Long = DriverSolveEdgeLimit): DataFrame =
+    maintainLabels(spark, Levels, "incrementalBfsLevelsDelete", newEdges,
+      prevLevels, inserted, Some(deleted), maxIter, cascadeDriverLimit)
 
-  /** INCREMENTAL DAG-layer maintenance over INSERT-only edge deltas — the
-    * longest-path MIRROR of [[incrementalBfsLevels]]: inserting edges can
-    * only RAISE layers (more paths; a former source gaining an in-edge
-    * rises above 0), so maintenance is a delta-seeded MAX relaxation.
-    * Exactness mirrors the BFS argument reflected: previous layers
-    * UNDER-estimate the new DAG's everywhere (every v1 path survives into
-    * v2), each proposal layer(u)+1 is a genuine v2 path length so labels
-    * never overshoot, and along any longest path an exact-labeled
-    * predecessor keeps firing until the unique DAG fixpoint is reached.
-    * Old edges between un-improved vertices never need re-firing (the
-    * previous state already satisfied them), so work is sized by the
-    * delta's cascade region. Fused two cascade hops per barrier, as in
-    * the whole family. If the delta creates a CYCLE the relaxation would
-    * climb forever — the maxIter cap fails loudly instead of truncating.
-    * DELETIONS out of scope by design, loudly: removing an edge can lower
-    * layers, undecidable from (state, delta).
-    */
+  /** DAG layers `(v, layer: long)` under INSERTED edges: a max-relaxation
+    * with new sources at layer 0 ([[maintainLabels]]); layers only rise.
+    * A delta that closes a cycle fails loudly at `maxIter`. */
   def incrementalDagLayers(spark: SparkSession, fullEdges: DataFrame,
-      prevLayers: DataFrame, inserted: DataFrame, maxIter: Int = 200): DataFrame = {
-    val e = fullEdges.select(col("src").cast("long"), col("dst").cast("long"))
-      .persist()
-    val state0 = prevLayers.select(col("v").cast("long").as("v"),
-      col("layer").cast("long").as("label"))
-    // Seed 1: relax the inserted edges against the previous state.
-    val proposals = inserted
-      .select(col("src").cast("long").as("u"), col("dst").cast("long").as("tv"))
-      .join(state0.select(col("v").as("u"), col("label").as("ul")), Seq("u"))
-      .select(col("tv").as("v"), (col("ul") + 1).as("cand"))
-    // Seed 2: a vertex NEW to this snapshot with no in-edges anywhere is a
-    // v2 SOURCE — layer 0 by definition, and nothing would ever propose it
-    // (unlike the BFS/SSSP family, every DAG vertex carries a layer, so
-    // roots must self-seed; non-source new vertices then resolve through
-    // the cascade, whose pred chains terminate at seeded sources).
-    val newVerts = inserted.select(col("src").cast("long").as("v"))
-      .union(inserted.select(col("dst").cast("long").as("v"))).distinct()
-      .join(state0.select("v"), Seq("v"), "left_anti")
-    val newSources = newVerts
-      .join(e.select(col("dst").as("v")).distinct(), Seq("v"), "left_anti")
-      .select(col("v"), lit(0L).as("cand"))
-    val seed0 = proposals.union(newSources)
-      .groupBy("v").agg(max("cand").as("cand"))
-      .join(state0, Seq("v"), "left")
-      .filter(col("label").isNull || col("cand") > col("label"))
-      .select(col("v"), col("cand").as("label"))
-    val out = labelCorrectLoop("incrementalDagLayers", e, lit(1), state0,
-      seed0, max, _ > _, maxIter)
-    e.unpersist()
-    out.withColumnRenamed("label", "layer")
-  }
+      prevLayers: DataFrame, inserted: DataFrame, maxIter: Int = 200): DataFrame =
+    maintainLabels(spark, Layers, "incrementalDagLayers", fullEdges, prevLayers,
+      inserted, None, maxIter)
 
-  /** DELETION-aware incremental DAG-layer maintenance — the longest-path
-    * mirror of [[incrementalBfsLevelsDelete]] with the SAME support-
-    * cascade shape (a tight parent here is layer(p) + 1 = layer(w)):
-    * deleting edges can LOWER layers or turn vertices into sources, so a
-    * stored layer stays valid iff its argmax support chain survives —
-    * then it is still ATTAINED in the new DAG (a genuine lower bound the
-    * MAX relaxation can only raise via inserts). The unsettled set grows
-    * by the same delta-scoped waves; re-relaxation seeds are (a) the
-    * settled parents of unsettled vertices, (b) unsettled vertices with
-    * NO surviving in-edge — new sources self-seed layer 0, the
-    * [[incrementalDagLayers]] lesson — and (c) the inserted-edge
-    * proposals. Output is restricted to the new edge-defined universe so
-    * fully-deleted vertices vanish. A delta that creates a cycle climbs
-    * past the cap and fails loudly, as in the insert-only path. */
+  /** DAG layers `(v, layer: long)` under a TWO-SIDED diff: the support
+    * cascade, then the max-relaxation with the source and universe rules
+    * ([[maintainLabels]]); `newEdges` is the new snapshot. */
   def incrementalDagLayersDelete(spark: SparkSession, newEdges: DataFrame,
       prevLayers: DataFrame, inserted: DataFrame, deleted: DataFrame,
       maxIter: Int = 200,
-      cascadeDriverLimit: Long = DriverSolveEdgeLimit): DataFrame = {
-    import spark.implicits._
-    val e = newEdges.select(col("src").cast("long").as("src"),
-      col("dst").cast("long").as("dst")).localCheckpoint(true)
-    val pv = prevLayers.select(col("v").cast("long").as("v"),
-      col("layer").cast("long").as("layer")).localCheckpoint(true)
-    val unsettled = supportCascade(spark,
-      e.withColumn("w", lit(1L)),
-      pv.select(col("v"), col("layer").as("lab")),
-      deleted.select(col("src").cast("long").as("src"),
-        col("dst").cast("long").as("dst"), lit(1L).as("w")),
-      maxIter, "incrementalDagLayersDelete", cascadeDriverLimit)
-    val state0 = pv.join(unsettled, Seq("v"), "left_anti")
-      .select(col("v"), col("layer").as("label")).localCheckpoint(true)
-    // (a) settled parents propose into the unsettled region
-    val seedBoundary = e
-      .join(state0.select(col("v").as("src"), col("label").as("pl")), Seq("src"))
-      .join(unsettled.select(col("v").as("dst")), Seq("dst"), "left_semi")
-      .groupBy(col("dst").as("v")).agg((max("pl") + 1).as("label"))
-    // (b) unsettled vertices with NO surviving in-edge are new sources
-    val seedSources = unsettled
-      .join(e.select(col("dst").as("v")).distinct(), Seq("v"), "left_anti")
-      .select(col("v"), lit(0L).as("label"))
-    // (c) inserted-edge proposals against the settled state (an insert
-    // from an unlabeled source fires later via the full-edge propagation)
-    val seedIns = inserted
-      .select(col("src").cast("long").as("u"), col("dst").cast("long").as("w"))
-      .join(state0.select(col("v").as("u"), col("label").as("ul")), Seq("u"))
-      .groupBy(col("w").as("v")).agg((max("ul") + 1).as("label"))
-    val seed0 = seedBoundary.unionByName(seedSources).unionByName(seedIns)
-      .groupBy("v").agg(max("label").as("label"))
-      .join(state0.select(col("v"), col("label").as("cur")), Seq("v"), "left")
-      .filter(col("cur").isNull || col("label") > col("cur"))
-      .select("v", "label")
-    labelCorrectLoop("incrementalDagLayersDelete", e, lit(1), state0, seed0,
-      max, _ > _, maxIter)
-      .withColumnRenamed("label", "layer")
-      .join(edgeUniverse(newEdges), Seq("v"), "left_semi")
-  }
+      cascadeDriverLimit: Long = DriverSolveEdgeLimit): DataFrame =
+    maintainLabels(spark, Layers, "incrementalDagLayersDelete", newEdges,
+      prevLayers, inserted, Some(deleted), maxIter, cascadeDriverLimit)
+
+  /** Weighted SSSP distances `(v, dist: long)` under INSERTED edges
+    * `(src, dst, w)`: a min-relaxation ([[maintainLabels]]); distances
+    * only fall. */
+  def incrementalSssp(spark: SparkSession, fullEdges: DataFrame,
+      prevDist: DataFrame, inserted: DataFrame, maxIter: Int = 100): DataFrame =
+    maintainLabels(spark, Dists, "incrementalSssp", fullEdges, prevDist,
+      inserted, None, maxIter)
+
+  /** Weighted SSSP distances `(v, dist: long)` under a TWO-SIDED diff of
+    * `(src, dst, w)` edges with strictly positive weights: the support
+    * cascade, then the min-relaxation ([[maintainLabels]]). */
+  def incrementalSsspDelete(spark: SparkSession, newEdges: DataFrame,
+      prevDist: DataFrame, inserted: DataFrame, deleted: DataFrame,
+      maxIter: Int = 100,
+      cascadeDriverLimit: Long = DriverSolveEdgeLimit): DataFrame =
+    maintainLabels(spark, Dists, "incrementalSsspDelete", newEdges, prevDist,
+      inserted, Some(deleted), maxIter, cascadeDriverLimit)
 
   /** Synchronous k-core peel over RAW directed edges (self-loops dropped,
     * duplicates collapsed at the undirected level): each round recomputes
@@ -3274,104 +3215,6 @@ object GraphOps {
       .select(col("v"), col("deg"), col("tri"),
         when(col("deg") >= 2,
           expr("tri * 2000000 div (deg * (deg - 1))")).otherwise(0L).as("lcc_e6"))
-  }
-
-  /** INCREMENTAL weighted-SSSP maintenance over INSERT-only edge deltas —
-    * [[incrementalBfsLevels]] generalized to weighted label correction
-    * (and the weighted member that completes the incremental family):
-    * inserting edges can only LOWER shortest-path costs or reach new
-    * vertices, so maintenance is a delta-seeded Bellman-Ford relaxation —
-    * each inserted (u,w,wt) with known dist(u) proposes dist(u)+wt, and
-    * improvements cascade along the full edge list with the same fused
-    * two-hops-per-barrier discipline as [[sssp]]; work is sized by the
-    * delta's cascade region, never the base graph. Exactness: previous
-    * distances over-estimate the new graph's everywhere (edge insertion
-    * is monotone), proposals are walk costs bounded below, and the
-    * Bellman-Ford fixpoint is unique — equality with a full re-solve is
-    * oracled end-to-end by q_graph_sssp_incremental. DELETIONS are out of
-    * scope by design, loudly, as in the whole family: removing an edge
-    * can RAISE costs, undecidable from (state, delta).
-    */
-  def incrementalSssp(spark: SparkSession, fullEdges: DataFrame,
-      prevDist: DataFrame, inserted: DataFrame, maxIter: Int = 100): DataFrame = {
-    val e = fullEdges.select(col("src").cast("long"), col("dst").cast("long"),
-      col("w").cast("long")).persist()
-    val state0 = prevDist.select(col("v").cast("long").as("v"),
-      col("dist").cast("long").as("label"))
-    // seed: relax ONLY the inserted edges against the previous state (an
-    // inserted edge from a still-unreachable source contributes nothing
-    // yet — a later cascade re-proposes it via the full edge list)
-    val seed0 = inserted
-      .select(col("src").cast("long").as("u"), col("dst").cast("long").as("tv"),
-        col("w").cast("long").as("iw"))
-      .join(state0.select(col("v").as("u"), col("label").as("ud")), Seq("u"))
-      .groupBy(col("tv").as("v")).agg(min(col("ud") + col("iw")).as("cand"))
-      .join(state0, Seq("v"), "left")
-      .filter(col("label").isNull || col("cand") < col("label"))
-      .select(col("v"), col("cand").as("label"))
-    val out = labelCorrectLoop("incrementalSssp", e, col("w"), state0, seed0,
-      min, _ < _, maxIter)
-    e.unpersist()
-    out.withColumnRenamed("label", "dist")
-  }
-
-  /** DELETION-aware incremental weighted-SSSP maintenance — the weighted
-    * generalization of [[incrementalBfsLevelsDelete]] (BFS is the w ≡ 1
-    * special case): a stored distance stays VALID iff its support chain
-    * survives — a parent p with a surviving edge (p, w) of weight pw such
-    * that dist(p) + pw = dist(w), p itself supported. The unsettled set
-    * grows by the same delta-scoped waves (wave 0 = heads of deleted
-    * edges whose last tight parent died; wave i+1 = tight children of
-    * wave i with no tight parent left outside the set), settled distances
-    * are valid upper bounds (their support chain IS a surviving path of
-    * that cost), and one shared min-relaxation re-solves the unsettled
-    * region while applying the inserted-edge improvements. Vertices no
-    * surviving path reaches drop out. */
-  def incrementalSsspDelete(spark: SparkSession, newEdges: DataFrame,
-      prevDist: DataFrame, inserted: DataFrame, deleted: DataFrame,
-      maxIter: Int = 100,
-      cascadeDriverLimit: Long = DriverSolveEdgeLimit): DataFrame = {
-    import spark.implicits._
-    val e = newEdges.select(col("src").cast("long").as("src"),
-      col("dst").cast("long").as("dst"), col("w").cast("long").as("w"))
-      .localCheckpoint(true)
-    // The support-chain argument REQUIRES strictly positive weights: a
-    // zero-weight cycle lets two equal-dist vertices mutually "support"
-    // each other, so the wave cascade would never unsettle them and the
-    // result silently keeps stale distances. Gate loudly (the
-    // lcgDomainCount discipline); the one agg rides the
-    // checkpoint just materialized.
-    val minW = e.agg(min("w")).collect()(0)
-    require(minW.isNullAt(0) || minW.getLong(0) > 0L,
-      s"incrementalSsspDelete requires strictly positive weights " +
-        s"(min = ${minW.getLong(0)}) - the tight-parent support cascade " +
-        "is unsound under zero-weight cycles")
-    val pv = prevDist.select(col("v").cast("long").as("v"),
-      col("dist").cast("long").as("dist")).localCheckpoint(true)
-    val unsettled = supportCascade(spark, e,
-      pv.select(col("v"), col("dist").as("lab")),
-      deleted.select(col("src").cast("long").as("src"),
-        col("dst").cast("long").as("dst"), col("w").cast("long").as("w")),
-      maxIter, "incrementalSsspDelete", cascadeDriverLimit)
-    val state0 = pv.join(unsettled, Seq("v"), "left_anti")
-      .select(col("v"), col("dist").as("label")).localCheckpoint(true)
-    val seedBoundary = e
-      .join(state0.select(col("v").as("src"), col("label").as("pd")), Seq("src"))
-      .join(unsettled.select(col("v").as("dst")), Seq("dst"), "left_semi")
-      .groupBy(col("dst").as("v")).agg(min(col("pd") + col("w")).as("label"))
-    val seedIns = inserted
-      .select(col("src").cast("long").as("u"), col("dst").cast("long").as("tv"),
-        col("w").cast("long").as("iw"))
-      .join(state0.select(col("v").as("u"), col("label").as("ud")), Seq("u"))
-      .groupBy(col("tv").as("v")).agg(min(col("ud") + col("iw")).as("label"))
-    val seed0 = seedBoundary.unionByName(seedIns)
-      .groupBy("v").agg(min("label").as("label"))
-      .join(state0.select(col("v"), col("label").as("cur")), Seq("v"), "left")
-      .filter(col("cur").isNull || col("label") < col("cur"))
-      .select("v", "label")
-    labelCorrectLoop("incrementalSsspDelete", e, col("w"), state0, seed0,
-      min, _ < _, maxIter)
-      .withColumnRenamed("label", "dist")
   }
 
   /** Bounded Borůvka rounds over a canonical undirected weighted edge set

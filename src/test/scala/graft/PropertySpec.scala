@@ -289,6 +289,39 @@ class PropertySpec extends SparkSpec {
             .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
           assert(inc == fullF, s"msf sample $i gate=$g: v1=$u1 v2=$u2")
         }
+        // the traversal delete twins over the directed diff: BFS levels
+        // from 0, SSSP with weights 1 + (s + d) % 5, DAG layers over the
+        // src < dst orientation — each vs the full recompute of v2
+        def ssspW(e: Seq[(Long, Long)]) =
+          e.map { case (s, d) => (s, d, 1L + (s + d) % 5) }.toDF("src", "dst", "w")
+        def twoSided(orient: Seq[(Long, Long)] => Seq[(Long, Long)],
+            frame: Seq[(Long, Long)] => org.apache.spark.sql.DataFrame) = {
+          val (d1, d2) = (orient(v1).distinct, orient(v2).distinct)
+          (frame(d1), frame(d2), frame(d2.diff(d1)), frame(d1.diff(d2)))
+        }
+        def labels(df: org.apache.spark.sql.DataFrame) =
+          df.collect().map(r => r.getLong(0) -> r.get(1)).toMap
+        val plain = (e: Seq[(Long, Long)]) => e.toDF("src", "dst")
+        val (b1, b2, bIns, bDel) = twoSided(identity, plain)
+        val (s1, s2, sIns, sDel) = twoSided(identity, ssspW)
+        val (d1, d2, dIns, dDel) = twoSided(_.filter(p => p._1 < p._2), plain)
+        val prevLv = GraphOps.bfsLevels(spark, b1, 0L)
+        val fullLv = labels(GraphOps.bfsLevels(spark, b2, 0L))
+        val prevD = GraphOps.sssp(spark, s1, 0L)
+        val fullD = labels(GraphOps.sssp(spark, s2, 0L))
+        val prevL = GraphOps.dagLayers(spark, d1)
+        val fullL = labels(GraphOps.dagLayers(spark, d2))
+        for (g <- gates) {
+          val lv = labels(GraphOps.incrementalBfsLevelsDelete(spark, b2, prevLv,
+            bIns, bDel, cascadeDriverLimit = g))
+          assert(lv == fullLv, s"BFS-delete sample $i gate=$g: v1=$v1 v2=$v2")
+          val d = labels(GraphOps.incrementalSsspDelete(spark, s2, prevD,
+            sIns, sDel, cascadeDriverLimit = g))
+          assert(d == fullD, s"SSSP-delete sample $i gate=$g: v1=$v1 v2=$v2")
+          val l = labels(GraphOps.incrementalDagLayersDelete(spark, d2, prevL,
+            dIns, dDel, cascadeDriverLimit = g))
+          assert(l == fullL, s"DAG-delete sample $i gate=$g: v1=$v1 v2=$v2")
+        }
       }
     }
   }
