@@ -2,7 +2,7 @@ package graft.plans
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.sql.types.StructType
 
 /** Iterative graph computation on DataFrames.
   *
@@ -130,18 +130,19 @@ object GraphOps {
   }
 
   /** The union of the wave frames one loop accumulates (candidates,
-    * evictions, the unsettled set), of LONG columns `cols`, with its plan
+    * evictions, the unsettled set, MIS members, colored vertices), with
+    * the DDL `schema` (e.g. `"v LONG, color INT, round INT"`) and its plan
     * depth bounded: once it has 12 legs, [[all]] collapses them into one
-    * single-partition checkpoint, so a deep cascade carries O(1) legs
-    * rather than O(waves), at one tiny job per dozen waves. */
-  private final class Waves(spark: SparkSession, cols: String*) {
-    private var legs = List.empty[DataFrame]
-    def add(f: DataFrame): Unit = legs ::= f
+    * single-partition checkpoint, so a deep loop carries O(1) legs rather
+    * than O(waves), at one tiny job per dozen waves. Legs union in the
+    * order they were added; with none, [[all]] is an empty frame. */
+  private final class Waves(spark: SparkSession, schema: String) {
+    private var legs = Vector.empty[DataFrame]
+    def add(f: DataFrame): Unit = legs :+= f
     def all: DataFrame = {
-      if (legs.size >= 12) legs = List(ckpt(legs.reduce(_ union _)))
+      if (legs.size >= 12) legs = Vector(ckpt(legs.reduce(_ union _)))
       legs.reduceOption(_ union _).getOrElse(spark.createDataFrame(
-        java.util.Collections.emptyList[Row](),
-        StructType(cols.map(StructField(_, LongType)))))
+        java.util.Collections.emptyList[Row](), StructType.fromDDL(schema)))
     }
   }
 
@@ -1284,6 +1285,38 @@ object GraphOps {
     r.getLong(0)
   }
 
+  /** `edges` as LONG `(src, dst)` with self-loops dropped — the edge set
+    * of every LCG-priority operator (a self-looped vertex would be its
+    * own neighbor) and of the snapshots their maintainers compare. */
+  private def loopFree(edges: DataFrame): DataFrame =
+    edges.filter(col("src") =!= col("dst"))
+      .select(col("src").cast("long"), col("dst").cast("long"))
+
+  /** The prologue of every LCG-priority operator: the [[loopFree]] edges,
+    * symmetrized into a persisted set `und`, and ONE aggregate action
+    * over it that runs [[lcgDomainCount]] for `op`, returns `size` and
+    * materializes the persist. The caller unpersists `und`. */
+  private def lcgUndirected(edges: DataFrame, op: String,
+      size: Column = count(lit(1))): (DataFrame, Long) = {
+    val und = symmetrize(loopFree(edges)).distinct().persist()
+    (und, lcgDomainCount(und, op, size))
+  }
+
+  /** The driver-side adjacency of a persisted [[lcgUndirected]] frame —
+    * the gate path of the symmetry-breakers: collected as primitive
+    * pairs, `und` unpersisted, grouped by `src`. */
+  private def adjacency(und: DataFrame): Map[Long, Array[Long]] = {
+    val arr = und.rdd.map(r => (r.getLong(0), r.getLong(1))).collect()
+    und.unpersist()
+    arr.groupBy(_._1).map { case (v, es) => v -> es.map(_._2) }
+  }
+
+  /** The priority-dependency edges of `und`, checkpointed: `src` decides
+    * after `dst` (p(dst) < p(src)). Priorities are arithmetic on the id,
+    * so "who waits for whom" is one static filter, never a join. */
+  private def hpEdges(und: DataFrame): DataFrame =
+    und.filter(lcgPriCol(col("dst")) < lcgPriCol(col("src"))).localCheckpoint(true)
+
   /** Deterministic MAXIMAL INDEPENDENT SET — Luby-style min-priority
     * rounds under the fixed LCG priority p(v) = (v·1103515245 + 12345)
     * mod 2³¹ (odd multiplier × power-of-two modulus ⇒ injective for
@@ -1312,15 +1345,9 @@ object GraphOps {
       maxRounds: Int = MisRoundCap,
       driverSolveLimit: Long = DriverSolveEdgeLimit): DataFrame = {
     import spark.implicits._
-    val e0 = edges.filter(col("src") =!= col("dst"))
-      .select(col("src").cast("long"), col("dst").cast("long"))
-    val und = symmetrize(e0).distinct().persist()
-    // gate + materializes the persist
-    val edgeCount = lcgDomainCount(und, "maximalIndependentSet")
+    val (und, edgeCount) = lcgUndirected(edges, "maximalIndependentSet")
     if (edgeCount <= driverSolveLimit) {
-      val arr = und.rdd.map(r => (r.getLong(0), r.getLong(1))).collect()
-      und.unpersist()
-      val adj = arr.groupBy(_._1).map { case (v, es) => v -> es.map(_._2) }
+      val adj = adjacency(und)
       val active = scala.collection.mutable.HashSet.empty[Long]
       adj.keysIterator.foreach(active += _)
       val out = Seq.newBuilder[(Long, Int)]
@@ -1339,7 +1366,7 @@ object GraphOps {
     }
     var (active, activeCount) = checkpointCount(und.select(col("src").as("v"))
       .distinct().withColumn("p", lcgPriCol(col("v"))))
-    var result = Seq.empty[(Long, Int)].toDF("v", "round")
+    val members = new Waves(spark, "v LONG, round INT")
     var r = 0
     while (activeCount > 0 && r < maxRounds) {
       r += 1
@@ -1353,7 +1380,7 @@ object GraphOps {
       val sel = active.join(nbrMin, col("v") === col("mv"), "left")
         .filter(col("p") < coalesce(col("minp"), lit(Long.MaxValue)))
         .select("v").localCheckpoint(eager = false)
-      result = result.union(sel.select(col("v"), lit(r).as("round")))
+      members.add(sel.select(col("v"), lit(r).as("round")))
       val removed = sel
         .union(und.join(sel.select(col("v").as("sv")), col("src") === col("sv"), "left_semi")
           .select(col("dst").as("v")))
@@ -1365,42 +1392,9 @@ object GraphOps {
     }
     und.unpersist()
     require(activeCount == 0, s"MIS did not converge within $maxRounds rounds")
-    result
+    members.all
   }
 
-  /** INCREMENTAL MIS maintenance over INSERT-only edge deltas — the
-    * symmetry-breaking member of the incremental family: given the
-    * previous snapshot's MIS (the [[maximalIndependentSet]] contract) and
-    * the edges inserted since, returns the new graph's MIS WITHOUT
-    * re-running the rounds over the old graph.
-    *
-    * Theory: under the fixed injective priority, v's membership is a
-    * function of its higher-priority neighbors' memberships ONLY (greedy
-    * recursion along the priority order). An inserted edge (a, b) changes
-    * exactly the HIGHER-p endpoint's input; any consequence propagates
-    * strictly DOWNSTREAM along priority-decreasing edges. The maintenance
-    * step therefore (1) seeds the changed-input vertices (plus vertices
-    * new to the snapshot), (2) expands their downstream DEPENDENCY CONE
-    * over the new graph's hp-DAG with a BSP frontier loop (per-round work
-    * ∝ frontier, not graph), (3) gathers the cone's hp-adjacency plus the
-    * OLD memberships on its boundary — cone-sized, require()d under
-    * `coneGatherLimit` — and (4) replays the greedy decisions inside the
-    * cone in one driver pass. Memberships outside the cone are reused
-    * VERBATIM. The cone is the CONSERVATIVE closure (potential, not
-    * actual, change): a delta among low-priority vertices has a shallow
-    * cone, while a highest-priority delta degenerates toward a full
-    * replay — the same honest contract as warm-start PageRank: the bound
-    * is structural, and the caller's delta locality determines the win.
-    * DELETIONS are out of scope loudly (removing an edge can flip an
-    * UPSTREAM exclusion, which cannot be decided from (state, delta)).
-    *
-    * `maxConeFraction` lets a caller require the scoping to be REAL
-    * (cone strictly smaller than the graph) — fixture drift that
-    * degrades maintenance to a full replay then fails instead of
-    * silently passing. Returns `(v)` — members of the new MIS (round
-    * numbers are not maintained: an inserted dependency can delay a
-    * vertex's round without changing any membership).
-    */
   /** The gathered downstream-dependency-cone subproblem shared by the
     * incremental MIS and coloring maintainers: cone vertex frame (for the
     * state splice), cone vertices + their FULL hp-adjacency in memory,
@@ -1437,99 +1431,129 @@ object GraphOps {
       coneGatherLimit: Long, coneGatherPairLimit: Long,
       maxConeFraction: Double): Option[HpCone] = {
     import spark.implicits._
-    val e0 = newEdges.filter(col("src") =!= col("dst"))
-      .select(col("src").cast("long"), col("dst").cast("long"))
-    val und = symmetrize(e0).distinct().localCheckpoint(true)
-    val totalV = lcgDomainCount(und, "hpDependencyCone", countDistinct(col("src")))
-    // dependency edges on the NEW graph: src's decision waits on dst
-    val hpEdges = und.filter(lcgPriCol(col("dst")) < lcgPriCol(col("src")))
-      .localCheckpoint(true)
-    // seeds: the higher-priority-VALUE (= later-deciding) endpoint of
-    // each inserted edge — the only endpoint whose input set changed —
-    // plus any vertex absent from the previous snapshot
-    val insSeeds = inserted.filter(col("src") =!= col("dst"))
-      .select(when(lcgPriCol(col("src")) > lcgPriCol(col("dst")), col("src"))
-        .otherwise(col("dst")).cast("long").as("v"))
-    // SAME normalization as the full operators (self-loops dropped): a
-    // vertex that existed only via a self-loop was OUTSIDE the previous
-    // universe and must be treated as new, not as unaffected
-    val prevVerts = prevEdges.filter(col("src") =!= col("dst"))
-      .select(col("src").cast("long").as("v"))
-      .union(prevEdges.filter(col("src") =!= col("dst"))
-        .select(col("dst").cast("long").as("v"))).distinct()
-    val newVerts = und.select(col("src").as("v")).distinct()
-      .join(prevVerts, Seq("v"), "left_anti")
-    var (cone, coneCount) = checkpointCount(insSeeds.unionByName(newVerts).distinct())
-    var frontier = cone
-    // the limit must bound the SEED set too: a huge delta whose cone
-    // never grows past its seeds would otherwise reach the driver gather
-    // with no size check at all
-    if (coneCount > coneGatherLimit) {
-      trace(s"hpDependencyCone: $coneCount seeds exceed the " +
-        s"$coneGatherLimit-vertex gather limit - falling back to the full operator")
-      return None
-    }
-    var grew = coneCount > 0
-    var r = 0
-    while (grew && r < maxRounds) {
-      r += 1
-      val (next, n) = checkpointCount(hpEdges
-        .join(frontier.select(col("v").as("fv")), col("dst") === col("fv"), "left_semi")
-        .select(col("src").as("v")).distinct()
-        .join(cone, Seq("v"), "left_anti"))
-      if (n == 0) grew = false
-      else {
-        cone = cone.union(next).localCheckpoint(true)
-        coneCount += n
-        frontier = next
-        if (coneCount > coneGatherLimit) {
-          trace(s"hpDependencyCone: cone ($coneCount vertices) exceeded the " +
-            s"$coneGatherLimit-vertex gather limit - falling back to the full operator")
-          return None
+    val (und, totalV) = lcgUndirected(newEdges, "hpDependencyCone",
+      countDistinct(col("src")))
+    try {
+      // dependency edges on the NEW graph: src's decision waits on dst
+      val hp = hpEdges(und)
+      // seeds: the higher-priority-VALUE (= later-deciding) endpoint of
+      // each inserted edge — the only endpoint whose input set changed —
+      // plus any vertex absent from the previous snapshot (SAME
+      // normalization as the full operators: a vertex that existed only
+      // via a self-loop was OUTSIDE the previous universe and is new)
+      val insSeeds = inserted.filter(col("src") =!= col("dst"))
+        .select(when(lcgPriCol(col("src")) > lcgPriCol(col("dst")), col("src"))
+          .otherwise(col("dst")).cast("long").as("v"))
+      val newVerts = und.select(col("src").as("v")).distinct()
+        .join(edgeUniverse(prevEdges), Seq("v"), "left_anti")
+      var (frontier, coneCount) =
+        checkpointCount(insSeeds.unionByName(newVerts).distinct())
+      val cone = new Waves(spark, "v LONG")
+      cone.add(frontier)
+      // the limit must bound the SEED set too: a huge delta whose cone
+      // never grows past its seeds would otherwise reach the driver gather
+      // with no size check at all
+      if (coneCount > coneGatherLimit) {
+        trace(s"hpDependencyCone: $coneCount seeds exceed the " +
+          s"$coneGatherLimit-vertex gather limit - falling back to the full operator")
+        return None
+      }
+      var grew = coneCount > 0
+      var r = 0
+      while (grew && r < maxRounds) {
+        r += 1
+        val (next, n) = checkpointCount(hp
+          .join(frontier.select(col("v").as("fv")), col("dst") === col("fv"), "left_semi")
+          .select(col("src").as("v")).distinct()
+          .join(cone.all, Seq("v"), "left_anti"))
+        if (n == 0) grew = false
+        else {
+          cone.add(next)
+          coneCount += n
+          frontier = next
+          if (coneCount > coneGatherLimit) {
+            trace(s"hpDependencyCone: cone ($coneCount vertices) exceeded the " +
+              s"$coneGatherLimit-vertex gather limit - falling back to the full operator")
+            return None
+          }
         }
       }
-    }
-    if (grew) {
-      trace(s"hpDependencyCone: cone did not close within $maxRounds waves" +
-        " - falling back to the full operator")
-      return None
-    }
-    require(coneCount <= totalV * maxConeFraction,
-      s"cone covers $coneCount of $totalV vertices - the delta no longer" +
-        " demonstrates scoped maintenance")
-    if (coneCount == 0)
-      return Some(HpCone(cone, Array.empty, Map.empty, cone.limit(0)))
-    // gather the cone subproblem: its full hp-adjacency + the boundary
-    // vertex set. Cone VERTICES are bounded above; the PAIR gate bounds
-    // what actually reaches the driver (cone x degree — a single hub
-    // inside the cone can carry its whole degree here).
-    // ONE gather job does gate + gather (r12 VERDICT #6: the separate
-    // checkpoint + count pair gate showed up as the maintainer's cost
-    // band): limit(pairLimit+1).collect() stops streaming rows to the
-    // driver the moment the budget is exceeded — the driver never holds
-    // more than pairLimit+1 pairs, exactly the bound the old count gate
-    // enforced, without materializing coneHp twice. The boundary set is
-    // then pure driver arithmetic on the already-gathered pairs (its old
-    // spelling was a distributed distinct + anti-join over coneHp).
-    val coneHp = hpEdges
-      .join(cone.select(col("v").as("cv")), col("src") === col("cv"), "left_semi")
-    val gathered = coneHp.limit(coneGatherPairLimit.toInt + 1).collect()
-    if (gathered.length > coneGatherPairLimit) {
-      trace(s"hpDependencyCone: cone hp-adjacency (>$coneGatherPairLimit " +
-        s"pairs over $coneCount vertices) exceeded the gather limit - " +
-        "falling back to the full operator")
-      return None
-    }
-    val pairs = gathered.map(x => (x.getLong(0), x.getLong(1)))
-    val coneVerts = cone.rdd.map(_.getLong(0)).collect()
-    val coneSet = new java.util.HashSet[Long](coneVerts.length * 2)
-    coneVerts.foreach(coneSet.add)
-    val boundaryDf = pairs.iterator.map(_._2)
-      .filter(d => !coneSet.contains(d)).toSeq.distinct.toDF("v")
-    val hpAdj = pairs.groupBy(_._1).map { case (v, es) => v -> es.map(_._2) }
-    Some(HpCone(cone, coneVerts, hpAdj, boundaryDf))
+      if (grew) {
+        trace(s"hpDependencyCone: cone did not close within $maxRounds waves" +
+          " - falling back to the full operator")
+        return None
+      }
+      require(coneCount <= totalV * maxConeFraction,
+        s"cone covers $coneCount of $totalV vertices - the delta no longer" +
+          " demonstrates scoped maintenance")
+      val coneDf = cone.all
+      if (coneCount == 0) return Some(HpCone(coneDf, Array.empty, Map.empty, coneDf))
+      // gather the cone subproblem: its full hp-adjacency + the boundary
+      // vertex set. Cone VERTICES are bounded above; the PAIR gate bounds
+      // what actually reaches the driver (cone x degree — a single hub
+      // inside the cone can carry its whole degree here).
+      // ONE gather job does gate + gather (r12 VERDICT #6: the separate
+      // checkpoint + count pair gate showed up as the maintainer's cost
+      // band): limit(pairLimit+1).collect() stops streaming rows to the
+      // driver the moment the budget is exceeded — the driver never holds
+      // more than pairLimit+1 pairs, exactly the bound the old count gate
+      // enforced, without materializing coneHp twice. The boundary set is
+      // then pure driver arithmetic on the already-gathered pairs (its old
+      // spelling was a distributed distinct + anti-join over coneHp).
+      val gathered = hp
+        .join(coneDf.select(col("v").as("cv")), col("src") === col("cv"), "left_semi")
+        .limit(coneGatherPairLimit.toInt + 1).collect()
+      if (gathered.length > coneGatherPairLimit) {
+        trace(s"hpDependencyCone: cone hp-adjacency (>$coneGatherPairLimit " +
+          s"pairs over $coneCount vertices) exceeded the gather limit - " +
+          "falling back to the full operator")
+        return None
+      }
+      val pairs = gathered.map(x => (x.getLong(0), x.getLong(1)))
+      val coneVerts = coneDf.rdd.map(_.getLong(0)).collect()
+      val coneSet = new java.util.HashSet[Long](coneVerts.length * 2)
+      coneVerts.foreach(coneSet.add)
+      val boundaryDf = pairs.iterator.map(_._2)
+        .filter(d => !coneSet.contains(d)).toSeq.distinct.toDF("v")
+      val hpAdj = pairs.groupBy(_._1).map { case (v, es) => v -> es.map(_._2) }
+      Some(HpCone(coneDf, coneVerts, hpAdj, boundaryDf))
+    } finally und.unpersist()
   }
 
+  /** INCREMENTAL MIS maintenance over INSERT-only edge deltas — the
+    * symmetry-breaking member of the incremental family: given the
+    * previous snapshot's MIS (the [[maximalIndependentSet]] contract) and
+    * the edges inserted since, returns the new graph's MIS WITHOUT
+    * re-running the rounds over the old graph.
+    *
+    * Theory: under the fixed injective priority, v's membership is a
+    * function of its higher-priority neighbors' memberships ONLY (greedy
+    * recursion along the priority order). An inserted edge (a, b) changes
+    * exactly the HIGHER-p endpoint's input; any consequence propagates
+    * strictly DOWNSTREAM along priority-decreasing edges. The maintenance
+    * step therefore (1) seeds the changed-input vertices (plus vertices
+    * new to the snapshot), (2) expands their downstream DEPENDENCY CONE
+    * over the new graph's hp-DAG with a BSP frontier loop (per-round work
+    * ∝ frontier, not graph), (3) gathers the cone's hp-adjacency plus the
+    * OLD memberships on its boundary — cone-sized, require()d under
+    * `coneGatherLimit` — and (4) replays the greedy decisions inside the
+    * cone in one driver pass. Memberships outside the cone are reused
+    * VERBATIM. The cone is the CONSERVATIVE closure (potential, not
+    * actual, change): a delta among low-priority vertices has a shallow
+    * cone, while a highest-priority delta degenerates toward a full
+    * replay — the same honest contract as warm-start PageRank: the bound
+    * is structural, and the caller's delta locality determines the win.
+    * A deleted edge needs the universe restriction of
+    * [[incrementalMaximalIndependentSetDelete]], which seeds the same cone
+    * with both diff sides.
+    *
+    * `maxConeFraction` lets a caller require the scoping to be REAL
+    * (cone strictly smaller than the graph) — fixture drift that
+    * degrades maintenance to a full replay then fails instead of
+    * silently passing. Returns `(v)` — members of the new MIS (round
+    * numbers are not maintained: an inserted dependency can delay a
+    * vertex's round without changing any membership).
+    */
   def incrementalMaximalIndependentSet(spark: SparkSession, newEdges: DataFrame,
       prevEdges: DataFrame, prevMis: DataFrame, inserted: DataFrame,
       // cone waves advance one hp-DAG hop each, so their bound is the
@@ -1608,8 +1632,7 @@ object GraphOps {
   /** New-snapshot vertex universe (symmetrized, self-loops dropped) —
     * the delete-aware wrappers restrict carried-over state to it. */
   private def edgeUniverse(edges: DataFrame): DataFrame = {
-    val e0 = edges.filter(col("src") =!= col("dst"))
-      .select(col("src").cast("long"), col("dst").cast("long"))
+    val e0 = loopFree(edges)
     e0.select(col("src").as("v"))
       .union(e0.select(col("dst").as("v"))).distinct()
   }
@@ -1724,11 +1747,7 @@ object GraphOps {
       driverSolveLimit: Long = DriverSolveEdgeLimit,
       tailSolveVertices: Long = 100000): DataFrame = {
     import spark.implicits._
-    val e0 = edges.filter(col("src") =!= col("dst"))
-      .select(col("src").cast("long"), col("dst").cast("long"))
-    val und = symmetrize(e0).distinct().persist()
-    // gate + materializes the persist
-    val edgeCount = lcgDomainCount(und, "jonesPlassmannColoring")
+    val (und, edgeCount) = lcgUndirected(edges, "jonesPlassmannColoring")
     // The SAME rounds, in memory — the whole-problem gate path AND the
     // tail finish (which seeds `colored` with the boundary colors and
     // continues the round numbering).
@@ -1756,34 +1775,30 @@ object GraphOps {
       out.result()
     }
     if (edgeCount <= driverSolveLimit) {
-      val arr = und.rdd.map(r => (r.getLong(0), r.getLong(1))).collect()
-      und.unpersist()
-      val hpAdj = arr.groupBy(_._1).map { case (v, es) =>
-        v -> es.map(_._2).filter(u => lcgPri(u) < lcgPri(v))
+      val hpAdj = adjacency(und).map { case (v, ns) =>
+        v -> ns.filter(u => lcgPri(u) < lcgPri(v))
       }
       return simulateRounds(hpAdj.keys.toArray, hpAdj(_),
         scala.collection.mutable.LongMap.empty[Int], 1)
         .toDF("v", "color", "round")
     }
-    // static: "v waits for dst" edges — priority is arithmetic on the id
-    val hpEdges = und.filter(lcgPriCol(col("dst")) < lcgPriCol(col("src")))
-      .localCheckpoint(true)
+    val hp = hpEdges(und)
     var (un, unCount) = checkpointCount(und.select(col("src").as("v")).distinct())
-    // colored state = FLAT UNION of per-round checkpointed `newly` leaves
-    // (the multiBrandesDeltas discipline): any consumer re-executes only
-    // a union of materialized blocks, never a nested join/agg lineage —
-    // per-round cost is TWO materializations (newly, un; the termination
-    // count rides un's checkpoint job), measured 2.7x faster than checkpointing the
-    // accumulated frame (and 2.6x faster than checkpoint cadence, whose
-    // nested mex recomputation dominated).
-    // frames carry (v, color) ONLY — the round number is attached as a
-    // literal over the checkpointed leaf at the very end, never inside
-    // the per-round plan: an embedded round literal changes the generated
-    // code every round and turns the codegen cache into a per-round
-    // recompile
-    val empty = Seq.empty[(Long, Int)].toDF("v", "color")
-    var newlyFrames = List.empty[(Int, DataFrame)]
-    def coloredSoFar: DataFrame = (empty :: newlyFrames.map(_._2)).reduce(_ union _)
+    // colored state = a [[Waves]] union of per-round checkpointed `newly`
+    // leaves (the multiBrandesDeltas discipline): any consumer re-executes
+    // only a union of materialized blocks, never a nested join/agg lineage
+    // — per-round cost is TWO materializations (newly, un; the termination
+    // count rides un's checkpoint job), measured 2.7x faster than
+    // checkpointing the accumulated frame (and 2.6x faster than checkpoint
+    // cadence, whose nested mex recomputation dominated).
+    // The round number rides each leaf as a literal OVER its checkpoint,
+    // never inside the per-round plan: the mex join reads only
+    // (v, color), so column pruning drops the literal — an embedded round
+    // literal would change the generated code every round and turn the
+    // codegen cache into a per-round recompile
+    val colored = new Waves(spark, "v LONG, color INT, round INT")
+    def addRound(newly: DataFrame, round: Int): Unit =
+      colored.add(newly.select(col("v"), col("color"), lit(round).as("round")))
     // one JP level: the ready frontier of `unc` colored by the shared
     // sorted-set mex (degree-agnostic, one shuffle — see [[mexAggExpr]];
     // this lifted the r9 bitmask spelling's hp-degree<63 REFUSAL of
@@ -1794,15 +1809,15 @@ object GraphOps {
     // at local[32] costs more than the small shuffles they replace.
     // Shuffle joins + AQE coalescing stay.)
     def roundStep(unc: DataFrame): DataFrame = {
-      val blocked = hpEdges
+      val blocked = hp
         .join(unc.select(col("v").as("uv")), col("dst") === col("uv"), "left_semi")
         .select(col("src").as("v"))
       val ready = unc.join(blocked, Seq("v"), "left_anti")
       // hp-neighbor color mex of the ready frontier (hp-neighbors all
       // colored by definition; no colored hp-neighbors → no row → mex 0)
-      val masks = hpEdges
+      val masks = hp
         .join(ready.select(col("v").as("rv")), col("src") === col("rv"), "left_semi")
-        .join(coloredSoFar.select(col("v").as("cv"), col("color").as("ncolor")),
+        .join(colored.all.select(col("v").as("cv"), col("color").as("ncolor")),
           col("dst") === col("cv"))
         .groupBy(col("src").as("mv"))
         .agg(mexAggExpr.as("mex"))
@@ -1820,20 +1835,17 @@ object GraphOps {
     var r = 0
     while (unCount > tailSolveVertices && r + 2 <= maxRounds) {
       val newly1 = roundStep(un).localCheckpoint(true)
-      newlyFrames ::= (r + 1) -> newly1
+      addRound(newly1, r + 1)
       val un1 = un.join(newly1.select("v"), Seq("v"), "left_anti")
       // lazy: the pair's closing job (un's checkpoint-and-count) fills it
       val newly2 = roundStep(un1).localCheckpoint(eager = false)
-      newlyFrames ::= (r + 2) -> newly2
+      addRound(newly2, r + 2)
       r += 2
       val (unNext, unNextCount) =
         checkpointCount(un1.join(newly2.select("v"), Seq("v"), "left_anti"))
       un = unNext
       unCount = unNextCount
     }
-    val emptyR = Seq.empty[(Long, Int, Int)].toDF("v", "color", "round")
-    var colored = (emptyR :: newlyFrames.map { case (rr, df) =>
-      df.select(col("v"), col("color"), lit(rr).as("round")) }).reduce(_ union _)
     if (unCount > 0) {
       // a maxRounds exit with a BIG remainder must fail loudly here, not
       // attempt an unbounded gather
@@ -1844,24 +1856,24 @@ object GraphOps {
       // hp-edges + boundary colors) — ≤ tailSolveVertices × avg-degree
       // pairs — and complete the SAME rounds in memory
       val remV = un.select("v").rdd.map(_.getLong(0)).collect()
-      val remHp = hpEdges
+      val remHp = hp
         .join(un.select(col("v").as("uv")), col("src") === col("uv"), "left_semi")
         .localCheckpoint(true) // feeds the pair gather AND the boundary join
       val pairs = remHp.rdd.map(x => (x.getLong(0), x.getLong(1))).collect()
       val boundary = remHp
-        .join(colored.select(col("v").as("cv"), col("color").as("bc")),
+        .join(colored.all.select(col("v").as("cv"), col("color").as("bc")),
           col("dst") === col("cv"))
         .select(col("cv"), col("bc")).distinct()
         .rdd.map(x => (x.getLong(0), x.getInt(1))).collect()
       val cmap = scala.collection.mutable.LongMap.empty[Int]
       boundary.foreach { case (v, c) => cmap(v) = c }
       val hpAdj = pairs.groupBy(_._1).map { case (v, es) => v -> es.map(_._2) }
-      val tail = simulateRounds(remV,
+      colored.add(simulateRounds(remV,
         v => hpAdj.getOrElse(v, Array.empty[Long]), cmap, r + 1)
-      colored = colored.unionByName(tail.toDF("v", "color", "round"))
+        .toDF("v", "color", "round"))
     }
     und.unpersist()
-    colored
+    colored.all
   }
 
   /** Round cap shared by [[speculativeColoring]]'s two paths and the
@@ -1904,15 +1916,9 @@ object GraphOps {
       maxRounds: Int = SpecColoringRoundCap,
       driverSolveLimit: Long = DriverSolveEdgeLimit): DataFrame = {
     import spark.implicits._
-    val e0 = edges.filter(col("src") =!= col("dst"))
-      .select(col("src").cast("long"), col("dst").cast("long"))
-    val und = symmetrize(e0).distinct().persist()
-    // gate + materializes the persist
-    val edgeCount = lcgDomainCount(und, "speculativeColoring")
+    val (und, edgeCount) = lcgUndirected(edges, "speculativeColoring")
     if (edgeCount <= driverSolveLimit) {
-      val arr = und.rdd.map(r => (r.getLong(0), r.getLong(1))).collect()
-      und.unpersist()
-      val adj = arr.groupBy(_._1).map { case (v, es) => v -> es.map(_._2) }
+      val adj = adjacency(und)
       val color = scala.collection.mutable.LongMap.empty[Int]
       val out = Seq.newBuilder[(Long, Int, Int)]
       var un = adj.keySet
@@ -1938,12 +1944,11 @@ object GraphOps {
         s"speculative coloring did not converge within $maxRounds rounds")
       return out.result().toDF("v", "color", "round")
     }
-    // committed state = flat union of per-round checkpointed leaves (the
-    // jonesPlassmannColoring discipline — consumers re-execute a union of
-    // materialized blocks, never a nested lineage)
-    val empty = Seq.empty[(Long, Int)].toDF("v", "color")
-    var newlyFrames = List.empty[(Int, DataFrame)]
-    def committed: DataFrame = (empty :: newlyFrames.map(_._2)).reduce(_ union _)
+    // committed state = a [[Waves]] union of per-round checkpointed leaves,
+    // the commit round a literal over each (the jonesPlassmannColoring
+    // discipline — consumers re-execute a union of materialized blocks,
+    // never a nested lineage, and the mex join prunes the literal)
+    val committed = new Waves(spark, "v LONG, color INT, round INT")
     var (un, unCount) = checkpointCount(und.select(col("src").as("v")).distinct())
     var r = 0
     while (unCount > 0 && r < maxRounds) {
@@ -1959,7 +1964,7 @@ object GraphOps {
       else {
         val masks = und
           .join(un.select(col("v").as("uv")), col("src") === col("uv"), "left_semi")
-          .join(committed.select(col("v").as("cv"), col("color").as("ncolor")),
+          .join(committed.all.select(col("v").as("cv"), col("color").as("ncolor")),
             col("dst") === col("cv"))
           .groupBy(col("src").as("mv"))
           .agg(mexAggExpr.as("mex"))
@@ -1974,8 +1979,8 @@ object GraphOps {
         .join(tent.select(col("v").as("dst"), col("color").as("cb")), Seq("dst"))
         .filter(col("ca") === col("cb") && lcgPriCol(col("src")) > lcgPriCol(col("dst")))
         .select(col("src").as("v")).distinct())
-      val newly = tent.join(losers, Seq("v"), "left_anti").localCheckpoint(true)
-      newlyFrames ::= r -> newly
+      committed.add(tent.join(losers, Seq("v"), "left_anti").localCheckpoint(true)
+        .select(col("v"), col("color"), lit(r).as("round")))
       un = losers
       unCount = loserCount
     }
@@ -1983,9 +1988,7 @@ object GraphOps {
       s"speculative coloring did not converge within $maxRounds rounds" +
         s" ($unCount vertices still uncolored)")
     und.unpersist()
-    val emptyR = Seq.empty[(Long, Int, Int)].toDF("v", "color", "round")
-    (emptyR :: newlyFrames.map { case (rr, df) =>
-      df.select(col("v"), col("color"), lit(rr).as("round")) }).reduce(_ union _)
+    committed.all
   }
 
   /** INCREMENTAL connected-components maintenance over INSERT-only edge
@@ -2160,8 +2163,9 @@ object GraphOps {
     * SOURCE RULE (`allVertices`). A vertex with no in-edge in the new
     * graph is a source at 0, and no proposal ever reaches it, so sources
     * self-seed. Only two kinds of vertex can be a source without a valid
-    * label: an unsettled one, and an inserted endpoint that has no
-    * settled label (a new vertex); every other vertex keeps its label.
+    * label: an unsettled one, and an inserted edge's tail that has no
+    * settled label (a new vertex; an inserted head has the inserted edge
+    * as its in-edge); every other vertex keeps its label.
     * UNIVERSE RULE (`allVertices`, delete path). A settled vertex whose
     * every edge was deleted keeps its old label, so the output is
     * restricted to the new snapshot's edge-defined vertex set. The
@@ -2201,9 +2205,8 @@ object GraphOps {
       .select(col("dst").as("v"), (col("sl") + col("w")).as("label"))
     val boundary = unsettled.map(u =>
       proposals(e.join(u.select(col("v").as("dst")), Seq("dst"), "left_semi")))
-    val sources = if (!t.allVertices) None else Some((unsettled.toSeq ++ Seq(
-        ins.select(col("src").as("v")), ins.select(col("dst").as("v"))))
-      .reduce(_ union _).distinct()
+    val sources = if (!t.allVertices) None else Some((unsettled.toSeq :+
+        ins.select(col("src").as("v"))).reduce(_ union _).distinct()
       .join(base.select("v"), Seq("v"), "left_anti")
       .join(e.select(col("dst").as("v")).distinct(), Seq("v"), "left_anti")
       .select(col("v"), lit(0L).as("label")))
@@ -2357,7 +2360,7 @@ object GraphOps {
         f"unsettled=${unsettled.size} t=${(System.nanoTime() - t0) / 1e9}%.2fs")
       return ckpt(unsettled.toSeq.toDF("v"))
     }
-    val unsettled = new Waves(spark, "v")
+    val unsettled = new Waves(spark, "v LONG")
     // Frontiers are CASCADE-sized (hundreds of rows at sf0.1, frontier ∝
     // delta never graph) but were checkpointed at cluster parallelism —
     // making every later wave's unsettled union drag 32 near-empty
@@ -2702,7 +2705,7 @@ object GraphOps {
       out(w).groupBy(col("src").as("v")).agg(count(lit(1)).as("d"))
     val (insEnds, _) = g.count(ends(insU).join(coreIds, Seq("v"), "left_anti"))
     var (frontier, fn) = g.count(degFull(insEnds).filter(col("d") >= k).select("v"))
-    val region = new Waves(spark, "v")
+    val region = new Waves(spark, "v LONG")
     region.add(frontier)
     var waves = 0
     while (fn > 0 && waves < maxWaves) {
@@ -2743,7 +2746,7 @@ object GraphOps {
 
     // ---- delete side: eviction cascade over core ∪ joiners
     val kBase = coreIds.union(joiners).localCheckpoint(true)
-    val evictions = new Waves(spark, "v")
+    val evictions = new Waves(spark, "v LONG")
     // the out-edges of `w` landing in `base`, as (v = dst, src, dst):
     // neighbor rows via one gated probe, membership via one `base` scan
     // against the gated neighbor rows — `base` is never shuffled
@@ -3035,7 +3038,7 @@ object GraphOps {
       triSupport(g.gate(w), sym2).filter(col("support") >= k - 2),
       Seq("a", "b"), "left_semi")
     var (frontier, fn) = g.count(fullOk(seed0))
-    val region = new Waves(spark, "a", "b")
+    val region = new Waves(spark, "a LONG, b LONG")
     region.add(frontier)
     var waves = 0
     while (fn > 0 && waves < maxWaves) {
@@ -3068,7 +3071,7 @@ object GraphOps {
     val (kBase, _) = g.count(coreE.join(g.gate(delE), Seq("a", "b"), "left_anti")
       .unionByName(joiners))
     val kBaseSym = symmetrize(kBase, "a", "b").localCheckpoint(true)
-    val evictions = new Waves(spark, "a", "b")
+    val evictions = new Waves(spark, "a LONG, b LONG")
     // wave 0: surviving co-triangle edges (in the OLD truss) of deleted
     // truss edges — the triangles the deletion destroyed
     val (delCore, _) = g.count(delE.join(coreE, Seq("a", "b"), "left_semi"))

@@ -1091,8 +1091,10 @@ class GraphSpec extends SparkSpec {
     // The barrier count of the six BFS-level, SSSP and DAG-layer
     // maintainers on the delete-aware diffs above: each call and the
     // collect of its result. The insert-only maintainers run on
-    // v1 ∪ inserted and must pay nothing for the delete machinery; their
-    // counts are the same as before the shared skeleton. The delete twins
+    // v1 ∪ inserted and must pay nothing for the delete machinery; BFS
+    // and SSSP run as many jobs as before the shared skeleton. The DAG
+    // source seed reads only the inserted tails: the inserted edge gives
+    // each inserted head an in-edge. The delete twins
     // run on both cascade paths. Before the shared skeleton they ran
     // (33, 35, 51) jobs on the driver path and (54, 53–54, 71) forced to
     // BSP: each spelled its own per-leg seed aggregates, checkpointed its
@@ -1117,7 +1119,7 @@ class GraphSpec extends SparkSpec {
         cascadeDriverLimit = limit)),
       jobs(GraphOps.incrementalDagLayersDelete(spark, d2, dPrev, dIns, dDel,
         cascadeDriverLimit = limit)))
-    assert(ins == ((18, 7, 23)),
+    assert(ins == ((18, 7, 19)),
       "Spark jobs (incrementalBfsLevels, incrementalSssp, incrementalDagLayers)")
     assert(del(GraphOps.DriverSolveEdgeLimit) == ((31, 31, 50)),
       "Spark jobs of the delete twins (BFS, SSSP, DAG), driver cascade")
@@ -1467,6 +1469,27 @@ class GraphSpec extends SparkSpec {
     assert(mis == greedy.toSet)
   }
 
+  test("MIS past the wave collapse: a 15-round path, gate == BSP == sequential greedy") {
+    import spark.implicits._
+    def pri(v: Long) = (v * 1103515245L + 12345L) % 2147483648L
+    // 30 vertices chained in increasing priority: each round selects only
+    // the path's current head and removes it with its successor, so the
+    // BSP loop runs 15 rounds - more legs than the member union holds
+    // before it collapses into one checkpoint, fewer than MisRoundCap
+    val chain = (0L until 30L).sortBy(pri)
+    val e = chain.zip(chain.tail).toDF("src", "dst")
+    val gate = GraphOps.maximalIndependentSet(spark, e).collect()
+      .map(r => r.getLong(0) -> r.getInt(1)).toMap
+    val bsp = GraphOps.maximalIndependentSet(spark, e, driverSolveLimit = 0L)
+      .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+    assert(bsp == gate, "driver simulation and BSP loop replay identical rounds")
+    assert(bsp.values.max == 15 && 15 < GraphOps.MisRoundCap)
+    // sequential greedy in priority order: every other chain vertex, and
+    // the k-th member joins in round k
+    assert(bsp == chain.indices.filter(_ % 2 == 0)
+      .map(i => chain(i) -> (i / 2 + 1)).toMap)
+  }
+
   test("JP coloring: proper, color-bounded, gate == BSP, equals sequential greedy") {
     import spark.implicits._
     def pri(v: Long) = (v * 1103515245L + 12345L) % 2147483648L
@@ -1586,34 +1609,108 @@ class GraphSpec extends SparkSpec {
     for ((u, v) <- und) assert(gate(u)._1 != gate(v)._1, s"edge $u-$v monochrome")
   }
 
-  test("delete-aware MIS/coloring maintenance == full recompute (mixed diff, vanish)") {
+  /** The undirected diff `(base, new, inserted, deleted)` of the
+    * delete-aware MIS/coloring maintainer tests. base: a 6-cycle + chord
+    * + pendant pair (20,21). new: delete the chord and the pendant pair
+    * (20,21 VANISH), insert (2,5) and a fresh pendant (4,30). */
+  private def symDelDiff = {
     import spark.implicits._
     def df(e: Seq[(Long, Long)]) = e.toDF("src", "dst")
-    // base: a 6-cycle + chord + pendant pair (20,21)
-    val base = Seq((0L, 1L), (1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (5L, 0L),
-      (0L, 3L), (20L, 21L))
-    // new: delete the chord and the pendant pair (20,21 VANISH),
-    // insert (2,5) and a fresh pendant (4,30)
-    val newE = Seq((0L, 1L), (1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (5L, 0L),
-      (2L, 5L), (4L, 30L))
-    val ins = Seq((2L, 5L), (4L, 30L))
-    val del = Seq((0L, 3L), (20L, 21L))
-    val prevMis = GraphOps.maximalIndependentSet(spark, df(base))
-    val prevCol = GraphOps.jonesPlassmannColoring(spark, df(base))
+    (df(Seq((0L, 1L), (1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (5L, 0L),
+        (0L, 3L), (20L, 21L))),
+      df(Seq((0L, 1L), (1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (5L, 0L),
+        (2L, 5L), (4L, 30L))),
+      df(Seq((2L, 5L), (4L, 30L))), df(Seq((0L, 3L), (20L, 21L))))
+  }
+
+  test("delete-aware MIS/coloring maintenance == full recompute (mixed diff, vanish)") {
+    val (base, newE, ins, del) = symDelDiff
+    val prevMis = GraphOps.maximalIndependentSet(spark, base)
+    val prevCol = GraphOps.jonesPlassmannColoring(spark, base)
       .select(col("v"), col("color"))
     val misInc = GraphOps.incrementalMaximalIndependentSetDelete(
-      spark, df(newE), df(base), prevMis, df(ins), df(del))
+      spark, newE, base, prevMis, ins, del)
       .collect().map(_.getLong(0)).toSet
-    val misFull = GraphOps.maximalIndependentSet(spark, df(newE))
+    val misFull = GraphOps.maximalIndependentSet(spark, newE)
       .collect().map(_.getLong(0)).toSet
     assert(misInc == misFull, s"MIS maintenance diverges: $misInc vs $misFull")
     assert(!misInc.contains(20L) && !misInc.contains(21L), "vanished pair leaked")
     val colInc = GraphOps.incrementalColoringDelete(
-      spark, df(newE), df(base), prevCol, df(ins), df(del))
+      spark, newE, base, prevCol, ins, del)
       .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-    val colFull = GraphOps.jonesPlassmannColoring(spark, df(newE))
+    val colFull = GraphOps.jonesPlassmannColoring(spark, newE)
       .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
     assert(colInc == colFull, s"coloring maintenance diverges: $colInc vs $colFull")
+  }
+
+  /** An insert `(base, new, inserted)` whose hp-cone grows one vertex per
+    * wave for 28 waves: 30 vertices chained in increasing priority, and
+    * the inserted edge joins the chain's first two. Its later-deciding
+    * endpoint waits on the new first vertex, and every later chain vertex
+    * waits on the one before it. */
+  private def coneChain = {
+    import spark.implicits._
+    val chain = (0L until 30L).sortBy(GraphOps.lcgPri)
+    val all = chain.zip(chain.tail)
+    (all.tail.toDF("src", "dst"), all.toDF("src", "dst"), all.take(1).toDF("src", "dst"))
+  }
+
+  test("MIS/coloring maintenance over a cone past the wave collapse == full recompute") {
+    val (base, newE, ins) = coneChain
+    val prevCol = GraphOps.jonesPlassmannColoring(spark, base)
+      .select(col("v"), col("color"))
+    val mis = GraphOps.incrementalMaximalIndependentSet(spark, newE, base,
+      GraphOps.maximalIndependentSet(spark, base), ins).collect().map(_.getLong(0)).toSet
+    assert(mis == GraphOps.maximalIndependentSet(spark, newE).collect()
+      .map(_.getLong(0)).toSet)
+    val colors = GraphOps.incrementalColoring(spark, newE, base, prevCol, ins)
+      .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+    assert(colors == GraphOps.jonesPlassmannColoring(spark, newE).collect()
+      .map(r => r.getLong(0) -> r.getInt(1)).toMap)
+  }
+
+  test("symmetry-breaking loops run a pinned number of Spark jobs per call") {
+    import spark.implicits._
+    // The barrier count of the MIS, Jones-Plassmann and speculative BSP
+    // loops on the JP test graph, and of the delete-aware MIS and
+    // coloring maintainers on the diff above: each call and the collect
+    // of its result. On the delete-aware diff the maintainers' cone closes
+    // at its seeds; its hp-edges come from the persisted edge set, whose
+    // shuffle partitions AQE does not coalesce, so the gather's
+    // limit-collect scans them in two jobs. On the chained cone each of
+    // the 28 waves is one checkpoint-and-count into the cone's wave union.
+    val e = Seq((0L, 1L), (1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (5L, 0L),
+      (0L, 3L), (7L, 0L), (7L, 7L), (2L, 5L)).toDF("src", "dst")
+    val (base, newE, ins, del) = symDelDiff
+    val prevMis = GraphOps.maximalIndependentSet(spark, base)
+    val prevCol = GraphOps.jonesPlassmannColoring(spark, base)
+      .select(col("v"), col("color"))
+    def jobs(df: => org.apache.spark.sql.DataFrame) = sparkJobs(df.collect())._2
+    val loops = (
+      jobs(GraphOps.maximalIndependentSet(spark, e, driverSolveLimit = 0L)),
+      jobs(GraphOps.jonesPlassmannColoring(spark, e, driverSolveLimit = 0L,
+        tailSolveVertices = 0L)),
+      jobs(GraphOps.jonesPlassmannColoring(spark, e, driverSolveLimit = 0L,
+        tailSolveVertices = 3L)),
+      jobs(GraphOps.speculativeColoring(spark, e, driverSolveLimit = 0L)))
+    assert(loops == ((15, 21, 21, 14)), "Spark jobs (MIS, JP, JP with a " +
+      "3-vertex tail finish, speculative coloring), forced BSP")
+    val cones = (
+      jobs(GraphOps.incrementalMaximalIndependentSetDelete(
+        spark, newE, base, prevMis, ins, del)),
+      jobs(GraphOps.incrementalColoringDelete(
+        spark, newE, base, prevCol, ins, del)))
+    assert(cones == ((25, 25)),
+      "Spark jobs (incrementalMaximalIndependentSetDelete, incrementalColoringDelete)")
+    val (cBase, cNew, cIns) = coneChain
+    val cMis = GraphOps.maximalIndependentSet(spark, cBase)
+    val cCol = GraphOps.jonesPlassmannColoring(spark, cBase)
+      .select(col("v"), col("color"))
+    val grown = (
+      jobs(GraphOps.incrementalMaximalIndependentSet(spark, cNew, cBase, cMis, cIns)),
+      jobs(GraphOps.incrementalColoring(spark, cNew, cBase, cCol, cIns)))
+    assert(grown == ((138, 138)), "Spark jobs (incrementalMaximalIndependentSet, " +
+      "incrementalColoring) over the 28-wave chained cone")
   }
 
   test("cone pair gate: a 12k-degree hub inside a 2-vertex cone routes to the total fallback") {
