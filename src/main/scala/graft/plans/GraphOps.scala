@@ -134,7 +134,9 @@ object GraphOps {
     * the DDL `schema` (e.g. `"v LONG, color INT, round INT"`) and its plan
     * depth bounded: once it has 12 legs, [[all]] collapses them into one
     * single-partition checkpoint, so a deep loop carries O(1) legs rather
-    * than O(waves), at one tiny job per dozen waves. Legs union in the
+    * than O(waves), at one shuffle into one partition per dozen waves
+    * (delta-sized for the cascades; graph-sized for the colored set of
+    * [[jonesPlassmannColoring]], which measures it). Legs union in the
     * order they were added; with none, [[all]] is an empty frame. */
   private final class Waves(spark: SparkSession, schema: String) {
     private var legs = Vector.empty[DataFrame]
@@ -1262,29 +1264,6 @@ object GraphOps {
   /** Column form of [[lcgPri]]: the same arithmetic, evaluated in the plan. */
   private[graft] def lcgPriCol(c: Column): Column = (c * 1103515245L + 12345L) % 2147483648L
 
-  /** Loud domain gate for every LCG-priority consumer: p(v) =
-    * (v·1103515245 + 12345) mod 2³¹ is injective ONLY on 0 ≤ v < 2³¹
-    * (its full period). Outside that domain two ADJACENT vertices can
-    * tie, and the greedy-by-priority operators diverge silently —
-    * [[maximalIndependentSet]] would at least fail its convergence
-    * require, but [[jonesPlassmannColoring]] would emit an improper
-    * coloring (a tied pair lands in neither hp direction, both become
-    * ready in round 1, both can take the same mex color) and the
-    * incremental cone replays' sortBy(lcgPri) order becomes ambiguous.
-    * `und` is the symmetrized edge frame, so `src` covers every vertex.
-    * The check shares ONE aggregate action with the caller's set-up size
-    * (`size`, the edge count by default) and returns that size. */
-  private def lcgDomainCount(und: DataFrame, op: String,
-      size: Column = count(lit(1))): Long = {
-    val r = und.agg(size, min(col("src")), max(col("src"))).collect()(0)
-    if (!r.isNullAt(1))
-      require(r.getLong(1) >= 0L && r.getLong(2) < 2147483648L,
-        s"$op: vertex ids span [${r.getLong(1)}, ${r.getLong(2)}], outside " +
-          "the LCG priority's injective domain [0, 2^31) - adjacent " +
-          "priorities could tie and greedy-by-priority order is undefined")
-    r.getLong(0)
-  }
-
   /** `edges` as LONG `(src, dst)` with self-loops dropped — the edge set
     * of every LCG-priority operator (a self-looped vertex would be its
     * own neighbor) and of the snapshots their maintainers compare. */
@@ -1293,13 +1272,36 @@ object GraphOps {
       .select(col("src").cast("long"), col("dst").cast("long"))
 
   /** The prologue of every LCG-priority operator: the [[loopFree]] edges,
-    * symmetrized into a persisted set `und`, and ONE aggregate action
-    * over it that runs [[lcgDomainCount]] for `op`, returns `size` and
-    * materializes the persist. The caller unpersists `und`. */
+    * symmetrized into a distinct set `und` held by `keep`, and ONE
+    * aggregate action over it that fills `und`, returns `size` (the edge
+    * count by default) and runs the loud domain gate. `keep` persists by
+    * default (the caller unpersists `und`); the hp-cone passes a lazy
+    * local checkpoint, whose partitions AQE coalesces where a cached
+    * plan keeps `spark.sql.shuffle.partitions` of them.
+    *
+    * The gate: p(v) = (v·1103515245 + 12345) mod 2³¹ is injective ONLY
+    * on 0 ≤ v < 2³¹ (its full period). Outside that domain two ADJACENT
+    * vertices can tie, and the greedy-by-priority operators diverge
+    * silently — [[maximalIndependentSet]] would at least fail its
+    * convergence require, but [[jonesPlassmannColoring]] would emit an
+    * improper coloring (a tied pair lands in neither hp direction, both
+    * become ready in round 1, both can take the same mex color) and the
+    * incremental cone replays' sortBy(lcgPri) order becomes ambiguous.
+    * `und` is symmetrized, so `src` covers every vertex. A failed gate
+    * unpersists `und` before it throws. */
   private def lcgUndirected(edges: DataFrame, op: String,
-      size: Column = count(lit(1))): (DataFrame, Long) = {
-    val und = symmetrize(loopFree(edges)).distinct().persist()
-    (und, lcgDomainCount(und, op, size))
+      size: Column = count(lit(1)),
+      keep: DataFrame => DataFrame = _.persist()): (DataFrame, Long) = {
+    val und = keep(symmetrize(loopFree(edges)).distinct())
+    val r = und.agg(size, min(col("src")), max(col("src"))).collect()(0)
+    val inDomain = r.isNullAt(1) ||
+      (r.getLong(1) >= 0L && r.getLong(2) < 2147483648L)
+    if (!inDomain) und.unpersist()
+    require(inDomain,
+      s"$op: vertex ids span [${r.getLong(1)}, ${r.getLong(2)}], outside " +
+        "the LCG priority's injective domain [0, 2^31) - adjacent " +
+        "priorities could tie and greedy-by-priority order is undefined")
+    (und, r.getLong(0))
   }
 
   /** The driver-side adjacency of a persisted [[lcgUndirected]] frame —
@@ -1431,93 +1433,94 @@ object GraphOps {
       coneGatherLimit: Long, coneGatherPairLimit: Long,
       maxConeFraction: Double): Option[HpCone] = {
     import spark.implicits._
+    // a lazy local checkpoint, filled by the domain gate's aggregate: AQE
+    // coalesces it (one partition on a small graph), so the per-wave
+    // joins and the pair-gated gather below scan few partitions
     val (und, totalV) = lcgUndirected(newEdges, "hpDependencyCone",
-      countDistinct(col("src")))
-    try {
-      // dependency edges on the NEW graph: src's decision waits on dst
-      val hp = hpEdges(und)
-      // seeds: the higher-priority-VALUE (= later-deciding) endpoint of
-      // each inserted edge — the only endpoint whose input set changed —
-      // plus any vertex absent from the previous snapshot (SAME
-      // normalization as the full operators: a vertex that existed only
-      // via a self-loop was OUTSIDE the previous universe and is new)
-      val insSeeds = inserted.filter(col("src") =!= col("dst"))
-        .select(when(lcgPriCol(col("src")) > lcgPriCol(col("dst")), col("src"))
-          .otherwise(col("dst")).cast("long").as("v"))
-      val newVerts = und.select(col("src").as("v")).distinct()
-        .join(edgeUniverse(prevEdges), Seq("v"), "left_anti")
-      var (frontier, coneCount) =
-        checkpointCount(insSeeds.unionByName(newVerts).distinct())
-      val cone = new Waves(spark, "v LONG")
-      cone.add(frontier)
-      // the limit must bound the SEED set too: a huge delta whose cone
-      // never grows past its seeds would otherwise reach the driver gather
-      // with no size check at all
-      if (coneCount > coneGatherLimit) {
-        trace(s"hpDependencyCone: $coneCount seeds exceed the " +
-          s"$coneGatherLimit-vertex gather limit - falling back to the full operator")
-        return None
-      }
-      var grew = coneCount > 0
-      var r = 0
-      while (grew && r < maxRounds) {
-        r += 1
-        val (next, n) = checkpointCount(hp
-          .join(frontier.select(col("v").as("fv")), col("dst") === col("fv"), "left_semi")
-          .select(col("src").as("v")).distinct()
-          .join(cone.all, Seq("v"), "left_anti"))
-        if (n == 0) grew = false
-        else {
-          cone.add(next)
-          coneCount += n
-          frontier = next
-          if (coneCount > coneGatherLimit) {
-            trace(s"hpDependencyCone: cone ($coneCount vertices) exceeded the " +
-              s"$coneGatherLimit-vertex gather limit - falling back to the full operator")
-            return None
-          }
+      countDistinct(col("src")), _.localCheckpoint(eager = false))
+    // dependency edges on the NEW graph: src's decision waits on dst
+    val hp = hpEdges(und)
+    // seeds: the higher-priority-VALUE (= later-deciding) endpoint of
+    // each inserted edge — the only endpoint whose input set changed —
+    // plus any vertex absent from the previous snapshot (SAME
+    // normalization as the full operators: a vertex that existed only
+    // via a self-loop was OUTSIDE the previous universe and is new)
+    val insSeeds = inserted.filter(col("src") =!= col("dst"))
+      .select(when(lcgPriCol(col("src")) > lcgPriCol(col("dst")), col("src"))
+        .otherwise(col("dst")).cast("long").as("v"))
+    val newVerts = und.select(col("src").as("v")).distinct()
+      .join(edgeUniverse(prevEdges), Seq("v"), "left_anti")
+    var (frontier, coneCount) =
+      checkpointCount(insSeeds.unionByName(newVerts).distinct())
+    val cone = new Waves(spark, "v LONG")
+    cone.add(frontier)
+    // the limit must bound the SEED set too: a huge delta whose cone
+    // never grows past its seeds would otherwise reach the driver gather
+    // with no size check at all
+    if (coneCount > coneGatherLimit) {
+      trace(s"hpDependencyCone: $coneCount seeds exceed the " +
+        s"$coneGatherLimit-vertex gather limit - falling back to the full operator")
+      return None
+    }
+    var grew = coneCount > 0
+    var r = 0
+    while (grew && r < maxRounds) {
+      r += 1
+      val (next, n) = checkpointCount(hp
+        .join(frontier.select(col("v").as("fv")), col("dst") === col("fv"), "left_semi")
+        .select(col("src").as("v")).distinct()
+        .join(cone.all, Seq("v"), "left_anti"))
+      if (n == 0) grew = false
+      else {
+        cone.add(next)
+        coneCount += n
+        frontier = next
+        if (coneCount > coneGatherLimit) {
+          trace(s"hpDependencyCone: cone ($coneCount vertices) exceeded the " +
+            s"$coneGatherLimit-vertex gather limit - falling back to the full operator")
+          return None
         }
       }
-      if (grew) {
-        trace(s"hpDependencyCone: cone did not close within $maxRounds waves" +
-          " - falling back to the full operator")
-        return None
-      }
-      require(coneCount <= totalV * maxConeFraction,
-        s"cone covers $coneCount of $totalV vertices - the delta no longer" +
-          " demonstrates scoped maintenance")
-      val coneDf = cone.all
-      if (coneCount == 0) return Some(HpCone(coneDf, Array.empty, Map.empty, coneDf))
-      // gather the cone subproblem: its full hp-adjacency + the boundary
-      // vertex set. Cone VERTICES are bounded above; the PAIR gate bounds
-      // what actually reaches the driver (cone x degree — a single hub
-      // inside the cone can carry its whole degree here).
-      // ONE gather job does gate + gather (r12 VERDICT #6: the separate
-      // checkpoint + count pair gate showed up as the maintainer's cost
-      // band): limit(pairLimit+1).collect() stops streaming rows to the
-      // driver the moment the budget is exceeded — the driver never holds
-      // more than pairLimit+1 pairs, exactly the bound the old count gate
-      // enforced, without materializing coneHp twice. The boundary set is
-      // then pure driver arithmetic on the already-gathered pairs (its old
-      // spelling was a distributed distinct + anti-join over coneHp).
-      val gathered = hp
-        .join(coneDf.select(col("v").as("cv")), col("src") === col("cv"), "left_semi")
-        .limit(coneGatherPairLimit.toInt + 1).collect()
-      if (gathered.length > coneGatherPairLimit) {
-        trace(s"hpDependencyCone: cone hp-adjacency (>$coneGatherPairLimit " +
-          s"pairs over $coneCount vertices) exceeded the gather limit - " +
-          "falling back to the full operator")
-        return None
-      }
-      val pairs = gathered.map(x => (x.getLong(0), x.getLong(1)))
-      val coneVerts = coneDf.rdd.map(_.getLong(0)).collect()
-      val coneSet = new java.util.HashSet[Long](coneVerts.length * 2)
-      coneVerts.foreach(coneSet.add)
-      val boundaryDf = pairs.iterator.map(_._2)
-        .filter(d => !coneSet.contains(d)).toSeq.distinct.toDF("v")
-      val hpAdj = pairs.groupBy(_._1).map { case (v, es) => v -> es.map(_._2) }
-      Some(HpCone(coneDf, coneVerts, hpAdj, boundaryDf))
-    } finally und.unpersist()
+    }
+    if (grew) {
+      trace(s"hpDependencyCone: cone did not close within $maxRounds waves" +
+        " - falling back to the full operator")
+      return None
+    }
+    require(coneCount <= totalV * maxConeFraction,
+      s"cone covers $coneCount of $totalV vertices - the delta no longer" +
+        " demonstrates scoped maintenance")
+    val coneDf = cone.all
+    if (coneCount == 0) return Some(HpCone(coneDf, Array.empty, Map.empty, coneDf))
+    // gather the cone subproblem: its full hp-adjacency + the boundary
+    // vertex set. Cone VERTICES are bounded above; the PAIR gate bounds
+    // what actually reaches the driver (cone x degree — a single hub
+    // inside the cone can carry its whole degree here).
+    // ONE gather job does gate + gather (r12 VERDICT #6: the separate
+    // checkpoint + count pair gate showed up as the maintainer's cost
+    // band): limit(pairLimit+1).collect() stops streaming rows to the
+    // driver the moment the budget is exceeded — the driver never holds
+    // more than pairLimit+1 pairs, exactly the bound the old count gate
+    // enforced, without materializing coneHp twice. The boundary set is
+    // then pure driver arithmetic on the already-gathered pairs (its old
+    // spelling was a distributed distinct + anti-join over coneHp).
+    val gathered = hp
+      .join(coneDf.select(col("v").as("cv")), col("src") === col("cv"), "left_semi")
+      .limit(coneGatherPairLimit.toInt + 1).collect()
+    if (gathered.length > coneGatherPairLimit) {
+      trace(s"hpDependencyCone: cone hp-adjacency (>$coneGatherPairLimit " +
+        s"pairs over $coneCount vertices) exceeded the gather limit - " +
+        "falling back to the full operator")
+      return None
+    }
+    val pairs = gathered.map(x => (x.getLong(0), x.getLong(1)))
+    val coneVerts = coneDf.rdd.map(_.getLong(0)).collect()
+    val coneSet = new java.util.HashSet[Long](coneVerts.length * 2)
+    coneVerts.foreach(coneSet.add)
+    val boundaryDf = pairs.iterator.map(_._2)
+      .filter(d => !coneSet.contains(d)).toSeq.distinct.toDF("v")
+    val hpAdj = pairs.groupBy(_._1).map { case (v, es) => v -> es.map(_._2) }
+    Some(HpCone(coneDf, coneVerts, hpAdj, boundaryDf))
   }
 
   /** INCREMENTAL MIS maintenance over INSERT-only edge deltas — the
@@ -1788,9 +1791,14 @@ object GraphOps {
     // leaves (the multiBrandesDeltas discipline): any consumer re-executes
     // only a union of materialized blocks, never a nested join/agg lineage
     // — per-round cost is TWO materializations (newly, un; the termination
-    // count rides un's checkpoint job), measured 2.7x faster than
-    // checkpointing the accumulated frame (and 2.6x faster than checkpoint
-    // cadence, whose nested mex recomputation dominated).
+    // count rides un's checkpoint job). Re-checkpointing the accumulated
+    // frame EVERY round measured 2.7x slower, and a checkpoint cadence
+    // over un-checkpointed rounds 2.6x slower (its nested mex
+    // recomputation dominated). The Waves collapse is neither: one
+    // single-partition checkpoint of already-materialized legs per 12
+    // rounds — at sf1 (20 distributed rounds, one collapse of ~131k rows)
+    // 274 jobs against the never-collapsed union's 271, wall time within
+    // run-to-run noise at local[4].
     // The round number rides each leaf as a literal OVER its checkpoint,
     // never inside the per-round plan: the mex join reads only
     // (v, color), so column pruning drops the literal — an embedded round

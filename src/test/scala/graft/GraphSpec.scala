@@ -1675,10 +1675,10 @@ class GraphSpec extends SparkSpec {
     // loops on the JP test graph, and of the delete-aware MIS and
     // coloring maintainers on the diff above: each call and the collect
     // of its result. On the delete-aware diff the maintainers' cone closes
-    // at its seeds; its hp-edges come from the persisted edge set, whose
-    // shuffle partitions AQE does not coalesce, so the gather's
-    // limit-collect scans them in two jobs. On the chained cone each of
-    // the 28 waves is one checkpoint-and-count into the cone's wave union.
+    // at its seeds; its edge set is a lazy local checkpoint that the
+    // domain gate's aggregate fills, so it costs no job of its own. On the
+    // chained cone each of the 28 waves is one checkpoint-and-count into
+    // the cone's wave union.
     val e = Seq((0L, 1L), (1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (5L, 0L),
       (0L, 3L), (7L, 0L), (7L, 7L), (2L, 5L)).toDF("src", "dst")
     val (base, newE, ins, del) = symDelDiff
@@ -1700,7 +1700,7 @@ class GraphSpec extends SparkSpec {
         spark, newE, base, prevMis, ins, del)),
       jobs(GraphOps.incrementalColoringDelete(
         spark, newE, base, prevCol, ins, del)))
-    assert(cones == ((25, 25)),
+    assert(cones == ((23, 23)),
       "Spark jobs (incrementalMaximalIndependentSetDelete, incrementalColoringDelete)")
     val (cBase, cNew, cIns) = coneChain
     val cMis = GraphOps.maximalIndependentSet(spark, cBase)
@@ -1709,8 +1709,32 @@ class GraphSpec extends SparkSpec {
     val grown = (
       jobs(GraphOps.incrementalMaximalIndependentSet(spark, cNew, cBase, cMis, cIns)),
       jobs(GraphOps.incrementalColoring(spark, cNew, cBase, cCol, cIns)))
-    assert(grown == ((138, 138)), "Spark jobs (incrementalMaximalIndependentSet, " +
+    assert(grown == ((136, 136)), "Spark jobs (incrementalMaximalIndependentSet, " +
       "incrementalColoring) over the 28-wave chained cone")
+  }
+
+  test("LCG domain gate: an id past 2^31 fails loudly and leaves no cached edge set") {
+    import spark.implicits._
+    // The MIS and coloring loops persist their symmetrized edge set before
+    // the gate's aggregate reads it; a failed gate must unpersist it. Local
+    // checkpoints (the cone's edge set) are not cache entries.
+    val sc = spark.sparkContext
+    def cached = sc.getPersistentRDDs.collect { case (id, r) if !r.isCheckpointed => id }.toSet
+    val bad = Seq((0L, 1L), (1L, 2147483648L)).toDF("src", "dst")
+    val ok = Seq((0L, 1L)).toDF("src", "dst")
+    val okMis = GraphOps.maximalIndependentSet(spark, ok)
+    val before = cached
+    val calls = Seq[(String, () => Any)](
+      "maximalIndependentSet" -> (() => GraphOps.maximalIndependentSet(spark, bad)),
+      "jonesPlassmannColoring" -> (() => GraphOps.jonesPlassmannColoring(spark, bad)),
+      "speculativeColoring" -> (() => GraphOps.speculativeColoring(spark, bad)),
+      "hpDependencyCone" -> (() =>
+        GraphOps.incrementalMaximalIndependentSet(spark, bad, ok, okMis, bad)))
+    for ((op, call) <- calls) {
+      val e = intercept[IllegalArgumentException](call())
+      assert(e.getMessage.contains(s"$op: vertex ids span [0, 2147483648]"), e.getMessage)
+    }
+    assert((cached -- before).isEmpty, "a failed domain gate left its edge set cached")
   }
 
   test("cone pair gate: a 12k-degree hub inside a 2-vertex cone routes to the total fallback") {
