@@ -1897,9 +1897,9 @@ object GraphQueries extends QueryModule {
     // identical recurrence; rounds after the fixpoint are no-ops and the
     // fixpoint itself is asserted in GraphSpec (the cascade needs 5 rounds
     // at sf0.1, 3 at sf0.01). Output = the core's
-    // vertices with their in-core degree. Scale shape: one symmetric edge
-    // list materialized once; each round is two semi-join prunes + one
-    // count shuffle on vertex id — the BSP peel, never a driver collect.
+    // vertices with their in-core degree. Scale shape: one vertex-partitioned
+    // adjacency built once; each round is a narrow survivor ⋈ adjacency and
+    // one message shuffle on vertex id — the BSP peel, never a driver collect.
     "q_graph_kcore" -> ((s, dir) =>
       GraphOps.kcorePeel(s, ringEdges(s, dir), kcoreK, kcoreRounds)
         .orderBy("v")),

@@ -1,8 +1,13 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.HashPartitioner
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, GraftFrames, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
+import org.apache.spark.storage.StorageLevel
+import scala.reflect.ClassTag
 
 /** Iterative graph computation on DataFrames.
   *
@@ -21,19 +26,33 @@ import org.apache.spark.sql.types.StructType
   *    of a deterministic traversal tree — the min-parent BFS tree — via a
   *    left-anti join (reachable ∖ parents).
   *
-  * Scale posture: frontiers and level sets stay distributed (no driver
-  * collect); lineage is cut with a local checkpoint every superstep so
-  * deep graphs don't blow up plan size (the known scale-killer for
-  * iterative DataFrame loops). The superstep's checkpoint and its BSP
-  * termination count (Pregel's active-vertex count) share ONE action,
-  * [[checkpointCount]]: the count fills the checkpoint as it runs, so a
-  * superstep pays for one action, not a materialization plus a separate
-  * counting query. That action is one job of its own; under AQE each
-  * shuffle map stage and each broadcast of the superstep frame is a
-  * further job, so a barrier costs several jobs (GraphSpec pins
-  * `bfsLevels` on the 30-vertex G6 at 32 jobs for 4 barriers and one
-  * checkpoint). On a real cluster, `localCheckpoint` would become
-  * `checkpoint` on reliable storage.
+  * Scale posture: frontiers, level sets and vertex states stay
+  * distributed (no driver collect past a loop's size gate), and every
+  * superstep ends in ONE barrier that cuts lineage with a local
+  * checkpoint and counts the loop's termination figure (Pregel's
+  * active-vertex count) in the same action. The supersteps come in two
+  * forms:
+  *
+  *  - DataFrame supersteps, [[checkpointCount]] barriers: the BFS, σ-BFS
+  *    and SSSP loops, DAG layers, CC, SCC, Borůvka, the k-truss peel,
+  *    Jones-Plassmann and speculative coloring, the hp-cone, and every
+  *    delta maintainer and cascade. Each round is a planned query whose
+  *    join [[gated]]/[[WaveGate]] picks from a count the loop holds; the
+  *    barrier action is one job, and under AQE each shuffle map stage and
+  *    each broadcast of the frame is a further job, so a barrier costs
+  *    several jobs (GraphSpec pins `bfsLevels` on the 30-vertex G6 at 32
+  *    jobs for 4 barriers and one checkpoint).
+  *  - RDD vertex-state supersteps, [[checkpointCountRdd]] barriers over a
+  *    [[VertexAdjacency]]: the forced-BSP MIS rounds of
+  *    [[maximalIndependentSet]] and the [[kcorePeel]] rounds. The static
+  *    adjacency is grouped once under one `HashPartitioner` and persisted,
+  *    the vertex state keeps that partitioner, so state ⋈ adjacency is
+  *    narrow and only the round's messages shuffle; nothing is re-planned
+  *    per round, and a round is ONE job (its message shuffles are stages
+  *    of it).
+  *
+  * On a real cluster, `localCheckpoint` would become `checkpoint` on
+  * reliable storage.
   */
 object GraphOps {
 
@@ -63,6 +82,67 @@ object GraphOps {
       where: Column = lit(true)): (DataFrame, Long) = {
     val c = df.localCheckpoint(eager = false)
     (c, c.filter(where).queryExecution.toRdd.count())
+  }
+
+  /** The RDD twin of [[checkpointCount]], the barrier of the
+    * [[VertexAdjacency]] supersteps: `rdd` is marked for a local
+    * checkpoint and the count of its elements matching `where` fills it,
+    * ONE job whose stages are the round's message shuffles. The
+    * checkpointed RDD keeps its partitioner, so the next round's joins
+    * against the adjacency stay narrow. */
+  private[graft] def checkpointCountRdd[T](rdd: RDD[T],
+      where: T => Boolean = (_: T) => true): (RDD[T], Long) = {
+    rdd.localCheckpoint()
+    (rdd, rdd.filter(where).count())
+  }
+
+  /** The static side of the RDD vertex-state superstep (Pregelix's
+    * vertex-partitioned store): each vertex's distinct neighbours, grouped
+    * once from the directed `pairs` (both directions of every undirected
+    * edge) under one `HashPartitioner` of `spark.sql.shuffle.partitions`
+    * parts, and persisted. A state `RDD[(Long, S)]` derived from [[init]]
+    * keeps [[part]] through `mapValues`, `filter`, [[receive]] and
+    * [[checkpointCountRdd]], so state ⋈ adjacency ([[join]]) is narrow
+    * and a superstep shuffles only its messages ([[send]]); nothing is
+    * planned per round. A loop's result leaves as a frame through
+    * `GraftFrames.sized`, so the planner can still broadcast it. The
+    * caller unpersists the adjacency on every exit. */
+  private[graft] final class VertexAdjacency(spark: SparkSession,
+      pairs: RDD[(Long, Long)]) {
+    val part = new HashPartitioner(spark.conf.get("spark.sql.shuffle.partitions").toInt)
+    val adj: RDD[(Long, Array[Long])] = pairs.groupByKey(part)
+      .mapValues(_.toArray.distinct).setName("VertexAdjacency")
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    /** A state over every vertex, from its neighbour array. */
+    def init[S](f: Array[Long] => S): RDD[(Long, S)] = adj.mapValues(f)
+    /** Each row of `rows` (a state; the adjacency in [[join]]) with the
+      * value `keyed` (the round's messages; the state) holds for its
+      * vertex, if any, partition by partition: a hash of `keyed`'s
+      * partition probed by `rows`' (a cogroup would buffer both sides per
+      * key). Both must be on [[part]] — that is what makes the pairing of
+      * partitions a join — and the result keeps `rows`' partitioner. */
+    def receive[A, B](rows: RDD[(Long, A)],
+        keyed: RDD[(Long, B)]): RDD[(Long, (A, Option[B]))] = {
+      require(rows.partitioner.contains(part) && keyed.partitioner.contains(part),
+        "a superstep frame lost the adjacency's partitioner")
+      rows.zipPartitions(keyed, preservesPartitioning = true) { (as, bs) =>
+        val m = scala.collection.mutable.LongMap.empty[B]
+        bs.foreach { case (v, b) => m(v) = b }
+        as.map { case (v, a) => (v, (a, m.get(v))) }
+      }
+    }
+    /** `state` ⋈ adjacency: every vertex of `state` with its neighbours. */
+    def join[S](state: RDD[(Long, S)]): RDD[(Long, (S, Array[Long]))] =
+      receive(adj, state).flatMap { case (v, (ns, s)) => s.map(x => (v, (x, ns))) }
+    /** The round's messages: each vertex `v` whose state `s` has
+      * `msg(v, s) = Some(m)` sends `m` to every neighbour, combined per
+      * receiver by `combine` (on [[part]]) — the superstep's one shuffle. */
+    def send[S, M: ClassTag](state: RDD[(Long, S)])(
+        msg: (Long, S) => Option[M])(combine: (M, M) => M): RDD[(Long, M)] =
+      join(state).flatMap { case (v, (s, ns)) =>
+        msg(v, s).fold(Iterator.empty[(Long, M)])(m => ns.iterator.map(u => (u, m)))
+      }.reduceByKey(part, combine)
+    def unpersist(): Unit = adj.unpersist(blocking = false)
   }
 
   /** Single-partition local checkpoint for delta-sized cascade frames
@@ -130,7 +210,7 @@ object GraphOps {
   }
 
   /** The union of the wave frames one loop accumulates (candidates,
-    * evictions, the unsettled set, MIS members, colored vertices), with
+    * evictions, the unsettled set, colored vertices, the hp-cone), with
     * the DDL `schema` (e.g. `"v LONG, color INT, round INT"`) and its plan
     * depth bounded: once it has 12 legs, [[all]] collapses them into one
     * single-partition checkpoint, so a deep loop carries O(1) legs rather
@@ -149,7 +229,8 @@ object GraphOps {
   }
 
   /** Peels `start` (`n0` rows) to a DETECTED fixpoint: `round` maps a
-    * survivor set to the next one and its row count, and the loop stops
+    * survivor set (a frame, or [[kcorePeel]]'s vertex-state RDD) to the
+    * next one and its row count, and the loop stops
     * after the first round whose count equals its input's. Survivor sets
     * only shrink, so equal counts are equal sets, and that no-op round
     * computes every survivor's figure (degree, support) within the
@@ -158,8 +239,8 @@ object GraphOps {
     * (21 wrong k-core degrees at sf1, r12). An empty start is already a
     * fixpoint. At most `cap` rounds run; a peel still shrinking there
     * throws `fail(last count)` rather than publish a non-fixpoint. */
-  private def peelToFixpoint(start: DataFrame, n0: Long, cap: Int,
-      fail: Long => String)(round: DataFrame => (DataFrame, Long)): DataFrame = {
+  private def peelToFixpoint[S](start: S, n0: Long, cap: Int,
+      fail: Long => String)(round: S => (S, Long)): S = {
     var (cur, n, prev, r) = (start, n0, if (n0 == 0) 0L else -1L, 0)
     while (n != prev && r < cap) {
       r += 1
@@ -1275,8 +1356,11 @@ object GraphOps {
     * symmetrized into a distinct set `und` held by `keep`, and ONE
     * aggregate action over it that fills `und`, returns `size` (the edge
     * count by default) and runs the loud domain gate. `keep` persists by
-    * default (the caller unpersists `und`); the hp-cone passes a lazy
-    * local checkpoint, whose partitions AQE coalesces where a cached
+    * default (the caller unpersists `und`): Jones-Plassmann and
+    * speculative coloring join it every round, while
+    * [[maximalIndependentSet]] reads it only to collect its driver
+    * adjacency or to build its [[VertexAdjacency]]. The hp-cone passes a
+    * lazy local checkpoint, whose partitions AQE coalesces where a cached
     * plan keeps `spark.sql.shuffle.partitions` of them.
     *
     * The gate: p(v) = (v·1103515245 + 12345) mod 2³¹ is injective ONLY
@@ -1336,12 +1420,19 @@ object GraphOps {
     *
     * Size-gated like [[connectedComponents]]: ≤`driverSolveLimit` edges
     * run an in-memory simulation of the SAME rounds; past the gate the
-    * BSP loop runs — per round one active-pruned neighbor-min join, one
-    * selection filter, one closed-neighborhood anti-join, all keyed on
-    * the vertex. Expected O(log n) rounds on bounded-degree graphs
-    * (Luby); `maxRounds` bounds both paths loudly, matching the oracle's
-    * fixed unroll. q_graph_mis benches the gate path, q_graph_mis_bsp
-    * forces this loop (the q_graph_cc_bsp discipline).
+    * BSP loop runs as RDD vertex-state supersteps over a
+    * [[VertexAdjacency]]. Each vertex's state is its round (0 while
+    * active, r once it joins in round r, −1 once a neighbor has), so the
+    * members' rounds need no accumulator. A round shuffles two messages —
+    * each active vertex's priority to its neighbors (combined by min),
+    * then a removal notice from each new member — and ends in one
+    * [[checkpointCountRdd]] barrier: one Spark job per round. Expected
+    * O(log n) rounds on bounded-degree graphs (Luby); `maxRounds` bounds
+    * both paths loudly, matching the oracle's fixed unroll, and the
+    * adjacency and `und` are unpersisted on every exit. Both paths return
+    * one schema, non-nullable `(v LONG, round INT)`. q_graph_mis benches
+    * the gate path, q_graph_mis_bsp forces this loop (the q_graph_cc_bsp
+    * discipline).
     */
   def maximalIndependentSet(spark: SparkSession, edges: DataFrame,
       maxRounds: Int = MisRoundCap,
@@ -1366,35 +1457,40 @@ object GraphOps {
       require(active.isEmpty, s"MIS did not converge within $maxRounds rounds")
       return out.result().toDF("v", "round")
     }
-    var (active, activeCount) = checkpointCount(und.select(col("src").as("v"))
-      .distinct().withColumn("p", lcgPriCol(col("v"))))
-    val members = new Waves(spark, "v LONG, round INT")
-    var r = 0
-    while (activeCount > 0 && r < maxRounds) {
-      r += 1
-      // min priority among ACTIVE neighbors of ACTIVE vertices
-      val nbrMin = und
-        .join(active.select(col("v").as("av")), col("src") === col("av"), "left_semi")
-        .join(active.select(col("v").as("dv"), col("p").as("dp")), col("dst") === col("dv"))
-        .groupBy(col("src").as("mv")).agg(min("dp").as("minp"))
-      // lazy: the round's one job (the active set's checkpoint-and-count
-      // below) fills it on the way
-      val sel = active.join(nbrMin, col("v") === col("mv"), "left")
-        .filter(col("p") < coalesce(col("minp"), lit(Long.MaxValue)))
-        .select("v").localCheckpoint(eager = false)
-      members.add(sel.select(col("v"), lit(r).as("round")))
-      val removed = sel
-        .union(und.join(sel.select(col("v").as("sv")), col("src") === col("sv"), "left_semi")
-          .select(col("dst").as("v")))
-        .distinct()
-      val (nextActive, nextCount) =
-        checkpointCount(active.join(removed, Seq("v"), "left_anti"))
-      active = nextActive
-      activeCount = nextCount
+    // state: 0 = active, r > 0 = member since round r, -1 = removed
+    val g = new VertexAdjacency(spark, und.rdd.map(x => (x.getLong(0), x.getLong(1))))
+    try {
+      var (state, active) = checkpointCountRdd(g.init(_ => 0))
+      val vertices = active
+      und.unpersist() // the filled adjacency holds the edges from here on
+      var r = 0
+      while (active > 0 && r < maxRounds) {
+        r += 1
+        val round = r
+        // min priority among the ACTIVE neighbours of each vertex
+        val minp = g.send(state)((v, s) =>
+          if (s == 0) Some(lcgPri(v)) else None)(math.min)
+        // an active vertex below all of them joins the set this round
+        val sel = g.receive(state, minp).mapPartitions(_.map {
+          case (v, (s, m)) => (v, if (s == 0 && m.forall(lcgPri(v) < _)) round else s)
+        }, preservesPartitioning = true)
+        // and removes its active neighbours
+        val hit = g.send(sel)((_, s) =>
+          if (s == round) Some(()) else None)((_, _) => ())
+        val (next, n) = checkpointCountRdd(g.receive(sel, hit)
+          .mapValues { case (s, h) => if (s == 0 && h.isDefined) -1 else s },
+          (vs: (Long, Int)) => vs._2 == 0)
+        state.unpersist(blocking = false)
+        state = next
+        active = n
+      }
+      require(active == 0, s"MIS did not converge within $maxRounds rounds")
+      GraftFrames.sized(spark, state.collect { case (v, s) if s > 0 => InternalRow(v, s) },
+        StructType.fromDDL("v LONG NOT NULL, round INT NOT NULL"), vertices)
+    } finally {
+      g.unpersist()
+      und.unpersist()
     }
-    und.unpersist()
-    require(activeCount == 0, s"MIS did not converge within $maxRounds rounds")
-    members.all
   }
 
   /** The gathered downstream-dependency-cone subproblem shared by the
@@ -2520,7 +2616,13 @@ object GraphOps {
     * below `k`, to a detected fixpoint ([[peelToFixpoint]]) with
     * `rounds` as a loud cap — the depth the DuckDB oracle unrolls the
     * identical recurrence to; GraphSpec asserts the fixpoint at test
-    * scale. Returns the core's `(v, deg)` with the IN-CORE degree —
+    * scale. The rounds are RDD vertex-state supersteps over a
+    * [[VertexAdjacency]] (state: each survivor's degree): a round sends
+    * one message per survivor edge, sums them per receiver (its one
+    * shuffle), keeps the survivors at ≥ `k` and ends in one
+    * [[checkpointCountRdd]] barrier, one Spark job; the adjacency is
+    * unpersisted on every exit. Returns the core's non-nullable
+    * `(v LONG, deg LONG)` with the IN-CORE degree —
     * extracted from q_graph_kcore so the query, the incremental
     * maintainers' stored-state builders, and the spec share one spelling
     * (reference behavior: the subgraph-mining surface of
@@ -2536,25 +2638,28 @@ object GraphOps {
     // ADVICE: the old `require(rounds >= 2)` + hard cap made those cases
     // always throw).
     require(rounds >= 1, s"kcorePeel rounds must be >= 1 (got $rounds)")
-    val sym = symmetrize(canonical(rawEdges), "a", "b")
-      .localCheckpoint(true) // feeds every peel round
-    // the first shrink (full-graph degree ≥ k) runs before the loop, so
-    // `rounds` loop rounds are rounds − 1 shrinks plus the detection round
-    val (deg0, n0) = checkpointCount(sym.groupBy(col("src").as("v"))
-      .agg(count(lit(1)).as("deg")).filter(col("deg") >= k))
-    peelToFixpoint(deg0, n0, rounds, n =>
-      s"kcorePeel did not converge within $rounds rounds (|core| still $n " +
-        "and changing) - raise the cap; publishing a non-fixpoint peel " +
-        "would carry stale degrees") { deg =>
-      // act appears TWICE per round (src prune + dst prune) — materialize
-      // each round's survivor set or the plan doubles per round.
-      val act = deg.select("v")
-      checkpointCount(sym
-        .join(act.select(col("v").as("sv")), col("src") === col("sv"), "left_semi")
-        .join(act.select(col("v").as("dv")), col("dst") === col("dv"), "left_semi")
-        .groupBy(col("src").as("v")).agg(count(lit(1)).as("deg"))
-        .filter(col("deg") >= k))
-    }
+    val g = new VertexAdjacency(spark, loopFree(rawEdges).rdd.flatMap { x =>
+      val (a, b) = (x.getLong(0), x.getLong(1))
+      Iterator((a, b), (b, a))
+    })
+    try {
+      // the first shrink (full-graph degree ≥ k) runs before the loop, so
+      // `rounds` loop rounds are rounds − 1 shrinks plus the detection round
+      val (deg0, n0) = checkpointCountRdd(g.init(_.length.toLong).filter(_._2 >= k))
+      val core = peelToFixpoint(deg0, n0, rounds, n =>
+        s"kcorePeel did not converge within $rounds rounds (|core| still $n " +
+          "and changing) - raise the cap; publishing a non-fixpoint peel " +
+          "would carry stale degrees") { deg =>
+        // every survivor counts its surviving neighbours: one shuffle
+        val cnt = g.send(deg)((_, _) => Some(1L))(_ + _)
+        val next = checkpointCountRdd(g.receive(deg, cnt).flatMapValues(_._2)
+          .filter(_._2 >= k))
+        deg.unpersist(blocking = false)
+        next
+      }
+      GraftFrames.sized(spark, core.map { case (v, d) => InternalRow(v, d) },
+        StructType.fromDDL("v LONG NOT NULL, deg LONG NOT NULL"), n0)
+    } finally g.unpersist()
   }
 
   /** INCREMENTAL k-core maintenance over a two-sided edge diff — the

@@ -1070,7 +1070,11 @@ class GraphSpec extends SparkSpec {
     // repeated runs, most likely with the order in which concurrent query
     // stages finish), so it is bounded rather than pinned. Before the shared wave kernel the two BSP
     // maintainers ran 114 and 167–173 jobs: they re-checkpointed their
-    // accumulated wave unions every wave.
+    // accumulated wave unions every wave. The k-core peel runs RDD
+    // supersteps, one job per round (11 jobs as a DataFrame loop). Its
+    // result carries a size estimate (`GraftFrames.sized`): a frame sized
+    // at `spark.sql.defaultSizeInBytes` made the forced-BSP maintainer
+    // fed it directly shuffle its core joins (112–113 jobs).
     val (kv1, kv2) = kcoreDiff
     val (tv1, tv2) = ktrussDiff
     val peel = sparkJobs(GraphOps.kcorePeel(spark, kv1, 3, 6).collect())._2
@@ -1082,7 +1086,7 @@ class GraphSpec extends SparkSpec {
     val tprev = GraphOps.ktrussPeel(spark, tv1, 4, 6)
     val trussBsp = sparkJobs(GraphOps.incrementalKTruss(spark, tv1, tv2, tprev, 4,
       driverSolveLimit = 0L).collect())._2
-    assert((peel, incDriver, incBsp) == ((11, 15, 102)),
+    assert((peel, incDriver, incBsp) == ((4, 15, 102)),
       "Spark jobs (kcorePeel, incrementalKCore driver, incrementalKCore BSP)")
     assert(trussBsp <= 166, s"incrementalKTruss BSP ran $trussBsp Spark jobs")
   }
@@ -1469,6 +1473,65 @@ class GraphSpec extends SparkSpec {
     assert(mis == greedy.toSet)
   }
 
+  test("MIS and k-core: one output schema per operator, whatever the input's nullability") {
+    import spark.implicits._
+    import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
+    // Ring edges read from parquet carry nullable columns; a Seq does not.
+    // Both MIS paths and the k-core peel publish non-nullable columns
+    // either way (the driver gate's result always had them; the BSP loop's
+    // used to inherit the input's nullability).
+    val e = Seq((0L, 1L), (1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (5L, 0L),
+      (0L, 3L), (7L, 0L)).toDF("src", "dst")
+    val nullable = e.select(when(col("src") >= 0, col("src")).as("src"),
+      when(col("dst") >= 0, col("dst")).as("dst"))
+    assert(nullable.schema.forall(_.nullable))
+    val mis = StructType(Seq(StructField("v", LongType, nullable = false),
+      StructField("round", IntegerType, nullable = false)))
+    val core = StructType(Seq(StructField("v", LongType, nullable = false),
+      StructField("deg", LongType, nullable = false)))
+    for (in <- Seq(e, nullable)) {
+      val outs = Seq(
+        "MIS gate" -> (GraphOps.maximalIndependentSet(spark, in), mis),
+        "MIS BSP" -> (GraphOps.maximalIndependentSet(spark, in, driverSolveLimit = 0L), mis),
+        "kcorePeel" -> (GraphOps.kcorePeel(spark, in, 2, 6), core))
+      for ((op, (out, schema)) <- outs) {
+        assert(out.schema == schema, op)
+        // sized by its rows, not by spark.sql.defaultSizeInBytes, so a
+        // join reading it can broadcast it
+        assert(out.queryExecution.optimizedPlan.stats.sizeInBytes <= BigInt(1 << 20), op)
+      }
+    }
+  }
+
+  test("RDD supersteps: state and adjacency share one partitioner, state ⋈ adjacency is narrow") {
+    import org.apache.spark.OneToOneDependency
+    import org.apache.spark.rdd.RDD
+    // The property that keeps the forced-BSP MIS rounds and the k-core peel
+    // safe at scale: the static adjacency is shuffled once, when it is
+    // built, and a round shuffles only its messages. A state that lost the
+    // adjacency's partitioner would re-shuffle the whole graph every round.
+    val pairs = spark.sparkContext.parallelize(Seq((0L, 1L), (1L, 2L), (2L, 0L),
+      (2L, 3L), (3L, 4L)), 3).flatMap(p => Seq(p, p.swap))
+    val g = new GraphOps.VertexAdjacency(spark, pairs)
+    def narrow(r: RDD[_], state: RDD[_]): Boolean = (r eq state) || (r eq g.adj) ||
+      r.dependencies.forall(d =>
+        d.isInstanceOf[OneToOneDependency[_]] && narrow(d.rdd, state))
+    try {
+      val (deg0, n0) = GraphOps.checkpointCountRdd(g.init(_.length.toLong).filter(_._2 >= 2))
+      assert(n0 == 4L)
+      // one peel round, spelled as kcorePeel spells it: 3 loses its edge to 4
+      val cnt = g.send(deg0)((_, _) => Some(1L))(_ + _)
+      val (deg1, n1) = GraphOps.checkpointCountRdd(g.receive(deg0, cnt)
+        .flatMapValues(_._2).filter(_._2 >= 2))
+      assert(n1 == 3L && deg1.collect().toMap == Map(0L -> 2L, 1L -> 2L, 2L -> 3L))
+      for (state <- Seq(deg0, deg1)) {
+        assert(state.partitioner.contains(g.part) && g.adj.partitioner.contains(g.part))
+        val joined = g.join(state)
+        assert(narrow(joined, state), s"state ⋈ adjacency shuffles:\n${joined.toDebugString}")
+      }
+    } finally g.unpersist()
+  }
+
   test("MIS past the wave collapse: a 15-round path, gate == BSP == sequential greedy") {
     import spark.implicits._
     def pri(v: Long) = (v * 1103515245L + 12345L) % 2147483648L
@@ -1678,7 +1741,8 @@ class GraphSpec extends SparkSpec {
     // at its seeds; its edge set is a lazy local checkpoint that the
     // domain gate's aggregate fills, so it costs no job of its own. On the
     // chained cone each of the 28 waves is one checkpoint-and-count into
-    // the cone's wave union.
+    // the cone's wave union. The MIS loop runs RDD supersteps, one job per
+    // round (15 jobs as a DataFrame loop).
     val e = Seq((0L, 1L), (1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (5L, 0L),
       (0L, 3L), (7L, 0L), (7L, 7L), (2L, 5L)).toDF("src", "dst")
     val (base, newE, ins, del) = symDelDiff
@@ -1693,7 +1757,7 @@ class GraphSpec extends SparkSpec {
       jobs(GraphOps.jonesPlassmannColoring(spark, e, driverSolveLimit = 0L,
         tailSolveVertices = 3L)),
       jobs(GraphOps.speculativeColoring(spark, e, driverSolveLimit = 0L)))
-    assert(loops == ((15, 21, 21, 14)), "Spark jobs (MIS, JP, JP with a " +
+    assert(loops == ((7, 21, 21, 14)), "Spark jobs (MIS, JP, JP with a " +
       "3-vertex tail finish, speculative coloring), forced BSP")
     val cones = (
       jobs(GraphOps.incrementalMaximalIndependentSetDelete(
@@ -1713,13 +1777,20 @@ class GraphSpec extends SparkSpec {
       "incrementalColoring) over the 28-wave chained cone")
   }
 
+  /** Ids of the cache entries (persisted, not local checkpoints) now held. */
+  private def cachedRdds: Set[Int] =
+    spark.sparkContext.getPersistentRDDs.collect { case (id, r) if !r.isCheckpointed => id }.toSet
+  /** Whether a superstep adjacency ([[GraphOps.VertexAdjacency]]) is persisted. */
+  private def adjacencyCached: Boolean =
+    spark.sparkContext.getPersistentRDDs.values.exists(_.name == "VertexAdjacency")
+
   test("LCG domain gate: an id past 2^31 fails loudly and leaves no cached edge set") {
     import spark.implicits._
     // The MIS and coloring loops persist their symmetrized edge set before
-    // the gate's aggregate reads it; a failed gate must unpersist it. Local
-    // checkpoints (the cone's edge set) are not cache entries.
-    val sc = spark.sparkContext
-    def cached = sc.getPersistentRDDs.collect { case (id, r) if !r.isCheckpointed => id }.toSet
+    // the gate's aggregate reads it; a failed gate must unpersist it, and
+    // MIS must not have built its superstep adjacency. Local checkpoints
+    // (the cone's edge set) are not cache entries.
+    def cached = cachedRdds
     val bad = Seq((0L, 1L), (1L, 2147483648L)).toDF("src", "dst")
     val ok = Seq((0L, 1L)).toDF("src", "dst")
     val okMis = GraphOps.maximalIndependentSet(spark, ok)
@@ -1735,6 +1806,34 @@ class GraphSpec extends SparkSpec {
       assert(e.getMessage.contains(s"$op: vertex ids span [0, 2147483648]"), e.getMessage)
     }
     assert((cached -- before).isEmpty, "a failed domain gate left its edge set cached")
+    assert(!adjacencyCached, "a failed domain gate left a superstep adjacency cached")
+  }
+
+  test("MIS past its round cap fails loudly and leaves no adjacency cached") {
+    import spark.implicits._
+    def pri(v: Long) = (v * 1103515245L + 12345L) % 2147483648L
+    // the 15-round chain of the wave-collapse test, capped at 3 rounds
+    val chain = (0L until 30L).sortBy(pri)
+    val e = chain.zip(chain.tail).toDF("src", "dst")
+    val before = cachedRdds
+    val err = intercept[IllegalArgumentException](
+      GraphOps.maximalIndependentSet(spark, e, maxRounds = 3, driverSolveLimit = 0L))
+    assert(err.getMessage.contains("MIS did not converge within 3 rounds"), err.getMessage)
+    assert((cachedRdds -- before).isEmpty && !adjacencyCached,
+      "a non-converged MIS left its edge set or adjacency cached")
+  }
+
+  test("kcorePeel past its round cap fails loudly and leaves no adjacency cached") {
+    import spark.implicits._
+    // a 50-vertex path's 2-core is empty, peeled from both ends about 25
+    // rounds deep: a cap of 3 leaves it shrinking
+    val path = (0L until 49L).map(i => (i, i + 1)).toDF("src", "dst")
+    val before = cachedRdds
+    val err = intercept[IllegalArgumentException](GraphOps.kcorePeel(spark, path, 2, 3))
+    assert(err.getMessage.contains("kcorePeel did not converge within 3 rounds"),
+      err.getMessage)
+    assert((cachedRdds -- before).isEmpty && !adjacencyCached,
+      "a non-converged k-core peel left its adjacency cached")
   }
 
   test("cone pair gate: a 12k-degree hub inside a 2-vertex cone routes to the total fallback") {
