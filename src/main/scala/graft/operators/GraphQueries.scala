@@ -1524,12 +1524,10 @@ object GraphQueries extends QueryModule {
     // discipline as q_graph_mis.
     "q_graph_coloring" -> ((s, dir) =>
       GraphOps.jonesPlassmannColoring(s, ringEdges(s, dir)).orderBy("v")),
-    // tailSolveVertices = 3000 (20% of the sf0.1 fixture, 2% at sf1): the
-    // distributed rounds cover ~80% of the color mass, the geometric tail
-    // finishes in one driver pass — see the scaladoc's tail-profile note
+    // forced past the gate: every round, the geometric tail included, is
+    // one RDD superstep (one Spark job) — see the scaladoc's cost note
     "q_graph_coloring_bsp" -> ((s, dir) =>
-      GraphOps.jonesPlassmannColoring(s, ringEdges(s, dir),
-        driverSolveLimit = 0L, tailSolveVertices = 3000L)
+      GraphOps.jonesPlassmannColoring(s, ringEdges(s, dir), driverSolveLimit = 0L)
         .orderBy("v")),
     // SPECULATIVE coloring (Gebremedhin–Manne), forced-BSP like the other
     // _bsp twins: 7 conflict-resolution rounds replace JP's 23 depth-bound
@@ -1544,14 +1542,13 @@ object GraphQueries extends QueryModule {
     // HUB-bearing coloring family (r9 VERDICT #1): the ring fixture plus
     // a 250-spoke star on vertex 0 — the power-law degree shape the r9
     // bitmask mex REFUSED (`require(maxDeg < 63)`). Forced-BSP so the
-    // distributed sorted-set mex ([[GraphOps.mexAggExpr]]) is what runs;
+    // superstep mex runs: each vertex's received-color set is combined
+    // from its neighbors' messages, sized by the colors, not the degree;
     // oracles are the identical JP/GM round replays over the hub edge
-    // algebra. A proper coloring on a hub costs nothing extra — the mex
-    // state is the distinct-neighbor-color SET, bounded by chromatic
-    // spread, not degree.
+    // algebra.
     "q_graph_coloring_hub" -> ((s, dir) =>
-      GraphOps.jonesPlassmannColoring(s, hubEdges(s, dir),
-        driverSolveLimit = 0L, tailSolveVertices = 3000L).orderBy("v")),
+      GraphOps.jonesPlassmannColoring(s, hubEdges(s, dir), driverSolveLimit = 0L)
+        .orderBy("v")),
     "q_graph_coloring_spec_hub" -> ((s, dir) =>
       GraphOps.speculativeColoring(s, hubEdges(s, dir), driverSolveLimit = 0L)
         .orderBy("v")),

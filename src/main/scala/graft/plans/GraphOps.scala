@@ -7,6 +7,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.storage.StorageLevel
+import scala.collection.immutable.BitSet
 import scala.reflect.ClassTag
 
 /** Iterative graph computation on DataFrames.
@@ -34,17 +35,17 @@ import scala.reflect.ClassTag
   * forms:
   *
   *  - DataFrame supersteps, [[checkpointCount]] barriers: the BFS, σ-BFS
-  *    and SSSP loops, DAG layers, CC, SCC, Borůvka, the k-truss peel,
-  *    Jones-Plassmann and speculative coloring, the hp-cone, and every
-  *    delta maintainer and cascade. Each round is a planned query whose
-  *    join [[gated]]/[[WaveGate]] picks from a count the loop holds; the
-  *    barrier action is one job, and under AQE each shuffle map stage and
-  *    each broadcast of the frame is a further job, so a barrier costs
-  *    several jobs (GraphSpec pins `bfsLevels` on the 30-vertex G6 at 32
-  *    jobs for 4 barriers and one checkpoint).
+  *    and SSSP loops, DAG layers, CC, SCC, Borůvka, the k-truss peel, the
+  *    hp-cone, and every delta maintainer and cascade. Each round is a
+  *    planned query whose join [[gated]]/[[WaveGate]] picks from a count
+  *    the loop holds; the barrier action is one job, and under AQE each
+  *    shuffle map stage and each broadcast of the frame is a further job,
+  *    so a barrier costs several jobs (GraphSpec pins `bfsLevels` on the
+  *    30-vertex G6 at 32 jobs for 4 barriers and one checkpoint).
   *  - RDD vertex-state supersteps, [[checkpointCountRdd]] barriers over a
-  *    [[VertexAdjacency]]: the forced-BSP MIS rounds of
-  *    [[maximalIndependentSet]] and the [[kcorePeel]] rounds. The static
+  *    [[VertexAdjacency]]: the forced-BSP rounds of the symmetry-breakers
+  *    ([[maximalIndependentSet]], [[jonesPlassmannColoring]],
+  *    [[speculativeColoring]]) and the [[kcorePeel]] rounds. The static
   *    adjacency is grouped once under one `HashPartitioner` and persisted,
   *    the vertex state keeps that partitioner, so state ⋈ adjacency is
   *    narrow and only the round's messages shuffle; nothing is re-planned
@@ -113,8 +114,9 @@ object GraphOps {
     val adj: RDD[(Long, Array[Long])] = pairs.groupByKey(part)
       .mapValues(_.toArray.distinct).setName("VertexAdjacency")
       .persist(StorageLevel.MEMORY_AND_DISK)
-    /** A state over every vertex, from its neighbour array. */
-    def init[S](f: Array[Long] => S): RDD[(Long, S)] = adj.mapValues(f)
+    /** A state over every vertex, from its id and neighbour array. */
+    def init[S](f: (Long, Array[Long]) => S): RDD[(Long, S)] =
+      adj.mapPartitions(_.map { case (v, ns) => (v, f(v, ns)) }, preservesPartitioning = true)
     /** Each row of `rows` (a state; the adjacency in [[join]]) with the
       * value `keyed` (the round's messages; the state) holds for its
       * vertex, if any, partition by partition: a hash of `keyed`'s
@@ -135,12 +137,15 @@ object GraphOps {
     def join[S](state: RDD[(Long, S)]): RDD[(Long, (S, Array[Long]))] =
       receive(adj, state).flatMap { case (v, (ns, s)) => s.map(x => (v, (x, ns))) }
     /** The round's messages: each vertex `v` whose state `s` has
-      * `msg(v, s) = Some(m)` sends `m` to every neighbour, combined per
-      * receiver by `combine` (on [[part]]) — the superstep's one shuffle. */
-    def send[S, M: ClassTag](state: RDD[(Long, S)])(
+      * `msg(v, s) = Some(m)` sends `m` to every neighbour `u` with
+      * `to(v, u)` (all of them by default), combined per receiver by
+      * `combine` (on [[part]]) — one shuffle of the superstep. */
+    def send[S, M: ClassTag](state: RDD[(Long, S)],
+        to: (Long, Long) => Boolean = (_, _) => true)(
         msg: (Long, S) => Option[M])(combine: (M, M) => M): RDD[(Long, M)] =
       join(state).flatMap { case (v, (s, ns)) =>
-        msg(v, s).fold(Iterator.empty[(Long, M)])(m => ns.iterator.map(u => (u, m)))
+        msg(v, s).fold(Iterator.empty[(Long, M)])(m =>
+          ns.iterator.filter(to(v, _)).map(u => (u, m)))
       }.reduceByKey(part, combine)
     def unpersist(): Unit = adj.unpersist(blocking = false)
   }
@@ -210,14 +215,13 @@ object GraphOps {
   }
 
   /** The union of the wave frames one loop accumulates (candidates,
-    * evictions, the unsettled set, colored vertices, the hp-cone), with
-    * the DDL `schema` (e.g. `"v LONG, color INT, round INT"`) and its plan
-    * depth bounded: once it has 12 legs, [[all]] collapses them into one
-    * single-partition checkpoint, so a deep loop carries O(1) legs rather
-    * than O(waves), at one shuffle into one partition per dozen waves
-    * (delta-sized for the cascades; graph-sized for the colored set of
-    * [[jonesPlassmannColoring]], which measures it). Legs union in the
-    * order they were added; with none, [[all]] is an empty frame. */
+    * evictions, the unsettled set, the hp-cone), with the DDL `schema`
+    * (e.g. `"a LONG, b LONG"`) and its plan depth bounded: once it has 12
+    * legs, [[all]] collapses them into one single-partition checkpoint,
+    * so a deep loop carries O(1) legs rather than O(waves), at one
+    * shuffle into one partition per dozen waves. Every caller's waves are
+    * delta- or cone-sized; no graph-sized set accumulates here. Legs union
+    * in the order they were added; with none, [[all]] is an empty frame. */
   private final class Waves(spark: SparkSession, schema: String) {
     private var legs = Vector.empty[DataFrame]
     def add(f: DataFrame): Unit = legs :+= f
@@ -1353,55 +1357,74 @@ object GraphOps {
       .select(col("src").cast("long"), col("dst").cast("long"))
 
   /** The prologue of every LCG-priority operator: the [[loopFree]] edges,
-    * symmetrized into a distinct set `und` held by `keep`, and ONE
-    * aggregate action over it that fills `und`, returns `size` (the edge
-    * count by default) and runs the loud domain gate. `keep` persists by
-    * default (the caller unpersists `und`): Jones-Plassmann and
-    * speculative coloring join it every round, while
-    * [[maximalIndependentSet]] reads it only to collect its driver
-    * adjacency or to build its [[VertexAdjacency]]. The hp-cone passes a
-    * lazy local checkpoint, whose partitions AQE coalesces where a cached
-    * plan keeps `spark.sql.shuffle.partitions` of them.
+    * symmetrized into a distinct set `und` held as a lazy local
+    * checkpoint, and ONE aggregate action over it that fills `und`,
+    * returns `size` (the edge count by default) and runs the loud domain
+    * gate. No caller reads `und` per round: the driver gates collect it
+    * ([[adjacency]]), the superstep loops group it once into their
+    * [[VertexAdjacency]], and the hp-cone filters it once. A checkpoint,
+    * unlike a cached plan, keeps the partitions AQE coalesced it to (a
+    * cached plan keeps `spark.sql.shuffle.partitions` of them), and it is
+    * no cache entry for a caller to unpersist.
     *
     * The gate: p(v) = (v·1103515245 + 12345) mod 2³¹ is injective ONLY
     * on 0 ≤ v < 2³¹ (its full period). Outside that domain two ADJACENT
     * vertices can tie, and the greedy-by-priority operators diverge
     * silently — [[maximalIndependentSet]] would at least fail its
     * convergence require, but [[jonesPlassmannColoring]] would emit an
-    * improper coloring (a tied pair lands in neither hp direction, both
-    * become ready in round 1, both can take the same mex color) and the
-    * incremental cone replays' sortBy(lcgPri) order becomes ambiguous.
-    * `und` is symmetrized, so `src` covers every vertex. A failed gate
-    * unpersists `und` before it throws. */
+    * improper coloring (a tied pair waits for neither, both color in the
+    * same round, both can take the same mex color) and the incremental
+    * cone replays' sortBy(lcgPri) order becomes ambiguous. `und` is
+    * symmetrized, so `src` covers every vertex. */
   private def lcgUndirected(edges: DataFrame, op: String,
-      size: Column = count(lit(1)),
-      keep: DataFrame => DataFrame = _.persist()): (DataFrame, Long) = {
-    val und = keep(symmetrize(loopFree(edges)).distinct())
+      size: Column = count(lit(1))): (DataFrame, Long) = {
+    val und = symmetrize(loopFree(edges)).distinct().localCheckpoint(eager = false)
     val r = und.agg(size, min(col("src")), max(col("src"))).collect()(0)
-    val inDomain = r.isNullAt(1) ||
-      (r.getLong(1) >= 0L && r.getLong(2) < 2147483648L)
-    if (!inDomain) und.unpersist()
-    require(inDomain,
+    require(r.isNullAt(1) || (r.getLong(1) >= 0L && r.getLong(2) < 2147483648L),
       s"$op: vertex ids span [${r.getLong(1)}, ${r.getLong(2)}], outside " +
         "the LCG priority's injective domain [0, 2^31) - adjacent " +
         "priorities could tie and greedy-by-priority order is undefined")
     (und, r.getLong(0))
   }
 
-  /** The driver-side adjacency of a persisted [[lcgUndirected]] frame —
-    * the gate path of the symmetry-breakers: collected as primitive
-    * pairs, `und` unpersisted, grouped by `src`. */
-  private def adjacency(und: DataFrame): Map[Long, Array[Long]] = {
-    val arr = und.rdd.map(r => (r.getLong(0), r.getLong(1))).collect()
-    und.unpersist()
-    arr.groupBy(_._1).map { case (v, es) => v -> es.map(_._2) }
-  }
+  /** The driver-side adjacency of an [[lcgUndirected]] frame — the gate
+    * path of the symmetry-breakers: collected as primitive pairs, grouped
+    * by `src`. */
+  private def adjacency(und: DataFrame): Map[Long, Array[Long]] =
+    und.rdd.map(r => (r.getLong(0), r.getLong(1))).collect()
+      .groupBy(_._1).map { case (v, es) => v -> es.map(_._2) }
 
-  /** The priority-dependency edges of `und`, checkpointed: `src` decides
-    * after `dst` (p(dst) < p(src)). Priorities are arithmetic on the id,
-    * so "who waits for whom" is one static filter, never a join. */
-  private def hpEdges(und: DataFrame): DataFrame =
-    und.filter(lcgPriCol(col("dst")) < lcgPriCol(col("src"))).localCheckpoint(true)
+  /** The superstep loop of the symmetry-breakers past their driver gate:
+    * a [[VertexAdjacency]] over an [[lcgUndirected]] frame, the state
+    * `init` for every vertex, and `step(g, state, r)` for the rounds
+    * r = 1, 2, … while any vertex is `open`, each round ending in one
+    * [[checkpointCountRdd]] barrier — ONE Spark job, whose message
+    * shuffles are stages of it. A state still open after `maxRounds`
+    * rounds throws `fail(open vertices)`. The result leaves through
+    * `GraftFrames.sized` as the non-nullable DDL `schema`, one `row` per
+    * vertex it keeps, sized by the vertex count. The adjacency is
+    * unpersisted on every exit, and each round's input state once the
+    * next one is filled. */
+  private def supersteps[S](spark: SparkSession, und: DataFrame, maxRounds: Int,
+      schema: String, fail: Long => String)(init: (Long, Array[Long]) => S,
+      open: S => Boolean)(step: (VertexAdjacency, RDD[(Long, S)], Int) => RDD[(Long, S)])(
+      row: PartialFunction[(Long, S), InternalRow]): DataFrame = {
+    val g = new VertexAdjacency(spark, und.rdd.map(x => (x.getLong(0), x.getLong(1))))
+    try {
+      var (state, n) = checkpointCountRdd(g.init(init))
+      val vertices = n
+      var r = 0
+      while (n > 0 && r < maxRounds) {
+        r += 1
+        val (next, m) = checkpointCountRdd(step(g, state, r), (vs: (Long, S)) => open(vs._2))
+        state.unpersist(blocking = false)
+        state = next
+        n = m
+      }
+      require(n == 0, fail(n))
+      GraftFrames.sized(spark, state.collect(row), StructType.fromDDL(schema), vertices)
+    } finally g.unpersist()
+  }
 
   /** Deterministic MAXIMAL INDEPENDENT SET — Luby-style min-priority
     * rounds under the fixed LCG priority p(v) = (v·1103515245 + 12345)
@@ -1420,25 +1443,23 @@ object GraphOps {
     *
     * Size-gated like [[connectedComponents]]: ≤`driverSolveLimit` edges
     * run an in-memory simulation of the SAME rounds; past the gate the
-    * BSP loop runs as RDD vertex-state supersteps over a
-    * [[VertexAdjacency]]. Each vertex's state is its round (0 while
+    * rounds are [[supersteps]]. Each vertex's state is its round (0 while
     * active, r once it joins in round r, −1 once a neighbor has), so the
     * members' rounds need no accumulator. A round shuffles two messages —
     * each active vertex's priority to its neighbors (combined by min),
-    * then a removal notice from each new member — and ends in one
-    * [[checkpointCountRdd]] barrier: one Spark job per round. Expected
-    * O(log n) rounds on bounded-degree graphs (Luby); `maxRounds` bounds
-    * both paths loudly, matching the oracle's fixed unroll, and the
-    * adjacency and `und` are unpersisted on every exit. Both paths return
-    * one schema, non-nullable `(v LONG, round INT)`. q_graph_mis benches
-    * the gate path, q_graph_mis_bsp forces this loop (the q_graph_cc_bsp
-    * discipline).
+    * then a removal notice from each new member — in one Spark job.
+    * Expected O(log n) rounds on bounded-degree graphs (Luby); `maxRounds`
+    * bounds both paths loudly, matching the oracle's fixed unroll. Both
+    * paths return one schema, non-nullable `(v LONG, round INT)`.
+    * q_graph_mis benches the gate path, q_graph_mis_bsp forces the
+    * supersteps (the q_graph_cc_bsp discipline).
     */
   def maximalIndependentSet(spark: SparkSession, edges: DataFrame,
       maxRounds: Int = MisRoundCap,
       driverSolveLimit: Long = DriverSolveEdgeLimit): DataFrame = {
     import spark.implicits._
     val (und, edgeCount) = lcgUndirected(edges, "maximalIndependentSet")
+    val fail = s"MIS did not converge within $maxRounds rounds"
     if (edgeCount <= driverSolveLimit) {
       val adj = adjacency(und)
       val active = scala.collection.mutable.HashSet.empty[Long]
@@ -1454,43 +1475,22 @@ object GraphOps {
         out ++= sel.map(v => (v, r))
         sel.foreach { v => active -= v; adj(v).foreach(active -= _) }
       }
-      require(active.isEmpty, s"MIS did not converge within $maxRounds rounds")
+      require(active.isEmpty, fail)
       return out.result().toDF("v", "round")
     }
     // state: 0 = active, r > 0 = member since round r, -1 = removed
-    val g = new VertexAdjacency(spark, und.rdd.map(x => (x.getLong(0), x.getLong(1))))
-    try {
-      var (state, active) = checkpointCountRdd(g.init(_ => 0))
-      val vertices = active
-      und.unpersist() // the filled adjacency holds the edges from here on
-      var r = 0
-      while (active > 0 && r < maxRounds) {
-        r += 1
-        val round = r
-        // min priority among the ACTIVE neighbours of each vertex
-        val minp = g.send(state)((v, s) =>
-          if (s == 0) Some(lcgPri(v)) else None)(math.min)
-        // an active vertex below all of them joins the set this round
-        val sel = g.receive(state, minp).mapPartitions(_.map {
-          case (v, (s, m)) => (v, if (s == 0 && m.forall(lcgPri(v) < _)) round else s)
-        }, preservesPartitioning = true)
-        // and removes its active neighbours
-        val hit = g.send(sel)((_, s) =>
-          if (s == round) Some(()) else None)((_, _) => ())
-        val (next, n) = checkpointCountRdd(g.receive(sel, hit)
-          .mapValues { case (s, h) => if (s == 0 && h.isDefined) -1 else s },
-          (vs: (Long, Int)) => vs._2 == 0)
-        state.unpersist(blocking = false)
-        state = next
-        active = n
-      }
-      require(active == 0, s"MIS did not converge within $maxRounds rounds")
-      GraftFrames.sized(spark, state.collect { case (v, s) if s > 0 => InternalRow(v, s) },
-        StructType.fromDDL("v LONG NOT NULL, round INT NOT NULL"), vertices)
-    } finally {
-      g.unpersist()
-      und.unpersist()
-    }
+    supersteps[Int](spark, und, maxRounds, "v LONG NOT NULL, round INT NOT NULL",
+        _ => fail)((_, _) => 0, _ == 0) { (g, state, round) =>
+      // min priority among the ACTIVE neighbours of each vertex
+      val minp = g.send(state)((v, s) => if (s == 0) Some(lcgPri(v)) else None)(math.min)
+      // an active vertex below all of them joins the set this round
+      val sel = g.receive(state, minp).mapPartitions(_.map {
+        case (v, (s, m)) => (v, if (s == 0 && m.forall(lcgPri(v) < _)) round else s)
+      }, preservesPartitioning = true)
+      // and removes its active neighbours
+      val hit = g.send(sel)((_, s) => if (s == round) Some(()) else None)((_, _) => ())
+      g.receive(sel, hit).mapValues { case (s, h) => if (s == 0 && h.isDefined) -1 else s }
+    } { case (v, s) if s > 0 => InternalRow(v, s) }
   }
 
   /** The gathered downstream-dependency-cone subproblem shared by the
@@ -1529,13 +1529,12 @@ object GraphOps {
       coneGatherLimit: Long, coneGatherPairLimit: Long,
       maxConeFraction: Double): Option[HpCone] = {
     import spark.implicits._
-    // a lazy local checkpoint, filled by the domain gate's aggregate: AQE
-    // coalesces it (one partition on a small graph), so the per-wave
-    // joins and the pair-gated gather below scan few partitions
     val (und, totalV) = lcgUndirected(newEdges, "hpDependencyCone",
-      countDistinct(col("src")), _.localCheckpoint(eager = false))
-    // dependency edges on the NEW graph: src's decision waits on dst
-    val hp = hpEdges(und)
+      countDistinct(col("src")))
+    // dependency edges on the NEW graph, checkpointed: src's decision
+    // waits on dst (p(dst) < p(src)). Priorities are arithmetic on the
+    // id, so "who waits for whom" is one static filter, never a join.
+    val hp = und.filter(lcgPriCol(col("dst")) < lcgPriCol(col("src"))).localCheckpoint(true)
     // seeds: the higher-priority-VALUE (= later-deciding) endpoint of
     // each inserted edge — the only endpoint whose input set changed —
     // plus any vertex absent from the previous snapshot (SAME
@@ -1783,29 +1782,20 @@ object GraphOps {
     * over n d-step chains), capped at 48 for sf1 headroom. */
   private[graft] val ColoringRoundCap = 48
 
-  /** Degree-agnostic distributed MEX aggregate over an int column
-    * `ncolor`: sort the DISTINCT neighbor colors, then fold — the first
-    * value ≠ the running counter is the first gap, so the counter lands
-    * on mex(S). Replaces the r9 single-word bitmask (`bit_or` of
-    * `1 << color`), whose 63-color ceiling made the whole coloring
-    * family REFUSE any graph with a ≥63-degree hub — i.e. every
-    * power-law graph at the engine's target scale (r9 VERDICT #1).
-    * Scale shape is unchanged from the bitmask: ONE shuffle
-    * (`collect_set` keeps partial aggregation, its map-side state is the
-    * distinct-color set — bounded by the neighborhood's chromatic
-    * spread, NOT by degree: a 10^6-degree hub whose neighbors use 40
-    * colors carries a 40-int set), and the fold is a scalar expression
-    * over the grouped row. Measured vs the bitmask on the sf0.1 ring
-    * fixture (ledger, PLANS.md r10): q_graph_coloring_bsp and _spec
-    * within run-to-run noise of the bitmask build, so the ceiling lift
-    * costs nothing. A CHUNKED multi-word bitmask (ceil(Δ/63) `bit_or`
-    * words) was the rejected alternative: it needs a second per-word
-    * shuffle or a map-typed state, and its only edge over the sorted
-    * set — O(colors/63) vs O(colors) state — pays off exactly never,
-    * because both are bounded by the same chromatic spread. */
-  private[graft] val mexAggExpr: org.apache.spark.sql.Column =
-    expr("aggregate(sort_array(collect_set(ncolor)), 0, " +
-      "(m, c) -> CASE WHEN c = m THEN m + 1 ELSE m END)")
+  /** The least colour not in `used`. */
+  private def mex(used: Int => Boolean): Int = Iterator.from(0).find(!used(_)).get
+
+  /** Vertex state of the colouring [[supersteps]]: `round` is 0 while the
+    * vertex is uncoloured (its `color` then at most a tentative pick) and
+    * its commit round after; `used` holds the colours its coloured
+    * neighbours have sent it; `pending` counts, for Jones-Plassmann, its
+    * higher-priority neighbours not yet coloured. */
+  private case class Hue(color: Int, round: Int, pending: Int, used: BitSet)
+
+  /** The colouring result row of a [[Hue]] state, `(v, color, round)`. */
+  private val hueRow: PartialFunction[(Long, Hue), InternalRow] =
+    { case (v, h) => InternalRow(v, h.color, h.round) }
+  private val HueSchema = "v LONG NOT NULL, color INT NOT NULL, round INT NOT NULL"
 
   /** JONES–PLASSMANN greedy graph coloring — the second classic
     * symmetry-breaking BSP primitive next to [[maximalIndependentSet]],
@@ -1817,167 +1807,68 @@ object GraphOps {
     * vertex's depth in the priority-decreasing dependency DAG. Everything
     * — membership, color, round — is deterministic, so the oracle replays
     * the identical rounds. Self-loops dropped (uncolorable otherwise);
-    * returns `(v, color, round)`, colors 0-based, rounds 1-based.
+    * returns non-nullable `(v LONG, color INT, round INT)`, colors
+    * 0-based, rounds 1-based.
     *
-    * Scale shape of the BSP path: the hp-edge table (edges into
-    * higher-priority... rather FROM lower: src→dst with p(dst) < p(src))
-    * is computed ONCE as a static filter — priorities are pure arithmetic
-    * on the id, so "who waits for whom" never needs a join. Each round is
-    * then one blocked-set semi-join, one color-lookup join for the ready
-    * frontier, and one mex aggregation over candidate colors (the {0} ∪
-    * {c+1} trick: the mex of a set S is the min of those candidates not
-    * in S — no per-vertex loop, no UDF). JP's cost profile is a LONG THIN
-    * TAIL — the ready-set sizes decay geometrically, so the last ~half of
-    * the rounds each pay a full barrier to color <2% of the vertices
-    * (measured: rounds 12–23 of 23 color 8% at sf0.1). The loop therefore
-    * TAIL-FINISHES: once ≤`tailSolveVertices` remain uncolored, the
-    * residual subproblem (remaining hp-edges + the already-assigned
-    * colors on their boundary) is gathered and the SAME rounds complete
-    * in one driver pass, round numbering continuing — the contracted-
-    * residual discipline [[incrementalConnectedComponents]] uses, and
-    * what a 100 TB run would do too (the residue after the mass rounds
-    * is metadata-sized). Whole-problem size gate as in
-    * [[connectedComponents]]; q_graph_coloring benches the gate,
-    * q_graph_coloring_bsp forces the loop with a 10%-of-fixture tail
-    * bound so the distributed phase covers >90% of the color mass.
+    * Whole-problem size gate as in [[connectedComponents]]; past it the
+    * rounds are [[supersteps]] over a [[Hue]] per vertex, whose `pending`
+    * starts at its higher-priority degree. In round r every vertex whose
+    * `pending` is 0 takes the mex of its `used` colours and sends its colour
+    * to all its neighbours: ONE message shuffle, combined per receiver as
+    * (senders, colour set). Any uncoloured receiver is lower in priority
+    * order than the sender (it could not have waited on a vertex that
+    * waits on it), so it subtracts the senders from `pending` and adds the
+    * colours with no filter. A round is one Spark job; the graph-sized
+    * coloured set is vertex state, never an accumulated frame. JP's cost
+    * profile is a long thin tail (the ready sets decay geometrically: 23
+    * rounds at sf0.1, the last ~half colouring <2% of the vertices), at
+    * one job per round. q_graph_coloring benches the gate,
+    * q_graph_coloring_bsp forces the supersteps.
     */
   def jonesPlassmannColoring(spark: SparkSession, edges: DataFrame,
       maxRounds: Int = ColoringRoundCap,
-      driverSolveLimit: Long = DriverSolveEdgeLimit,
-      tailSolveVertices: Long = 100000): DataFrame = {
+      driverSolveLimit: Long = DriverSolveEdgeLimit): DataFrame = {
     import spark.implicits._
     val (und, edgeCount) = lcgUndirected(edges, "jonesPlassmannColoring")
-    // The SAME rounds, in memory — the whole-problem gate path AND the
-    // tail finish (which seeds `colored` with the boundary colors and
-    // continues the round numbering).
-    def simulateRounds(verts: Array[Long], hpAdj: Long => Array[Long],
-        colored: scala.collection.mutable.LongMap[Int],
-        startRound: Int): Seq[(Long, Int, Int)] = {
-      val remaining = scala.collection.mutable.HashSet.empty[Long]
-      verts.foreach(remaining += _)
-      val out = Seq.newBuilder[(Long, Int, Int)]
-      var r = startRound - 1
-      while (remaining.nonEmpty && r < maxRounds) {
-        r += 1
-        val newly = remaining.iterator
-          .filter(v => hpAdj(v).forall(colored.contains)).toArray
-        newly.foreach { v =>
-          val used = hpAdj(v).iterator.map(colored(_)).toSet
-          val c = Iterator.from(0).find(!used(_)).get
-          colored(v) = c
-          out += ((v, c, r))
-        }
-        newly.foreach(remaining -= _)
-      }
-      require(remaining.isEmpty,
-        s"coloring did not converge within $maxRounds rounds")
-      out.result()
-    }
     if (edgeCount <= driverSolveLimit) {
+      // the SAME rounds, in memory
       val hpAdj = adjacency(und).map { case (v, ns) =>
         v -> ns.filter(u => lcgPri(u) < lcgPri(v))
       }
-      return simulateRounds(hpAdj.keys.toArray, hpAdj(_),
-        scala.collection.mutable.LongMap.empty[Int], 1)
-        .toDF("v", "color", "round")
+      val colored = scala.collection.mutable.LongMap.empty[Int]
+      val out = Seq.newBuilder[(Long, Int, Int)]
+      var remaining = hpAdj.keySet
+      var r = 0
+      while (remaining.nonEmpty && r < maxRounds) {
+        r += 1
+        val newly = remaining.filter(v => hpAdj(v).forall(colored.contains))
+        newly.foreach { v =>
+          colored(v) = mex(hpAdj(v).iterator.map(colored(_)).toSet)
+          out += ((v, colored(v), r))
+        }
+        remaining --= newly
+      }
+      require(remaining.isEmpty, s"coloring did not converge within $maxRounds rounds")
+      return out.result().toDF("v", "color", "round")
     }
-    val hp = hpEdges(und)
-    var (un, unCount) = checkpointCount(und.select(col("src").as("v")).distinct())
-    // colored state = a [[Waves]] union of per-round checkpointed `newly`
-    // leaves (the multiBrandesDeltas discipline): any consumer re-executes
-    // only a union of materialized blocks, never a nested join/agg lineage
-    // — per-round cost is TWO materializations (newly, un; the termination
-    // count rides un's checkpoint job). Re-checkpointing the accumulated
-    // frame EVERY round measured 2.7x slower, and a checkpoint cadence
-    // over un-checkpointed rounds 2.6x slower (its nested mex
-    // recomputation dominated). The Waves collapse is neither: one
-    // single-partition checkpoint of already-materialized legs per 12
-    // rounds — at sf1 (20 distributed rounds, one collapse of ~131k rows)
-    // 274 jobs against the never-collapsed union's 271, wall time within
-    // run-to-run noise at local[4].
-    // The round number rides each leaf as a literal OVER its checkpoint,
-    // never inside the per-round plan: the mex join reads only
-    // (v, color), so column pruning drops the literal — an embedded round
-    // literal would change the generated code every round and turn the
-    // codegen cache into a per-round recompile
-    val colored = new Waves(spark, "v LONG, color INT, round INT")
-    def addRound(newly: DataFrame, round: Int): Unit =
-      colored.add(newly.select(col("v"), col("color"), lit(round).as("round")))
-    // one JP level: the ready frontier of `unc` colored by the shared
-    // sorted-set mex (degree-agnostic, one shuffle — see [[mexAggExpr]];
-    // this lifted the r9 bitmask spelling's hp-degree<63 REFUSAL of
-    // hub-bearing graphs, and with it the up-front max-degree scan).
-    // (Size-gated frontier BROADCASTS — the multiSourceBfsSigma
-    // discipline — were tried here and measured 1.4x SLOWER: five
-    // broadcasts per level each pay a driver collect+distribute, which
-    // at local[32] costs more than the small shuffles they replace.
-    // Shuffle joins + AQE coalescing stay.)
-    def roundStep(unc: DataFrame): DataFrame = {
-      val blocked = hp
-        .join(unc.select(col("v").as("uv")), col("dst") === col("uv"), "left_semi")
-        .select(col("src").as("v"))
-      val ready = unc.join(blocked, Seq("v"), "left_anti")
-      // hp-neighbor color mex of the ready frontier (hp-neighbors all
-      // colored by definition; no colored hp-neighbors → no row → mex 0)
-      val masks = hp
-        .join(ready.select(col("v").as("rv")), col("src") === col("rv"), "left_semi")
-        .join(colored.all.select(col("v").as("cv"), col("color").as("ncolor")),
-          col("dst") === col("cv"))
-        .groupBy(col("src").as("mv"))
-        .agg(mexAggExpr.as("mex"))
-      ready.join(masks, col("v") === col("mv"), "left")
-        .select(col("v"), coalesce(col("mex"), lit(0)).cast("int").as("color"))
-    }
-    // TWO levels per un-materialization (the fused-superstep discipline):
-    // level 1's output must materialize (consumed by level 2's mask join
-    // and both frontier anti-joins), but the intermediate uncolored set
-    // `un1` is a single anti-join over materialized leaves — cheap to
-    // re-execute — so the barrier-expensive un checkpoint + termination
-    // count run once per PAIR of rounds. An empty level is only possible
-    // when nothing remains (the min-priority uncolored vertex is always
-    // ready), so round numbering stays aligned with the oracle's unroll.
-    var r = 0
-    while (unCount > tailSolveVertices && r + 2 <= maxRounds) {
-      val newly1 = roundStep(un).localCheckpoint(true)
-      addRound(newly1, r + 1)
-      val un1 = un.join(newly1.select("v"), Seq("v"), "left_anti")
-      // lazy: the pair's closing job (un's checkpoint-and-count) fills it
-      val newly2 = roundStep(un1).localCheckpoint(eager = false)
-      addRound(newly2, r + 2)
-      r += 2
-      val (unNext, unNextCount) =
-        checkpointCount(un1.join(newly2.select("v"), Seq("v"), "left_anti"))
-      un = unNext
-      unCount = unNextCount
-    }
-    if (unCount > 0) {
-      // a maxRounds exit with a BIG remainder must fail loudly here, not
-      // attempt an unbounded gather
-      require(unCount <= tailSolveVertices,
-        s"coloring did not converge within $maxRounds distributed rounds" +
-          s" ($unCount vertices still uncolored)")
-      // tail finish: gather the residual subproblem (remaining vertices'
-      // hp-edges + boundary colors) — ≤ tailSolveVertices × avg-degree
-      // pairs — and complete the SAME rounds in memory
-      val remV = un.select("v").rdd.map(_.getLong(0)).collect()
-      val remHp = hp
-        .join(un.select(col("v").as("uv")), col("src") === col("uv"), "left_semi")
-        .localCheckpoint(true) // feeds the pair gather AND the boundary join
-      val pairs = remHp.rdd.map(x => (x.getLong(0), x.getLong(1))).collect()
-      val boundary = remHp
-        .join(colored.all.select(col("v").as("cv"), col("color").as("bc")),
-          col("dst") === col("cv"))
-        .select(col("cv"), col("bc")).distinct()
-        .rdd.map(x => (x.getLong(0), x.getInt(1))).collect()
-      val cmap = scala.collection.mutable.LongMap.empty[Int]
-      boundary.foreach { case (v, c) => cmap(v) = c }
-      val hpAdj = pairs.groupBy(_._1).map { case (v, es) => v -> es.map(_._2) }
-      colored.add(simulateRounds(remV,
-        v => hpAdj.getOrElse(v, Array.empty[Long]), cmap, r + 1)
-        .toDF("v", "color", "round"))
-    }
-    und.unpersist()
-    colored.all
+    supersteps[Hue](spark, und, maxRounds, HueSchema, n =>
+        s"coloring did not converge within $maxRounds rounds ($n vertices still uncolored)")(
+        (v, ns) => Hue(-1, 0, ns.count(u => lcgPri(u) < lcgPri(v)), BitSet.empty),
+        _.round == 0) { (g, state, round) =>
+      // a vertex with no uncolored higher-priority neighbor left takes
+      // the mex of the colors it holds
+      val colored = state.mapValues(h =>
+        if (h.round == 0 && h.pending == 0) Hue(mex(h.used), round, 0, BitSet.empty) else h)
+      // and sends it to every neighbor: (senders, colors) per receiver
+      val sent = g.send(colored)((_, h) =>
+        if (h.round == round) Some((1, BitSet(h.color))) else None)(
+        (a, b) => (a._1 + b._1, a._2 | b._2))
+      // an uncolored receiver counts the senders off and keeps their colors
+      g.receive(colored, sent).mapValues {
+        case (h, Some((k, cs))) if h.round == 0 => h.copy(pending = h.pending - k, used = h.used | cs)
+        case (h, _) => h
+      }
+    }(hueRow)
   }
 
   /** Round cap shared by [[speculativeColoring]]'s two paths and the
@@ -1989,19 +1880,14 @@ object GraphOps {
 
   /** SPECULATIVE graph coloring — Gebremedhin–Manne conflict-resolution
     * rounds, the barrier-count answer to Jones–Plassmann's depth-bound
-    * weakness (the r8 stretch item): JP pays one barrier per priority-DAG
-    * level (depth 23 on the sf0.1 ring fixture), while speculation lets
-    * every uncolored vertex pick a color each round and uncolors only the
-    * loser of each tentative conflict. Round 1 is a HASHED GUESS
-    * (lcgPri % 8): a mex start has no committed colors, so every vertex
-    * picks 0 and EVERY edge conflicts — the tuning ledger's numbers at
-    * sf0.1, each measured: mex start = 7 rounds but round-2 uncolored
-    * 12379/15000 and 9.1 s (REJECTED); hashed start = 5 rounds, round-2
-    * uncolored 2628, 7.3 s ≈ JP-BSP's 7.4 s at local[32]. The tie is the
-    * expected local-mode result — barriers cost ~nothing in one JVM, so
-    * halving them pays nothing here; on a multi-executor cluster the
-    * barrier count IS the cost driver and 5 synchronization rounds vs
-    * JP's 12 fused (depth 23) is the scale win this operator exists for.
+    * weakness: JP pays one barrier per priority-DAG level (depth 23 on
+    * the sf0.1 ring fixture), while speculation lets every uncolored
+    * vertex pick a color each round and uncolors only the loser of each
+    * tentative conflict. Round 1 is a HASHED GUESS (lcgPri % 8): a mex
+    * start has no committed colors, so every vertex picks 0 and EVERY edge
+    * conflicts — measured at sf0.1: mex start = 7 rounds with 12379/15000
+    * uncolored after round 2 (REJECTED); hashed start = 5 rounds, 2628
+    * uncolored after round 2.
     * Determinism (the replayable-oracle requirement): tentative colors
     * are a pure function of the committed state, and the conflict rule is
     * fixed — of two adjacent SAME-tentative-color vertices the HIGHER LCG
@@ -2010,17 +1896,23 @@ object GraphOps {
     * bit-for-bit in SQL. The result is a proper coloring but NOT the
     * sequential-greedy one — q_graph_coloring keeps that contract.
     * Progress is guaranteed (the min-priority uncolored vertex never
-    * loses a conflict), `maxRounds` bounds both paths loudly. Per
-    * distributed round: one committed-neighbor sorted-set mex
-    * ([[mexAggExpr]] — degree-agnostic since r10, one shuffle) and one
-    * tentative×tentative conflict join keyed on the edge — both shrink
-    * with the uncolored set.
-    * Returns `(v, color, round)`, round = commit round, 1-based. */
+    * loses a conflict), `maxRounds` bounds both paths loudly.
+    *
+    * Past the driver gate the rounds are [[supersteps]] over a [[Hue]]
+    * per vertex, two message shuffles per round in one Spark job, as in
+    * [[maximalIndependentSet]]: each uncolored vertex sends its tentative
+    * color to its neighbors of higher priority value, combined into a
+    * color set, and a receiver whose own tentative color is in it loses;
+    * then each winner sends a commit notice with its color to all its
+    * neighbors, which feeds the receivers' next mex through `used`.
+    * Returns non-nullable `(v LONG, color INT, round INT)`, round = commit
+    * round, 1-based. */
   def speculativeColoring(spark: SparkSession, edges: DataFrame,
       maxRounds: Int = SpecColoringRoundCap,
       driverSolveLimit: Long = DriverSolveEdgeLimit): DataFrame = {
     import spark.implicits._
     val (und, edgeCount) = lcgUndirected(edges, "speculativeColoring")
+    val fail = s"speculative coloring did not converge within $maxRounds rounds"
     if (edgeCount <= driverSolveLimit) {
       val adj = adjacency(und)
       val color = scala.collection.mutable.LongMap.empty[Int]
@@ -2030,11 +1922,7 @@ object GraphOps {
       while (un.nonEmpty && r < maxRounds) {
         r += 1
         val tent = un.iterator.map { v =>
-          if (r == 1) v -> (lcgPri(v) % 8).toInt
-          else {
-            val used = adj(v).iterator.flatMap(color.get).toSet
-            v -> Iterator.from(0).find(c => !used(c)).get
-          }
+          v -> (if (r == 1) (lcgPri(v) % 8).toInt else mex(adj(v).iterator.flatMap(color.get).toSet))
         }.toMap
         val losers = tent.keysIterator.filter { v =>
           adj(v).exists(u => tent.get(u).contains(tent(v)) && lcgPri(v) > lcgPri(u))
@@ -2044,55 +1932,35 @@ object GraphOps {
         }
         un = losers
       }
-      require(un.isEmpty,
-        s"speculative coloring did not converge within $maxRounds rounds")
+      require(un.isEmpty, fail)
       return out.result().toDF("v", "color", "round")
     }
-    // committed state = a [[Waves]] union of per-round checkpointed leaves,
-    // the commit round a literal over each (the jonesPlassmannColoring
-    // discipline — consumers re-execute a union of materialized blocks,
-    // never a nested lineage, and the mex join prunes the literal)
-    val committed = new Waves(spark, "v LONG, color INT, round INT")
-    var (un, unCount) = checkpointCount(und.select(col("src").as("v")).distinct())
-    var r = 0
-    while (unCount > 0 && r < maxRounds) {
-      r += 1
-      // Round 1: a hashed GUESS (lcgPri % 8) instead of the mex — with no
-      // committed colors every mex is 0 and EVERY edge conflicts, which
-      // measured as the variant's dominant cost (round-2 uncolored
-      // 12379 → 2628 of 15000 at sf0.1 under the guess). Rounds ≥ 2:
-      // mex over COMMITTED neighbor colors (no colored neighbor → mask
-      // 0 → mex 0).
-      val tent = (if (r == 1)
-        un.select(col("v"), (lcgPriCol(col("v")) % 8).cast("int").as("color"))
-      else {
-        val masks = und
-          .join(un.select(col("v").as("uv")), col("src") === col("uv"), "left_semi")
-          .join(committed.all.select(col("v").as("cv"), col("color").as("ncolor")),
-            col("dst") === col("cv"))
-          .groupBy(col("src").as("mv"))
-          .agg(mexAggExpr.as("mex"))
-        un.join(masks, col("v") === col("mv"), "left")
-          .select(col("v"), coalesce(col("mex"), lit(0)).cast("int").as("color"))
-      }).localCheckpoint(true)
-      // conflicts: adjacent equal TENTATIVE colors; the higher priority
-      // endpoint uncolors (und is symmetric, so one directed read
-      // per pair suffices: keep the src side when it is the loser)
-      val (losers, loserCount) = checkpointCount(und
-        .join(tent.select(col("v").as("src"), col("color").as("ca")), Seq("src"))
-        .join(tent.select(col("v").as("dst"), col("color").as("cb")), Seq("dst"))
-        .filter(col("ca") === col("cb") && lcgPriCol(col("src")) > lcgPriCol(col("dst")))
-        .select(col("src").as("v")).distinct())
-      committed.add(tent.join(losers, Seq("v"), "left_anti").localCheckpoint(true)
-        .select(col("v"), col("color"), lit(r).as("round")))
-      un = losers
-      unCount = loserCount
-    }
-    require(unCount == 0,
-      s"speculative coloring did not converge within $maxRounds rounds" +
-        s" ($unCount vertices still uncolored)")
-    und.unpersist()
-    committed.all
+    supersteps[Hue](spark, und, maxRounds, HueSchema,
+        n => s"$fail ($n vertices still uncolored)")(
+        (_, _) => Hue(-1, 0, 0, BitSet.empty), _.round == 0) { (g, state, round) =>
+      // tentative colors: round 1's hashed guess, then the mex of the
+      // committed neighbors' colors
+      val tent = state.mapPartitions(_.map { case (v, h) =>
+        (v, if (h.round > 0) h
+          else h.copy(color = if (round == 1) (lcgPri(v) % 8).toInt else mex(h.used)))
+      }, preservesPartitioning = true)
+      // an uncolored vertex loses to a neighbor of smaller priority value
+      // that picked its tentative color
+      val rivals = g.send(tent, (v, u) => lcgPri(v) < lcgPri(u))((_, h) =>
+        if (h.round == 0) Some(BitSet(h.color)) else None)(_ | _)
+      val won = g.receive(tent, rivals).mapValues {
+        case (h, rs) if h.round == 0 && !rs.exists(_(h.color)) =>
+          h.copy(round = round, used = BitSet.empty)
+        case (h, _) => h
+      }
+      // the winners' commit notices feed the receivers' next mex
+      val notes = g.send(won)((_, h) =>
+        if (h.round == round) Some(BitSet(h.color)) else None)(_ | _)
+      g.receive(won, notes).mapValues {
+        case (h, Some(cs)) if h.round == 0 => h.copy(used = h.used | cs)
+        case (h, _) => h
+      }
+    }(hueRow)
   }
 
   /** INCREMENTAL connected-components maintenance over INSERT-only edge
@@ -2645,7 +2513,7 @@ object GraphOps {
     try {
       // the first shrink (full-graph degree ≥ k) runs before the loop, so
       // `rounds` loop rounds are rounds − 1 shrinks plus the detection round
-      val (deg0, n0) = checkpointCountRdd(g.init(_.length.toLong).filter(_._2 >= k))
+      val (deg0, n0) = checkpointCountRdd(g.init((_, ns) => ns.length.toLong).filter(_._2 >= k))
       val core = peelToFixpoint(deg0, n0, rounds, n =>
         s"kcorePeel did not converge within $rounds rounds (|core| still $n " +
           "and changing) - raise the cap; publishing a non-fixpoint peel " +

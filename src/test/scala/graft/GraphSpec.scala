@@ -1477,9 +1477,10 @@ class GraphSpec extends SparkSpec {
     import spark.implicits._
     import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
     // Ring edges read from parquet carry nullable columns; a Seq does not.
-    // Both MIS paths and the k-core peel publish non-nullable columns
-    // either way (the driver gate's result always had them; the BSP loop's
-    // used to inherit the input's nullability).
+    // Both paths of MIS, Jones-Plassmann and speculative coloring, and the
+    // k-core peel, publish non-nullable columns either way (the driver
+    // gates' results always had them; the BSP loops' used to inherit the
+    // input's nullability).
     val e = Seq((0L, 1L), (1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (5L, 0L),
       (0L, 3L), (7L, 0L)).toDF("src", "dst")
     val nullable = e.select(when(col("src") >= 0, col("src")).as("src"),
@@ -1489,10 +1490,19 @@ class GraphSpec extends SparkSpec {
       StructField("round", IntegerType, nullable = false)))
     val core = StructType(Seq(StructField("v", LongType, nullable = false),
       StructField("deg", LongType, nullable = false)))
+    val coloring = StructType(Seq(StructField("v", LongType, nullable = false),
+      StructField("color", IntegerType, nullable = false),
+      StructField("round", IntegerType, nullable = false)))
     for (in <- Seq(e, nullable)) {
       val outs = Seq(
         "MIS gate" -> (GraphOps.maximalIndependentSet(spark, in), mis),
         "MIS BSP" -> (GraphOps.maximalIndependentSet(spark, in, driverSolveLimit = 0L), mis),
+        "JP gate" -> (GraphOps.jonesPlassmannColoring(spark, in), coloring),
+        "JP BSP" -> (GraphOps.jonesPlassmannColoring(spark, in, driverSolveLimit = 0L),
+          coloring),
+        "speculative gate" -> (GraphOps.speculativeColoring(spark, in), coloring),
+        "speculative BSP" -> (GraphOps.speculativeColoring(spark, in, driverSolveLimit = 0L),
+          coloring),
         "kcorePeel" -> (GraphOps.kcorePeel(spark, in, 2, 6), core))
       for ((op, (out, schema)) <- outs) {
         assert(out.schema == schema, op)
@@ -1517,7 +1527,8 @@ class GraphSpec extends SparkSpec {
       r.dependencies.forall(d =>
         d.isInstanceOf[OneToOneDependency[_]] && narrow(d.rdd, state))
     try {
-      val (deg0, n0) = GraphOps.checkpointCountRdd(g.init(_.length.toLong).filter(_._2 >= 2))
+      val (deg0, n0) = GraphOps.checkpointCountRdd(g.init((_, ns) => ns.length.toLong)
+        .filter(_._2 >= 2))
       assert(n0 == 4L)
       // one peel round, spelled as kcorePeel spells it: 3 loses its edge to 4
       val cnt = g.send(deg0)((_, _) => Some(1L))(_ + _)
@@ -1561,16 +1572,9 @@ class GraphSpec extends SparkSpec {
     val e = raw.toDF("src", "dst")
     val gate = GraphOps.jonesPlassmannColoring(spark, e).collect()
       .map(r => r.getLong(0) -> ((r.getInt(1), r.getInt(2)))).toMap
-    val bsp = GraphOps.jonesPlassmannColoring(spark, e, driverSolveLimit = 0L,
-        tailSolveVertices = 0L) // pure distributed rounds, no tail finish
+    val bsp = GraphOps.jonesPlassmannColoring(spark, e, driverSolveLimit = 0L)
       .collect().map(r => r.getLong(0) -> ((r.getInt(1), r.getInt(2)))).toMap
     assert(gate == bsp, "driver simulation and BSP loop replay identical rounds")
-    // hybrid: hand off MID-GRAPH to the tail finish (boundary colors +
-    // continued round numbering must splice exactly)
-    val hybrid = GraphOps.jonesPlassmannColoring(spark, e, driverSolveLimit = 0L,
-        tailSolveVertices = 3L)
-      .collect().map(r => r.getLong(0) -> ((r.getInt(1), r.getInt(2)))).toMap
-    assert(gate == hybrid, "tail finish splices boundary colors and rounds exactly")
     val und = raw.filter(p => p._1 != p._2).flatMap(p => Seq(p, p.swap)).distinct
     val adj = und.groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
     for ((u, v) <- und) assert(gate(u)._1 != gate(v)._1, s"edge $u-$v monochrome")
@@ -1643,13 +1647,13 @@ class GraphSpec extends SparkSpec {
     val n = 66
     val raw = for (i <- 0 until n; j <- i + 1 until n) yield (i.toLong, j.toLong)
     val e = raw.toDF("src", "dst")
-    // forced-distributed, no tail finish: every mex runs through the
-    // sorted-set aggregate. K66's greedy coloring needs ALL 66 colors, so
-    // mex values reach 65 — past the r9 single-word bitmask's 63-bit
-    // ceiling (which REFUSED this graph via require(maxDeg < 63), and
-    // whose shiftleft would silently wrap past color 62 without the gate)
+    // forced-distributed: every mex runs over the color set the vertex's
+    // messages built. K66's greedy coloring needs ALL 66 colors, so mex
+    // values reach 65 — past the r9 single-word bitmask's 63-bit ceiling
+    // (which REFUSED this graph via require(maxDeg < 63), and whose
+    // shiftleft would silently wrap past color 62 without the gate)
     val bsp = GraphOps.jonesPlassmannColoring(spark, e, maxRounds = 100,
-        driverSolveLimit = 0L, tailSolveVertices = 0L)
+        driverSolveLimit = 0L)
       .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
     assert(bsp.values.toSet == (0 until n).toSet, "clique must use all 66 colors")
     // equals sequential greedy in priority order: the k-th clique vertex
@@ -1737,12 +1741,12 @@ class GraphSpec extends SparkSpec {
     // The barrier count of the MIS, Jones-Plassmann and speculative BSP
     // loops on the JP test graph, and of the delete-aware MIS and
     // coloring maintainers on the diff above: each call and the collect
-    // of its result. On the delete-aware diff the maintainers' cone closes
-    // at its seeds; its edge set is a lazy local checkpoint that the
-    // domain gate's aggregate fills, so it costs no job of its own. On the
+    // of its result. Every edge set is a lazy local checkpoint that the
+    // domain gate's aggregate fills, so it costs no job of its own. The
+    // three loops run RDD supersteps, one job per round. On the
+    // delete-aware diff the maintainers' cone closes at its seeds. On the
     // chained cone each of the 28 waves is one checkpoint-and-count into
-    // the cone's wave union. The MIS loop runs RDD supersteps, one job per
-    // round (15 jobs as a DataFrame loop).
+    // the cone's wave union.
     val e = Seq((0L, 1L), (1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (5L, 0L),
       (0L, 3L), (7L, 0L), (7L, 7L), (2L, 5L)).toDF("src", "dst")
     val (base, newE, ins, del) = symDelDiff
@@ -1752,13 +1756,9 @@ class GraphSpec extends SparkSpec {
     def jobs(df: => org.apache.spark.sql.DataFrame) = sparkJobs(df.collect())._2
     val loops = (
       jobs(GraphOps.maximalIndependentSet(spark, e, driverSolveLimit = 0L)),
-      jobs(GraphOps.jonesPlassmannColoring(spark, e, driverSolveLimit = 0L,
-        tailSolveVertices = 0L)),
-      jobs(GraphOps.jonesPlassmannColoring(spark, e, driverSolveLimit = 0L,
-        tailSolveVertices = 3L)),
+      jobs(GraphOps.jonesPlassmannColoring(spark, e, driverSolveLimit = 0L)),
       jobs(GraphOps.speculativeColoring(spark, e, driverSolveLimit = 0L)))
-    assert(loops == ((7, 21, 21, 14)), "Spark jobs (MIS, JP, JP with a " +
-      "3-vertex tail finish, speculative coloring), forced BSP")
+    assert(loops == ((6, 7, 6)), "Spark jobs (MIS, JP, speculative coloring), forced BSP")
     val cones = (
       jobs(GraphOps.incrementalMaximalIndependentSetDelete(
         spark, newE, base, prevMis, ins, del)),
@@ -1786,10 +1786,10 @@ class GraphSpec extends SparkSpec {
 
   test("LCG domain gate: an id past 2^31 fails loudly and leaves no cached edge set") {
     import spark.implicits._
-    // The MIS and coloring loops persist their symmetrized edge set before
-    // the gate's aggregate reads it; a failed gate must unpersist it, and
-    // MIS must not have built its superstep adjacency. Local checkpoints
-    // (the cone's edge set) are not cache entries.
+    // Every symmetry-breaker's symmetrized edge set is a lazy local
+    // checkpoint that the gate's aggregate fills, not a cache entry; a
+    // failed gate must leave no cache entry behind, and no loop may have
+    // built its superstep adjacency.
     def cached = cachedRdds
     val bad = Seq((0L, 1L), (1L, 2147483648L)).toDF("src", "dst")
     val ok = Seq((0L, 1L)).toDF("src", "dst")
@@ -1812,15 +1812,27 @@ class GraphSpec extends SparkSpec {
   test("MIS past its round cap fails loudly and leaves no adjacency cached") {
     import spark.implicits._
     def pri(v: Long) = (v * 1103515245L + 12345L) % 2147483648L
-    // the 15-round chain of the wave-collapse test, capped at 3 rounds
+    // the 15-round chain of the wave-collapse test (30 JP rounds deep),
+    // capped at 3 rounds; speculative coloring colors that chain in one
+    // round, so its case is K12, which it colors in 5
     val chain = (0L until 30L).sortBy(pri)
     val e = chain.zip(chain.tail).toDF("src", "dst")
-    val before = cachedRdds
-    val err = intercept[IllegalArgumentException](
-      GraphOps.maximalIndependentSet(spark, e, maxRounds = 3, driverSolveLimit = 0L))
-    assert(err.getMessage.contains("MIS did not converge within 3 rounds"), err.getMessage)
-    assert((cachedRdds -- before).isEmpty && !adjacencyCached,
-      "a non-converged MIS left its edge set or adjacency cached")
+    val k12 = (for (i <- 0L until 12L; j <- i + 1 until 12L) yield (i, j)).toDF("src", "dst")
+    val cases = Seq[(String, () => Any, String)](
+      ("MIS", () => GraphOps.maximalIndependentSet(spark, e, maxRounds = 3,
+        driverSolveLimit = 0L), "MIS did not converge within 3 rounds"),
+      ("JP", () => GraphOps.jonesPlassmannColoring(spark, e, maxRounds = 3,
+        driverSolveLimit = 0L), "coloring did not converge within 3 rounds"),
+      ("speculative coloring", () => GraphOps.speculativeColoring(spark, k12,
+        maxRounds = 3, driverSolveLimit = 0L),
+        "speculative coloring did not converge within 3 rounds"))
+    for ((op, call, msg) <- cases) {
+      val before = cachedRdds
+      val err = intercept[IllegalArgumentException](call())
+      assert(err.getMessage.contains(msg), err.getMessage)
+      assert((cachedRdds -- before).isEmpty && !adjacencyCached,
+        s"a non-converged $op left its edge set or adjacency cached")
+    }
   }
 
   test("kcorePeel past its round cap fails loudly and leaves no adjacency cached") {

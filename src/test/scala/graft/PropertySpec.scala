@@ -132,6 +132,30 @@ class PropertySpec extends SparkSpec {
     }
   }
 
+  test("coloring property: driver gate == forced BSP, rows with multiplicity") {
+    import spark.implicits._
+    // random graphs with duplicate edges, both directions of some, self-
+    // loops, and a hub whose degree passes the old 63-color ceiling
+    val gen = for {
+      es <- graphGen
+      hub <- Gen.choose(0L, 24L)
+      spokes <- Gen.choose(64, 90)
+      loops <- Gen.listOfN(3, Gen.choose(0L, 24L))
+    } yield es ++ es.take(5).map(_.swap) ++ es.take(3) ++ loops.map(v => (v, v)) ++
+      (1 to spokes).map(i => (hub, 100L + i))
+    val ops = Seq[(String, (org.apache.spark.sql.DataFrame, Long) => org.apache.spark.sql.DataFrame)](
+      "jonesPlassmannColoring" -> ((e, limit) =>
+        GraphOps.jonesPlassmannColoring(spark, e, driverSolveLimit = limit)),
+      "speculativeColoring" -> ((e, limit) =>
+        GraphOps.speculativeColoring(spark, e, driverSolveLimit = limit)))
+    for ((edges, i) <- samples(gen, 6).zipWithIndex; (op, color) <- ops) {
+      def rows(limit: Long) = color(edges.toDF("src", "dst"), limit).collect()
+        .map(r => (r.getLong(0), r.getInt(1), r.getInt(2))).toSeq.sorted
+      val gate = rows(GraphOps.DriverSolveEdgeLimit)
+      assert(gate.nonEmpty && gate == rows(0L), s"$op, sample $i: gate and BSP rows differ")
+    }
+  }
+
   test("incremental maintenance == full recompute on random graph/delta splits") {
     import spark.implicits._
     // the whole-family property: for a random graph randomly split into
