@@ -1427,9 +1427,10 @@ object GraphQueries extends QueryModule {
     // ([[GraphOps.maximalIndependentSet]]). The oracle replays the
     // identical rounds as a fixed-depth CTE chain (rounds past
     // convergence are empty no-ops; the Spark side require()s convergence
-    // within the same cap). q_graph_mis benches the size-gated driver
-    // simulation; q_graph_mis_bsp forces the distributed loop — the
-    // 100 TB path — per the q_graph_cc_bsp discipline.
+    // within the same cap). The rounds are one superstep program with two
+    // executors: q_graph_mis benches the size-gated in-memory executor;
+    // q_graph_mis_bsp forces the distributed one — the 100 TB path — per
+    // the q_graph_cc_bsp discipline.
     "q_graph_mis" -> ((s, dir) =>
       GraphOps.maximalIndependentSet(s, ringEdges(s, dir)).orderBy("v")),
     "q_graph_mis_bsp" -> ((s, dir) =>
@@ -1520,8 +1521,9 @@ object GraphQueries extends QueryModule {
     // symmetry-breaking primitive ([[GraphOps.jonesPlassmannColoring]]):
     // color = mex over higher-priority neighbors' colors, equal to the
     // sequential greedy coloring in priority order; round = depth in the
-    // priority-decreasing dependency DAG. Same gate/BSP-twin/oracle
-    // discipline as q_graph_mis.
+    // priority-decreasing dependency DAG. Same discipline as q_graph_mis:
+    // one superstep program, the in-memory executor below the size gate,
+    // the distributed one in the _bsp twin, one oracle for both.
     "q_graph_coloring" -> ((s, dir) =>
       GraphOps.jonesPlassmannColoring(s, ringEdges(s, dir)).orderBy("v")),
     // forced past the gate: every round, the geometric tail included, is

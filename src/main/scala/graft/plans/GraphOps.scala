@@ -43,14 +43,17 @@ import scala.reflect.ClassTag
   *    so a barrier costs several jobs (GraphSpec pins `bfsLevels` on the
   *    30-vertex G6 at 32 jobs for 4 barriers and one checkpoint).
   *  - RDD vertex-state supersteps, [[checkpointCountRdd]] barriers over a
-  *    [[VertexAdjacency]]: the forced-BSP rounds of the symmetry-breakers
-  *    ([[maximalIndependentSet]], [[jonesPlassmannColoring]],
-  *    [[speculativeColoring]]) and the [[kcorePeel]] rounds. The static
-  *    adjacency is grouped once under one `HashPartitioner` and persisted,
-  *    the vertex state keeps that partitioner, so state ⋈ adjacency is
-  *    narrow and only the round's messages shuffle; nothing is re-planned
-  *    per round, and a round is ONE job (its message shuffles are stages
-  *    of it).
+  *    [[VertexAdjacency]]: the [[kcorePeel]] rounds, and the rounds of the
+  *    symmetry-breakers ([[maximalIndependentSet]],
+  *    [[jonesPlassmannColoring]], [[speculativeColoring]]) past their
+  *    driver gate. The static adjacency is grouped once under one
+  *    `HashPartitioner` and persisted, the vertex state keeps that
+  *    partitioner, so state ⋈ adjacency is narrow and only the round's
+  *    messages shuffle; nothing is re-planned per round, and a round is
+  *    ONE job (its message shuffles are stages of it). The
+  *    symmetry-breakers write each round once, as [[Exchange]]s, and
+  *    [[supersteps]] runs that one program on either executor: these RDD
+  *    rounds, or, below the gate, the same rounds in memory.
   *
   * On a real cluster, `localCheckpoint` would become `checkpoint` on
   * reliable storage.
@@ -1336,7 +1339,7 @@ object GraphOps {
     labels
   }
 
-  /** Round cap shared by [[maximalIndependentSet]]'s two paths and the
+  /** Round cap shared by [[maximalIndependentSet]]'s two executors and the
     * q_graph_mis oracle's fixed SQL unroll (rounds past convergence are
     * empty no-ops on both sides; non-convergence within the cap is a loud
     * failure, never a truncated result). */
@@ -1360,8 +1363,8 @@ object GraphOps {
     * symmetrized into a distinct set `und` held as a lazy local
     * checkpoint, and ONE aggregate action over it that fills `und`,
     * returns `size` (the edge count by default) and runs the loud domain
-    * gate. No caller reads `und` per round: the driver gates collect it
-    * ([[adjacency]]), the superstep loops group it once into their
+    * gate. No caller reads `und` per round: [[supersteps]] collects it
+    * once into its local index or groups it once into its
     * [[VertexAdjacency]], and the hp-cone filters it once. A checkpoint,
     * unlike a cached plan, keeps the partitions AQE coalesced it to (a
     * cached plan keeps `spark.sql.shuffle.partitions` of them), and it is
@@ -1387,43 +1390,93 @@ object GraphOps {
     (und, r.getLong(0))
   }
 
-  /** The driver-side adjacency of an [[lcgUndirected]] frame — the gate
-    * path of the symmetry-breakers: collected as primitive pairs, grouped
-    * by `src`. */
-  private def adjacency(und: DataFrame): Map[Long, Array[Long]] =
-    und.rdd.map(r => (r.getLong(0), r.getLong(1))).collect()
-      .groupBy(_._1).map { case (v, es) => v -> es.map(_._2) }
+  /** One message exchange of a [[supersteps]] round, in the algebra of
+    * [[VertexAdjacency.send]] and [[VertexAdjacency.receive]]: each vertex
+    * `v` whose state `s` has `msg(v, s) = Some(m)` sends `m` to every
+    * neighbour `u` with `to(v, u)`, combined per receiver by `combine`;
+    * then every vertex takes `update(v, s, its combined message)`. Both
+    * executors apply it: over a [[VertexAdjacency]] (one message
+    * shuffle), and in memory over the `active` vertices of the local
+    * index (those open when the round started). */
+  private final class Exchange[S, M: ClassTag](msg: (Long, S) => Option[M],
+      combine: (M, M) => M, to: (Long, Long) => Boolean = (_: Long, _: Long) => true)(
+      update: (Long, S, Option[M]) => S) extends Serializable {
+    def apply(g: VertexAdjacency, state: RDD[(Long, S)]): RDD[(Long, S)] =
+      g.receive(state, g.send(state, to)(msg)(combine)).mapPartitions(
+        _.map { case (v, (s, m)) => (v, update(v, s, m)) }, preservesPartitioning = true)
+    def apply(ids: Array[Long], nbrs: Array[Array[Int]], state: Array[S],
+        active: Array[Int]): Unit = {
+      val in = Array.fill[Option[M]](ids.length)(None)
+      for (i <- active; m <- msg(ids(i), state(i)); j <- nbrs(i) if to(ids(i), ids(j)))
+        in(j) = Some(in(j).fold(m)(combine(_, m)))
+      for (i <- active) state(i) = update(ids(i), state(i), in(i))
+    }
+  }
 
-  /** The superstep loop of the symmetry-breakers past their driver gate:
-    * a [[VertexAdjacency]] over an [[lcgUndirected]] frame, the state
-    * `init` for every vertex, and `step(g, state, r)` for the rounds
-    * r = 1, 2, … while any vertex is `open`, each round ending in one
+  /** The one round loop of the symmetry-breakers, a vertex program with
+    * two executors. The program: an [[lcgUndirected]] prologue over
+    * `edges`, the state `init` for every vertex, and for the rounds
+    * r = 1, 2, … while any vertex is `open` the [[Exchange]]s `round(r)`,
+    * applied in order. A vertex not `open` when a round starts is final:
+    * it sends nothing and no update changes it. A state still open after
+    * `maxRounds` rounds throws `fail(open vertices)`. The result is the
+    * non-nullable DDL `schema`, one `row` per vertex it keeps.
+    *
+    * The executor is one branch on the prologue's edge count. At most
+    * `driverSolveLimit` edges (the size gate of [[connectedComponents]])
+    * are collected once into an id index with neighbour-index arrays, and
+    * each round visits the vertices open at its start, in memory, with no
+    * Spark job; the result leaves as a local relation. Past the gate the
+    * rounds run over a [[VertexAdjacency]], each ending in one
     * [[checkpointCountRdd]] barrier — ONE Spark job, whose message
-    * shuffles are stages of it. A state still open after `maxRounds`
-    * rounds throws `fail(open vertices)`. The result leaves through
-    * `GraftFrames.sized` as the non-nullable DDL `schema`, one `row` per
-    * vertex it keeps, sized by the vertex count. The adjacency is
+    * shuffles are stages of it — and the result leaves through
+    * `GraftFrames.sized`, sized by the vertex count. The adjacency is
     * unpersisted on every exit, and each round's input state once the
-    * next one is filled. */
-  private def supersteps[S](spark: SparkSession, und: DataFrame, maxRounds: Int,
-      schema: String, fail: Long => String)(init: (Long, Array[Long]) => S,
-      open: S => Boolean)(step: (VertexAdjacency, RDD[(Long, S)], Int) => RDD[(Long, S)])(
+    * next one is filled. Both executors run the same rounds, so their
+    * `round` columns agree by construction. */
+  private def supersteps[S: ClassTag](spark: SparkSession, edges: DataFrame, op: String,
+      maxRounds: Int, driverSolveLimit: Long, schema: String, fail: Long => String)(
+      init: (Long, Array[Long]) => S, open: S => Boolean)(round: Int => Seq[Exchange[S, _]])(
       row: PartialFunction[(Long, S), InternalRow]): DataFrame = {
-    val g = new VertexAdjacency(spark, und.rdd.map(x => (x.getLong(0), x.getLong(1))))
-    try {
-      var (state, n) = checkpointCountRdd(g.init(init))
-      val vertices = n
-      var r = 0
-      while (n > 0 && r < maxRounds) {
-        r += 1
-        val (next, m) = checkpointCountRdd(step(g, state, r), (vs: (Long, S)) => open(vs._2))
-        state.unpersist(blocking = false)
-        state = next
-        n = m
-      }
+    val (und, edgeCount) = lcgUndirected(edges, op)
+    val pairs = und.rdd.map(x => (x.getLong(0), x.getLong(1)))
+    def rounds(vertices: Long)(step: Int => Long): Unit = {
+      var (n, r) = (vertices, 0)
+      while (n > 0 && r < maxRounds) { r += 1; n = step(r) }
       require(n == 0, fail(n))
-      GraftFrames.sized(spark, state.collect(row), StructType.fromDDL(schema), vertices)
-    } finally g.unpersist()
+    }
+    if (edgeCount <= driverSolveLimit) {
+      val es = pairs.collect()
+      val at = scala.collection.mutable.LongMap.empty[Int]
+      es.foreach(e => at.getOrElseUpdate(e._1, at.size))
+      val ids = new Array[Long](at.size)
+      at.foreach { case (v, i) => ids(i) = v }
+      val adj = Array.fill(ids.length)(Array.newBuilder[Int])
+      es.foreach(e => adj(at(e._1)) += at(e._2))
+      val nbrs = adj.map(_.result())
+      val state = Array.tabulate(ids.length)(i => init(ids(i), nbrs(i).map(ids)))
+      var active = ids.indices.toArray
+      rounds(ids.length) { r =>
+        round(r).foreach(_(ids, nbrs, state, active))
+        active = active.filter(i => open(state(i)))
+        active.length
+      }
+      GraftFrames.local(spark, ids.indices.flatMap(i => row.lift((ids(i), state(i)))),
+        StructType.fromDDL(schema))
+    } else {
+      val g = new VertexAdjacency(spark, pairs)
+      try {
+        var (state, vertices) = checkpointCountRdd(g.init(init))
+        rounds(vertices) { r =>
+          val (next, n) = checkpointCountRdd(round(r).foldLeft(state)((s, x) => x(g, s)),
+            (vs: (Long, S)) => open(vs._2))
+          state.unpersist(blocking = false)
+          state = next
+          n
+        }
+        GraftFrames.sized(spark, state.collect(row), StructType.fromDDL(schema), vertices)
+      } finally g.unpersist()
+    }
   }
 
   /** Deterministic MAXIMAL INDEPENDENT SET — Luby-style min-priority
@@ -1441,55 +1494,34 @@ object GraphOps {
     * never be selected); isolated vertices are out of scope (an edge
     * list cannot carry them). Returns `(v, round)` for members, 1-based.
     *
-    * Size-gated like [[connectedComponents]]: ≤`driverSolveLimit` edges
-    * run an in-memory simulation of the SAME rounds; past the gate the
-    * rounds are [[supersteps]]. Each vertex's state is its round (0 while
-    * active, r once it joins in round r, −1 once a neighbor has), so the
-    * members' rounds need no accumulator. A round shuffles two messages —
-    * each active vertex's priority to its neighbors (combined by min),
-    * then a removal notice from each new member — in one Spark job.
-    * Expected O(log n) rounds on bounded-degree graphs (Luby); `maxRounds`
-    * bounds both paths loudly, matching the oracle's fixed unroll. Both
-    * paths return one schema, non-nullable `(v LONG, round INT)`.
-    * q_graph_mis benches the gate path, q_graph_mis_bsp forces the
-    * supersteps (the q_graph_cc_bsp discipline).
+    * The rounds are one [[supersteps]] program, run in memory at most
+    * `driverSolveLimit` edges and as RDD supersteps past that gate. Each
+    * vertex's state is its round (0 while active, r once it joins in
+    * round r, −1 once a neighbor has), so the members' rounds need no
+    * accumulator. A round is two [[Exchange]]s — each active vertex's
+    * priority to its neighbors (combined by min), then a removal notice
+    * from each new member — and past the gate one Spark job. Expected
+    * O(log n) rounds on bounded-degree graphs (Luby); `maxRounds` bounds
+    * both executors loudly, matching the oracle's fixed unroll. Both
+    * return one schema, non-nullable `(v LONG, round INT)`. q_graph_mis
+    * benches the gate path, q_graph_mis_bsp forces the supersteps (the
+    * q_graph_cc_bsp discipline).
     */
   def maximalIndependentSet(spark: SparkSession, edges: DataFrame,
       maxRounds: Int = MisRoundCap,
       driverSolveLimit: Long = DriverSolveEdgeLimit): DataFrame = {
-    import spark.implicits._
-    val (und, edgeCount) = lcgUndirected(edges, "maximalIndependentSet")
-    val fail = s"MIS did not converge within $maxRounds rounds"
-    if (edgeCount <= driverSolveLimit) {
-      val adj = adjacency(und)
-      val active = scala.collection.mutable.HashSet.empty[Long]
-      adj.keysIterator.foreach(active += _)
-      val out = Seq.newBuilder[(Long, Int)]
-      var r = 0
-      while (active.nonEmpty && r < maxRounds) {
-        r += 1
-        val sel = active.iterator.filter { v =>
-          val pv = lcgPri(v)
-          adj(v).forall(u => !active.contains(u) || lcgPri(u) > pv)
-        }.toArray
-        out ++= sel.map(v => (v, r))
-        sel.foreach { v => active -= v; adj(v).foreach(active -= _) }
-      }
-      require(active.isEmpty, fail)
-      return out.result().toDF("v", "round")
-    }
     // state: 0 = active, r > 0 = member since round r, -1 = removed
-    supersteps[Int](spark, und, maxRounds, "v LONG NOT NULL, round INT NOT NULL",
-        _ => fail)((_, _) => 0, _ == 0) { (g, state, round) =>
-      // min priority among the ACTIVE neighbours of each vertex
-      val minp = g.send(state)((v, s) => if (s == 0) Some(lcgPri(v)) else None)(math.min)
-      // an active vertex below all of them joins the set this round
-      val sel = g.receive(state, minp).mapPartitions(_.map {
-        case (v, (s, m)) => (v, if (s == 0 && m.forall(lcgPri(v) < _)) round else s)
-      }, preservesPartitioning = true)
+    supersteps[Int](spark, edges, "maximalIndependentSet", maxRounds, driverSolveLimit,
+        "v LONG NOT NULL, round INT NOT NULL",
+        n => s"MIS did not converge within $maxRounds rounds ($n vertices still active)")(
+        (_, _) => 0, _ == 0) { round => Seq(
+      // an active vertex below the min priority of its active neighbours
+      // joins the set this round
+      new Exchange[Int, Long]((v, s) => if (s == 0) Some(lcgPri(v)) else None, math.min)(
+        (v, s, m) => if (s == 0 && m.forall(lcgPri(v) < _)) round else s),
       // and removes its active neighbours
-      val hit = g.send(sel)((_, s) => if (s == round) Some(()) else None)((_, _) => ())
-      g.receive(sel, hit).mapValues { case (s, h) => if (s == 0 && h.isDefined) -1 else s }
+      new Exchange[Int, Unit]((_, s) => if (s == round) Some(()) else None, (_, _) => ())(
+        (_, s, hit) => if (s == 0 && hit.isDefined) -1 else s))
     } { case (v, s) if s > 0 => InternalRow(v, s) }
   }
 
@@ -1720,7 +1752,7 @@ object GraphOps {
         Some(colorOf.getOrElse(u,
           throw new IllegalStateException(s"undecided hp-neighbor $u of $v")))
       }.toSet
-      colorOf(v) = Iterator.from(0).find(!used(_)).get
+      colorOf(v) = mex(used)
     }
     val coneColored = c.coneVerts.sorted.map(v => (v, colorOf(v))).toSeq
     prevVC.join(c.coneDf, Seq("v"), "left_anti")
@@ -1773,7 +1805,7 @@ object GraphOps {
       coneGatherPairLimit, maxConeFraction)
       .join(edgeUniverse(newEdges), Seq("v"), "left_semi")
 
-  /** Round cap shared by [[jonesPlassmannColoring]]'s two paths and the
+  /** Round cap shared by [[jonesPlassmannColoring]]'s two executors and the
     * q_graph_coloring oracle's fixed unroll (same contract as
     * [[MisRoundCap]]: no-op rounds past convergence, loud failure past
     * the cap). JP depth = the longest priority-decreasing path, much
@@ -1786,8 +1818,8 @@ object GraphOps {
   private def mex(used: Int => Boolean): Int = Iterator.from(0).find(!used(_)).get
 
   /** Vertex state of the colouring [[supersteps]]: `round` is 0 while the
-    * vertex is uncoloured (its `color` then at most a tentative pick) and
-    * its commit round after; `used` holds the colours its coloured
+    * vertex is uncoloured (its `color` then -1) and its commit round
+    * after; `used` holds the colours its coloured
     * neighbours have sent it; `pending` counts, for Jones-Plassmann, its
     * higher-priority neighbours not yet coloured. */
   private case class Hue(color: Int, round: Int, pending: Int, used: BitSet)
@@ -1810,68 +1842,47 @@ object GraphOps {
     * returns non-nullable `(v LONG, color INT, round INT)`, colors
     * 0-based, rounds 1-based.
     *
-    * Whole-problem size gate as in [[connectedComponents]]; past it the
-    * rounds are [[supersteps]] over a [[Hue]] per vertex, whose `pending`
-    * starts at its higher-priority degree. In round r every vertex whose
-    * `pending` is 0 takes the mex of its `used` colours and sends its colour
-    * to all its neighbours: ONE message shuffle, combined per receiver as
-    * (senders, colour set). Any uncoloured receiver is lower in priority
-    * order than the sender (it could not have waited on a vertex that
-    * waits on it), so it subtracts the senders from `pending` and adds the
-    * colours with no filter. A round is one Spark job; the graph-sized
-    * coloured set is vertex state, never an accumulated frame. JP's cost
-    * profile is a long thin tail (the ready sets decay geometrically: 23
-    * rounds at sf0.1, the last ~half colouring <2% of the vertices), at
-    * one job per round. q_graph_coloring benches the gate,
-    * q_graph_coloring_bsp forces the supersteps.
+    * The rounds are one [[supersteps]] program over a [[Hue]] per vertex,
+    * whose `pending` starts at its higher-priority degree, run in memory
+    * at most `driverSolveLimit` edges and as RDD supersteps past that
+    * gate. In round r every vertex whose `pending` is 0 takes the mex of
+    * its `used` colours and sends its colour to all its neighbours: ONE
+    * [[Exchange]], combined per receiver as (senders, colour set). Any
+    * uncoloured receiver is lower in priority order than the sender (it
+    * could not have waited on a vertex that waits on it), so it subtracts
+    * the senders from `pending` and adds the colours with no filter. Past
+    * the gate a round is one Spark job; the graph-sized coloured set is
+    * vertex state, never an accumulated frame. JP's cost profile is a
+    * long thin tail (the ready sets decay geometrically: 23 rounds at
+    * sf0.1, the last ~half colouring <2% of the vertices), at one job per
+    * round. q_graph_coloring benches the gate, q_graph_coloring_bsp forces
+    * the supersteps.
     */
   def jonesPlassmannColoring(spark: SparkSession, edges: DataFrame,
       maxRounds: Int = ColoringRoundCap,
       driverSolveLimit: Long = DriverSolveEdgeLimit): DataFrame = {
-    import spark.implicits._
-    val (und, edgeCount) = lcgUndirected(edges, "jonesPlassmannColoring")
-    if (edgeCount <= driverSolveLimit) {
-      // the SAME rounds, in memory
-      val hpAdj = adjacency(und).map { case (v, ns) =>
-        v -> ns.filter(u => lcgPri(u) < lcgPri(v))
-      }
-      val colored = scala.collection.mutable.LongMap.empty[Int]
-      val out = Seq.newBuilder[(Long, Int, Int)]
-      var remaining = hpAdj.keySet
-      var r = 0
-      while (remaining.nonEmpty && r < maxRounds) {
-        r += 1
-        val newly = remaining.filter(v => hpAdj(v).forall(colored.contains))
-        newly.foreach { v =>
-          colored(v) = mex(hpAdj(v).iterator.map(colored(_)).toSet)
-          out += ((v, colored(v), r))
-        }
-        remaining --= newly
-      }
-      require(remaining.isEmpty, s"coloring did not converge within $maxRounds rounds")
-      return out.result().toDF("v", "color", "round")
-    }
-    supersteps[Hue](spark, und, maxRounds, HueSchema, n =>
+    supersteps[Hue](spark, edges, "jonesPlassmannColoring", maxRounds, driverSolveLimit,
+        HueSchema, n =>
         s"coloring did not converge within $maxRounds rounds ($n vertices still uncolored)")(
         (v, ns) => Hue(-1, 0, ns.count(u => lcgPri(u) < lcgPri(v)), BitSet.empty),
-        _.round == 0) { (g, state, round) =>
-      // a vertex with no uncolored higher-priority neighbor left takes
-      // the mex of the colors it holds
-      val colored = state.mapValues(h =>
-        if (h.round == 0 && h.pending == 0) Hue(mex(h.used), round, 0, BitSet.empty) else h)
-      // and sends it to every neighbor: (senders, colors) per receiver
-      val sent = g.send(colored)((_, h) =>
-        if (h.round == round) Some((1, BitSet(h.color))) else None)(
-        (a, b) => (a._1 + b._1, a._2 | b._2))
-      // an uncolored receiver counts the senders off and keeps their colors
-      g.receive(colored, sent).mapValues {
-        case (h, Some((k, cs))) if h.round == 0 => h.copy(pending = h.pending - k, used = h.used | cs)
-        case (h, _) => h
-      }
+        _.round == 0) { round =>
+      val ready = (h: Hue) => h.round == 0 && h.pending == 0
+      // a vertex with no uncolored higher-priority neighbor left takes the
+      // mex of the colors it holds and sends it to every neighbor, as
+      // (senders, colors) per receiver
+      Seq(new Exchange[Hue, (Int, BitSet)](
+          (_, h) => if (ready(h)) Some((1, BitSet(mex(h.used)))) else None,
+          (a, b) => (a._1 + b._1, a._2 | b._2))({
+        case (_, h, _) if ready(h) => Hue(mex(h.used), round, 0, BitSet.empty)
+        // an uncolored receiver counts the senders off and keeps their colors
+        case (_, h, Some((k, cs))) if h.round == 0 =>
+          h.copy(pending = h.pending - k, used = h.used | cs)
+        case (_, h, _) => h
+      }))
     }(hueRow)
   }
 
-  /** Round cap shared by [[speculativeColoring]]'s two paths and the
+  /** Round cap shared by [[speculativeColoring]]'s two executors and the
     * q_graph_coloring_spec oracle's fixed unroll (the ring fixture
     * converges in 3/4/5/5 rounds at sf0.001/0.01/0.1/1 under the hashed
     * round-1 guess — measured; rounds past convergence are no-ops on
@@ -1896,70 +1907,44 @@ object GraphOps {
     * bit-for-bit in SQL. The result is a proper coloring but NOT the
     * sequential-greedy one — q_graph_coloring keeps that contract.
     * Progress is guaranteed (the min-priority uncolored vertex never
-    * loses a conflict), `maxRounds` bounds both paths loudly.
+    * loses a conflict), `maxRounds` bounds both executors loudly.
     *
-    * Past the driver gate the rounds are [[supersteps]] over a [[Hue]]
-    * per vertex, two message shuffles per round in one Spark job, as in
-    * [[maximalIndependentSet]]: each uncolored vertex sends its tentative
-    * color to its neighbors of higher priority value, combined into a
-    * color set, and a receiver whose own tentative color is in it loses;
-    * then each winner sends a commit notice with its color to all its
-    * neighbors, which feeds the receivers' next mex through `used`.
+    * The rounds are one [[supersteps]] program over a [[Hue]] per vertex,
+    * run in memory at most `driverSolveLimit` edges and as RDD supersteps
+    * past that gate (there one Spark job per round), two [[Exchange]]s per
+    * round as in [[maximalIndependentSet]]: each uncolored vertex sends
+    * its tentative color to its neighbors of higher priority value,
+    * combined into a color set, and a receiver whose own tentative color
+    * is in it loses; then each winner sends a commit notice with its
+    * color to all its neighbors, which feeds the receivers' next mex
+    * through `used`.
     * Returns non-nullable `(v LONG, color INT, round INT)`, round = commit
     * round, 1-based. */
   def speculativeColoring(spark: SparkSession, edges: DataFrame,
       maxRounds: Int = SpecColoringRoundCap,
       driverSolveLimit: Long = DriverSolveEdgeLimit): DataFrame = {
-    import spark.implicits._
-    val (und, edgeCount) = lcgUndirected(edges, "speculativeColoring")
-    val fail = s"speculative coloring did not converge within $maxRounds rounds"
-    if (edgeCount <= driverSolveLimit) {
-      val adj = adjacency(und)
-      val color = scala.collection.mutable.LongMap.empty[Int]
-      val out = Seq.newBuilder[(Long, Int, Int)]
-      var un = adj.keySet
-      var r = 0
-      while (un.nonEmpty && r < maxRounds) {
-        r += 1
-        val tent = un.iterator.map { v =>
-          v -> (if (r == 1) (lcgPri(v) % 8).toInt else mex(adj(v).iterator.flatMap(color.get).toSet))
-        }.toMap
-        val losers = tent.keysIterator.filter { v =>
-          adj(v).exists(u => tent.get(u).contains(tent(v)) && lcgPri(v) > lcgPri(u))
-        }.toSet
-        (tent.keySet -- losers).foreach { v =>
-          color(v) = tent(v); out += ((v, tent(v), r))
-        }
-        un = losers
-      }
-      require(un.isEmpty, fail)
-      return out.result().toDF("v", "color", "round")
-    }
-    supersteps[Hue](spark, und, maxRounds, HueSchema,
-        n => s"$fail ($n vertices still uncolored)")(
-        (_, _) => Hue(-1, 0, 0, BitSet.empty), _.round == 0) { (g, state, round) =>
+    supersteps[Hue](spark, edges, "speculativeColoring", maxRounds, driverSolveLimit,
+        HueSchema, n => s"speculative coloring did not converge within $maxRounds rounds " +
+          s"($n vertices still uncolored)")(
+        (_, _) => Hue(-1, 0, 0, BitSet.empty), _.round == 0) { round =>
       // tentative colors: round 1's hashed guess, then the mex of the
       // committed neighbors' colors
-      val tent = state.mapPartitions(_.map { case (v, h) =>
-        (v, if (h.round > 0) h
-          else h.copy(color = if (round == 1) (lcgPri(v) % 8).toInt else mex(h.used)))
-      }, preservesPartitioning = true)
-      // an uncolored vertex loses to a neighbor of smaller priority value
-      // that picked its tentative color
-      val rivals = g.send(tent, (v, u) => lcgPri(v) < lcgPri(u))((_, h) =>
-        if (h.round == 0) Some(BitSet(h.color)) else None)(_ | _)
-      val won = g.receive(tent, rivals).mapValues {
-        case (h, rs) if h.round == 0 && !rs.exists(_(h.color)) =>
-          h.copy(round = round, used = BitSet.empty)
-        case (h, _) => h
-      }
-      // the winners' commit notices feed the receivers' next mex
-      val notes = g.send(won)((_, h) =>
-        if (h.round == round) Some(BitSet(h.color)) else None)(_ | _)
-      g.receive(won, notes).mapValues {
-        case (h, Some(cs)) if h.round == 0 => h.copy(used = h.used | cs)
-        case (h, _) => h
-      }
+      val tent = (v: Long, h: Hue) => if (round == 1) (lcgPri(v) % 8).toInt else mex(h.used)
+      Seq(
+        // an uncolored vertex loses to a neighbor of smaller priority value
+        // that picked its tentative color; a winner commits it
+        new Exchange[Hue, BitSet]((v, h) => if (h.round == 0) Some(BitSet(tent(v, h))) else None,
+            _ | _, (v, u) => lcgPri(v) < lcgPri(u))({
+          case (v, h, rs) if h.round == 0 && !rs.exists(_(tent(v, h))) =>
+            Hue(tent(v, h), round, 0, BitSet.empty)
+          case (_, h, _) => h
+        }),
+        // the winners' commit notices feed the receivers' next mex
+        new Exchange[Hue, BitSet]((_, h) => if (h.round == round) Some(BitSet(h.color)) else None,
+            _ | _)({
+          case (_, h, Some(cs)) if h.round == 0 => h.copy(used = h.used | cs)
+          case (_, h, _) => h
+        }))
     }(hueRow)
   }
 

@@ -1458,7 +1458,7 @@ class GraphSpec extends SparkSpec {
       .map(r => r.getLong(0) -> r.getInt(1)).toMap
     val bsp = GraphOps.maximalIndependentSet(spark, e, driverSolveLimit = 0L)
       .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-    assert(gate == bsp, "driver simulation and BSP loop replay identical rounds")
+    assert(gate == bsp, "in-memory and RDD executors replay identical rounds")
     val und = raw.filter(p => p._1 != p._2).flatMap(p => Seq(p, p.swap)).distinct
     val adj = und.groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
     val mis = gate.keySet
@@ -1556,7 +1556,7 @@ class GraphSpec extends SparkSpec {
       .map(r => r.getLong(0) -> r.getInt(1)).toMap
     val bsp = GraphOps.maximalIndependentSet(spark, e, driverSolveLimit = 0L)
       .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-    assert(bsp == gate, "driver simulation and BSP loop replay identical rounds")
+    assert(bsp == gate, "in-memory and RDD executors replay identical rounds")
     assert(bsp.values.max == 15 && 15 < GraphOps.MisRoundCap)
     // sequential greedy in priority order: every other chain vertex, and
     // the k-th member joins in round k
@@ -1574,7 +1574,7 @@ class GraphSpec extends SparkSpec {
       .map(r => r.getLong(0) -> ((r.getInt(1), r.getInt(2)))).toMap
     val bsp = GraphOps.jonesPlassmannColoring(spark, e, driverSolveLimit = 0L)
       .collect().map(r => r.getLong(0) -> ((r.getInt(1), r.getInt(2)))).toMap
-    assert(gate == bsp, "driver simulation and BSP loop replay identical rounds")
+    assert(gate == bsp, "in-memory and RDD executors replay identical rounds")
     val und = raw.filter(p => p._1 != p._2).flatMap(p => Seq(p, p.swap)).distinct
     val adj = und.groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
     for ((u, v) <- und) assert(gate(u)._1 != gate(v)._1, s"edge $u-$v monochrome")
@@ -1599,7 +1599,7 @@ class GraphSpec extends SparkSpec {
       .map(r => r.getLong(0) -> ((r.getInt(1), r.getInt(2)))).toMap
     val bsp = GraphOps.speculativeColoring(spark, e, driverSolveLimit = 0L)
       .collect().map(r => r.getLong(0) -> ((r.getInt(1), r.getInt(2)))).toMap
-    assert(gate == bsp, "driver simulation and BSP loop replay identical rounds")
+    assert(gate == bsp, "in-memory and RDD executors replay identical rounds")
     val und = raw.filter(p => p._1 != p._2).flatMap(p => Seq(p, p.swap)).distinct
     val adj = und.groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
     for ((u, v) <- und) assert(gate(u)._1 != gate(v)._1, s"edge $u-$v monochrome")
@@ -1671,7 +1671,7 @@ class GraphSpec extends SparkSpec {
       .map(r => r.getLong(0) -> ((r.getInt(1), r.getInt(2)))).toMap
     val bsp = GraphOps.speculativeColoring(spark, e, driverSolveLimit = 0L)
       .collect().map(r => r.getLong(0) -> ((r.getInt(1), r.getInt(2)))).toMap
-    assert(gate == bsp, "driver simulation and BSP loop replay identical rounds")
+    assert(gate == bsp, "in-memory and RDD executors replay identical rounds")
     val und = raw.flatMap(p => Seq(p, p.swap)).distinct
     for ((u, v) <- und) assert(gate(u)._1 != gate(v)._1, s"edge $u-$v monochrome")
   }
@@ -1759,6 +1759,15 @@ class GraphSpec extends SparkSpec {
       jobs(GraphOps.jonesPlassmannColoring(spark, e, driverSolveLimit = 0L)),
       jobs(GraphOps.speculativeColoring(spark, e, driverSolveLimit = 0L)))
     assert(loops == ((6, 7, 6)), "Spark jobs (MIS, JP, speculative coloring), forced BSP")
+    // below the gate the same programs run in memory: the prologue's jobs
+    // and one collect, however many rounds (15 MIS rounds, 30 JP rounds
+    // on the chain of the wave-collapse test)
+    val chain = (0L until 30L).sortBy(GraphOps.lcgPri)
+    val c = chain.zip(chain.tail).toDF("src", "dst")
+    val gates = (jobs(GraphOps.maximalIndependentSet(spark, c)),
+      jobs(GraphOps.jonesPlassmannColoring(spark, c)),
+      jobs(GraphOps.speculativeColoring(spark, c)))
+    assert(gates == ((4, 4, 4)), "Spark jobs (MIS, JP, speculative coloring), driver gate")
     val cones = (
       jobs(GraphOps.incrementalMaximalIndependentSetDelete(
         spark, newE, base, prevMis, ins, del)),
@@ -1814,24 +1823,28 @@ class GraphSpec extends SparkSpec {
     def pri(v: Long) = (v * 1103515245L + 12345L) % 2147483648L
     // the 15-round chain of the wave-collapse test (30 JP rounds deep),
     // capped at 3 rounds; speculative coloring colors that chain in one
-    // round, so its case is K12, which it colors in 5
+    // round, so its case is K12, which it colors in 5. Both executors
+    // (driver gate and forced BSP) fail with one message, open count
+    // included.
     val chain = (0L until 30L).sortBy(pri)
     val e = chain.zip(chain.tail).toDF("src", "dst")
     val k12 = (for (i <- 0L until 12L; j <- i + 1 until 12L) yield (i, j)).toDF("src", "dst")
-    val cases = Seq[(String, () => Any, String)](
-      ("MIS", () => GraphOps.maximalIndependentSet(spark, e, maxRounds = 3,
-        driverSolveLimit = 0L), "MIS did not converge within 3 rounds"),
-      ("JP", () => GraphOps.jonesPlassmannColoring(spark, e, maxRounds = 3,
-        driverSolveLimit = 0L), "coloring did not converge within 3 rounds"),
-      ("speculative coloring", () => GraphOps.speculativeColoring(spark, k12,
-        maxRounds = 3, driverSolveLimit = 0L),
-        "speculative coloring did not converge within 3 rounds"))
-    for ((op, call, msg) <- cases) {
+    val cases = Seq[(String, Long => Any, String)](
+      ("MIS", limit => GraphOps.maximalIndependentSet(spark, e, maxRounds = 3,
+        driverSolveLimit = limit),
+        "MIS did not converge within 3 rounds (24 vertices still active)"),
+      ("JP", limit => GraphOps.jonesPlassmannColoring(spark, e, maxRounds = 3,
+        driverSolveLimit = limit),
+        "coloring did not converge within 3 rounds (27 vertices still uncolored)"),
+      ("speculative coloring", limit => GraphOps.speculativeColoring(spark, k12,
+        maxRounds = 3, driverSolveLimit = limit),
+        "speculative coloring did not converge within 3 rounds (2 vertices still uncolored)"))
+    for ((op, call, msg) <- cases; limit <- Seq(GraphOps.DriverSolveEdgeLimit, 0L)) {
       val before = cachedRdds
-      val err = intercept[IllegalArgumentException](call())
-      assert(err.getMessage.contains(msg), err.getMessage)
+      val err = intercept[IllegalArgumentException](call(limit))
+      assert(err.getMessage == s"requirement failed: $msg", s"$op, limit $limit")
       assert((cachedRdds -- before).isEmpty && !adjacencyCached,
-        s"a non-converged $op left its edge set or adjacency cached")
+        s"a non-converged $op left its edge set or adjacency cached (limit $limit)")
     }
   }
 

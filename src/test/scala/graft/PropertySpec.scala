@@ -144,13 +144,16 @@ class PropertySpec extends SparkSpec {
     } yield es ++ es.take(5).map(_.swap) ++ es.take(3) ++ loops.map(v => (v, v)) ++
       (1 to spokes).map(i => (hub, 100L + i))
     val ops = Seq[(String, (org.apache.spark.sql.DataFrame, Long) => org.apache.spark.sql.DataFrame)](
+      "maximalIndependentSet" -> ((e, limit) =>
+        GraphOps.maximalIndependentSet(spark, e, driverSolveLimit = limit)),
       "jonesPlassmannColoring" -> ((e, limit) =>
         GraphOps.jonesPlassmannColoring(spark, e, driverSolveLimit = limit)),
       "speculativeColoring" -> ((e, limit) =>
         GraphOps.speculativeColoring(spark, e, driverSolveLimit = limit)))
-    for ((edges, i) <- samples(gen, 6).zipWithIndex; (op, color) <- ops) {
-      def rows(limit: Long) = color(edges.toDF("src", "dst"), limit).collect()
-        .map(r => (r.getLong(0), r.getInt(1), r.getInt(2))).toSeq.sorted
+    for ((edges, i) <- samples(gen, 6).zipWithIndex; (op, run) <- ops) {
+      // whole rows, every column, with multiplicity
+      def rows(limit: Long) = run(edges.toDF("src", "dst"), limit).collect()
+        .map(_.toSeq).toSeq.sortBy(_.mkString(","))
       val gate = rows(GraphOps.DriverSolveEdgeLimit)
       assert(gate.nonEmpty && gate == rows(0L), s"$op, sample $i: gate and BSP rows differ")
     }
