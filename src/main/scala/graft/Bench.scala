@@ -100,7 +100,7 @@ object Bench {
     // codegen, and the noop sink path the measured queries all use.
     spark.range(1000000).selectExpr("sum(id)").collect()
     try {
-      val region = spark.read.parquet(s"$sfDir/region.parquet")
+      val region = Tables.parquet(spark, s"$sfDir/region.parquet")
       region.groupBy("r_name").count().write.format("noop").mode("overwrite").save()
       // Touch the other operator classes the suite leans on — window,
       // broadcast join, generate/HOF, sort — so their codegen/JIT cost
@@ -333,7 +333,7 @@ object Bench {
     def scanProbe(): Double =
       try {
         val t0 = System.nanoTime()
-        spark.read.parquet(s"$sfDir/lineitem.parquet")
+        Tables.parquet(spark, s"$sfDir/lineitem.parquet")
           .selectExpr("sum(l_quantity)", "count(l_orderkey)").collect()
         (System.nanoTime() - t0) / 1e9
       } catch { case scala.util.control.NonFatal(_) => -1.0 }

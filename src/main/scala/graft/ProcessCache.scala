@@ -61,9 +61,11 @@ object ProcessCache {
     p
   }
 
-  /** [[once]] that writes `build` as parquet, then reads it back. */
+  /** [[once]] that writes `build` as parquet, then reads it back through
+    * the [[Tables]] catalog (its schema is inferred on the first read
+    * only). */
   def parquet(s: SparkSession, family: String, key: String)(build: => DataFrame): DataFrame =
-    s.read.parquet(once(family, key)(build.write.mode("overwrite").parquet(_)))
+    Tables.parquet(s, once(family, key)(build.write.mode("overwrite").parquet(_)))
 
   sys.addShutdownHook {
     handedOut.asScala.toSeq.map(new File(_)).groupBy(_.getParentFile).foreach {

@@ -47,10 +47,10 @@ object ScaleData {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    def read(t: String): DataFrame = spark.read.parquet(s"$src/$t.parquet")
+    def read(t: String): DataFrame = Tables.parquet(spark, s"$src/$t.parquet")
     def write(df: DataFrame, t: String): Unit = {
       df.write.mode("overwrite").parquet(s"$out/$t.parquet")
-      println(s"[scaledata] $t: ${spark.read.parquet(s"$out/$t.parquet").count()} rows")
+      println(s"[scaledata] $t: ${Tables.parquet(spark, s"$out/$t.parquet").count()} rows")
     }
     // dims copy unchanged — replicated facts keep referencing them
     Seq("region", "nation", "supplier", "part").foreach(t => write(read(t), t))

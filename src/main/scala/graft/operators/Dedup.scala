@@ -491,7 +491,7 @@ object Dedup extends QueryModule {
         .localCheckpoint(true)
       val dfreq = sh.groupBy("s").agg(count(lit(1)).as("dfreq"))
       dfreq.write.mode("overwrite").parquet(s"${base}_dfreq")
-      val dfreqP = s.read.parquet(s"${base}_dfreq")
+      val dfreqP = Tables.parquet(s, s"${base}_dfreq")
       val w = Window.partitionBy("doc_id").orderBy(col("dfreq"), col("s"))
       // n as a window count over the doc_id exchange the ranking needs
       // anyway (the r14 jaccardPairs spelling) — the dfreq JOIN stays:
@@ -507,8 +507,8 @@ object Dedup extends QueryModule {
       jaccardPairs(sh, lshThreshold, preMaterialized = true)
         .write.mode("overwrite").parquet(s"${base}_pairs")
     }
-    (s.read.parquet(s"${base}_pfx"), s.read.parquet(s"${base}_dfreq"),
-      s.read.parquet(s"${base}_pairs"))
+    (Tables.parquet(s, s"${base}_pfx"), Tables.parquet(s, s"${base}_dfreq"),
+      Tables.parquet(s, s"${base}_pairs"))
   }
 
   /** Connected components (v, comp) of the undirected near-dup pair graph —

@@ -25,16 +25,16 @@ object GraphQueries extends QueryModule {
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     Tables(s, dir, name)
 
-  /** Directed edges of the synthetic deep graph. V is a scalar dim-count,
-    * taken in-plan as a scalar subquery — no eager action when the frame
-    * is built. Three edge rules (including one long-range hop) keep the
-    * BFS diameter around 8–12 across scale factors: enough supersteps to
-    * exercise real BSP iteration without the bench degenerating into
-    * scheduler overhead. All three rules come out of ONE customer scan
-    * (a three-element explode per row). */
+  /** Directed edges of the synthetic deep graph. V is the customer row
+    * count from the [[Tables]] catalog ([[Tables.rowCount]], counted once
+    * per fixture file), planned as a literal. Three edge rules (including
+    * one long-range hop) keep the BFS diameter around 8–12 across scale
+    * factors: enough supersteps to exercise real BSP iteration without
+    * the bench degenerating into scheduler overhead. All three rules come
+    * out of ONE customer scan (a three-element explode per row). */
   private def ringEdges(s: SparkSession, dir: String): DataFrame = {
     val c = t(s, dir, "customer").select(col("c_custkey"))
-    val v = c.agg(count(lit(1))).scalar()
+    val v = Tables.rowCount(s, dir, "customer")
     c.select(col("c_custkey").as("src"), explode(array(
       (col("c_custkey") * 2 + 1) % v,
       (col("c_custkey") * 5 + 7) % v,
@@ -405,7 +405,7 @@ object GraphQueries extends QueryModule {
     * lowered by the shortcuts, max level within the oracle's walk cap. */
   private def bfsDelV2(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val v = t(s, dir, "customer").count()
+    val v = Tables.rowCount(s, dir, "customer")
     ringEdges(s, dir).filter(col("src") % 13 =!= 5)
       .unionByName(Seq((1L, 2L * v / 3), (2L, v / 3)).toDF("src", "dst"))
   }
@@ -842,7 +842,7 @@ object GraphQueries extends QueryModule {
       // into each other, so fail loudly instead (the fix at that scale
       // is a bigger offset on BOTH sides — the oracle interpolates the
       // same shared constant)
-      val nCust = t(s, dir, "customer").count()
+      val nCust = Tables.rowCount(s, dir, "customer")
       require(nCust < off,
         s"q_graph_multi_pagerank: $nCust customers exceed the $off id " +
           "offset - graphs would collide; raise the offset in query AND oracle")

@@ -683,7 +683,7 @@ object Relational extends QueryModule {
       Tables.raw(s, dir, "events")
         .select(col("event_id"), col("user_id"), col("value"), col("event_type"))
         .write.mode("overwrite").partitionBy("event_type").parquet(out)
-      s.read.parquet(out)
+      Tables.parquet(s, out)
         .filter(col("event_type").isin("click", "purchase"))
         .groupBy("event_type")
         .agg(count(lit(1)).as("n"), round(sum("value"), 2).as("val_sum"))
@@ -708,7 +708,7 @@ object Relational extends QueryModule {
           .as("mean_cents"))
         .filter(col("mean_cents") > 5000)
         .select("event_type")
-      s.read.parquet(out).join(dim, Seq("event_type"))
+      Tables.parquet(s, out).join(dim, Seq("event_type"))
         .groupBy("event_type")
         .agg(count(lit(1)).as("n"), sum("cents").as("total_cents"))
         .orderBy("event_type")

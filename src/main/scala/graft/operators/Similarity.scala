@@ -188,7 +188,7 @@ object Similarity extends QueryModule {
       assigned.write.mode("overwrite").parquet(base + "_a")
       cents.write.mode("overwrite").parquet(base + "_c")
     }
-    (s.read.parquet(base + "_a"), s.read.parquet(base + "_c"))
+    (Tables.parquet(s, base + "_a"), Tables.parquet(s, base + "_c"))
   }
 
   /** Build the Lloyd-state cache outside the per-query timers (Bench). */

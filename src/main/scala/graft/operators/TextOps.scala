@@ -608,7 +608,7 @@ object TextOps extends QueryModule {
         .localCheckpoint(true) // feeds stored df, the delta, and readout
       val dfAll = tfAll.groupBy("tok").agg(count(lit(1)).as("df"))
         .localCheckpoint(true) // stored (tok, df) state
-      val nAll = t(s, dir, "documents").count() // stored scalar
+      val nAll = Tables.rowCount(s, dir, "documents") // stored scalar
       // the takedown batch: the %7 band PLUS every holder of the
       // corpus's rarest token (min df, then lexicographically first) —
       // the q_agg_incremental_del fixture trick, here guaranteeing the

@@ -419,18 +419,23 @@ object GraphOps {
     * messages flow along out-edges only while they improve the level.
     * RDD-based (GraphX), so used as the cross-check implementation; the
     * DataFrame loop stays the Catalyst-optimizable default.
+    *
+    * The vertex RDD holds only `(start, 0)`: GraphX derives the vertex
+    * set from the edges' routing tables and gives every endpoint missing
+    * from the vertex RDD the default level (unreached), so no endpoint
+    * union or `distinct` shuffle runs, and a start that is no endpoint is
+    * still a vertex. The seed is hash-partitioned to the edge RDD's
+    * partition count, which the vertex RDD then keeps.
     */
   def bfsLevelsPregel(spark: SparkSession, edges: DataFrame, start: Long, maxIter: Int = 50): DataFrame = {
+    import org.apache.spark.HashPartitioner
     import org.apache.spark.graphx.{Edge, EdgeDirection, Graph}
     import spark.implicits._
     val edgeRdd = edges.select(col("src").cast("long"), col("dst").cast("long"))
       .rdd.map(r => Edge(r.getLong(0), r.getLong(1), ()))
-    // vertex set = edge endpoints ∪ {start} (start may be isolated)
-    val vRdd = edgeRdd.flatMap(e => Iterator(e.srcId, e.dstId))
-      .union(spark.sparkContext.parallelize(Seq(start)))
-      .distinct().map(v => (v, ()))
-    val g = Graph(vRdd, edgeRdd)
-      .mapVertices((id, _) => if (id == start) 0 else Int.MaxValue)
+    val seed = spark.sparkContext.parallelize(Seq((start, 0)), 1)
+      .partitionBy(new HashPartitioner(math.max(1, edgeRdd.getNumPartitions)))
+    val g = Graph(seed, edgeRdd, Int.MaxValue)
     val res = g.pregel(Int.MaxValue, maxIter, EdgeDirection.Out)(
       (_, attr, msg) => math.min(attr, msg),
       t => if (t.srcAttr != Int.MaxValue && t.srcAttr + 1 < t.dstAttr)
@@ -2549,11 +2554,14 @@ object GraphOps {
     * evictions); every other stored degree is reused verbatim — a wrong
     * reuse fails the oracle compare, which replays the full v2 peel.
     * Frontier-derived frames broadcast under the family's count-gate
-    * (checkpointed, counted frames only); big frames (core ids, the
-    * symmetric edge list) are only ever scanned against broadcast
-    * probes, never shuffled per wave. Caps are LOUD: a cascade or
-    * candidate region that outgrows its bound throws rather than
-    * truncating. */
+    * (checkpointed, counted frames only). The stored core, core ∪
+    * joiners and the final core are counted when they are checkpointed,
+    * and their membership probes are gated on that count ([[gated]]):
+    * broadcast up to [[BroadcastSeenLimit]] rows, a merge join past it,
+    * whatever size the planner estimates for the caller's frame. The
+    * symmetric edge list is only ever scanned against broadcast probes.
+    * Caps are LOUD: a cascade or candidate region that outgrows its bound
+    * throws rather than truncating. */
   def incrementalKCore(spark: SparkSession, v1Raw: DataFrame,
       v2Raw: DataFrame, prevCore: DataFrame, k: Int,
       maxWaves: Int = 30,
@@ -2651,9 +2659,11 @@ object GraphOps {
       return ckpt(rows.toDF("v", "deg"))
     }
     val sym2 = symmetrize(u2, "a", "b").localCheckpoint(true)
-    val core = prevCore.select(col("v").cast("long").as("v"),
-      col("deg").cast("long").as("deg")).localCheckpoint(true)
-    val coreIds = core.select("v")
+    // the stored core's membership probes are gated on its own count, so
+    // their plans (and job counts) never follow the frame's size estimate
+    val (core, coreN) = checkpointCount(prevCore.select(
+      col("v").cast("long").as("v"), col("deg").cast("long").as("deg")))
+    val coreIds = gated(core.select("v"), coreN)
     // every frontier-derived join side goes through the WaveGate (the
     // supportCascade discipline: only materialized, counted frames ever
     // reach broadcast())
@@ -2711,7 +2721,8 @@ object GraphOps {
     }
 
     // ---- delete side: eviction cascade over core ∪ joiners
-    val kBase = coreIds.union(joiners).localCheckpoint(true)
+    val (kBase, kBaseN) = checkpointCount(core.select("v").union(joiners))
+    val kBaseIds = gated(kBase, kBaseN)
     val evictions = new Waves(spark, "v LONG")
     // the out-edges of `w` landing in `base`, as (v = dst, src, dst):
     // neighbor rows via one gated probe, membership via one `base` scan
@@ -2720,7 +2731,7 @@ object GraphOps {
       val (nb, _) = g.count(out(w).select(col("src"), col("dst")))
       base.join(g.gate(nb), col("v") === col("dst"))
     }
-    var (affected, an) = g.count(ends(delU).join(kBase, Seq("v"), "left_semi"))
+    var (affected, an) = g.count(ends(delU).join(kBaseIds, Seq("v"), "left_semi"))
     var evWaves = 0
     while (an > 0 && evWaves < maxWaves) {
       evWaves += 1
@@ -2739,7 +2750,7 @@ object GraphOps {
         // next wave: surviving core neighbors of this wave's evictions
         val (next, nextN) = g.count(out(evictNow)
           .select(col("dst").as("v")).distinct()
-          .join(kBase, Seq("v"), "left_semi")
+          .join(kBaseIds, Seq("v"), "left_semi")
           .join(g.gate(evictions.all), Seq("v"), "left_anti"))
         affected = next; an = nextN
         trace(s"incrementalKCore evict wave=$evWaves affected=$an evicted=$en")
@@ -2752,13 +2763,13 @@ object GraphOps {
 
     // ---- readout: recompute in-core degree ONLY where membership or
     // incident edges changed; reuse every other stored degree verbatim
-    val kFinal = kBase.join(g.gate(evicted), Seq("v"), "left_anti")
-      .localCheckpoint(true)
+    val (kFinal, kFinalN) = checkpointCount(
+      kBase.join(g.gate(evicted), Seq("v"), "left_anti"))
     val (changedNbrSeeds, _) = g.count(joiners.union(evicted))
     val (touched, _) = g.count(ends(insU).union(ends(delU))
       .union(out(changedNbrSeeds).select(col("dst").as("v")))
       .union(joiners).distinct()
-      .join(kFinal, Seq("v"), "left_semi"))
+      .join(gated(kFinal, kFinalN), Seq("v"), "left_semi"))
     val degTouched = inBase(kFinal, touched)
       .groupBy(col("src").as("v")).agg(count(lit(1)).as("deg"))
     val untouched = core

@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.Tables
 
 /** Codec for the reference's adjacency-matrix text format and the
   * graph-store write path.
@@ -63,7 +64,7 @@ object GraphStore {
 
   /** A3/A4: load a stored graph. */
   def load(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    Tables.parquet(spark, path)
 }
 
 /** Commit-log table semantics over the parquet graph store — the
@@ -179,7 +180,7 @@ object VersionedGraphStore {
   /** Time-travel read of snapshot `version`. */
   def loadAt(spark: SparkSession, path: String, version: Long): DataFrame = {
     val snap = manifestLines(path, version).head.trim
-    spark.read.parquet(new java.io.File(path, snap).toString)
+    Tables.parquet(spark, new java.io.File(path, snap).toString)
   }
 
   /** The caller metadata committed with `version`, if any. */

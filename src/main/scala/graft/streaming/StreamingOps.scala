@@ -346,7 +346,7 @@ object StreamingOps extends QueryModule {
     // with a batch read so either fixture encoding of ts (nanos-as-long or
     // TIMESTAMP(MICROS) → NTZ) is declared as-is, then normalize exactly
     // like the batch path (Tables.normalizeEventTs).
-    val schema = s.read.parquet(s"$dir/events.parquet").schema
+    val schema = Tables.parquet(s, s"$dir/events.parquet").schema
     // events.parquet is a single file; for a non-glob path the streaming
     // file source forces basePath = that file and then rejects it ("must be
     // a directory"), so feed it a glob that resolves to the same file.
@@ -470,7 +470,7 @@ object StreamingOps extends QueryModule {
         .option("checkpointLocation", ck)
         .outputMode("append").trigger(Trigger.AvailableNow()).start()
       q.awaitTermination()
-      s.read.parquet(out)
+      Tables.parquet(s, out)
         .groupBy("event_type")
         .agg(count(lit(1)).as("n"), round(sum("value"), 2).as("val_sum"))
         .orderBy("event_type")
@@ -674,7 +674,7 @@ object StreamingOps extends QueryModule {
     // so the batch SQL oracle applies regardless of batch boundaries.
     "q_stream_proctime" -> ((s, dir) => {
       val chunks = stageHashChunks(s, dir)
-      val totalRows = s.read.parquet(chunks).count() // drain target (scalar)
+      val totalRows = Tables.parquet(s, chunks).count() // drain target (scalar)
       val schema = org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("event_id", org.apache.spark.sql.types.LongType),
         org.apache.spark.sql.types.StructField("event_type", org.apache.spark.sql.types.StringType),

@@ -54,49 +54,22 @@ class GraphSpec extends SparkSpec {
   }
 
   test("Pregel BFS == DataFrame-loop BFS on every fixture") {
-    for (g <- Seq("G2", "G5", "G6", "G12")) {
+    // from vertex 0, a non-zero start, and a start that is no edge
+    // endpoint (its BFS is the start alone)
+    val isolated = 1000000L
+    def levels(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+    for (g <- Seq("G2", "G5", "G6", "G12"); start <- Seq(0L, 3L, isolated)) {
       val edges = AdjacencyCodec.read(spark, s"$fixtures/$g.txt")
-      val loop = GraphOps.bfsLevels(spark, edges, 0L)
-        .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-      val pregel = GraphOps.bfsLevelsPregel(spark, edges, 0L)
-        .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-      assert(pregel == loop, s"fixture $g")
+      val loop = levels(GraphOps.bfsLevels(spark, edges, start))
+      val pregelDf = GraphOps.bfsLevelsPregel(spark, edges, start)
+      val pregel = levels(pregelDf)
+      assert(pregel == loop, s"fixture $g from $start")
+      if (start == isolated) assert(pregel == Map(isolated -> 0), s"fixture $g")
+      // the GraphX vertex RDD takes the edge RDD's partition count
+      assert(pregelDf.rdd.getNumPartitions == math.max(1, edges.rdd.getNumPartitions),
+        s"fixture $g: vertex partitions")
     }
-  }
-
-  /** Runs `body` and counts the Spark jobs it starts: a listener counts
-    * the job starts of a job group of the probe's own, then a fence job in
-    * a second group flushes the listener bus — events arrive in order, so
-    * once the fence's start is seen every job of the probe has been
-    * counted. Broadcast jobs inherit the group and count too. */
-  private def sparkJobs[T](body: => T): (T, Int) = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
-    val group = s"graft-job-count-${System.nanoTime()}"
-    val fence = s"$group-fence"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    @volatile var fenceSeen = false
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        Option(j.properties).map(_.getProperty("spark.jobGroup.id")) match {
-          case Some(`group`) => jobs.incrementAndGet()
-          case Some(`fence`) => fenceSeen = true
-          case _ =>
-        }
-    }
-    sc.addSparkListener(listener)
-    val out = try {
-      sc.setJobGroup(group, "job-count probe")
-      try body finally sc.clearJobGroup()
-    } finally {
-      sc.setJobGroup(fence, "listener fence")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      val deadline = System.nanoTime() + 30L * 1000000000L
-      while (!fenceSeen && System.nanoTime() < deadline) Thread.sleep(5)
-      sc.removeSparkListener(listener)
-    }
-    assert(fenceSeen, "listener fence never arrived")
-    (out, jobs.get)
   }
 
   test("checkpointCount: exact count, one LogicalRDD leaf, exactly one Spark job") {
@@ -1089,6 +1062,27 @@ class GraphSpec extends SparkSpec {
     assert((peel, incDriver, incBsp) == ((4, 15, 102)),
       "Spark jobs (kcorePeel, incrementalKCore driver, incrementalKCore BSP)")
     assert(trussBsp <= 166, s"incrementalKTruss BSP ran $trussBsp Spark jobs")
+  }
+
+  test("incrementalKCore BSP plans its core joins from the core's count, not its size estimate") {
+    // A caller's core frame over an RDD is sized at
+    // spark.sql.defaultSizeInBytes, so the planner never broadcasts it.
+    // The maintainer gates its core probes on the core's own count, so
+    // it runs the pinned 102 jobs on every call. Joined ungated, that
+    // frame was shuffled in every wave: 112-113 jobs, varying from call
+    // to call with AQE's run-time join choices.
+    val (kv1, kv2) = kcoreDiff
+    val kprev = GraphOps.kcorePeel(spark, kv1, 3, 6)
+    val unsized = spark.createDataFrame(kprev.rdd, kprev.schema)
+    assert(unsized.queryExecution.optimizedPlan.stats.sizeInBytes == BigInt(Long.MaxValue))
+    val expected = GraphOps.incrementalKCore(spark, kv1, kv2, kprev, 3,
+      driverSolveLimit = 0L).collect().toSet
+    val runs = (1 to 5).map(_ => sparkJobs(GraphOps.incrementalKCore(spark, kv1, kv2,
+      unsized, 3, driverSolveLimit = 0L).collect())).map { case (rows, jobs) =>
+      assert(rows.toSet == expected)
+      jobs
+    }
+    assert(runs == Seq.fill(5)(102), "Spark jobs per call")
   }
 
   test("traversal maintainers run a pinned number of Spark jobs per call") {

@@ -11,6 +11,41 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
 
   override def afterAll(): Unit = () // session shared across suites
+
+  /** Runs `body` and counts the Spark jobs it starts: a listener counts
+    * the job starts of a job group of the probe's own, then a fence job in
+    * a second group flushes the listener bus — events arrive in order, so
+    * once the fence's start is seen every job of the probe has been
+    * counted. Broadcast jobs inherit the group and count too. */
+  protected def sparkJobs[T](body: => T): (T, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = s"graft-job-count-${System.nanoTime()}"
+    val fence = s"$group-fence"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    @volatile var fenceSeen = false
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        Option(j.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => jobs.incrementAndGet()
+          case Some(`fence`) => fenceSeen = true
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    val out = try {
+      sc.setJobGroup(group, "job-count probe")
+      try body finally sc.clearJobGroup()
+    } finally {
+      sc.setJobGroup(fence, "listener fence")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!fenceSeen && System.nanoTime() < deadline) Thread.sleep(5)
+      sc.removeSparkListener(listener)
+    }
+    assert(fenceSeen, "listener fence never arrived")
+    (out, jobs.get)
+  }
 }
 
 /** Reference Levenshtein DP, shared by the fuzzy-join brute-force
